@@ -219,9 +219,13 @@ class Pipeline:
         version_hash = hashlib.sha256(
             json.dumps(schema_doc, sort_keys=True).encode()
         ).hexdigest()[:16]
-        prev = self.state.get_newest_schema(self.dataset_name)
-        version = (prev.version + 1) if prev is not None else 1
-        self.state.store_schema(self.dataset_name, version_hash, version, schema_doc)
+        # probe the hash first: a steady-state load re-delivers a known
+        # schema, so the newest-version scan runs only when a new
+        # `_dlt_version` row will be written
+        if self.state.get_schema_by_hash(version_hash) is None:
+            prev = self.state.get_newest_schema(self.dataset_name)
+            version = (prev.version + 1) if prev is not None else 1
+            self.state.store_schema(self.dataset_name, version_hash, version, schema_doc)
         self.state.store_completed_load(load_id, self.dataset_name, version_hash)
         return LoadInfo(load_id, written, version_hash, time.perf_counter() - t0)
 

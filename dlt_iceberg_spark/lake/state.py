@@ -2,16 +2,28 @@
 
 Ordinary lake tables with the reference's exact schemas
 (destination_client.py:631-646, 1032-1038; FIXTURES.md F11) and access
-patterns (SURVEY.md §2.9 M1-M5):
+patterns (SURVEY.md §2.9 M1-M5), answered off Spark wherever the table
+format allows:
 
-- newest schema = filtered scan + max(version) top-1;
-- schema by hash = exact filtered lookup;
-- newest pipeline state = max(created_at) top-1;
+- lookups are pruned: every read passes its equality predicate to
+  ``LakeTable.read(where=...)``, so manifest min/max stats pick the data
+  files.  Each append writes one single-row file, so a fresh ``load_id``
+  (M5) or an unseen ``version_hash`` (M4) opens no data file and launches
+  no Spark job; a hit reads only the files that can hold it.  A missing
+  table answers None/False without building a frame;
+- newest schema (M1/M2) = pruned ``schema_name`` scan + max(version) top-1;
+- newest pipeline state (M3) = pruned ``pipeline_name`` scan +
+  max(created_at) top-1;
+- appends are driver-written: the row is encoded with pyarrow in the
+  table's stored schema, written through its FileIO, and committed as one
+  delta snapshot (``LakeTable.stage_rows``);
 - store-schema idempotent by version_hash; store-load idempotent by load_id
   (pre-check + read-after-error, tests/test_load_metadata_resilience.py).
 
 Timestamps are naive-UTC µs (TimestampNTZ), pinned like the reference pins
 its internal columns to the target table's unit (destination_client.py:67-110).
+A pre-created table with tz-aware columns keeps them; the naive-UTC values
+land as the same UTC instants.
 """
 
 from __future__ import annotations
@@ -25,6 +37,7 @@ from pyspark.sql import types as T
 
 from dlt_iceberg_spark.errors import TableNotFoundError
 from dlt_iceberg_spark.lake.catalog import LakeCatalog
+from dlt_iceberg_spark.lake.table import LakeTable, local_frame
 
 VERSION_TABLE = "_dlt_version"
 LOADS_TABLE = "_dlt_loads"
@@ -80,34 +93,56 @@ class StateStore:
 
     # -- helpers -----------------------------------------------------------
 
-    def _table_df(self, name: str, schema: T.StructType) -> DataFrame:
+    def _table(self, name: str) -> LakeTable | None:
         try:
-            return self.catalog.load_table(self.namespace, name).read()
+            return self.catalog.load_table(self.namespace, name)
         except TableNotFoundError:
-            return self.spark.createDataFrame([], schema)
+            return None
+
+    def _table_df(self, name: str, schema: T.StructType) -> DataFrame:
+        table = self._table(name)
+        return table.read() if table is not None else local_frame(self.spark, schema)
+
+    def _first(
+        self, name: str, column: str, value: str, newest: str | None = None
+    ) -> Row | None:
+        """A row with ``column == value`` (the one with the largest
+        ``newest`` when given).  The predicate is pruned against manifest
+        stats before any data file is opened; None when the table is
+        missing."""
+        table = self._table(name)
+        if table is None:
+            return None
+        df = table.read(where=[(column, "=", value)])
+        if newest is not None:
+            df = df.orderBy(F.col(newest).desc())
+        rows = df.limit(1).collect()
+        return rows[0] if rows else None
 
     def _append(self, name: str, schema: T.StructType, rows: list[Row]) -> None:
-        df = self.spark.createDataFrame(rows, schema)
-        if not self.catalog.table_exists(self.namespace, name):
-            table = self.catalog.create_table(self.namespace, name, schema)
-            stored = schema
-        else:
-            table = self.catalog.load_table(self.namespace, name)
-            # an existing state table's schema wins: a pre-created table
-            # with tz-aware (or naive) timestamps keeps its flavor, and the
-            # batch adapts — reference goldens
-            # tests/test_with_state_sync.py:313-430 (state metadata neither
-            # clashes with nor downgrades an existing timestamp[tz] schema)
-            stored = table.schema() or schema
-            if stored != schema:
-                from dlt_iceberg_spark.schema.casting import cast_dataframe_safe
-
-                df = cast_dataframe_safe(df, stored)
+        """One driver-written parquet file and one delta commit; no Spark
+        job (creates the table in ``schema`` if missing)."""
+        table = self._table(name) or self.catalog.create_table(
+            self.namespace, name, schema
+        )
         snap = table.snapshot()
-        files = table.stage_dataframe(df)
+        # an existing state table's schema wins: a pre-created table with
+        # tz-aware (or naive) timestamps keeps its flavor, and the batch
+        # adapts — reference goldens tests/test_with_state_sync.py:313-430
+        # (state metadata neither clashes with nor downgrades an existing
+        # timestamp[tz] schema)
+        stored = snap.schema
+        if stored != schema:
+            from dlt_iceberg_spark.schema.casting import validate_cast
+
+            validate_cast(schema, stored)
+        # a stored column the batch lacks lands its write-default (or null)
+        defaults = {f.name: (f.metadata or {}).get("write-default") for f in stored.fields}
+        values = [tuple({**defaults, **r.asDict()}[c] for c in defaults) for r in rows]
         table.commit(
             None, stored, "append", snap.version,
-            manifests=snap.manifests, new_files=snap.inline_files + files,
+            manifests=snap.manifests,
+            new_files=snap.inline_files + table.stage_rows(stored, values),
         )
 
     # -- M4: schema registry ----------------------------------------------
@@ -141,9 +176,9 @@ class StateStore:
         (tests/test_drop_tables.py:161-221, SqlJobClientBase parity).
         Returns the number of rows removed.  One replace snapshot; the
         surviving rows rewrite distributed (no driver materialization)."""
-        if not self.catalog.table_exists(self.namespace, VERSION_TABLE):
+        table = self._table(VERSION_TABLE)
+        if table is None:
             return 0
-        table = self.catalog.load_table(self.namespace, VERSION_TABLE)
         snap = table.snapshot()
         df = table.read()
         total = df.count()
@@ -152,27 +187,18 @@ class StateStore:
         if kept_rows == total:
             return 0
         files = table.stage_dataframe(keep)
-        table.commit(files, VERSION_SCHEMA, "overwrite", snap.version, delete_files=[])
+        # the stored schema: a pre-created tz-aware table keeps its flavor
+        table.commit(files, snap.schema, "overwrite", snap.version, delete_files=[])
         return total - kept_rows
 
     # -- M1/M2: schema lookup ---------------------------------------------
 
     def get_newest_schema(self, schema_name: str) -> Row | None:
-        """Filtered scan + max(version) top-1 (destination_client.py:312-343).
-        The filter prunes at scan via the pushed predicate."""
-        df = self._table_df(VERSION_TABLE, VERSION_SCHEMA)
-        rows = (
-            df.filter(F.col("schema_name") == schema_name)
-            .orderBy(F.col("version").desc())
-            .limit(1)
-            .collect()
-        )
-        return rows[0] if rows else None
+        """Pruned scan + max(version) top-1 (destination_client.py:312-343)."""
+        return self._first(VERSION_TABLE, "schema_name", schema_name, newest="version")
 
     def get_schema_by_hash(self, version_hash: str) -> Row | None:
-        df = self._table_df(VERSION_TABLE, VERSION_SCHEMA)
-        rows = df.filter(F.col("version_hash") == version_hash).limit(1).collect()
-        return rows[0] if rows else None
+        return self._first(VERSION_TABLE, "version_hash", version_hash)
 
     def restore_schema(self, schema_name: str) -> dict:
         """Schema restore with the reference's preference order
@@ -207,8 +233,7 @@ class StateStore:
     # -- M5: load ledger ---------------------------------------------------
 
     def load_recorded(self, load_id: str) -> bool:
-        df = self._table_df(LOADS_TABLE, LOADS_SCHEMA)
-        return bool(df.filter(F.col("load_id") == load_id).limit(1).collect())
+        return self._first(LOADS_TABLE, "load_id", load_id) is not None
 
     def store_completed_load(
         self,
@@ -283,11 +308,4 @@ class StateStore:
     def get_stored_state(self, pipeline_name: str) -> Row | None:
         """Newest state row per pipeline (max created_at,
         destination_client.py:393-433)."""
-        df = self._table_df(STATE_TABLE, STATE_SCHEMA)
-        rows = (
-            df.filter(F.col("pipeline_name") == pipeline_name)
-            .orderBy(F.col("created_at").desc())
-            .limit(1)
-            .collect()
-        )
-        return rows[0] if rows else None
+        return self._first(STATE_TABLE, "pipeline_name", pipeline_name, newest="created_at")

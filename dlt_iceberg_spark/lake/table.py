@@ -46,10 +46,12 @@ from datetime import date as _date
 from datetime import datetime, timezone
 from typing import Any
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from dlt_iceberg_spark.errors import CommitConflictError, NonAtomicCommitError
 from dlt_iceberg_spark.lake.fileio import LocalFileIO, fileio_for
@@ -88,6 +90,25 @@ _STATS_TYPES = (
 #: cap on (transform, value) pairs evaluated for partition-probe rewriting
 #: (table._partition_probe_values) — beyond this, stats pruning alone
 _MAX_PART_PROBE_EXPRS = 512
+
+
+def arrow_table(schema: T.StructType, rows=()) -> pa.Table:
+    """``rows`` (sequences in ``schema`` field order) as an Arrow table in
+    exactly ``schema``'s Arrow types.  Naive datetimes landing in a
+    ``timestamp`` (tz-aware) column are taken as UTC."""
+    arrow = to_arrow_schema(schema)
+    return pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows], schema=arrow)
+
+
+def local_frame(spark: SparkSession, schema: T.StructType, rows=()) -> DataFrame:
+    """A small driver-side DataFrame (empty by default) with exactly
+    ``schema``, built from an Arrow table.  Spark plans it as a
+    ``LocalRelation``, so actions over it run no Python workers, and an
+    empty one launches no Spark job at all; ``createDataFrame(list, ...)``
+    pays a Python-worker job per action instead.  The explicit schema is
+    what keeps ``timestamp_ntz`` (else read back as ``timestamp``),
+    nullability, decimals and nested types exact."""
+    return spark.createDataFrame(arrow_table(schema, rows), schema)
 
 
 def _utc_naive(v):
@@ -1185,6 +1206,29 @@ class LakeTable:
         io.rmtree(staging)
         return staged
 
+    def stage_rows(self, schema: T.StructType, rows: list[tuple]) -> list[DataFile]:
+        """Write a handful of driver-side ``rows`` (tuples in ``schema``
+        field order) as ONE parquet data file, not yet visible — like
+        :meth:`stage_dataframe`, visibility comes from the snapshot commit.
+
+        No Spark job: pyarrow encodes the file on the driver, the bytes go
+        through the table's FileIO, and the stats come from its footer —
+        the way manifests are written (lake/manifest.py).  Meant for
+        bookkeeping-sized batches such as the load ledger's one-row
+        appends; bulk data belongs on :meth:`stage_dataframe`."""
+        if not rows:
+            return []
+        import io as _pyio
+
+        self._io.makedirs(self._data_dir)
+        name = f"{uuid.uuid4().hex}.parquet"
+        abs_path = os.path.join(self._data_dir, name)
+        buf = _pyio.BytesIO()
+        pq.write_table(arrow_table(schema, rows), buf)
+        self._io.write_bytes(abs_path, buf.getvalue())
+        n, nbytes, stats = _collect_file_stats(abs_path, schema, io=self._io)
+        return [DataFile(path=f"data/{name}", rows=n, bytes=nbytes, stats=stats)]
+
     def _stats_via_spark(
         self, staging: str, schema: T.StructType
     ) -> dict[str, tuple[int, dict]]:
@@ -2166,8 +2210,8 @@ class LakeTable:
                     "^file:/+",
                     "/",
                 )
-                tdf = self.spark.createDataFrame(
-                    [(p,) for p in touched], "__p string"
+                tdf = local_frame(
+                    self.spark, T.StructType.fromDDL("__p string"), [(p,) for p in touched]
                 )
                 live += [
                     (r["__rel"], r["__fseq"], r["__rows"])
@@ -2185,7 +2229,9 @@ class LakeTable:
         if not live:
             snap._masked_cache = {}
             return {}
-        live_df = self.spark.createDataFrame(
+        live_df = local_frame(
+            self.spark,
+            T.StructType.fromDDL("__p string, __rel string, __fseq long, __rows long"),
             [
                 (
                     _re.sub("^file:/+", "/", os.path.join(self.location, rel)),
@@ -2195,7 +2241,6 @@ class LakeTable:
                 )
                 for rel, seq, rows in live
             ],
-            "__p string, __rel string, __fseq long, __rows long",
         )
         counts = (
             addrs.join(F.broadcast(live_df), on="__p")
@@ -2777,7 +2822,7 @@ class LakeTable:
                     ]
                     + list(snap.schema.fields)
                 )
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, schema)
         if not snap.delete_files:
             return self._physical_read(files, snap.schema, with_addr=with_address)
         eq_dels = sorted(
@@ -3154,7 +3199,7 @@ class LakeTable:
                 break
             snap = parent_snap
         if not added_files:
-            return self.spark.createDataFrame([], end.schema)
+            return local_frame(self.spark, end.schema)
         if same_vocab:
             return self._physical_read(added_files, end.schema)
         # a rename in the range leaves added-era entries keyed by written
@@ -3391,7 +3436,7 @@ class LakeTable:
                     T.StructField("_commit_version", T.IntegerType(), False),
                 ]
             )
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, schema)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -3618,8 +3663,10 @@ class LakeTable:
             sel.append(bad.cast("int").alias("__bad"))
             edf = mdf.select(*sel)
             if masked:
-                mdf2 = self.spark.createDataFrame(
-                    list(masked.items()), "__path string, __masked long"
+                mdf2 = local_frame(
+                    self.spark,
+                    T.StructType.fromDDL("__path string, __masked long"),
+                    list(masked.items()),
                 )
                 edf = edf.join(F.broadcast(mdf2), on="__path", how="left")
                 live_rows = F.col("__rows") - F.coalesce(
@@ -3697,7 +3744,7 @@ class LakeTable:
         """Scan a subset of live files (used by copy-on-write merge)."""
         schema = self.schema()
         if not files:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, schema)
         return self._physical_read(files, schema)
 
     # -- schema DDL (metadata-only, Iceberg ALTER TABLE parity) ------------

@@ -772,11 +772,7 @@ class LakeWriter:
             )
         broadcast_batch = stats_row["_n"] <= BROADCAST_BATCH_ROWS
 
-        target_df = (
-            table.read_files(touched)
-            if touched
-            else table.spark.createDataFrame([], table.schema())
-        )
+        target_df = table.read_files(touched)
         merged = merge_plan(
             target_df,
             batch,

@@ -222,3 +222,220 @@ def test_state_created_at_preserves_naive_schema(spark, warehouse):
     field = {f.name: f.dataType for f in table.schema().fields}["created_at"]
     assert isinstance(field, T.TimestampNTZType)
     assert store.get_stored_state("p").version == 2
+
+
+# ---- driver-side ledger: pruned lookups, driver-written appends ------------
+
+
+def _tz_variant(schema, column):
+    return T.StructType(
+        [
+            T.StructField(f.name, T.TimestampType() if f.name == column else f.dataType, f.nullable)
+            for f in schema.fields
+        ]
+    )
+
+
+def test_clear_schema_versions_keeps_stored_tz_schema(spark, warehouse):
+    """Clearing one schema's versions commits the table's STORED schema: a
+    pre-created tz-aware ``_dlt_version`` keeps ``inserted_at`` tz-aware."""
+    from dlt_iceberg_spark.lake.state import VERSION_SCHEMA, VERSION_TABLE
+
+    catalog = LakeCatalog(spark, warehouse)
+    catalog.create_namespace("ds")
+    catalog.create_table("ds", VERSION_TABLE, _tz_variant(VERSION_SCHEMA, "inserted_at"))
+    store = StateStore(catalog, "ds")
+    store.store_schema("keep", "h1", 1, {"v": 1})
+    store.store_schema("drop", "h2", 1, {"v": 2})
+    assert store.clear_schema_versions("drop") == 1
+    field = catalog.load_table("ds", VERSION_TABLE).schema()["inserted_at"]
+    assert isinstance(field.dataType, T.TimestampType)
+    assert store.get_schema_by_hash("h1").schema_name == "keep"
+    assert store.get_schema_by_hash("h2") is None
+
+
+def test_local_frame_round_trips_schemas_exactly(spark):
+    """The Arrow-built frame keeps timestamp_ntz, tz timestamps,
+    nullable=False, decimals and nested types exactly — empty or not."""
+    import datetime as dt
+    import decimal
+
+    from pyspark.sql import functions as F
+
+    from dlt_iceberg_spark.lake.table import local_frame
+
+    nested = T.StructType(
+        [
+            T.StructField("k", T.StringType(), False),
+            T.StructField("ntz", T.TimestampNTZType(), True),
+            T.StructField("tz", T.TimestampType(), False),
+            T.StructField("d", T.DecimalType(12, 2), True),
+            T.StructField("m", T.MapType(T.StringType(), T.LongType()), True),
+            T.StructField(
+                "s",
+                T.StructType(
+                    [
+                        T.StructField("x", T.IntegerType(), False),
+                        T.StructField("y", T.ArrayType(T.DateType()), True),
+                    ]
+                ),
+                True,
+            ),
+        ]
+    )
+    empty = local_frame(spark, nested)
+    assert empty.schema == nested
+    assert empty.collect() == []
+
+    flat = T.StructType(nested.fields[:4])
+    naive = dt.datetime(2024, 3, 1, 12, 30, 0, 123456)
+    df = local_frame(spark, flat, [("a", naive, naive, decimal.Decimal("1.25"))])
+    assert df.schema == flat
+    row = df.select("k", "ntz", F.unix_micros("tz").alias("tz"), "d").collect()[0]
+    assert row.k == "a" and row.ntz == naive and row.d == decimal.Decimal("1.25")
+    # a naive value in a tz-aware column is the same instant read as UTC
+    assert row.tz == int(naive.replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000)
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs launched while ``fn`` runs, counted by job group after
+    draining the listener bus so every started job is visible."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"ledger-guard-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ledger_fresh_check_and_append_launch_no_spark_jobs(spark, warehouse):
+    """On a ledger of 20 loads, checking an unseen load_id and recording a
+    new one run zero Spark jobs: manifest stats prune every data file and
+    the append is written on the driver."""
+    store = StateStore(LakeCatalog(spark, warehouse), "ds")
+    for i in range(20):
+        store.store_completed_load(f"load-{i:03d}", "s", "h")
+    # the count sees jobs when there are some
+    assert _spark_jobs(spark, lambda: store.load_recorded("load-007")) >= 1
+    # unseen ids inside and outside the recorded range
+    assert _spark_jobs(spark, lambda: store.load_recorded("load-007b")) == 0
+    assert _spark_jobs(spark, lambda: store.load_recorded("load-999")) == 0
+    assert _spark_jobs(spark, lambda: store.store_completed_load("load-100", "s", "h")) == 0
+    assert store.load_recorded("load-100") and not store.load_recorded("load-007b")
+
+
+def test_steady_state_pipeline_run_spends_at_most_one_ledger_job(spark, warehouse, monkeypatch):
+    """A load that re-delivers a known schema probes the schema hash (one
+    job, reading the one file that holds it) and nothing else of the
+    ledger touches Spark."""
+    import functools
+
+    from dlt_iceberg_spark.lake.pipeline import Pipeline, Resource
+
+    p = Pipeline(spark, warehouse, dataset_name="ds")
+    batch = spark.createDataFrame([(1, "a")], "id long, v string")
+    for i in range(3):
+        p.run(Resource(batch, "t"), load_id=f"warm-{i}")
+
+    ledger_jobs = []
+    for m in ("load_recorded", "store_completed_load", "get_newest_schema",
+              "get_schema_by_hash", "store_schema"):
+        orig = getattr(StateStore, m)
+
+        def wrapped(self, *a, _orig=orig, **k):
+            out = []
+            ledger_jobs.append(_spark_jobs(spark, lambda: out.append(_orig(self, *a, **k))))
+            return out[0]
+
+        monkeypatch.setattr(StateStore, m, functools.wraps(orig)(wrapped))
+    loads = 3
+    for i in range(loads):
+        info = p.run(Resource(batch, "t"), load_id=f"steady-{i}")
+        assert not info.already_loaded
+    assert sum(ledger_jobs) <= loads
+    assert p.run(Resource(batch, "t"), load_id="steady-0").already_loaded
+
+
+def test_ledger_over_hadoop_fileio(spark, tmp_path):
+    """The ledger's driver-written appends and pruned lookups work when the
+    table format's I/O rides the JVM Hadoop FileSystem."""
+    from dlt_iceberg_spark.lake.fileio import HadoopFileIO
+    from dlt_iceberg_spark.lake.state import LOADS_TABLE
+
+    warehouse = f"file://{tmp_path}/wh"
+    catalog = LakeCatalog(spark, warehouse)
+    catalog._io = HadoopFileIO(spark, warehouse)
+    store = StateStore(catalog, "ds")
+    assert store.store_completed_load("l1", "s", "h1") is True
+    assert store.store_completed_load("l2", "s", "h1") is True
+    assert store.store_completed_load("l1", "s", "h1") is False
+    assert store.load_recorded("l2") and not store.load_recorded("l3")
+    assert store.store_schema("s", "h1", 1, {"v": 1}) is True
+    assert store.store_schema("s", "h1", 1, {"v": 1}) is False
+    assert store.get_newest_schema("s").version_hash == "h1"
+    table = catalog.load_table("ds", LOADS_TABLE)
+    assert isinstance(table._io, HadoopFileIO)
+    assert sorted(r.load_id for r in table.read().collect()) == ["l1", "l2"]
+    assert all(f.stats["load_id"][0] == f.stats["load_id"][1] for f in table.snapshot().files)
+
+
+@pytest.mark.parametrize("table_name", ["_dlt_loads", "_dlt_pipeline_state"])
+def test_precreated_tz_ledgers_store_same_instants(spark, warehouse, monkeypatch, table_name):
+    """Pre-created tz-aware ledgers store the instants a Spark cast of the
+    same naive-UTC row would store."""
+    import datetime as dt
+
+    from pyspark.sql import Row
+    from pyspark.sql import functions as F
+
+    from dlt_iceberg_spark.lake import state as state_mod
+    from dlt_iceberg_spark.schema.casting import cast_dataframe_safe
+
+    fixed = dt.datetime(2024, 7, 1, 23, 59, 58, 654321)
+    monkeypatch.setattr(state_mod, "_utcnow_naive", lambda: fixed)
+    schema, col = {
+        "_dlt_loads": (state_mod.LOADS_SCHEMA, "inserted_at"),
+        "_dlt_pipeline_state": (state_mod.STATE_SCHEMA, "created_at"),
+    }[table_name]
+    tz_schema = _tz_variant(schema, col)
+    catalog = LakeCatalog(spark, warehouse)
+    catalog.create_namespace("ds")
+    catalog.create_table("ds", table_name, tz_schema)
+    store = StateStore(catalog, "ds")
+    if table_name == "_dlt_loads":
+        store.store_completed_load("l1", "s", "h1")
+    else:
+        store.store_pipeline_state("p", {"a": 1}, 1, "h1")
+
+    table = catalog.load_table("ds", table_name)
+    assert table.schema() == tz_schema
+    row = table.read().withColumn("__us", F.unix_micros(col)).collect()[0].asDict()
+    stored = row.pop("__us")
+    # what the Spark path stored: the naive row cast to the stored schema
+    via_spark = cast_dataframe_safe(
+        spark.createDataFrame([Row(**{**row, col: fixed})], schema), tz_schema
+    ).select(F.unix_micros(col)).collect()[0][0]
+    assert stored == via_spark == int(fixed.replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000)
+
+
+def test_load_recorded_through_position_delete(store):
+    """A `_dlt_loads` table carrying a position delete answers lookups on
+    its live rows only, and a deleted load can be recorded again."""
+    from dlt_iceberg_spark.lake.state import LOADS_TABLE
+
+    for lid in ("a", "b", "c"):
+        store.store_completed_load(lid, "s", "h")
+    table = store.catalog.load_table("ds", LOADS_TABLE)
+    table.position_delete_where([("load_id", "=", "b")])
+    assert any(d.content == "position" for d in table.snapshot().delete_files)
+    assert store.load_recorded("a") and store.load_recorded("c")
+    assert not store.load_recorded("b") and not store.load_recorded("d")
+    assert store.store_completed_load("b", "s", "h") is True
+    assert store.load_recorded("b")
+    assert sorted(r.load_id for r in table.read().collect()) == ["a", "b", "c"]
