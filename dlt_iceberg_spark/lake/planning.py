@@ -1,6 +1,6 @@
 """Distributed scan planning — manifest pruning as a Spark job.
 
-Driver-side planning (`LakeTable.prune_split` / `_candidate_files`) is
+Driver-side planning (`LakeTable._plan_files` in ``"driver"`` mode) is
 O(entries-of-opened-manifests) in driver memory.  Fine for thousands of
 files; at 100 TB (~800k × 128 MB files) a poorly-selective probe would
 materialize hundreds of thousands of ``DataFile`` entries on the driver
@@ -28,8 +28,9 @@ superset* of the exact driver predicate —
   manifest stats, so lexicographic == chronological);
 - missing stats / unparseable values / unsupported types keep the file.
 
-The exact predicate (`_file_may_match`) is re-applied to the collected
-survivors, so the result is bit-identical to driver planning.
+The exact per-entry predicate (`table.entry_may_match`, the one the
+driver planner applies) is re-applied to the collected survivors, so the
+result is bit-identical to driver planning.
 """
 
 from __future__ import annotations
@@ -195,11 +196,6 @@ def plan_candidates(
         )
         for r in rows
     ]
-    from dlt_iceberg_spark.lake.table import LakeTable, _file_may_match
+    from dlt_iceberg_spark.lake.table import entry_may_match
 
-    return [
-        f
-        for f in out
-        if all(_file_may_match(f, c, op, v) for c, op, v in where)
-        and LakeTable._file_partition_may_match(f, part_probes or {})
-    ]
+    return [f for f in out if entry_may_match(f, where, part_probes or {})]

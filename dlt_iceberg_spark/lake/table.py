@@ -38,6 +38,7 @@ Scale notes:
 from __future__ import annotations
 
 import bisect
+import itertools
 import json
 import os
 import uuid
@@ -78,9 +79,8 @@ _GROUPED_NDV_CAP = 1 << 18
 #: expansion to a Spark job (lake/planning.py) at this many undecided
 #: entries — below it, job-launch latency beats the driver loop; above it,
 #: driver memory and single-threaded JSON parsing become the bottleneck.
-DISTRIBUTED_PLAN_MIN_FILES = int(
-    os.environ.get("SPARK_GRAFT_DISTRIBUTED_PLAN_MIN_FILES", "50000")
-)
+#: Read at call time, so rebinding the module attribute takes effect.
+DISTRIBUTED_PLAN_MIN_FILES = 50_000
 
 _STATS_TYPES = (
     "int", "bigint", "double", "float", "string", "date",
@@ -249,6 +249,14 @@ _OPS = {
 }
 
 
+def _apply_where(df: DataFrame, where: list[tuple[str, str, Any]] | None) -> DataFrame:
+    """``df`` with the conjunction ``where`` applied as exact Spark
+    filters — the residual every stats-pruned scan re-applies."""
+    for c, op, v in where or []:
+        df = df.filter(_OPS[op](F.col(c), v))
+    return df
+
+
 class _SortedProbe(list):
     """IN-probe values known to be sorted ascending.  ``_plan_scan``
     normalizes every sortable in-list into one so the per-file check
@@ -344,6 +352,33 @@ def _file_fully_matches(f: "DataFile", col: str, op: str, val: Any) -> bool:
     except TypeError:
         return False
     return False
+
+
+def _file_partition_may_match(f: "DataFile", probes: dict[str, set]) -> bool:
+    """Could ``f`` hold a row matching every partition probe?  A file
+    from an OLDER spec (key absent — partition-spec evolution) is kept,
+    and so is a recorded NULL tuple value: hive layout folds BOTH null
+    and empty-string transform values into ``__HIVE_DEFAULT_PARTITION__``
+    (recorded None), so None must conservatively match any probe —
+    e.g. ``truncate("")`` of an empty-string row lives there."""
+    for name, vals in probes.items():
+        v = f.partition.get(name)
+        if v is not None and v not in vals:
+            return False
+    return True
+
+
+def entry_may_match(
+    f: "DataFile", preds: list[tuple[str, str, Any]], part_probes: dict[str, set]
+) -> bool:
+    """The exact per-entry planning predicate: could ``f`` hold a row
+    satisfying every stats predicate in ``preds`` (min/max and blooms) and
+    every transform-rewritten partition probe?  One definition serves
+    inline files, driver-side manifest expansion and the re-check of the
+    distributed planner's survivors (lake/planning.py)."""
+    return all(
+        _file_may_match(f, c, op, v) for c, op, v in preds
+    ) and _file_partition_may_match(f, part_probes)
 
 
 def _norm_path(c: Column) -> Column:
@@ -2039,7 +2074,7 @@ class LakeTable:
         OF``).
 
         ``where`` is a conjunction of ``(column, op, value)`` predicates
-        (ops ``= == != > >= < <=``).  Matching files are selected by the
+        (ops ``= == != > >= < <= in``).  Matching files are selected by the
         manifest's per-file [min, max] stats BEFORE Spark ever sees a path —
         Iceberg scan planning.  Parquet row-group stats would skip the same
         data, but only after listing, opening, and scheduling a task for
@@ -2068,10 +2103,7 @@ class LakeTable:
         if snap is None:
             raise FileNotFoundError(f"no such table: {self.location}")
         where, files = self._select_files(snap, where, plan_mode)
-        df = self._plan_scan(snap, files)
-        for c, op, v in where or []:
-            df = df.filter(_OPS[op](F.col(c), v))
-        return df
+        return _apply_where(self._plan_scan(snap, files), where)
 
     def count(
         self,
@@ -2107,6 +2139,25 @@ class LakeTable:
         if not where:
             return snap.total_rows - sum(masked.values())
         where_n, files = self._select_files(snap, list(where))
+        full, partial = self._split_fully_matching(snap, files, where_n)
+        # a fully-matching file contributes its manifest row count minus
+        # its live masked addresses, still unopened; straddling files take
+        # the masked scan (_plan_scan applies the position deletes)
+        n = sum(f.rows - masked.get(f.path, 0) for f in full)
+        if partial:
+            n += _apply_where(self._plan_scan(snap, partial), where_n).count()
+        return n
+
+    @staticmethod
+    def _split_fully_matching(
+        snap: "Snapshot", files: list[DataFile], where, eligible=lambda f: True
+    ) -> tuple[list[DataFile], list[DataFile]]:
+        """(full, partial): files whose stats prove EVERY row satisfies
+        ``where`` (and that pass ``eligible``) answer aggregate pushdowns
+        unopened; the straddlers must be scanned.  Timestamp predicates
+        never prove a file full — their stats live in a UTC-naive frame
+        that plain comparison cannot enter safely (the pruning rule with
+        the conservative direction flipped)."""
         ts_cols = {
             f.name
             for f in snap.schema.fields
@@ -2115,23 +2166,14 @@ class LakeTable:
         full: list[DataFile] = []
         partial: list[DataFile] = []
         for f in files:
-            if all(
+            if eligible(f) and all(
                 c not in ts_cols and _file_fully_matches(f, c, op, v)
-                for c, op, v in (where_n or [])
+                for c, op, v in (where or [])
             ):
                 full.append(f)
             else:
                 partial.append(f)
-        # a fully-matching file contributes its manifest row count minus
-        # its live masked addresses, still unopened; straddling files take
-        # the masked scan (_plan_scan applies the position deletes)
-        n = sum(f.rows - masked.get(f.path, 0) for f in full)
-        if partial:
-            df = self._plan_scan(snap, partial)
-            for c, op, v in where_n or []:
-                df = df.filter(_OPS[op](F.col(c), v))
-            n += df.count()
-        return n
+        return full, partial
 
     def _position_masked_counts(self, snap: "Snapshot") -> dict[str, int]:
         """Per-live-data-file count of DISTINCT position-delete addresses
@@ -2327,35 +2369,21 @@ class LakeTable:
         )
         column = fld.name
         where_n, files = self._select_files(snap, where)
-        ts_cols = {
-            f.name
-            for f in snap.schema.fields
-            if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType))
-        }
-        full: list[DataFile] = []
-        partial: list[DataFile] = []
-        for f in files:
+
+        def _bounded(f: DataFile) -> bool:
             st = f.stats.get(column)
-            if (
+            return (
                 not scan_all
                 and st is not None
                 and st[0] is not None
                 and st[1] is not None
-                and all(
-                    c not in ts_cols and _file_fully_matches(f, c, op, v)
-                    for c, op, v in (where_n or [])
-                )
-            ):
-                full.append(f)
-            else:
-                partial.append(f)
+            )
+
+        full, partial = self._split_fully_matching(snap, files, where_n, _bounded)
         lo = min((f.stats[column][0] for f in full), default=None)
         hi = max((f.stats[column][1] for f in full), default=None)
         if partial:
-            df = self._plan_scan(snap, partial)
-            for c, op, v in where_n or []:
-                df = df.filter(_OPS[op](F.col(c), v))
-            row = df.agg(
+            row = _apply_where(self._plan_scan(snap, partial), where_n).agg(
                 F.min(column).alias("mn"), F.max(column).alias("mx")
             ).first()
             if row["mn"] is not None:
@@ -2531,28 +2559,15 @@ class LakeTable:
             out.pop(name, None)
         return out
 
-    @staticmethod
-    def _file_partition_may_match(f: DataFile, probes: dict[str, set]) -> bool:
-        """Could ``f`` hold a row matching every partition probe?  A file
-        from an OLDER spec (key absent — partition-spec evolution) is kept,
-        and so is a recorded NULL tuple value: hive layout folds BOTH null
-        and empty-string transform values into ``__HIVE_DEFAULT_PARTITION__``
-        (recorded None), so None must conservatively match any probe —
-        e.g. ``truncate("")`` of an empty-string row lives there."""
-        for name, vals in probes.items():
-            v = f.partition.get(name)
-            if v is not None and v not in vals:
-                return False
-        return True
-
     def _select_files(
         self,
         snap: Snapshot,
         where: list[tuple[str, str, Any]] | None,
         plan_mode: str = "auto",
     ) -> tuple[list[tuple[str, str, Any]] | None, list[DataFile]]:
-        """Two-level stats prune shared by :meth:`read` and the delete
-        paths: returns (normalized predicates, maybe-matching files)."""
+        """Predicate normalization for reads, counts, deletes and
+        compaction scope, then one :meth:`_plan_files` call: returns
+        (normalized predicates, maybe-matching files)."""
         if not where:
             return where, snap.files
         import datetime as _dt
@@ -2620,60 +2635,75 @@ class LakeTable:
             (c, op, _sorted_probe(v)) if op == "in" else (c, op, v)
             for c, op, v in prune_where
         ]
-        # three-level prune, Iceberg-style: manifest aggregate ranges and
-        # partition summaries skip whole manifests unread; file [min,max]
-        # stats AND transform-rewritten partition tuples skip files
+        part_probes = self._partition_probe_values(snap, where)
+        files, _, _ = self._plan_files(snap, prune_where, part_probes, plan_mode)
+        return where, files
+
+    def _plan_files(
+        self,
+        snap: Snapshot,
+        preds: list[tuple[str, str, Any]],
+        part_probes: dict[str, set],
+        plan_mode: str,
+    ) -> tuple[list[DataFile], list[ManifestRef], list[DataFile] | None]:
+        """The one pruning planner behind reads, deletes, CoW merges and
+        changelog images.  ``preds`` are prune-ready predicates (probe
+        values already in the manifest-stats frame); ``part_probes`` are
+        transform-rewritten partition tuples.
+
+        Three-level prune, Iceberg-style: manifest aggregate ranges,
+        partition summaries and fold-OR blooms skip whole manifests
+        unread; :func:`entry_may_match` then decides each entry of the
+        opened manifests (and each inline file).  ``plan_mode`` picks
+        where that per-entry step runs: ``"driver"`` expands the opened
+        manifests here, ``"spark"`` evaluates it as one Spark job over
+        the manifest parquet (lake/planning.py), ``"auto"`` picks spark
+        at ≥ ``DISTRIBUTED_PLAN_MIN_FILES`` undecided entries.
+
+        Returns ``(matched, skipped_refs, unmatched)``: ``skipped_refs``
+        are the manifests proven disjoint (never read); ``unmatched`` are
+        the non-matching entries of the opened manifests and inline
+        files, or None when the spark planner ran (it collects only the
+        survivors)."""
         if plan_mode not in ("auto", "driver", "spark"):
             raise ValueError(f"unknown plan_mode {plan_mode!r}")
-        part_probes = self._partition_probe_values(snap, where)
         from dlt_iceberg_spark.lake.bloom import sketch_keeps_file
 
-        open_refs = [
-            ref
-            for ref in snap.manifests
-            if all(
-                ref.may_match(c, *self._probe_range(op, v))
-                for c, op, v in prune_where
-            )
-            and all(
-                ref.may_contain_partition(name, vals)
-                for name, vals in part_probes.items()
-            )
-            # fold-OR blooms skip whole chunks on equality probes — the
-            # manifest is never opened when no entry can hold the value
-            and all(
-                sketch_keeps_file(ref.sketches, c, op, v)
-                for c, op, v in prune_where
-            )
-        ]
+        open_refs: list[ManifestRef] = []
+        skipped_refs: list[ManifestRef] = []
+        for ref in snap.manifests:
+            if (
+                all(ref.may_match(c, *self._probe_range(op, v)) for c, op, v in preds)
+                and all(
+                    ref.may_contain_partition(name, vals)
+                    for name, vals in part_probes.items()
+                )
+                # fold-OR blooms skip whole chunks on equality probes — the
+                # manifest is never opened when no entry can hold the value
+                and all(sketch_keeps_file(ref.sketches, c, op, v) for c, op, v in preds)
+            ):
+                open_refs.append(ref)
+            else:
+                skipped_refs.append(ref)
         n_undecided = sum(r.n_files for r in open_refs)
-        use_spark = plan_mode == "spark" or (
+        if plan_mode == "spark" or (
             plan_mode == "auto" and n_undecided >= DISTRIBUTED_PLAN_MIN_FILES
-        )
-        inline = [
-            f
-            for f in snap.inline_files
-            if all(_file_may_match(f, c, op, v) for c, op, v in prune_where)
-            and self._file_partition_may_match(f, part_probes)
-        ]
-        if use_spark:
+        ):
             from dlt_iceberg_spark.lake.planning import plan_candidates
 
-            files = inline + plan_candidates(
-                self.spark, self.location, snap.schema, open_refs, prune_where,
-                part_probes=part_probes,
-            )
-        else:
-            expanded: list[DataFile] = []
-            for ref in open_refs:
-                expanded.extend(read_manifest(self.location, ref, io=self._io))
-            files = inline + [
-                f
-                for f in expanded
-                if all(_file_may_match(f, c, op, v) for c, op, v in prune_where)
-                and self._file_partition_may_match(f, part_probes)
+            inline = [
+                f for f in snap.inline_files if entry_may_match(f, preds, part_probes)
             ]
-        return where, files
+            return inline + plan_candidates(
+                self.spark, self.location, snap.schema, open_refs, preds,
+                part_probes=part_probes,
+            ), skipped_refs, None
+        matched: list[DataFile] = []
+        unmatched: list[DataFile] = []
+        expanded = (read_manifest(self.location, ref, io=self._io) for ref in open_refs)
+        for f in itertools.chain(snap.inline_files, itertools.chain.from_iterable(expanded)):
+            (matched if entry_may_match(f, preds, part_probes) else unmatched).append(f)
+        return matched, skipped_refs, unmatched
 
     def _physical_read(
         self,
@@ -2942,7 +2972,6 @@ class LakeTable:
         self,
         where: list[tuple[str, str, Any]],
         snapshot_version: int | None = None,
-        plan_mode: str = "auto",
     ) -> list[DeleteFile]:
         """Write POSITION-delete files addressing every live row matching
         ``where`` (same predicate form as :meth:`read`).
@@ -2969,13 +2998,11 @@ class LakeTable:
         snap = self.snapshot(snapshot_version)
         if snap is None:
             raise FileNotFoundError(f"no such table: {self.location}")
-        where_n, files = self._select_files(snap, where, plan_mode)
+        where_n, files = self._select_files(snap, where)
         if not files:
             return []
         scan = self._physical_read(files, snap.schema, with_addr=True)
-        for c, op, v in where_n or []:
-            scan = scan.filter(_OPS[op](F.col(c), v))
-        addressed = scan.select(
+        addressed = _apply_where(scan, where_n).select(
             F.col("__pd_path").alias("file_path"),
             F.col("__pd_pos").alias("pos"),
         )
@@ -2991,9 +3018,7 @@ class LakeTable:
             for f in staged
         ]
 
-    def position_delete_where(
-        self, where: list[tuple[str, str, Any]], plan_mode: str = "auto"
-    ) -> Snapshot:
+    def position_delete_where(self, where: list[tuple[str, str, Any]]) -> Snapshot:
         """Merge-on-read row delete in one call: stage position deletes for
         every row matching ``where`` and commit a delete snapshot that
         REUSES the parent's manifests by reference — O(matching rows) work
@@ -3003,9 +3028,7 @@ class LakeTable:
         snap = self.snapshot()
         if snap is None:
             raise FileNotFoundError(f"no such table: {self.location}")
-        new_deletes = self.stage_position_deletes(
-            where, snapshot_version=snap.version, plan_mode=plan_mode
-        )
+        new_deletes = self.stage_position_deletes(where, snapshot_version=snap.version)
         if not new_deletes:
             return snap
         return self.commit(
@@ -3026,7 +3049,6 @@ class LakeTable:
         self,
         where: list[tuple[str, str, Any]],
         set: dict[str, Any],
-        plan_mode: str = "auto",
     ) -> Snapshot:
         """Row-level UPDATE, merge-on-read, one atomic commit: position
         deletes mask the matching rows in place and the updated row images
@@ -3051,9 +3073,7 @@ class LakeTable:
         unknown = [c for c in set if c not in names]
         if unknown:
             raise ValueError(f"no such column(s) in SET: {unknown}")
-        new_deletes = self.stage_position_deletes(
-            where, snapshot_version=snap.version, plan_mode=plan_mode
-        )
+        new_deletes = self.stage_position_deletes(where, snapshot_version=snap.version)
         if not new_deletes:
             return snap
         # live matching rows (current masks + predicate applied), updated
@@ -3328,10 +3348,11 @@ class LakeTable:
             ):
                 continue
             parent = self.snapshot(snap.parent) if snap.parent is not None else None
-            # manifest-ref diff: O(changed + folded) per snapshot.  The FULL
-            # parent listing (parent.files) is touched only below, when this
-            # snapshot lands new delete files — their candidates can live in
-            # any parent file
+            # manifest-ref diff: O(changed + folded) per snapshot.  New
+            # delete files below can hit any parent file: equality deletes
+            # plan their candidates through the pruning planner, position
+            # deletes match the FULL parent listing (parent.files) against
+            # the paths they address
             added, removed = self._diff_files(snap, parent)
             if added:
                 ins = self.spark.read.schema(snap.schema).parquet(
@@ -3363,27 +3384,20 @@ class LakeTable:
                     ).distinct()
                     # prune the parent scan to files whose stats overlap the
                     # delete-key envelope (one tiny agg over the delete set:
-                    # delete files ≪ data) — image resolution stays
-                    # O(touched files), not O(table)
+                    # delete files ≪ data) — manifests outside the envelope
+                    # stay unread and image resolution stays O(touched
+                    # files), not O(table)
                     bounds = kdf.agg(
                         *[f for k in keys for f in (F.min(k).alias(f"_mn_{k}"), F.max(k).alias(f"_mx_{k}"))]
                     ).collect()[0]
-                    cand = [
-                        f
-                        for f in parent.files
-                        if all(
-                            bounds[f"_mn_{k}"] is None
-                            or (
-                                _file_may_match(
-                                    f, k, ">=", iso_norm_value(bounds[f"_mn_{k}"])
-                                )
-                                and _file_may_match(
-                                    f, k, "<=", iso_norm_value(bounds[f"_mx_{k}"])
-                                )
-                            )
-                            for k in keys
-                        )
+                    envelope = [
+                        (k, op, iso_norm_value(bounds[f"_{side}_{k}"]))
+                        for k in keys
+                        # an all-null key column bounds nothing: no probe
+                        if bounds[f"_mn_{k}"] is not None
+                        for op, side in ((">=", "mn"), ("<=", "mx"))
                     ]
+                    cand, _, _ = self._plan_files(parent, envelope, {}, "auto")
                     img = self._plan_scan(parent, cand).join(
                         kdf, on=keys, how="leftsemi"
                     )
@@ -4184,35 +4198,6 @@ class LakeTable:
                 return None, None
         return None, None  # != prunes nothing at range level
 
-    def _candidate_files(
-        self, snap: Snapshot, where: list[tuple[str, str, Any]]
-    ) -> list[DataFile]:
-        """Expand only manifests whose aggregate ranges could satisfy ALL
-        predicates; skipped manifests are never read."""
-        out = list(snap.inline_files)
-        for ref in snap.manifests:
-            if all(
-                ref.may_match(c, *self._probe_range(op, v)) for c, op, v in where
-            ):
-                out.extend(read_manifest(self.location, ref, io=self._io))
-        return out
-
-    @staticmethod
-    def _file_overlaps(f: DataFile, probes: dict[str, tuple[Any, Any]]) -> bool:
-        """Conjunctive range overlap: the file may hold a matching row only
-        if its [min,max] overlaps EVERY probed column's range (missing
-        stats ⇒ assume overlap on that column)."""
-        for col, (lo, hi) in probes.items():
-            st = f.stats.get(col)
-            if st is None or st[0] is None or st[1] is None:
-                continue
-            try:
-                if (hi is not None and st[0] > hi) or (lo is not None and st[1] < lo):
-                    return False
-            except TypeError:
-                continue
-        return True
-
     def prune_split(
         self,
         snap: Snapshot,
@@ -4242,31 +4227,18 @@ class LakeTable:
         ``bucket[N]``-partitioned table, where every file's key [min,max]
         spans the whole key range (hash mixing defeats range probes), a
         merge batch touching k buckets rewrites only ~k/N of the files.
+
+        The probes enter :meth:`_plan_files` as ``>= lo`` / ``<= hi``
+        predicates, driver-planned: the split needs the opened manifests'
+        non-matching entries, which the distributed planner never collects.
         """
-        part_probes = part_probes or {}
-        touched: list[DataFile] = []
-        kept_refs: list[ManifestRef] = []
-        kept_files: list[DataFile] = []
-
-        def _hits(f: DataFile) -> bool:
-            return self._file_overlaps(f, probes) and self._file_partition_may_match(
-                f, part_probes
-            )
-
-        for f in snap.inline_files:
-            (touched if _hits(f) else kept_files).append(f)
-        for ref in snap.manifests:
-            if any(
-                not ref.may_match(c, lo, hi) for c, (lo, hi) in probes.items()
-            ) or any(
-                not ref.may_contain_partition(name, vals)
-                for name, vals in part_probes.items()
-            ):
-                kept_refs.append(ref)
-                continue
-            for f in read_manifest(self.location, ref, io=self._io):
-                (touched if _hits(f) else kept_files).append(f)
-        return touched, kept_refs, kept_files
+        preds = [
+            (c, op, bound)
+            for c, (lo, hi) in probes.items()
+            for op, bound in ((">=", lo), ("<=", hi))
+            if bound is not None  # None = unbounded side
+        ]
+        return self._plan_files(snap, preds, part_probes or {}, "driver")
 
     def prune_files(
         self, snap: Snapshot, column: str, lo: Any, hi: Any
