@@ -23,13 +23,18 @@ no column name can collide with the routing.  Manifest refs carry the
 bit-OR fold of their entries' blooms (same m/k/t), letting a probe skip
 a whole 500-file manifest chunk without opening it.
 
-Hashing: one JVM ``xxhash64(col)`` per value, split Guava-style into
-two 32-bit halves h1/h2; bit i = (h1 + i*h2) mod m (Kirsch-
-Mitzelmauer double hashing).  The probe side replays the identical
-scheme with the pure-Python Spark-parity xxh64 (functions/xxhash.py),
-framed by the STORED dtype tag — a file written when the column was
-int stays correctly testable after an int->long promotion, because its
-values were int-framed when its bits were set.
+Hashing: Spark's ``xxhash64`` of each value (seed 42; ints and dates
+through the 4-byte path — a date as its int32 day count — longs through
+the 8-byte path, strings as UTF-8 bytes), split Guava-style into two
+32-bit halves h1/h2; bit i = (h1 + i*h2) mod m (Kirsch-Mitzenmacher
+double hashing).  Local tables build the bits on the driver from the
+staged files' columns (:func:`build_bloom`, the numpy Spark-parity
+kernels in functions/xxhash.py); non-local FileIO builds them in one
+Spark job with the JVM ``xxhash64``, bit-identical.  The probe side
+replays the same scheme with the pure-Python xxh64, framed by the
+STORED dtype tag — a file written when the column was int stays
+correctly testable after an int->long promotion, because its values
+were int-framed when its bits were set.
 
 Soundness: a bloom can only say "definitely absent" for values whose
 k positions were never set, and every non-null value in the file set
@@ -54,10 +59,16 @@ import base64
 from datetime import date, datetime
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
+
 from dlt_iceberg_spark.functions.xxhash import (
     spark_xxhash64_int,
+    spark_xxhash64_int_np,
     spark_xxhash64_long,
+    spark_xxhash64_long_np,
     spark_xxhash64_string,
+    spark_xxhash64_string_arrow,
 )
 
 #: bloom size in bits — power of two (folding and pos arithmetic rely on it)
@@ -143,18 +154,57 @@ def bloom_may_contain(bloom: dict, op: str, val: Any) -> bool:
         return True
 
 
-def pack_positions(positions, m: int) -> str | None:
-    """Set-bits -> base64 bitmap; None when too saturated to store."""
-    bits = bytearray(m >> 3)
-    n_set = 0
-    for p in positions:
-        byte, bit = p >> 3, 1 << (p & 7)
-        if not bits[byte] & bit:
-            bits[byte] |= bit
-            n_set += 1
-    if n_set > SATURATION_DROP * m:
+def _encode(bits: np.ndarray) -> str | None:
+    """Packed little-endian bitmap -> base64; None when more than
+    SATURATION_DROP of its bits are set (too full to earn its bytes)."""
+    if np.unpackbits(bits).sum() > SATURATION_DROP * bits.size * 8:
         return None
-    return base64.b64encode(bytes(bits)).decode("ascii")
+    return base64.b64encode(bits.tobytes()).decode("ascii")
+
+
+def pack_positions(positions, m: int) -> str | None:
+    """Set-bits (a sequence or ndarray of positions) -> base64 bitmap
+    (bit p = byte p>>3, bit p&7); None when too saturated to store."""
+    flags = np.zeros(m, dtype=np.uint8)
+    flags[np.asarray(positions, dtype=np.int64)] = 1
+    return _encode(np.packbits(flags, bitorder="little"))
+
+
+def _hashes(tag: str, arr: pa.Array) -> np.ndarray | None:
+    """Unsigned Spark-parity xxhash64 of every non-null value of ``arr``
+    in frame ``tag``, or None for frames blooms are not built for."""
+    arr = arr.drop_null()
+    if tag == "bigint":
+        h = spark_xxhash64_long_np(arr.to_numpy())
+    elif tag == "int":
+        h = spark_xxhash64_int_np(arr.to_numpy())
+    elif tag == "date":
+        h = spark_xxhash64_int_np(arr.cast(pa.int32()).to_numpy())
+    elif tag == "string":
+        h, _ = spark_xxhash64_string_arrow(arr)
+    else:
+        return None
+    return h.view(np.uint64)
+
+
+def build_bloom(
+    tag: str, arr, m: int = BLOOM_M_BITS, k: int = BLOOM_K
+) -> dict | None:
+    """The write-side twin of :func:`probe_positions`: the bloom of every
+    non-null value in the pyarrow array ``arr`` (NULLs set no bits), or
+    None when the frame is not bloomable or the bits saturate."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    h = _hashes(tag, arr)
+    if h is None:
+        return None
+    h1, h2 = h >> np.uint64(32), h & np.uint64(0xFFFFFFFF)
+    i = np.arange(k, dtype=np.uint64)[:, None]
+    # uint64 array arithmetic wraps like the JVM's long
+    packed = pack_positions(((h1 + i * h2) & np.uint64(m - 1)).ravel(), m)
+    if packed is None:
+        return None
+    return {"b": packed, "m": m, "k": k, "t": tag}
 
 
 def fold_blooms(blooms: list[dict]) -> dict | None:
@@ -169,22 +219,13 @@ def fold_blooms(blooms: list[dict]) -> dict | None:
     m, k, t = frames.pop()
     if not isinstance(m, int) or m <= 0 or m & (m - 1):
         return None
-    acc = bytearray(m >> 3)
-    for b in blooms:
-        raw = base64.b64decode(b["b"])
-        if len(raw) != len(acc):
-            return None
-        for i, byte in enumerate(raw):
-            acc[i] |= byte
-    n_set = sum(bin(byte).count("1") for byte in acc)
-    if n_set > SATURATION_DROP * m:
+    raws = [np.frombuffer(base64.b64decode(b["b"]), dtype=np.uint8) for b in blooms]
+    if any(r.size != m >> 3 for r in raws):
         return None
-    return {
-        "b": base64.b64encode(bytes(acc)).decode("ascii"),
-        "m": m,
-        "k": k,
-        "t": t,
-    }
+    packed = _encode(np.bitwise_or.reduce(raws))
+    if packed is None:
+        return None
+    return {"b": packed, "m": m, "k": k, "t": t}
 
 
 def sketch_keeps_file(sketches: dict | None, col: str, op: str, val: Any) -> bool:

@@ -222,7 +222,7 @@ class Pipeline:
         # probe the hash first: a steady-state load re-delivers a known
         # schema, so the newest-version scan runs only when a new
         # `_dlt_version` row will be written
-        if self.state.get_schema_by_hash(version_hash) is None:
+        if not self.state.has_schema_hash(version_hash):
             prev = self.state.get_newest_schema(self.dataset_name)
             version = (prev.version + 1) if prev is not None else 1
             self.state.store_schema(self.dataset_name, version_hash, version, schema_doc)

@@ -11,6 +11,9 @@ format allows:
   (M5) or an unseen ``version_hash`` (M4) opens no data file and launches
   no Spark job; a hit reads only the files that can hold it.  A missing
   table answers None/False without building a frame;
+- "is this schema hash stored?" (M4) is a pruned ``count``: a one-row
+  file's min == max proves its row matches, so a hit is answered from
+  manifest stats too and no probe launches a job;
 - newest schema (M1/M2) = pruned ``schema_name`` scan + max(version) top-1;
 - newest pipeline state (M3) = pruned ``pipeline_name`` scan +
   max(created_at) top-1;
@@ -152,7 +155,7 @@ class StateStore:
     ) -> bool:
         """Append one `_dlt_version` row; idempotent by hash
         (destination_client.py:583-677). Returns True if written."""
-        if self.get_schema_by_hash(version_hash) is not None:
+        if self.has_schema_hash(version_hash):
             return False
         self._append(
             VERSION_TABLE,
@@ -199,6 +202,16 @@ class StateStore:
 
     def get_schema_by_hash(self, version_hash: str) -> Row | None:
         return self._first(VERSION_TABLE, "version_hash", version_hash)
+
+    def has_schema_hash(self, version_hash: str) -> bool:
+        """Whether a ``_dlt_version`` row carries ``version_hash`` — a
+        COUNT pushdown that one-row ledger files answer from their
+        manifest stats, so it opens no data file and runs no Spark job."""
+        table = self._table(VERSION_TABLE)
+        return (
+            table is not None
+            and table.count(where=[("version_hash", "=", version_hash)]) > 0
+        )
 
     def restore_schema(self, schema_name: str) -> dict:
         """Schema restore with the reference's preference order

@@ -634,16 +634,36 @@ class Snapshot:
 def _collect_file_stats(
     abs_path: str, schema: T.StructType, io=None
 ) -> tuple[int, int, dict]:
-    """Row count + per-column min/max from parquet footers (driver-side,
-    footer-only reads — the same stats Iceberg records at write time)."""
+    """Row count, byte size and per-column min/max of one data file:
+    :func:`_scan_staged_file` without blooms."""
+    return _scan_staged_file(abs_path, schema, io)[:3]
+
+
+def _scan_staged_file(
+    abs_path: str, schema: T.StructType, io=None, bloom_columns=None
+) -> tuple[int, int, dict, dict]:
+    """The driver's per-file pass over a freshly written data file:
+    (rows, bytes, {col: [min, max]}, {bloom:<col>: bloom}).
+
+    Row count and min/max come from the parquet footer — the same stats
+    Iceberg records at write time.  Manifest blooms (lake/bloom.py) read
+    ONLY the ``bloom_columns`` chunks of the same open file and hash them
+    with the numpy Spark-parity kernels; saturated blooms and dtypes
+    without a bloom frame are left out."""
+    from dlt_iceberg_spark.lake.bloom import BLOOM_FRAMES, bloom_key, build_bloom
+
     io = io or LocalFileIO()
-    md = pq.ParquetFile(io.open_parquet_source(abs_path)).metadata
+    tags = {f.name: f.dataType.simpleString() for f in schema.fields}
+    with pq.ParquetFile(io.open_parquet_source(abs_path)) as pf:
+        md = pf.metadata
+        present = [
+            c
+            for c in dict.fromkeys(bloom_columns or ())
+            if tags.get(c) in BLOOM_FRAMES and c in pf.schema_arrow.names
+        ]
+        cols = pf.read(columns=present) if present else None
     stats: dict[str, list[Any]] = {}
-    prunable = {
-        f.name
-        for f in schema.fields
-        if f.dataType.simpleString() in _STATS_TYPES
-    }
+    prunable = {name for name, tag in tags.items() if tag in _STATS_TYPES}
     for rg in range(md.num_row_groups):
         g = md.row_group(rg)
         for ci in range(g.num_columns):
@@ -671,7 +691,12 @@ def _collect_file_stats(
                 stats[name] = [mn, mx]
             else:
                 stats[name] = [min(cur[0], mn), max(cur[1], mx)]
-    return md.num_rows, io.size(abs_path), stats
+    blooms: dict[str, dict] = {}
+    for c in present:
+        bloom = build_bloom(tags[c], cols.column(c))
+        if bloom is not None:  # None = saturated, not worth bytes
+            blooms[bloom_key(c)] = bloom
+    return md.num_rows, io.size(abs_path), stats, blooms
 
 
 class LakeTable:
@@ -1158,11 +1183,14 @@ class LakeTable:
         The transform values ride as duplicate ``_p_*`` string columns so
         the data columns stay intact inside the files.
 
-        Stats collection: local tables read parquet footers on the driver
-        (µs per file); non-local FileIO collects per-file stats with ONE
-        distributed Spark job over the staging directory — pulling 128 MB
-        data files through the driver just to read footers would be the
-        exact anti-pattern manifests exist to avoid.
+        Stats collection: on local tables one driver pass per staged file
+        (:func:`_scan_staged_file`) reads the footer stats AND builds the
+        manifest blooms for ``bloom_columns`` from just those column
+        chunks — no Spark job beyond the write.  Non-local FileIO collects
+        per-file stats and blooms with distributed Spark jobs over the
+        staging directory — pulling 128 MB data files through the driver
+        would be the exact anti-pattern manifests exist to avoid.  NDV
+        sketches (``ndv_columns``, opt-in) are always their own Spark job.
         """
         import urllib.parse
 
@@ -1184,11 +1212,8 @@ class LakeTable:
             if c in df.columns:
                 writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
         writer.parquet(staging)
-        spark_stats = (
-            None
-            if isinstance(io, LocalFileIO)
-            else self._stats_via_spark(staging, df.schema)
-        )
+        local = isinstance(io, LocalFileIO)
+        spark_stats = None if local else self._stats_via_spark(staging, df.schema)
         # per-file KMV NDV sketches (opt-in): footers can't answer distinct
         # counts, so this is its own distributed job over the staging dir
         sketch_by_file = (
@@ -1197,8 +1222,9 @@ class LakeTable:
             else {}
         )
         # manifest-level blooms for the same columns: min/max stats can't
-        # skip files for scattered high-cardinality keys; these can
-        if bloom_columns:
+        # skip files for scattered high-cardinality keys; these can (local
+        # tables build them in the per-file pass below)
+        if bloom_columns and not local:
             for name, blooms in self._blooms_via_spark(
                 staging, bloom_columns, df.schema
             ).items():
@@ -1220,8 +1246,11 @@ class LakeTable:
             final_name = f"{uuid.uuid4().hex}.parquet"
             abs_final = os.path.join(self._data_dir, final_name)
             io.rename(os.path.join(staging, rel), abs_final)
-            if spark_stats is None:
-                rows, nbytes, stats = _collect_file_stats(abs_final, df.schema, io=io)
+            if local:
+                rows, nbytes, stats, blooms = _scan_staged_file(
+                    abs_final, df.schema, io, bloom_columns
+                )
+                sketch_by_file.setdefault(name, {}).update(blooms)
             else:
                 rows, stats = spark_stats.get(name, (0, {}))
                 nbytes = io.size(abs_final) if rows else 0
@@ -1365,9 +1394,11 @@ class LakeTable:
         columns: list[str],
         schema: T.StructType,
     ) -> dict[str, dict]:
-        """Per-file manifest Bloom filters (lake/bloom.py), ONE distributed
-        job grouped by ``input_file_name()`` — the planning-level sibling
-        of the parquet row-group blooms ``stage_dataframe`` already writes.
+        """Per-file manifest Bloom filters (lake/bloom.py) for non-local
+        FileIO, ONE distributed job grouped by ``input_file_name()`` — the
+        planning-level sibling of the parquet row-group blooms
+        ``stage_dataframe`` already writes.  Local tables build the same
+        bits on the driver (:func:`_scan_staged_file`).
 
         Per value the JVM computes one ``xxhash64`` and k = BLOOM_K bit
         positions (Guava-style two-halves double hashing), each encoded as
@@ -1379,6 +1410,8 @@ class LakeTable:
         shuffle at that same bound.  Only frames with exact Python probe
         parity are built (BLOOM_FRAMES); other dtypes are skipped."""
         import urllib.parse
+
+        import numpy as np
 
         from dlt_iceberg_spark.lake.bloom import (
             BLOOM_FRAMES,
@@ -1425,12 +1458,10 @@ class LakeTable:
         )
         out: dict[str, dict] = {}
         for r in rows:
-            per_col: list[list[int]] = [[] for _ in present]
-            for e in r["_es"]:
-                per_col[e // m].append(e % m)
+            es = np.asarray(r["_es"], dtype=np.int64)
             blooms: dict[str, dict] = {}
             for ci, c in enumerate(present):
-                packed = pack_positions(per_col[ci], m)
+                packed = pack_positions(es[es // m == ci] % m, m)
                 if packed is not None:  # None = saturated, not worth bytes
                     blooms[bloom_key(c)] = {
                         "b": packed,

@@ -7,6 +7,7 @@ high-cardinality keys, mirroring the planning-level half of Iceberg's
 parquet bloom recipe.
 """
 
+import base64
 import datetime
 
 import pytest
@@ -247,3 +248,99 @@ def test_promotion_keeps_bloom_sound(spark, tmp_path):
     # ...and out-of-int-range probes keep files conservatively (the file
     # cannot contain them, but the bloom must never crash or mis-skip)
     assert t.read(where=[("k", "=", 1 << 40)]).count() == 0
+
+
+# ------------------------------------------------ driver-built blooms --
+
+
+def _bloom_frame(spark, n_rows, n_files):
+    """Every bloom frame, with the value shapes the hash kernels branch on:
+    empty, multi-byte UTF-8 and >= 32-byte strings, partial and total
+    NULLs, and one high-cardinality column that saturates per file."""
+    s = (
+        F.when(F.col("id") % 6 == 0, F.lit(""))
+        .when(F.col("id") % 6 == 1, F.concat(F.lit("é…"), F.col("id") % 50))
+        .when(F.col("id") % 6 == 2, F.concat(F.lit("x" * 33), F.col("id") % 90))
+        .when(F.col("id") % 6 == 3, F.lit(None))
+        .otherwise(F.concat(F.lit("k-"), F.col("id") % 300))
+    )
+    # one contiguous, deterministic key slice per file (no shuffle)
+    return spark.range(0, n_rows, 1, n_files).select(
+        F.col("id").alias("key"),
+        (F.col("id") % 997).cast("int").alias("i"),
+        (F.col("id") * 7919 % 3001).alias("b"),
+        s.alias("s"),
+        F.date_add(F.lit("1969-06-01").cast("date"), (F.col("id") % 700).cast("int")).alias("d"),
+        F.lit(None).cast("bigint").alias("nul"),
+    )
+
+
+_PARITY_COLS = ["i", "b", "s", "d", "nul", "key"]
+
+
+def test_driver_blooms_match_spark_job(spark, tmp_path):
+    """The driver's per-file pass builds bit-identical blooms to the Spark
+    job non-local tables use, on the same files — and both drop the
+    saturated column."""
+    import os
+
+    from dlt_iceberg_spark.lake.fileio import LocalFileIO
+    from dlt_iceberg_spark.lake.table import _scan_staged_file
+
+    df = _bloom_frame(spark, 50000, 2)
+    staging = str(tmp_path / "staging")
+    df.write.parquet(staging)
+    t = LakeTable(spark, str(tmp_path / "t"))
+    via_spark = t._blooms_via_spark(staging, _PARITY_COLS, df.schema)
+    names = [n for n in os.listdir(staging) if n.endswith(".parquet")]
+    assert len(names) == 2 and set(via_spark) == set(names)
+    for name in names:
+        *_, driver = _scan_staged_file(
+            os.path.join(staging, name), df.schema, LocalFileIO(), _PARITY_COLS
+        )
+        assert driver == via_spark[name]
+        assert set(driver) == {bloom_key(c) for c in ("i", "b", "s", "d", "nul")}
+        # an all-NULL column sets no bits
+        assert set(base64.b64decode(driver[bloom_key("nul")]["b"])) == {0}
+
+
+def test_local_and_hadoop_staging_carry_equal_blooms(spark, tmp_path):
+    """The same DataFrame staged through LocalFileIO (driver pass) and
+    HadoopFileIO (Spark job) lands files with equal manifest blooms."""
+    from dlt_iceberg_spark.lake.fileio import HadoopFileIO
+
+    df = _bloom_frame(spark, 4000, 4)
+    local = LakeTable(spark, str(tmp_path / "local" / "t"))
+    hadoop = LakeTable(
+        spark, str(tmp_path / "hdfs" / "t"), io=HadoopFileIO(spark, str(tmp_path))
+    )
+
+    def by_file(table):
+        files = table.stage_dataframe(df, bloom_columns=_PARITY_COLS)
+        return {
+            (f.rows, tuple(f.stats["key"])): {
+                k: v for k, v in f.sketches.items() if k.startswith("bloom:")
+            }
+            for f in files
+        }
+
+    got_local, got_hadoop = by_file(local), by_file(hadoop)
+    assert len(got_local) == 4
+    assert got_local == got_hadoop
+    assert all(bloom_key("s") in b and bloom_key("d") in b for b in got_local.values())
+
+
+def test_local_bloom_write_launches_no_extra_spark_jobs(spark, tmp_path):
+    """On a local table, manifest blooms cost no Spark job: staging with
+    ``bloom_columns`` launches exactly the jobs staging without them does."""
+    from tests.test_state import _spark_jobs
+
+    df = _bloom_frame(spark, 4000, 4)
+    t = LakeTable(spark, str(tmp_path / "jobs"))
+    plain = _spark_jobs(spark, lambda: t.stage_dataframe(df))
+    out = []
+    with_blooms = _spark_jobs(
+        spark, lambda: out.extend(t.stage_dataframe(df, bloom_columns=_PARITY_COLS))
+    )
+    assert plain >= 1 and with_blooms == plain
+    assert all(bloom_key("key") in f.sketches for f in out)

@@ -362,6 +362,38 @@ def test_steady_state_pipeline_run_spends_at_most_one_ledger_job(spark, warehous
     assert p.run(Resource(batch, "t"), load_id="steady-0").already_loaded
 
 
+def test_steady_state_pipeline_run_spends_zero_ledger_jobs(spark, warehouse, monkeypatch):
+    """A load that re-delivers a known schema answers the schema-hash
+    probe from manifest stats: no ledger call launches a Spark job."""
+    import functools
+
+    from dlt_iceberg_spark.lake.pipeline import Pipeline, Resource
+
+    p = Pipeline(spark, warehouse, dataset_name="ds")
+    batch = spark.createDataFrame([(1, "a")], "id long, v string")
+    for i in range(3):
+        p.run(Resource(batch, "t"), load_id=f"warm-{i}")
+
+    ledger_jobs: dict[str, list[int]] = {}
+    for m in ("load_recorded", "store_completed_load", "get_newest_schema",
+              "get_schema_by_hash", "has_schema_hash", "store_schema"):
+        orig = getattr(StateStore, m)
+
+        def wrapped(self, *a, _orig=orig, _m=m, **k):
+            out = []
+            ledger_jobs.setdefault(_m, []).append(
+                _spark_jobs(spark, lambda: out.append(_orig(self, *a, **k)))
+            )
+            return out[0]
+
+        monkeypatch.setattr(StateStore, m, functools.wraps(orig)(wrapped))
+    loads = 3
+    for i in range(loads):
+        assert not p.run(Resource(batch, "t"), load_id=f"steady-{i}").already_loaded
+    assert len(ledger_jobs["has_schema_hash"]) == loads
+    assert {m: sum(n) for m, n in ledger_jobs.items() if sum(n)} == {}
+
+
 def test_ledger_over_hadoop_fileio(spark, tmp_path):
     """The ledger's driver-written appends and pruned lookups work when the
     table format's I/O rides the JVM Hadoop FileSystem."""
