@@ -170,40 +170,38 @@ def pack_positions(positions, m: int) -> str | None:
     return _encode(np.packbits(flags, bitorder="little"))
 
 
-def _hashes(tag: str, arr: pa.Array) -> np.ndarray | None:
+def _hashes(tag: str, arr: pa.Array) -> np.ndarray:
     """Unsigned Spark-parity xxhash64 of every non-null value of ``arr``
-    in frame ``tag``, or None for frames blooms are not built for."""
+    in the bloom frame ``tag``."""
     arr = arr.drop_null()
-    if tag == "bigint":
+    if tag == "string":
+        h, _ = spark_xxhash64_string_arrow(arr)
+    elif tag == "bigint":
         h = spark_xxhash64_long_np(arr.to_numpy())
-    elif tag == "int":
-        h = spark_xxhash64_int_np(arr.to_numpy())
     elif tag == "date":
         h = spark_xxhash64_int_np(arr.cast(pa.int32()).to_numpy())
-    elif tag == "string":
-        h, _ = spark_xxhash64_string_arrow(arr)
-    else:
-        return None
+    else:  # int
+        h = spark_xxhash64_int_np(arr.to_numpy())
     return h.view(np.uint64)
 
 
-def build_bloom(
-    tag: str, arr, m: int = BLOOM_M_BITS, k: int = BLOOM_K
-) -> dict | None:
+def build_bloom(tag: str, batches) -> dict | None:
     """The write-side twin of :func:`probe_positions`: the bloom of every
-    non-null value in the pyarrow array ``arr`` (NULLs set no bits), or
-    None when the frame is not bloomable or the bits saturate."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    h = _hashes(tag, arr)
-    if h is None:
-        return None
-    h1, h2 = h >> np.uint64(32), h & np.uint64(0xFFFFFFFF)
-    i = np.arange(k, dtype=np.uint64)[:, None]
-    # uint64 array arithmetic wraps like the JVM's long
-    packed = pack_positions(((h1 + i * h2) & np.uint64(m - 1)).ravel(), m)
-    if packed is None:
-        return None
+    non-null value in ``batches`` (pyarrow arrays of one column in the
+    bloom frame ``tag``; NULLs set no bits), or None once the bits
+    saturate.  Memory is one batch plus m flags, whatever the row count,
+    and a saturating column stops hashing at the batch that fills it."""
+    m, k = BLOOM_M_BITS, BLOOM_K
+    flags = np.zeros(m, dtype=np.uint8)
+    for arr in batches:
+        h = _hashes(tag, arr)
+        h1, h2 = h >> np.uint64(32), h & np.uint64(0xFFFFFFFF)
+        for i in range(k):
+            # uint64 array arithmetic wraps like the JVM's long
+            flags[(h1 + np.uint64(i) * h2) & np.uint64(m - 1)] = 1
+        if flags.sum() > SATURATION_DROP * m:
+            return None
+    packed = _encode(np.packbits(flags, bitorder="little"))
     return {"b": packed, "m": m, "k": k, "t": tag}
 
 

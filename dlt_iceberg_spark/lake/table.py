@@ -41,6 +41,7 @@ import bisect
 import itertools
 import json
 import os
+import urllib.parse
 import uuid
 from dataclasses import dataclass, field as dc_field
 from datetime import date as _date
@@ -646,22 +647,24 @@ def _scan_staged_file(
     (rows, bytes, {col: [min, max]}, {bloom:<col>: bloom}).
 
     Row count and min/max come from the parquet footer — the same stats
-    Iceberg records at write time.  Manifest blooms (lake/bloom.py) read
-    ONLY the ``bloom_columns`` chunks of the same open file and hash them
-    with the numpy Spark-parity kernels; saturated blooms and dtypes
-    without a bloom frame are left out."""
+    Iceberg records at write time.  Manifest blooms (lake/bloom.py) stream
+    ONLY the ``bloom_columns`` chunks of the same open file, batch by
+    batch, through the numpy Spark-parity kernels; saturated blooms and
+    dtypes without a bloom frame are left out."""
     from dlt_iceberg_spark.lake.bloom import BLOOM_FRAMES, bloom_key, build_bloom
 
     io = io or LocalFileIO()
     tags = {f.name: f.dataType.simpleString() for f in schema.fields}
+    blooms: dict[str, dict] = {}
     with pq.ParquetFile(io.open_parquet_source(abs_path)) as pf:
         md = pf.metadata
-        present = [
-            c
-            for c in dict.fromkeys(bloom_columns or ())
-            if tags.get(c) in BLOOM_FRAMES and c in pf.schema_arrow.names
-        ]
-        cols = pf.read(columns=present) if present else None
+        for c in dict.fromkeys(bloom_columns or ()):
+            if tags.get(c) not in BLOOM_FRAMES or c not in pf.schema_arrow.names:
+                continue
+            batches = (b.column(0) for b in pf.iter_batches(columns=[c]))
+            bloom = build_bloom(tags[c], batches)
+            if bloom is not None:  # None = saturated, not worth bytes
+                blooms[bloom_key(c)] = bloom
     stats: dict[str, list[Any]] = {}
     prunable = {name for name, tag in tags.items() if tag in _STATS_TYPES}
     for rg in range(md.num_row_groups):
@@ -691,12 +694,16 @@ def _scan_staged_file(
                 stats[name] = [mn, mx]
             else:
                 stats[name] = [min(cur[0], mn), max(cur[1], mx)]
-    blooms: dict[str, dict] = {}
-    for c in present:
-        bloom = build_bloom(tags[c], cols.column(c))
-        if bloom is not None:  # None = saturated, not worth bytes
-            blooms[bloom_key(c)] = bloom
     return md.num_rows, io.size(abs_path), stats, blooms
+
+
+def _staged_rel(staging: str, uri: str) -> str:
+    """``input_file_name()`` of a file under ``staging`` -> its path
+    relative to ``staging``, the key ``FileIO.walk_files`` yields.  Not the
+    basename: Spark restarts its file counter in every partition
+    directory, so one task's files share a name across directories."""
+    marker = "/" + os.path.basename(staging.rstrip("/")) + "/"
+    return urllib.parse.unquote(uri).partition(marker)[2]
 
 
 class LakeTable:
@@ -1192,8 +1199,6 @@ class LakeTable:
         would be the exact anti-pattern manifests exist to avoid.  NDV
         sketches (``ndv_columns``, opt-in) are always their own Spark job.
         """
-        import urllib.parse
-
         io = self._io
         io.makedirs(self._data_dir)
         staging = os.path.join(self.location, f"_staging_{uuid.uuid4().hex}")
@@ -1225,14 +1230,13 @@ class LakeTable:
         # skip files for scattered high-cardinality keys; these can (local
         # tables build them in the per-file pass below)
         if bloom_columns and not local:
-            for name, blooms in self._blooms_via_spark(
+            for rel, blooms in self._blooms_via_spark(
                 staging, bloom_columns, df.schema
             ).items():
-                sketch_by_file.setdefault(name, {}).update(blooms)
+                sketch_by_file.setdefault(rel, {}).update(blooms)
         staged: list[DataFile] = []
         for rel in io.walk_files(staging):
-            name = os.path.basename(rel)
-            if not name.endswith(".parquet"):
+            if not rel.endswith(".parquet"):
                 continue
             partition: dict = {}
             rel_dir = os.path.dirname(rel)
@@ -1246,13 +1250,14 @@ class LakeTable:
             final_name = f"{uuid.uuid4().hex}.parquet"
             abs_final = os.path.join(self._data_dir, final_name)
             io.rename(os.path.join(staging, rel), abs_final)
+            sketches = sketch_by_file.get(rel, {})
             if local:
                 rows, nbytes, stats, blooms = _scan_staged_file(
                     abs_final, df.schema, io, bloom_columns
                 )
-                sketch_by_file.setdefault(name, {}).update(blooms)
+                sketches = {**sketches, **blooms}
             else:
-                rows, stats = spark_stats.get(name, (0, {}))
+                rows, stats = spark_stats.get(rel, (0, {}))
                 nbytes = io.size(abs_final) if rows else 0
             if rows == 0:
                 io.remove(abs_final)
@@ -1264,7 +1269,7 @@ class LakeTable:
                     bytes=nbytes,
                     stats=stats,
                     partition=dict(partition),
-                    sketches=sketch_by_file.get(name, {}),
+                    sketches=sketches,
                 )
             )
         io.rmtree(staging)
@@ -1299,8 +1304,7 @@ class LakeTable:
         """Per-file (rows, {col: [min, max]}) for every parquet file under
         ``staging``, computed as one distributed job grouped by
         ``input_file_name()`` — O(files) tiny rows on the driver, data never
-        leaves the executors.  Keyed by file basename."""
-        import urllib.parse
+        leaves the executors.  Keyed by path relative to ``staging``."""
         from datetime import date
 
         prunable = [
@@ -1327,8 +1331,7 @@ class LakeTable:
                     # aware values normalize to the same frame)
                     mn, mx = _utc_naive(mn).isoformat(), _utc_naive(mx).isoformat()
                 stats[c] = [mn, mx]
-            base = os.path.basename(urllib.parse.unquote(r["_f"]))
-            out[base] = (r["_rows"], stats)
+            out[_staged_rel(staging, r["_f"])] = (r["_rows"], stats)
         return out
 
     def _ndv_sketches_via_spark(
@@ -1349,9 +1352,7 @@ class LakeTable:
         size, the same bound the sketch-building job has in any engine,
         and partial aggregation keeps it spread across executors.  Nested
         columns are skipped (no meaningful hash frame).  Keyed by file
-        basename, like :meth:`_stats_via_spark`."""
-        import urllib.parse
-
+        path relative to ``staging``, like :meth:`_stats_via_spark`."""
         dtypes = {f.name: f.dataType for f in schema.fields}
         sdf = self.spark.read.parquet(staging)
         present = [
@@ -1385,7 +1386,7 @@ class LakeTable:
                     "c": complete,
                     "t": dtypes[c].simpleString(),
                 }
-            out[os.path.basename(urllib.parse.unquote(r["_f"]))] = sk
+            out[_staged_rel(staging, r["_f"])] = sk
         return out
 
     def _blooms_via_spark(
@@ -1408,9 +1409,8 @@ class LakeTable:
         so the job's memory is independent of file row count, unlike a
         distinct-set sketch.  Map-side partial ``collect_set`` keeps the
         shuffle at that same bound.  Only frames with exact Python probe
-        parity are built (BLOOM_FRAMES); other dtypes are skipped."""
-        import urllib.parse
-
+        parity are built (BLOOM_FRAMES); other dtypes are skipped.  Keyed
+        by path relative to ``staging``, like :meth:`_stats_via_spark`."""
         import numpy as np
 
         from dlt_iceberg_spark.lake.bloom import (
@@ -1469,7 +1469,7 @@ class LakeTable:
                         "k": k,
                         "t": dtypes[c].simpleString(),
                     }
-            out[os.path.basename(urllib.parse.unquote(r["_f"]))] = blooms
+            out[_staged_rel(staging, r["_f"])] = blooms
         return out
 
     def commit(

@@ -330,6 +330,38 @@ def test_local_and_hadoop_staging_carry_equal_blooms(spark, tmp_path):
     assert all(bloom_key("s") in b and bloom_key("d") in b for b in got_local.values())
 
 
+@pytest.mark.parametrize("fileio", ["local", "hadoop"])
+def test_partitioned_write_keeps_per_file_blooms_and_stats(spark, tmp_path, fileio):
+    """One task writing several partition directories names its files
+    alike in each (Spark restarts the file counter per directory); every
+    staged file must still carry its OWN stats and bloom bits."""
+    from dlt_iceberg_spark.lake.fileio import HadoopFileIO
+
+    io = HadoopFileIO(spark, str(tmp_path)) if fileio == "hadoop" else None
+    t = LakeTable(spark, str(tmp_path / "t"), io=io)
+    parts = ["a", "b c%2=", "z"]
+    df = spark.range(0, 900, 1, 1).select(
+        (F.col("id") * 7919 % 100003).alias("key"),
+        F.element_at(F.array(*map(F.lit, parts)), (F.col("id") % 3 + 1).cast("int")).alias("p"),
+    )
+    files = t.stage_dataframe(
+        df,
+        partition_exprs=[("p", F.col("p"))],
+        bloom_columns=["key"],
+        ndv_columns=["key"],
+    )
+    by_part = {f.partition["p"]: f for f in files}
+    assert sorted(by_part) == sorted(parts)
+    # disjoint key sets -> three distinct NDV sketches, one per file
+    assert len({tuple(f.sketches["key"]["h"]) for f in files}) == 3
+    for p, f in by_part.items():
+        keys = [r.key for r in df.where(F.col("p") == p).collect()]
+        assert f.rows == len(keys) == 300
+        assert f.stats["key"] == [min(keys), max(keys)]
+        bloom = f.sketches[bloom_key("key")]
+        assert all(bloom_may_contain(bloom, "=", k) for k in keys)
+
+
 def test_local_bloom_write_launches_no_extra_spark_jobs(spark, tmp_path):
     """On a local table, manifest blooms cost no Spark job: staging with
     ``bloom_columns`` launches exactly the jobs staging without them does."""
