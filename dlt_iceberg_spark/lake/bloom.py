@@ -174,14 +174,14 @@ def _hashes(tag: str, arr: pa.Array) -> np.ndarray:
     """Unsigned Spark-parity xxhash64 of every non-null value of ``arr``
     in the bloom frame ``tag``."""
     arr = arr.drop_null()
-    if tag == "string":
-        h, _ = spark_xxhash64_string_arrow(arr)
-    elif tag == "bigint":
+    if tag == "bigint":
         h = spark_xxhash64_long_np(arr.to_numpy())
+    elif tag == "int":
+        h = spark_xxhash64_int_np(arr.to_numpy())
     elif tag == "date":
         h = spark_xxhash64_int_np(arr.cast(pa.int32()).to_numpy())
-    else:  # int
-        h = spark_xxhash64_int_np(arr.to_numpy())
+    else:  # string
+        h, _ = spark_xxhash64_string_arrow(arr)
     return h.view(np.uint64)
 
 
