@@ -11,7 +11,10 @@ over the suite — JVM/whole-stage-codegen compilation and Python-worker pool
 spin-up are excluded, as the reference's DuckDB engine is likewise measured
 warm and compile cost is a small-data artifact that amortizes to zero at
 scale. The cold (first-pass) total is reported alongside as
-``cold_total_sec``.
+``cold_total_sec``.  Gate fixtures (the tables the ``lake_*``/``ann_*``/
+``stream_*`` gates read) are built through the registry before the cold
+pass and reported apart, per query as ``setup_sec`` and summed as
+``setup_total_sec``.
 
 Attribution over single-shot numbers (VERDICT r5 task 2): sub-second local
 timings wobble 20-40% shot-to-shot, which round-over-round reads as phantom
@@ -41,56 +44,20 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-#: every gate-cache mkdtemp prefix the query registry uses — the EXACT
-#: list (grep `mkdtemp(prefix=` under dlt_iceberg_spark/), not prefix
-#: families: r11's `"lake_"`/`"ann_"` families could have matched an
-#: unrelated process's /tmp dirs (VERDICT r11 item 6).  A new gate must
-#: add its prefix here or its debris never gets cleaned.
-_GATE_TMP_PREFIXES = (
-    "ann_del_", "ann_idx_", "ann_opq_idx_", "ann_pq_idx_",
-    "ann_pqres_idx_", "ann_rb_", "ann_rbal_", "ann_sq_",
-    "dedup_idx_",
-    "lake_adddflt_", "lake_bloom_", "lake_bucket_", "lake_cdc_",
-    "lake_cdcstream_", "lake_clone_", "lake_count_", "lake_cret_",
-    "lake_expect_", "lake_icbrt_", "lake_matview_", "lake_merge_",
-    "lake_minmax_", "lake_mirror_", "lake_mvchain_", "lake_ndv_",
-    "lake_overlap_", "lake_partagg_", "lake_partndv_", "lake_posdel_",
-    "lake_promote_", "lake_rename_", "lake_rollup_", "lake_sink_",
-    "lake_sinkp_", "lake_specevo_", "lake_stats_", "lake_tail_",
-    "lake_txn_",
-    "sdedup_",
-    "stream_veccdc_", "stream_vecidx_",
-)
-
-
-def _clean_gate_debris(min_age_sec: float = 3600) -> int:
-    """Remove leftover gate-cache warehouses from PRIOR processes under
-    /tmp before any pass runs — accumulated debris (15 GB observed after
-    a long session) measurably inflates timings via fs-cache pressure
-    (VERDICT r10 task 4).  Safe by construction: only this repo's known
-    mkdtemp prefixes are touched, only BEFORE this process creates its
-    own (the per-query module caches hold live paths within a process,
-    never across processes), and only entries older than ``min_age_sec``
-    — a CONCURRENTLY running oracle/test process's fresh caches are never
-    raced."""
-    import shutil
-    import tempfile
-
-    root = tempfile.gettempdir()
-    cutoff = time.time() - min_age_sec
-    n = 0
-    for name in os.listdir(root):
-        if not name.startswith(_GATE_TMP_PREFIXES):
+def build_fixtures(spark, specs: dict, sf_dir: str, stream_spark=None) -> dict[str, float]:
+    """Build every gate fixture through the registry before any pass runs,
+    so neither the cold pass nor the timed passes include a fixture build;
+    returns per-query build seconds.  Stream gates build in
+    ``stream_spark``, the session their reads run in."""
+    stream_spark = stream_spark if stream_spark is not None else spark
+    setup_sec = {}
+    for name, spec in specs.items():
+        if spec.setup is None:
             continue
-        path = os.path.join(root, name)
-        try:
-            if os.path.getmtime(path) > cutoff:
-                continue
-        except OSError:
-            continue
-        shutil.rmtree(path, ignore_errors=True)
-        n += 1
-    return n
+        t0 = time.perf_counter()
+        spec.fixture(stream_spark if name.startswith("stream_") else spark, sf_dir)
+        setup_sec[name] = round(time.perf_counter() - t0, 4)
+    return setup_sec
 
 
 def timed_passes(
@@ -288,7 +255,6 @@ def run_sf1() -> None:
     heavy-query list, one JSON line + BENCH_SF1.json."""
     from dlt_iceberg_spark.session import get_spark
 
-    _clean_gate_debris()
     spark = get_spark("bench-sf1")
     spark.sparkContext.setLogLevel("ERROR")
     # same isolation policy as main(): phase separation, single session
@@ -303,6 +269,7 @@ def run_sf1() -> None:
 
         generate(spark, "/root/testdata/sf0.1", SF1_DIR, 10)
     specs = {name: REGISTRY[name] for name in SF1_QUERIES}
+    setup_sec = build_fixtures(spark, specs, SF1_DIR, stream_spark=stream_spark)
     for name, spec in specs.items():  # warm (codegen + footers)
         s = stream_spark if name.startswith("stream_") else spark
         s.catalog.clearCache()
@@ -329,6 +296,8 @@ def run_sf1() -> None:
             "spread": spread,
             "strategies": strategies,
             "streaming_rows_per_sec": rows_per_sec,
+            "setup_sec": setup_sec,
+            "setup_total_sec": round(sum(setup_sec.values()), 4),
         }
     )
     with open(
@@ -346,11 +315,8 @@ def main() -> None:
         sf_val: float | str = float(sf)
     except ValueError:
         sf_val = sf
-    debris = _clean_gate_debris()
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    if debris:
-        print(f"cleaned {debris} stale gate-cache dirs from /tmp", file=sys.stderr)
     # Isolation (VERDICT r9 task 7), measured A/B at sf0.1 this round:
     # PHASE SEPARATION alone (all steady samples before the first timed
     # stream query, one session) gives steady median_rel_spread 0.306 /
@@ -364,8 +330,10 @@ def main() -> None:
     two_sessions = os.environ.get("SPARK_GRAFT_STREAM_SESSION", "0") == "1"
     stream_spark = spark.newSession() if two_sessions else spark
 
+    setup_sec = build_fixtures(spark, REGISTRY, sf_dir, stream_spark=stream_spark)
+
     # warm-up pass: JVM + parquet footer caches + codegen compile + Python
-    # workers; stream fixtures warm in THEIR session
+    # workers; stream queries warm in THEIR session
     t0 = time.perf_counter()
     for name, spec in REGISTRY.items():
         materialize(
@@ -409,6 +377,8 @@ def main() -> None:
             "default_parallelism": default_par,
             "cpus_env": cpus_env,
             "cold_total_sec": cold_total,
+            "setup_total_sec": round(sum(setup_sec.values()), 4),
+            "setup_sec": setup_sec,
             "min_total_sec": min_total,
             "spread": spread,
             "spread_trimmed": tspread,

@@ -279,6 +279,18 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("a", "b", rnd(F.col("jaccard"), 6).alias("jaccard"))
 
 
+def _dedup_incremental_setup(spark: SparkSession, sf_dir: str, root: str):
+    import os
+
+    from dlt_iceberg_spark.lake.table import LakeTable
+    from dlt_iceberg_spark.operators.dedup import write_dedup_index
+
+    corpus = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 != 0)
+    itable = LakeTable(spark, os.path.join(root, "idx"))
+    write_dedup_index(itable, corpus, "text", "doc_id")
+    return itable
+
+
 @query(
     "dedup_incremental",
     """
@@ -301,42 +313,26 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "corpus shuffle per load.  Oracle is brute-force cross-side exact "
         "Jaccard; a banding recall regression fails as missing rows."
     ),
+    setup=_dedup_incremental_setup,
 )
-def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+def dedup_incremental(spark: SparkSession, sf_dir: str, itable) -> DataFrame:
     from dlt_iceberg_spark.operators.dedup import batch_vs_corpus_dedup
 
-    d = _t(spark, sf_dir, "documents")
-    corpus = d.filter(F.col("doc_id") % 5 != 0)
-    batch = d.filter(F.col("doc_id") % 5 == 0)
+    batch = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
     # the index is a PERSISTED LakeTable, the shape a production pipeline
     # runs (operators/dedup.py::write_dedup_index — built once per corpus,
-    # appended per load via append_novel_classes, probed per batch), cached
-    # per (session, sf) like the other lake gate queries; 'auto' probes the
+    # appended per load via append_novel_classes, probed per batch), built
+    # by the registry setup like the other lake gate queries; 'auto' probes the
     # vocabulary and picks the exact bitmask path here (fixture vocab ≤ 64
     # tokens — banding would propose ~every class pair anyway, the
     # statistic token_set_similarity_join adapts on) and LSH banding on
     # real vocabularies.
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.table import LakeTable
-    from dlt_iceberg_spark.operators.dedup import write_dedup_index
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    itable = _DEDUP_INDEX_CACHE.get(key)
-    if itable is None:
-        itable = LakeTable(spark, os.path.join(tempfile.mkdtemp(prefix="dedup_idx_"), "idx"))
-        write_dedup_index(itable, corpus, "text", "doc_id")
-        _DEDUP_INDEX_CACHE[key] = itable
     out = batch_vs_corpus_dedup(
         batch, itable.read(), "text", "doc_id", threshold=0.8, strategy="auto"
     )
     return out.select(
         "corpus_id", "batch_id", rnd(F.col("jaccard"), 6).alias("jaccard")
     )
-
-
-_DEDUP_INDEX_CACHE: dict = {}
 
 
 #: shared oracle CTE: per-doc SimHash over 60-bit md5-prefix token hashes —
@@ -1240,6 +1236,27 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ann_ivf_persisted_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.operators.similarity import fixed_centroids
+    from dlt_iceberg_spark.operators.vector_index import (
+        append_vectors,
+        build_vector_index,
+    )
+
+    e = _t(spark, sf_dir, "embeddings")
+    catalog = LakeCatalog(spark, root)
+    first = e.filter(F.col("vec_id") % 2 == 0)
+    second = e.filter(F.col("vec_id") % 2 == 1)
+    cents = fixed_centroids(first, "embedding", "vec_id", n_centroids=8)
+    idx = build_vector_index(
+        catalog, "gate", "emb_idx", first,
+        n_centroids=8, centroids=cents,
+    )
+    append_vectors(idx, second)
+    return catalog.load_table("gate", "emb_idx")
+
+
 @query(
     "ann_ivf_persisted",
     # Same probe-all exactness trick as ann_ivf, but through the PERSISTED
@@ -1271,34 +1288,12 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "with probe-all (exact ⇒ oracle-checkable).  nprobe<n_lists "
         "recall + partition-prune plan shape pinned in pytest."
     ),
+    setup=_ann_ivf_persisted_setup,
 )
-def ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.operators.similarity import fixed_centroids
-    from dlt_iceberg_spark.operators.vector_index import (
-        append_vectors,
-        build_vector_index,
-        ivf_topk_persisted,
-    )
+def ann_ivf_persisted(spark: SparkSession, sf_dir: str, idx) -> DataFrame:
+    from dlt_iceberg_spark.operators.vector_index import ivf_topk_persisted
 
     e = _t(spark, sf_dir, "embeddings")
-    key = (id(spark), os.path.abspath(sf_dir))
-    idx = _ANN_IDX_CACHE.get(key)
-    if idx is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="ann_idx_"))
-        first = e.filter(F.col("vec_id") % 2 == 0)
-        second = e.filter(F.col("vec_id") % 2 == 1)
-        cents = fixed_centroids(first, "embedding", "vec_id", n_centroids=8)
-        idx = build_vector_index(
-            catalog, "gate", "emb_idx", first,
-            n_centroids=8, centroids=cents,
-        )
-        append_vectors(idx, second)
-        idx = catalog.load_table("gate", "emb_idx")
-        _ANN_IDX_CACHE[key] = idx
     q = e.filter(F.col("vec_id") < 8)
     out = ivf_topk_persisted(q, idx, k=5, nprobe=8)
     return out.select(
@@ -1309,7 +1304,40 @@ def ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ANN_IDX_CACHE: dict = {}
+def _stream_vector_index_setup(spark: SparkSession, sf_dir: str, root: str):
+    import os
+
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.table import LakeTable
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+    from dlt_iceberg_spark.operators.similarity import fixed_centroids
+    from dlt_iceberg_spark.streaming.vector import run_index_backfill
+
+    e = _t(spark, sf_dir, "embeddings")
+    catalog = LakeCatalog(spark, os.path.join(root, "wh"))
+    writer = LakeWriter(catalog, "gate")
+    for i, half in enumerate(
+        (e.filter(F.col("vec_id") % 2 == 0), e.filter(F.col("vec_id") % 2 == 1))
+    ):
+        writer.write(
+            TableSpec(name="vecs", write_disposition="append"),
+            half,
+            load_id=f"l{i}",
+        )
+    src = catalog.load_table("gate", "vecs")
+    idx = LakeTable(spark, os.path.join(root, "idx"))
+    run_index_backfill(
+        spark,
+        src.location,
+        idx,
+        checkpoint_dir=os.path.join(root, "ckpt"),
+        n_centroids=8,
+        centroids=fixed_centroids(
+            e.filter(F.col("vec_id") % 2 == 0), "embedding", "vec_id", 8
+        ),
+        query_name="svi",
+    )
+    return idx
 
 
 @query(
@@ -1341,47 +1369,12 @@ _ANN_IDX_CACHE: dict = {}
         "streamed index hash-matches brute force.  Ledger idempotency and "
         "checkpoint resume pinned in tests/test_stream_vector.py."
     ),
+    setup=_stream_vector_index_setup,
 )
-def stream_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.table import LakeTable
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-    from dlt_iceberg_spark.operators.similarity import fixed_centroids
+def stream_vector_index(spark: SparkSession, sf_dir: str, idx) -> DataFrame:
     from dlt_iceberg_spark.operators.vector_index import ivf_topk_persisted
-    from dlt_iceberg_spark.streaming.vector import run_index_backfill
 
     e = _t(spark, sf_dir, "embeddings")
-    key = (id(spark), os.path.abspath(sf_dir))
-    idx = _STREAM_VECIDX_CACHE.get(key)
-    if idx is None:
-        base = tempfile.mkdtemp(prefix="stream_vecidx_")
-        catalog = LakeCatalog(spark, os.path.join(base, "wh"))
-        writer = LakeWriter(catalog, "gate")
-        for i, half in enumerate(
-            (e.filter(F.col("vec_id") % 2 == 0), e.filter(F.col("vec_id") % 2 == 1))
-        ):
-            writer.write(
-                TableSpec(name="vecs", write_disposition="append"),
-                half,
-                load_id=f"l{i}",
-            )
-        src = catalog.load_table("gate", "vecs")
-        idx = LakeTable(spark, os.path.join(base, "idx"))
-        run_index_backfill(
-            spark,
-            src.location,
-            idx,
-            checkpoint_dir=os.path.join(base, "ckpt"),
-            n_centroids=8,
-            centroids=fixed_centroids(
-                e.filter(F.col("vec_id") % 2 == 0), "embedding", "vec_id", 8
-            ),
-            query_name="svi",
-        )
-        _STREAM_VECIDX_CACHE[key] = idx
     q = e.filter(F.col("vec_id") < 8)
     out = ivf_topk_persisted(q, idx, k=5, nprobe=8)
     return out.select(
@@ -1392,7 +1385,26 @@ def stream_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_VECIDX_CACHE: dict = {}
+def _ann_delete_lifecycle_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.operators.similarity import fixed_centroids
+    from dlt_iceberg_spark.operators.vector_index import (
+        append_vectors,
+        build_vector_index,
+        delete_vectors,
+    )
+
+    e = _t(spark, sf_dir, "embeddings")
+    catalog = LakeCatalog(spark, root)
+    first = e.filter(F.col("vec_id") % 2 == 0)
+    idx = build_vector_index(
+        catalog, "gate", "del_idx", first,
+        n_centroids=8,
+        centroids=fixed_centroids(first, "embedding", "vec_id", 8),
+    )
+    append_vectors(idx, e.filter(F.col("vec_id") % 2 == 1))
+    delete_vectors(idx, e.filter(F.col("vec_id") % 7 == 3))
+    return catalog.load_table("gate", "del_idx")
 
 
 @query(
@@ -1427,35 +1439,12 @@ _STREAM_VECIDX_CACHE: dict = {}
         "oracle that never saw the deleted rows.  Physical fold via "
         "compaction pinned in pytest."
     ),
+    setup=_ann_delete_lifecycle_setup,
 )
-def ann_delete_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.operators.similarity import fixed_centroids
-    from dlt_iceberg_spark.operators.vector_index import (
-        append_vectors,
-        build_vector_index,
-        delete_vectors,
-        ivf_topk_persisted,
-    )
+def ann_delete_lifecycle(spark: SparkSession, sf_dir: str, idx) -> DataFrame:
+    from dlt_iceberg_spark.operators.vector_index import ivf_topk_persisted
 
     e = _t(spark, sf_dir, "embeddings")
-    key = (id(spark), os.path.abspath(sf_dir))
-    idx = _ANN_DEL_CACHE.get(key)
-    if idx is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="ann_del_"))
-        first = e.filter(F.col("vec_id") % 2 == 0)
-        idx = build_vector_index(
-            catalog, "gate", "del_idx", first,
-            n_centroids=8,
-            centroids=fixed_centroids(first, "embedding", "vec_id", 8),
-        )
-        append_vectors(idx, e.filter(F.col("vec_id") % 2 == 1))
-        delete_vectors(idx, e.filter(F.col("vec_id") % 7 == 3))
-        idx = catalog.load_table("gate", "del_idx")
-        _ANN_DEL_CACHE[key] = idx
     q = e.filter(F.col("vec_id") < 8)
     out = ivf_topk_persisted(q, idx, k=5, nprobe=8)
     return out.select(
@@ -1466,7 +1455,31 @@ def ann_delete_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ANN_DEL_CACHE: dict = {}
+def _ann_rebuild_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.operators.similarity import fixed_centroids
+    from dlt_iceberg_spark.operators.vector_index import (
+        append_vectors,
+        build_vector_index,
+        delete_vectors,
+        rebuild_vector_index,
+    )
+
+    e = _t(spark, sf_dir, "embeddings")
+    catalog = LakeCatalog(spark, root)
+    first = e.filter(F.col("vec_id") % 2 == 0)
+    idx = build_vector_index(
+        catalog, "gate", "rb_idx", first,
+        n_centroids=8,
+        centroids=fixed_centroids(first, "embedding", "vec_id", 8),
+    )
+    append_vectors(idx, e.filter(F.col("vec_id") % 2 == 1))
+    delete_vectors(idx, e.filter(F.col("vec_id") % 11 == 5))
+    live = e.filter(F.col("vec_id") % 11 != 5)
+    rebuild_vector_index(
+        idx, centroids=fixed_centroids(live, "embedding", "vec_id", 4)
+    )
+    return catalog.load_table("gate", "rb_idx")
 
 
 @query(
@@ -1502,40 +1515,12 @@ _ANN_DEL_CACHE: dict = {}
         "the rebuilt index hash-matches brute force over the live corpus "
         "(deletes folded, rows preserved exactly)."
     ),
+    setup=_ann_rebuild_setup,
 )
-def ann_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.operators.similarity import fixed_centroids
-    from dlt_iceberg_spark.operators.vector_index import (
-        append_vectors,
-        build_vector_index,
-        delete_vectors,
-        ivf_topk_persisted,
-        rebuild_vector_index,
-    )
+def ann_rebuild(spark: SparkSession, sf_dir: str, idx) -> DataFrame:
+    from dlt_iceberg_spark.operators.vector_index import ivf_topk_persisted
 
     e = _t(spark, sf_dir, "embeddings")
-    key = (id(spark), os.path.abspath(sf_dir))
-    idx = _ANN_REBUILD_CACHE.get(key)
-    if idx is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="ann_rb_"))
-        first = e.filter(F.col("vec_id") % 2 == 0)
-        idx = build_vector_index(
-            catalog, "gate", "rb_idx", first,
-            n_centroids=8,
-            centroids=fixed_centroids(first, "embedding", "vec_id", 8),
-        )
-        append_vectors(idx, e.filter(F.col("vec_id") % 2 == 1))
-        delete_vectors(idx, e.filter(F.col("vec_id") % 11 == 5))
-        live = e.filter(F.col("vec_id") % 11 != 5)
-        rebuild_vector_index(
-            idx, centroids=fixed_centroids(live, "embedding", "vec_id", 4)
-        )
-        idx = catalog.load_table("gate", "rb_idx")
-        _ANN_REBUILD_CACHE[key] = idx
     q = e.filter(F.col("vec_id") < 8)
     out = ivf_topk_persisted(q, idx, k=5, nprobe=4)
     return out.select(
@@ -1546,7 +1531,33 @@ def ann_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ANN_REBUILD_CACHE: dict = {}
+def _ann_rebalance_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.operators.similarity import fixed_centroids
+    from dlt_iceberg_spark.operators.vector_index import (
+        append_vectors,
+        build_vector_index,
+        index_stats,
+        split_list,
+    )
+
+    e = _t(spark, sf_dir, "embeddings")
+    catalog = LakeCatalog(spark, root)
+    first = e.filter(F.col("vec_id") % 2 == 0)
+    idx = build_vector_index(
+        catalog, "gate", "rbal_idx", first,
+        n_centroids=8,
+        centroids=fixed_centroids(first, "embedding", "vec_id", 8),
+    )
+    append_vectors(idx, e.filter(F.col("vec_id") % 2 == 1))
+    # split the hottest list — always legal, no threshold gamble: the
+    # point under test is the partial rewrite's exactness
+    groups = idx.aggregate_stats(group_by=["centroid"])
+    counts = {g["centroid"]: g["count"] for g in groups}
+    split_list(idx, int(max(counts, key=counts.get)), k_split=2)
+    idx = catalog.load_table("gate", "rbal_idx")
+    assert index_stats(idx)["lists"] >= 8
+    return idx
 
 
 @query(
@@ -1583,41 +1594,12 @@ _ANN_REBUILD_CACHE: dict = {}
         "append-forever and the O(index) rebuild; probe-all over the "
         "split index hash-matches brute force over the full corpus."
     ),
+    setup=_ann_rebalance_setup,
 )
-def ann_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.operators.similarity import fixed_centroids
-    from dlt_iceberg_spark.operators.vector_index import (
-        append_vectors,
-        build_vector_index,
-        index_stats,
-        ivf_topk_persisted,
-        split_list,
-    )
+def ann_rebalance(spark: SparkSession, sf_dir: str, idx) -> DataFrame:
+    from dlt_iceberg_spark.operators.vector_index import ivf_topk_persisted
 
     e = _t(spark, sf_dir, "embeddings")
-    key = (id(spark), os.path.abspath(sf_dir))
-    idx = _ANN_REBAL_CACHE.get(key)
-    if idx is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="ann_rbal_"))
-        first = e.filter(F.col("vec_id") % 2 == 0)
-        idx = build_vector_index(
-            catalog, "gate", "rbal_idx", first,
-            n_centroids=8,
-            centroids=fixed_centroids(first, "embedding", "vec_id", 8),
-        )
-        append_vectors(idx, e.filter(F.col("vec_id") % 2 == 1))
-        # split the hottest list — always legal, no threshold gamble: the
-        # point under test is the partial rewrite's exactness
-        groups = idx.aggregate_stats(group_by=["centroid"])
-        counts = {g["centroid"]: g["count"] for g in groups}
-        split_list(idx, int(max(counts, key=counts.get)), k_split=2)
-        idx = catalog.load_table("gate", "rbal_idx")
-        assert index_stats(idx)["lists"] >= 8
-        _ANN_REBAL_CACHE[key] = idx
     q = e.filter(F.col("vec_id") < 8)
     nprobe = int(idx.snapshot().properties["vector-index.n-centroids"])
     out = ivf_topk_persisted(q, idx, k=5, nprobe=nprobe)
@@ -1629,7 +1611,44 @@ def ann_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ANN_REBAL_CACHE: dict = {}
+def _stream_vector_cdc_setup(spark: SparkSession, sf_dir: str, root: str):
+    import os
+
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.table import LakeTable
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+    from dlt_iceberg_spark.operators.similarity import fixed_centroids
+    from dlt_iceberg_spark.streaming.vector import run_index_backfill
+
+    e = _t(spark, sf_dir, "embeddings")
+    catalog = LakeCatalog(spark, os.path.join(root, "wh"))
+    writer = LakeWriter(catalog, "gate")
+    for i, half in enumerate(
+        (e.filter(F.col("vec_id") % 2 == 0), e.filter(F.col("vec_id") % 2 == 1))
+    ):
+        writer.write(
+            TableSpec(name="cvecs", write_disposition="append"),
+            half,
+            load_id=f"l{i}",
+        )
+    src = catalog.load_table("gate", "cvecs")
+    doomed = [r[0] for r in e.filter(F.col("vec_id") % 13 == 4)
+              .select("vec_id").collect()]
+    src.position_delete_where([("vec_id", "in", doomed)])
+    idx = LakeTable(spark, os.path.join(root, "idx"))
+    run_index_backfill(
+        spark,
+        src.location,
+        idx,
+        checkpoint_dir=os.path.join(root, "ckpt"),
+        n_centroids=8,
+        centroids=fixed_centroids(
+            e.filter(F.col("vec_id") % 2 == 0), "embedding", "vec_id", 8
+        ),
+        query_name="svc",
+        changes=True,
+    )
+    return idx
 
 
 @query(
@@ -1664,51 +1683,12 @@ _ANN_REBAL_CACHE: dict = {}
         "against frozen centroids; probe-all hash-matches an oracle that "
         "never saw the deleted rows."
     ),
+    setup=_stream_vector_cdc_setup,
 )
-def stream_vector_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.table import LakeTable
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-    from dlt_iceberg_spark.operators.similarity import fixed_centroids
+def stream_vector_cdc(spark: SparkSession, sf_dir: str, idx) -> DataFrame:
     from dlt_iceberg_spark.operators.vector_index import ivf_topk_persisted
-    from dlt_iceberg_spark.streaming.vector import run_index_backfill
 
     e = _t(spark, sf_dir, "embeddings")
-    key = (id(spark), os.path.abspath(sf_dir))
-    idx = _STREAM_VECCDC_CACHE.get(key)
-    if idx is None:
-        base = tempfile.mkdtemp(prefix="stream_veccdc_")
-        catalog = LakeCatalog(spark, os.path.join(base, "wh"))
-        writer = LakeWriter(catalog, "gate")
-        for i, half in enumerate(
-            (e.filter(F.col("vec_id") % 2 == 0), e.filter(F.col("vec_id") % 2 == 1))
-        ):
-            writer.write(
-                TableSpec(name="cvecs", write_disposition="append"),
-                half,
-                load_id=f"l{i}",
-            )
-        src = catalog.load_table("gate", "cvecs")
-        doomed = [r[0] for r in e.filter(F.col("vec_id") % 13 == 4)
-                  .select("vec_id").collect()]
-        src.position_delete_where([("vec_id", "in", doomed)])
-        idx = LakeTable(spark, os.path.join(base, "idx"))
-        run_index_backfill(
-            spark,
-            src.location,
-            idx,
-            checkpoint_dir=os.path.join(base, "ckpt"),
-            n_centroids=8,
-            centroids=fixed_centroids(
-                e.filter(F.col("vec_id") % 2 == 0), "embedding", "vec_id", 8
-            ),
-            query_name="svc",
-            changes=True,
-        )
-        _STREAM_VECCDC_CACHE[key] = idx
     q = e.filter(F.col("vec_id") < 8)
     out = ivf_topk_persisted(q, idx, k=5, nprobe=8)
     return out.select(
@@ -1717,9 +1697,6 @@ def stream_vector_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         rnd(F.col("cosine"), 6).alias("cosine"),
         F.col("rank").cast("long").alias("rank"),
     )
-
-
-_STREAM_VECCDC_CACHE: dict = {}
 
 
 @query(
@@ -1887,6 +1864,28 @@ def ann_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ann_sq_persisted_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.operators.similarity import fixed_centroids
+    from dlt_iceberg_spark.operators.vector_index import (
+        append_vectors,
+        build_vector_index,
+    )
+
+    e = _t(spark, sf_dir, "embeddings")
+    catalog = LakeCatalog(spark, root)
+    first = e.filter(F.col("vec_id") % 2 == 0)
+    idx = build_vector_index(
+        catalog, "gate", "sq_idx", first,
+        n_centroids=8,
+        centroids=fixed_centroids(first, "embedding", "vec_id", 8),
+        sq=True,
+        store_vectors=False,
+    )
+    append_vectors(idx, e.filter(F.col("vec_id") % 2 == 1))
+    return catalog.load_table("gate", "sq_idx")
+
+
 @query(
     "ann_sq_persisted",
     # The IVF-SQ8 composite through the PERSISTED lifecycle: the index is
@@ -1939,35 +1938,12 @@ def ann_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exact stats make the whole lifecycle oracle-replayable; takedown/"
         "rebuild semantics pinned in tests/test_vector_index.py."
     ),
+    setup=_ann_sq_persisted_setup,
 )
-def ann_sq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.operators.similarity import fixed_centroids
-    from dlt_iceberg_spark.operators.vector_index import (
-        append_vectors,
-        build_vector_index,
-        ivf_topk_persisted,
-    )
+def ann_sq_persisted(spark: SparkSession, sf_dir: str, idx) -> DataFrame:
+    from dlt_iceberg_spark.operators.vector_index import ivf_topk_persisted
 
     e = _t(spark, sf_dir, "embeddings")
-    key = (id(spark), os.path.abspath(sf_dir))
-    idx = _ANN_SQ_IDX_CACHE.get(key)
-    if idx is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="ann_sq_"))
-        first = e.filter(F.col("vec_id") % 2 == 0)
-        idx = build_vector_index(
-            catalog, "gate", "sq_idx", first,
-            n_centroids=8,
-            centroids=fixed_centroids(first, "embedding", "vec_id", 8),
-            sq=True,
-            store_vectors=False,
-        )
-        append_vectors(idx, e.filter(F.col("vec_id") % 2 == 1))
-        idx = catalog.load_table("gate", "sq_idx")
-        _ANN_SQ_IDX_CACHE[key] = idx
     q = e.filter(F.col("vec_id") < 8)
     out = ivf_topk_persisted(q, idx, k=5, nprobe=8)
     return out.select(
@@ -1976,9 +1952,6 @@ def ann_sq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         rnd(F.col("cosine"), 6).alias("cosine"),
         F.col("rank").cast("long").alias("rank"),
     )
-
-
-_ANN_SQ_IDX_CACHE: dict = {}
 
 
 _ANN_PQ_ORACLE = """
@@ -2031,6 +2004,30 @@ _ANN_PQ_ORACLE = """
     """
 
 
+def _ann_pq_persisted_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.operators.quantization import pq_codebooks_fixed
+    from dlt_iceberg_spark.operators.similarity import fixed_centroids
+    from dlt_iceberg_spark.operators.vector_index import (
+        append_vectors,
+        build_vector_index,
+    )
+
+    e = _t(spark, sf_dir, "embeddings")
+    catalog = LakeCatalog(spark, root)
+    first = e.filter(F.col("vec_id") % 2 == 0)
+    second = e.filter(F.col("vec_id") % 2 == 1)
+    idx = build_vector_index(
+        catalog, "gate", "pq_idx", first,
+        centroids=fixed_centroids(first, "embedding", "vec_id", 8),
+        pq=True,
+        codebooks=pq_codebooks_fixed(e, m_subspaces=8, k_codes=16),
+        store_vectors=False,
+    )
+    append_vectors(idx, second)
+    return catalog.load_table("gate", "pq_idx")
+
+
 @query(
     "ann_pq_persisted",
     # The ann_pq oracle verbatim: with probe-all, the PERSISTED IVF-PQ
@@ -2048,37 +2045,12 @@ _ANN_PQ_ORACLE = """
         "of the odd half; probe-all makes it oracle-exact vs flat PQ.  "
         "nprobe<n_lists recall pinned in pytest."
     ),
+    setup=_ann_pq_persisted_setup,
 )
-def ann_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.operators.quantization import pq_codebooks_fixed
-    from dlt_iceberg_spark.operators.similarity import fixed_centroids
-    from dlt_iceberg_spark.operators.vector_index import (
-        append_vectors,
-        build_vector_index,
-        ivf_pq_topk_persisted,
-    )
+def ann_pq_persisted(spark: SparkSession, sf_dir: str, idx) -> DataFrame:
+    from dlt_iceberg_spark.operators.vector_index import ivf_pq_topk_persisted
 
     e = _t(spark, sf_dir, "embeddings")
-    key = (id(spark), os.path.abspath(sf_dir))
-    idx = _ANN_PQ_IDX_CACHE.get(key)
-    if idx is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="ann_pq_idx_"))
-        first = e.filter(F.col("vec_id") % 2 == 0)
-        second = e.filter(F.col("vec_id") % 2 == 1)
-        idx = build_vector_index(
-            catalog, "gate", "pq_idx", first,
-            centroids=fixed_centroids(first, "embedding", "vec_id", 8),
-            pq=True,
-            codebooks=pq_codebooks_fixed(e, m_subspaces=8, k_codes=16),
-            store_vectors=False,
-        )
-        append_vectors(idx, second)
-        idx = catalog.load_table("gate", "pq_idx")
-        _ANN_PQ_IDX_CACHE[key] = idx
     q = e.filter(F.col("vec_id") < 8)
     out = ivf_pq_topk_persisted(q, idx, k=5, nprobe=8)
     return out.select(
@@ -2089,7 +2061,32 @@ def ann_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ANN_PQ_IDX_CACHE: dict = {}
+def _ann_pq_residual_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.operators.quantization import pq_codebooks_fixed
+    from dlt_iceberg_spark.operators.similarity import fixed_centroids
+    from dlt_iceberg_spark.operators.vector_index import (
+        append_vectors,
+        build_vector_index,
+    )
+
+    e = _t(spark, sf_dir, "embeddings")
+    catalog = LakeCatalog(spark, root)
+    first = e.filter(F.col("vec_id") % 2 == 0)
+    second = e.filter(F.col("vec_id") % 2 == 1)
+    cents = fixed_centroids(first, "embedding", "vec_id", 8)
+    idx = build_vector_index(
+        catalog, "gate", "pqres_idx", first,
+        centroids=cents,
+        pq=True,
+        codebooks=pq_codebooks_fixed(
+            e, m_subspaces=8, k_codes=16, centroids=cents
+        ),
+        pq_residual=True,
+        store_vectors=False,
+    )
+    append_vectors(idx, second)
+    return catalog.load_table("gate", "pqres_idx")
 
 
 @query(
@@ -2191,41 +2188,12 @@ _ANN_PQ_IDX_CACHE: dict = {}
         "under the frozen frames; probe-all makes the persisted pipeline "
         "hash-exact vs a full SQL replay."
     ),
+    setup=_ann_pq_residual_setup,
 )
-def ann_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.operators.quantization import pq_codebooks_fixed
-    from dlt_iceberg_spark.operators.similarity import fixed_centroids
-    from dlt_iceberg_spark.operators.vector_index import (
-        append_vectors,
-        build_vector_index,
-        ivf_pq_topk_persisted,
-    )
+def ann_pq_residual(spark: SparkSession, sf_dir: str, idx) -> DataFrame:
+    from dlt_iceberg_spark.operators.vector_index import ivf_pq_topk_persisted
 
     e = _t(spark, sf_dir, "embeddings")
-    key = (id(spark), os.path.abspath(sf_dir))
-    idx = _ANN_PQRES_IDX_CACHE.get(key)
-    if idx is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="ann_pqres_idx_"))
-        first = e.filter(F.col("vec_id") % 2 == 0)
-        second = e.filter(F.col("vec_id") % 2 == 1)
-        cents = fixed_centroids(first, "embedding", "vec_id", 8)
-        idx = build_vector_index(
-            catalog, "gate", "pqres_idx", first,
-            centroids=cents,
-            pq=True,
-            codebooks=pq_codebooks_fixed(
-                e, m_subspaces=8, k_codes=16, centroids=cents
-            ),
-            pq_residual=True,
-            store_vectors=False,
-        )
-        append_vectors(idx, second)
-        idx = catalog.load_table("gate", "pqres_idx")
-        _ANN_PQRES_IDX_CACHE[key] = idx
     q = e.filter(F.col("vec_id") < 8)
     out = ivf_pq_topk_persisted(q, idx, k=5, nprobe=8)
     return out.select(
@@ -2236,7 +2204,25 @@ def ann_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ANN_PQRES_IDX_CACHE: dict = {}
+def _ann_opq_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.operators.vector_index import (
+        append_vectors,
+        build_vector_index,
+    )
+
+    e = _t(spark, sf_dir, "embeddings")
+    catalog = LakeCatalog(spark, root)
+    first = e.filter(F.col("vec_id") % 2 == 0)
+    second = e.filter(F.col("vec_id") % 2 == 1)
+    idx = build_vector_index(
+        catalog, "gate", "opq_idx", first,
+        n_centroids=8,
+        pq=True, pq_residual=True, pq_opq=True,
+        m_subspaces=8, k_codes=16,
+    )
+    append_vectors(idx, second)
+    return (catalog.load_table("gate", "opq_idx"), int(e.count()))
 
 
 @query(
@@ -2276,35 +2262,13 @@ _ANN_PQRES_IDX_CACHE: dict = {}
         "the output hash-matches brute force; rotation quality is "
         "MSE-pinned in pytest."
     ),
+    setup=_ann_opq_setup,
 )
-def ann_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.operators.vector_index import (
-        append_vectors,
-        build_vector_index,
-        ivf_pq_topk_persisted,
-    )
+def ann_opq(spark: SparkSession, sf_dir: str, fixture) -> DataFrame:
+    from dlt_iceberg_spark.operators.vector_index import ivf_pq_topk_persisted
 
     e = _t(spark, sf_dir, "embeddings")
-    key = (id(spark), os.path.abspath(sf_dir))
-    cached = _ANN_OPQ_IDX_CACHE.get(key)
-    if cached is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="ann_opq_idx_"))
-        first = e.filter(F.col("vec_id") % 2 == 0)
-        second = e.filter(F.col("vec_id") % 2 == 1)
-        idx = build_vector_index(
-            catalog, "gate", "opq_idx", first,
-            n_centroids=8,
-            pq=True, pq_residual=True, pq_opq=True,
-            m_subspaces=8, k_codes=16,
-        )
-        append_vectors(idx, second)
-        cached = (catalog.load_table("gate", "opq_idx"), int(e.count()))
-        _ANN_OPQ_IDX_CACHE[key] = cached
-    idx, n_rows = cached
+    idx, n_rows = fixture
     q = e.filter(F.col("vec_id") < 8)
     out = ivf_pq_topk_persisted(q, idx, k=5, nprobe=8, rerank=n_rows)
     return out.select(
@@ -2313,9 +2277,6 @@ def ann_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
         rnd(F.col("cosine"), 6).alias("cosine"),
         F.col("rank").cast("long").alias("rank"),
     )
-
-
-_ANN_OPQ_IDX_CACHE: dict = {}
 
 
 @query(
@@ -2742,5 +2703,3 @@ def corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hash_split(sampled, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}).select(
         "doc_id", "lang", "split"
     )
-
-

@@ -118,6 +118,27 @@ def merge_hard_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _merge_result_select(merged.drop("_dlt_deleted_at"))
 
 
+def _lake_merge_roundtrip_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    target, source = _merge_batches(spark, sf_dir)
+    spec = TableSpec(
+        name="orders",
+        write_disposition={"disposition": "merge", "strategy": "upsert"},
+        primary_key=["o_orderkey"],
+        sort_order=["o_orderkey"],
+    )
+    writer.write(
+        TableSpec(name="orders", write_disposition="append", sort_order=["o_orderkey"]),
+        target,
+    )
+    writer.write(spec, source)
+    return catalog.load_table("gate", "orders")
+
+
 @query(
     "lake_merge_roundtrip",
     f"""
@@ -141,37 +162,34 @@ def merge_hard_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         "staging, stats, pruning, commit, or scan planning breaks the "
         "value hash."
     ),
+    setup=_lake_merge_roundtrip_setup,
 )
-def lake_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
+def lake_merge_roundtrip(spark: SparkSession, sf_dir: str, table) -> DataFrame:
+    return _merge_result_select(table.read())
+
+
+def _lake_position_delete_setup(spark: SparkSession, sf_dir: str, root: str):
+    import datetime
 
     from dlt_iceberg_spark.lake.catalog import LakeCatalog
     from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
 
-    key = (id(spark), os.path.abspath(sf_dir))
-    table = _LAKE_MERGE_CACHE.get(key)
-    if table is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_merge_"))
-        writer = LakeWriter(catalog, "gate")
-        target, source = _merge_batches(spark, sf_dir)
-        spec = TableSpec(
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    target, _ = _merge_batches(spark, sf_dir)
+    writer.write(
+        TableSpec(
             name="orders",
-            write_disposition={"disposition": "merge", "strategy": "upsert"},
-            primary_key=["o_orderkey"],
-            sort_order=["o_orderkey"],
-        )
-        writer.write(
-            TableSpec(name="orders", write_disposition="append", sort_order=["o_orderkey"]),
-            target,
-        )
-        writer.write(spec, source)
-        table = catalog.load_table("gate", "orders")
-        _LAKE_MERGE_CACHE[key] = table
-    return _merge_result_select(table.read())
-
-
-_LAKE_MERGE_CACHE: dict = {}
+            write_disposition="append",
+            sort_order=["o_orderdate"],
+        ),
+        target,
+    )
+    table = catalog.load_table("gate", "orders")
+    table.position_delete_where(
+        [("o_orderdate", "<", datetime.date(1993, 6, 1))]
+    )
+    return catalog.load_table("gate", "orders")
 
 
 @query(
@@ -193,39 +211,38 @@ _LAKE_MERGE_CACHE: dict = {}
         "oracle hash-checks staging, sequence rules, and the masked read "
         "end-to-end."
     ),
+    setup=_lake_position_delete_setup,
 )
-def lake_position_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import datetime
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    table = _LAKE_POSDEL_CACHE.get(key)
-    if table is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_posdel_"))
-        writer = LakeWriter(catalog, "gate")
-        target, _ = _merge_batches(spark, sf_dir)
-        writer.write(
-            TableSpec(
-                name="orders",
-                write_disposition="append",
-                sort_order=["o_orderdate"],
-            ),
-            target,
-        )
-        table = catalog.load_table("gate", "orders")
-        table.position_delete_where(
-            [("o_orderdate", "<", datetime.date(1993, 6, 1))]
-        )
-        table = catalog.load_table("gate", "orders")
-        _LAKE_POSDEL_CACHE[key] = table
+def lake_position_delete(spark: SparkSession, sf_dir: str, table) -> DataFrame:
     return _merge_result_select(table.read())
 
 
-_LAKE_POSDEL_CACHE: dict = {}
+def _lake_rename_column_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    orders = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
+    )
+    writer.write(
+        TableSpec(
+            name="orders", write_disposition="append", sort_order=["o_totalprice"]
+        ),
+        orders.filter(F.col("o_orderkey") % 2 == 0),
+    )
+    table = catalog.load_table("gate", "orders")
+    table.rename_column("o_totalprice", "total_price")
+    writer.write(
+        TableSpec(
+            name="orders", write_disposition="append", sort_order=["total_price"]
+        ),
+        orders.filter(F.col("o_orderkey") % 2 == 1).withColumnRenamed(
+            "o_totalprice", "total_price"
+        ),
+    )
+    return catalog.load_table("gate", "orders")
 
 
 @query(
@@ -247,40 +264,9 @@ _LAKE_POSDEL_CACHE: dict = {}
         "(LakeTable._physical_read) both sit on the value-hash path.  The "
         "oracle is the plain union the two eras must reconstitute."
     ),
+    setup=_lake_rename_column_setup,
 )
-def lake_rename_column(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    table = _LAKE_RENAME_CACHE.get(key)
-    if table is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_rename_"))
-        writer = LakeWriter(catalog, "gate")
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
-        )
-        writer.write(
-            TableSpec(
-                name="orders", write_disposition="append", sort_order=["o_totalprice"]
-            ),
-            orders.filter(F.col("o_orderkey") % 2 == 0),
-        )
-        table = catalog.load_table("gate", "orders")
-        table.rename_column("o_totalprice", "total_price")
-        writer.write(
-            TableSpec(
-                name="orders", write_disposition="append", sort_order=["total_price"]
-            ),
-            orders.filter(F.col("o_orderkey") % 2 == 1).withColumnRenamed(
-                "o_totalprice", "total_price"
-            ),
-        )
-        table = catalog.load_table("gate", "orders")
-        _LAKE_RENAME_CACHE[key] = table
+def lake_rename_column(spark: SparkSession, sf_dir: str, table) -> DataFrame:
     return table.read(where=[("total_price", ">=", 150000.0)]).select(
         "o_orderkey",
         "o_custkey",
@@ -290,7 +276,35 @@ def lake_rename_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LAKE_RENAME_CACHE: dict = {}
+def _lake_promote_type_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    orders = _t(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.col("o_custkey").alias("cust_key"),
+        "o_orderstatus",
+        "o_orderdate",
+    )
+    writer.write(
+        TableSpec(
+            name="orders", write_disposition="append", sort_order=["cust_key"]
+        ),
+        orders.filter(F.col("o_orderkey") % 2 == 0).withColumn(
+            "cust_key", F.col("cust_key").cast("int")
+        ),
+    )
+    table = catalog.load_table("gate", "orders")
+    table.promote_column_type("cust_key", "long")
+    writer.write(
+        TableSpec(
+            name="orders", write_disposition="append", sort_order=["cust_key"]
+        ),
+        orders.filter(F.col("o_orderkey") % 2 == 1),
+    )
+    return catalog.load_table("gate", "orders")
 
 
 @query(
@@ -312,49 +326,43 @@ _LAKE_RENAME_CACHE: dict = {}
         "pruning spans both type eras.  The oracle is the plain projection "
         "both eras must reconstitute."
     ),
+    setup=_lake_promote_type_setup,
 )
-def lake_promote_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    table = _LAKE_PROMOTE_CACHE.get(key)
-    if table is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_promote_"))
-        writer = LakeWriter(catalog, "gate")
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            F.col("o_custkey").alias("cust_key"),
-            "o_orderstatus",
-            "o_orderdate",
-        )
-        writer.write(
-            TableSpec(
-                name="orders", write_disposition="append", sort_order=["cust_key"]
-            ),
-            orders.filter(F.col("o_orderkey") % 2 == 0).withColumn(
-                "cust_key", F.col("cust_key").cast("int")
-            ),
-        )
-        table = catalog.load_table("gate", "orders")
-        table.promote_column_type("cust_key", "long")
-        writer.write(
-            TableSpec(
-                name="orders", write_disposition="append", sort_order=["cust_key"]
-            ),
-            orders.filter(F.col("o_orderkey") % 2 == 1),
-        )
-        table = catalog.load_table("gate", "orders")
-        _LAKE_PROMOTE_CACHE[key] = table
+def lake_promote_type(spark: SparkSession, sf_dir: str, table) -> DataFrame:
     return table.read(where=[("cust_key", "<", 100)]).select(
         "o_orderkey", "cust_key", "o_orderstatus", "o_orderdate"
     )
 
 
-_LAKE_PROMOTE_CACHE: dict = {}
+def _lake_spec_evolution_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    orders = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"
+    )
+    writer.write(
+        TableSpec(name="orders", write_disposition="append"),
+        orders.filter(F.col("o_orderkey") % 2 == 0),
+    )
+    writer.write(
+        TableSpec(
+            name="orders",
+            write_disposition="append",
+            column_hints={
+                "o_orderdate": {
+                    "partition": True,
+                    "x-partition-transform": "month",
+                }
+            },
+        ),
+        orders.filter(F.col("o_orderkey") % 2 == 1),
+    )
+    table = catalog.load_table("gate", "orders")
+    assert "evolve-partition" in [s.operation for s in table.snapshots()]
+    return table
 
 
 @query(
@@ -376,43 +384,11 @@ _LAKE_PROMOTE_CACHE: dict = {}
         "file (asserted in-process).  The oracle is the plain date-range "
         "scan both eras must reconstitute."
     ),
+    setup=_lake_spec_evolution_setup,
 )
-def lake_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
+def lake_spec_evolution(spark: SparkSession, sf_dir: str, table) -> DataFrame:
     import datetime as dt
-    import os
-    import tempfile
 
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    table = _LAKE_SPEC_EVO_CACHE.get(key)
-    if table is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_specevo_"))
-        writer = LakeWriter(catalog, "gate")
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"
-        )
-        writer.write(
-            TableSpec(name="orders", write_disposition="append"),
-            orders.filter(F.col("o_orderkey") % 2 == 0),
-        )
-        writer.write(
-            TableSpec(
-                name="orders",
-                write_disposition="append",
-                column_hints={
-                    "o_orderdate": {
-                        "partition": True,
-                        "x-partition-transform": "month",
-                    }
-                },
-            ),
-            orders.filter(F.col("o_orderkey") % 2 == 1),
-        )
-        table = catalog.load_table("gate", "orders")
-        assert "evolve-partition" in [s.operation for s in table.snapshots()]
-        _LAKE_SPEC_EVO_CACHE[key] = table
     snap = table.snapshot()
     where = [
         ("o_orderdate", ">=", dt.date(1995, 6, 1)),
@@ -431,7 +407,28 @@ def lake_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LAKE_SPEC_EVO_CACHE: dict = {}
+def _lake_cdc_changelog_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    orders = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"
+    )
+    writer.write(
+        TableSpec(name="orders", write_disposition="append"),
+        orders.filter(F.col("o_orderkey") % 2 == 0),
+    )
+    table = catalog.load_table("gate", "orders")
+    table.update_where(
+        [("o_custkey", "<", 50)], {"o_orderstatus": "X"}
+    )
+    writer.write(
+        TableSpec(name="orders", write_disposition="append"),
+        orders.filter(F.col("o_orderkey") % 2 == 1),
+    )
+    return catalog.load_table("gate", "orders")
 
 
 @query(
@@ -461,42 +458,37 @@ _LAKE_SPEC_EVO_CACHE: dict = {}
         "reconstructs all four image sets from the raw fixture.  Planning "
         "is O(files touched), never a table diff."
     ),
+    setup=_lake_cdc_changelog_setup,
 )
-def lake_cdc_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    table = _LAKE_CDC_CACHE.get(key)
-    if table is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_cdc_"))
-        writer = LakeWriter(catalog, "gate")
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"
-        )
-        writer.write(
-            TableSpec(name="orders", write_disposition="append"),
-            orders.filter(F.col("o_orderkey") % 2 == 0),
-        )
-        table = catalog.load_table("gate", "orders")
-        table.update_where(
-            [("o_custkey", "<", 50)], {"o_orderstatus": "X"}
-        )
-        writer.write(
-            TableSpec(name="orders", write_disposition="append"),
-            orders.filter(F.col("o_orderkey") % 2 == 1),
-        )
-        table = catalog.load_table("gate", "orders")
-        _LAKE_CDC_CACHE[key] = table
+def lake_cdc_changelog(spark: SparkSession, sf_dir: str, table) -> DataFrame:
     return table.read_changes(None).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate", "_change_type"
     )
 
 
-_LAKE_CDC_CACHE: dict = {}
+def _lake_iceberg_roundtrip_setup(spark: SparkSession, sf_dir: str, root: str):
+    import os
+
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, os.path.join(root, "native"))
+    writer = LakeWriter(catalog, "gate")
+    writer.write(
+        TableSpec(
+            name="orders",
+            write_disposition="append",
+            sort_order=["o_orderdate"],
+            sort_buckets=8,
+        ),
+        _t(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"
+        ),
+    )
+    native = catalog.load_table("gate", "orders")
+    meta_path = native.export_iceberg_metadata(avro_manifests=True)
+    adopting = LakeCatalog(spark, os.path.join(root, "adopt"))
+    return adopting.register_iceberg_table("gate", "orders_icb", meta_path)
 
 
 @query(
@@ -518,36 +510,11 @@ _LAKE_CDC_CACHE: dict = {}
         "survived the encode→decode cycle; the oracle is the plain "
         "date-range scan."
     ),
+    setup=_lake_iceberg_roundtrip_setup,
 )
-def lake_iceberg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+def lake_iceberg_roundtrip(spark: SparkSession, sf_dir: str, table) -> DataFrame:
     import datetime as dt
-    import os
-    import tempfile
 
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    table = _LAKE_ICB_RT_CACHE.get(key)
-    if table is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_icbrt_"))
-        writer = LakeWriter(catalog, "gate")
-        writer.write(
-            TableSpec(
-                name="orders",
-                write_disposition="append",
-                sort_order=["o_orderdate"],
-                sort_buckets=8,
-            ),
-            _t(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"
-            ),
-        )
-        native = catalog.load_table("gate", "orders")
-        meta_path = native.export_iceberg_metadata(avro_manifests=True)
-        adopting = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_icbrt_b_"))
-        table = adopting.register_iceberg_table("gate", "orders_icb", meta_path)
-        _LAKE_ICB_RT_CACHE[key] = table
     snap = table.snapshot()
     where = [
         ("o_orderdate", ">=", dt.date(1996, 1, 1)),
@@ -562,7 +529,28 @@ def lake_iceberg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LAKE_ICB_RT_CACHE: dict = {}
+def _lake_add_column_default_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    orders = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus"
+    )
+    writer.write(
+        TableSpec(name="orders", write_disposition="append"),
+        orders.filter(F.col("o_orderkey") % 3 == 0),
+    )
+    table = catalog.load_table("gate", "orders")
+    table.add_column("priority_score", "long", default=7)
+    writer.write(
+        TableSpec(name="orders", write_disposition="append"),
+        orders.filter(F.col("o_orderkey") % 3 != 0).withColumn(
+            "priority_score", F.col("o_custkey") % 10
+        ),
+    )
+    return catalog.load_table("gate", "orders")
 
 
 @query(
@@ -586,36 +574,9 @@ _LAKE_ICB_RT_CACHE: dict = {}
         "in stats pruning.  The oracle rebuilds both row sets with a "
         "CASE-free UNION."
     ),
+    setup=_lake_add_column_default_setup,
 )
-def lake_add_column_default(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    table = _LAKE_ADD_DEFAULT_CACHE.get(key)
-    if table is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_adddflt_"))
-        writer = LakeWriter(catalog, "gate")
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_orderstatus"
-        )
-        writer.write(
-            TableSpec(name="orders", write_disposition="append"),
-            orders.filter(F.col("o_orderkey") % 3 == 0),
-        )
-        table = catalog.load_table("gate", "orders")
-        table.add_column("priority_score", "long", default=7)
-        writer.write(
-            TableSpec(name="orders", write_disposition="append"),
-            orders.filter(F.col("o_orderkey") % 3 != 0).withColumn(
-                "priority_score", F.col("o_custkey") % 10
-            ),
-        )
-        table = catalog.load_table("gate", "orders")
-        _LAKE_ADD_DEFAULT_CACHE[key] = table
+def lake_add_column_default(spark: SparkSession, sf_dir: str, table) -> DataFrame:
     snap = table.snapshot()
     pre_add = [f for f in snap.files if f.names.get("priority_score", "x") is None]
     _, files = table._select_files(snap, [("priority_score", ">", 9)])
@@ -627,7 +588,72 @@ def lake_add_column_default(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LAKE_ADD_DEFAULT_CACHE: dict = {}
+def _lake_rollup_incremental_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.rollup import IncrementalRollup
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    base = (
+        _t(spark, sf_dir, "lineitem")
+        .select(
+            (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("id"),
+            F.col("l_returnflag").alias("grp"),
+            F.col("l_linestatus").alias("status"),
+            F.col("l_quantity").cast("double").alias("amt"),
+        )
+        # fixture has duplicate (orderkey, linenumber) pairs; the fact
+        # table needs a genuine key (mirrors the oracle's GROUP BY id)
+        .groupBy("id")
+        .agg(
+            F.max("grp").alias("grp"),
+            F.max("status").alias("status"),
+            F.max("amt").alias("amt"),
+        )
+    )
+    writer.write(
+        TableSpec(name="fact", write_disposition="append", primary_key=["id"]),
+        base,
+    )
+    src = catalog.load_table("gate", "fact")
+    ru = IncrementalRollup(
+        catalog, "gate", "fact_by_grp", src,
+        keys=["grp"],
+        aggs={"total": ("sum", "amt"), "n_rows": ("count",)},
+    )
+    assert ru.refresh()["groups_touched"] == -1  # initial full build
+    src.update_where([("status", "=", "O")], {"amt": 5.0})
+    ru.source = catalog.load_table("gate", "fact")
+    r = ru.refresh()
+    assert r["groups_touched"] > 0, r
+    batch = base.filter(F.col("id") % 31 == 0).withColumn(
+        "amt", F.lit(777.0)
+    ).unionByName(
+        base.filter(F.col("id") % 101 == 0).select(
+            (F.col("id") + 100000000).alias("id"),
+            F.lit("Z").alias("grp"),
+            F.lit("NEW").alias("status"),
+            F.lit(1.0).alias("amt"),
+        )
+    )
+    writer.write(
+        TableSpec(
+            name="fact",
+            write_disposition={"disposition": "merge", "strategy": "upsert"},
+            primary_key=["id"],
+        ),
+        batch,
+    )
+    src = catalog.load_table("gate", "fact")
+    src.position_delete_where([("grp", "=", "R"), ("amt", "<", 10.0)])
+    ru.source = catalog.load_table("gate", "fact")
+    ru.refresh()
+    # exactly-once cursor: a replayed refresh applies nothing
+    v = catalog.load_table("gate", "fact_by_grp").current_version()
+    assert ru.refresh()["groups_touched"] == 0
+    assert catalog.load_table("gate", "fact_by_grp").current_version() == v
+    return ru
 
 
 @query(
@@ -674,85 +700,64 @@ _LAKE_ADD_DEFAULT_CACHE: dict = {}
         "In-process assertions pin the exactly-once cursor: a replayed "
         "refresh is a no-op at the same rollup version."
     ),
+    setup=_lake_rollup_incremental_setup,
 )
-def lake_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.rollup import IncrementalRollup
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    ru = _LAKE_ROLLUP_CACHE.get(key)
-    if ru is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_rollup_"))
-        writer = LakeWriter(catalog, "gate")
-        base = (
-            _t(spark, sf_dir, "lineitem")
-            .select(
-                (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("id"),
-                F.col("l_returnflag").alias("grp"),
-                F.col("l_linestatus").alias("status"),
-                F.col("l_quantity").cast("double").alias("amt"),
-            )
-            # fixture has duplicate (orderkey, linenumber) pairs; the fact
-            # table needs a genuine key (mirrors the oracle's GROUP BY id)
-            .groupBy("id")
-            .agg(
-                F.max("grp").alias("grp"),
-                F.max("status").alias("status"),
-                F.max("amt").alias("amt"),
-            )
-        )
-        writer.write(
-            TableSpec(name="fact", write_disposition="append", primary_key=["id"]),
-            base,
-        )
-        src = catalog.load_table("gate", "fact")
-        ru = IncrementalRollup(
-            catalog, "gate", "fact_by_grp", src,
-            keys=["grp"],
-            aggs={"total": ("sum", "amt"), "n_rows": ("count",)},
-        )
-        assert ru.refresh()["groups_touched"] == -1  # initial full build
-        src.update_where([("status", "=", "O")], {"amt": 5.0})
-        ru.source = catalog.load_table("gate", "fact")
-        r = ru.refresh()
-        assert r["groups_touched"] > 0, r
-        batch = base.filter(F.col("id") % 31 == 0).withColumn(
-            "amt", F.lit(777.0)
-        ).unionByName(
-            base.filter(F.col("id") % 101 == 0).select(
-                (F.col("id") + 100000000).alias("id"),
-                F.lit("Z").alias("grp"),
-                F.lit("NEW").alias("status"),
-                F.lit(1.0).alias("amt"),
-            )
-        )
-        writer.write(
-            TableSpec(
-                name="fact",
-                write_disposition={"disposition": "merge", "strategy": "upsert"},
-                primary_key=["id"],
-            ),
-            batch,
-        )
-        src = catalog.load_table("gate", "fact")
-        src.position_delete_where([("grp", "=", "R"), ("amt", "<", 10.0)])
-        ru.source = catalog.load_table("gate", "fact")
-        ru.refresh()
-        # exactly-once cursor: a replayed refresh applies nothing
-        v = catalog.load_table("gate", "fact_by_grp").current_version()
-        assert ru.refresh()["groups_touched"] == 0
-        assert catalog.load_table("gate", "fact_by_grp").current_version() == v
-        _LAKE_ROLLUP_CACHE[key] = ru
+def lake_rollup_incremental(spark: SparkSession, sf_dir: str, ru) -> DataFrame:
     return ru.read().select(
         "grp", rnd(F.col("total")).alias("total"), "n_rows"
     )
 
 
-_LAKE_ROLLUP_CACHE: dict = {}
+def _lake_rollup_minmax_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.rollup import IncrementalRollup
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    base = (
+        _t(spark, sf_dir, "lineitem")
+        .select(
+            (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("id"),
+            F.col("l_returnflag").alias("grp"),
+            F.col("l_linestatus").alias("status"),
+            F.col("l_quantity").cast("double").alias("amt"),
+        )
+        .groupBy("id")
+        .agg(
+            F.max("grp").alias("grp"),
+            F.max("status").alias("status"),
+            F.max("amt").alias("amt"),
+        )
+    )
+    writer.write(
+        TableSpec(name="fact", write_disposition="append", primary_key=["id"]),
+        base,
+    )
+    src = catalog.load_table("gate", "fact")
+    ru = IncrementalRollup(
+        catalog, "gate", "fact_mm", src,
+        keys=["grp"],
+        aggs={
+            "total": ("sum", "amt"), "lo": ("min", "amt"),
+            "hi": ("max", "amt"), "n_rows": ("count",),
+        },
+        strategy="rescan",
+    )
+    assert ru.refresh()["groups_touched"] == -1
+    # MoR update: every 'F' row moves to mid-range — group extremes
+    # computed at build time must retract, not stick
+    src.update_where([("status", "=", "F")], {"amt": 7.0})
+    ru.source = catalog.load_table("gate", "fact")
+    assert ru.refresh()["groups_touched"] > 0
+    # kill the 'R' group's high outliers: the current max dies
+    src = catalog.load_table("gate", "fact")
+    src.position_delete_where([("grp", "=", "R"), ("amt", ">", 45)])
+    ru.source = catalog.load_table("gate", "fact")
+    ru.refresh()
+    # exactly-once: replayed refresh applies nothing
+    assert ru.refresh()["groups_touched"] == 0
+    return ru
 
 
 @query(
@@ -792,63 +797,9 @@ _LAKE_ROLLUP_CACHE: dict = {}
         "final source state; a hash match proves retraction-correct "
         "extrema alongside exact sums."
     ),
+    setup=_lake_rollup_minmax_setup,
 )
-def lake_rollup_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.rollup import IncrementalRollup
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    ru = _LAKE_ROLLUP_MM_CACHE.get(key)
-    if ru is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_rollup_mm_"))
-        writer = LakeWriter(catalog, "gate")
-        base = (
-            _t(spark, sf_dir, "lineitem")
-            .select(
-                (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("id"),
-                F.col("l_returnflag").alias("grp"),
-                F.col("l_linestatus").alias("status"),
-                F.col("l_quantity").cast("double").alias("amt"),
-            )
-            .groupBy("id")
-            .agg(
-                F.max("grp").alias("grp"),
-                F.max("status").alias("status"),
-                F.max("amt").alias("amt"),
-            )
-        )
-        writer.write(
-            TableSpec(name="fact", write_disposition="append", primary_key=["id"]),
-            base,
-        )
-        src = catalog.load_table("gate", "fact")
-        ru = IncrementalRollup(
-            catalog, "gate", "fact_mm", src,
-            keys=["grp"],
-            aggs={
-                "total": ("sum", "amt"), "lo": ("min", "amt"),
-                "hi": ("max", "amt"), "n_rows": ("count",),
-            },
-            strategy="rescan",
-        )
-        assert ru.refresh()["groups_touched"] == -1
-        # MoR update: every 'F' row moves to mid-range — group extremes
-        # computed at build time must retract, not stick
-        src.update_where([("status", "=", "F")], {"amt": 7.0})
-        ru.source = catalog.load_table("gate", "fact")
-        assert ru.refresh()["groups_touched"] > 0
-        # kill the 'R' group's high outliers: the current max dies
-        src = catalog.load_table("gate", "fact")
-        src.position_delete_where([("grp", "=", "R"), ("amt", ">", 45)])
-        ru.source = catalog.load_table("gate", "fact")
-        ru.refresh()
-        # exactly-once: replayed refresh applies nothing
-        assert ru.refresh()["groups_touched"] == 0
-        _LAKE_ROLLUP_MM_CACHE[key] = ru
+def lake_rollup_minmax(spark: SparkSession, sf_dir: str, ru) -> DataFrame:
     return ru.read().select(
         "grp", rnd(F.col("total")).alias("total"),
         rnd(F.col("lo")).alias("lo"), rnd(F.col("hi")).alias("hi"),
@@ -856,7 +807,70 @@ def lake_rollup_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LAKE_ROLLUP_MM_CACHE: dict = {}
+def _lake_matview_join_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.matview import IncrementalJoinView
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    left0 = _t(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.col("o_custkey").alias("cust"),
+        "o_orderstatus",
+        F.col("o_totalprice").cast("double").alias("o_totalprice"),
+    )
+    writer.write(
+        TableSpec(name="ord", write_disposition="append", primary_key=["o_orderkey"]),
+        left0,
+    )
+    right0 = _t(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("cust"),
+        "c_mktsegment",
+        F.col("c_acctbal").cast("double").alias("c_acctbal"),
+    )
+    writer.write(
+        TableSpec(name="cust", write_disposition="append", primary_key=["cust"]),
+        right0,
+    )
+    mv = IncrementalJoinView(
+        catalog, "gate", "order_cust",
+        catalog.load_table("gate", "ord"),
+        catalog.load_table("gate", "cust"),
+        on=["cust"], left_pk=["o_orderkey"], right_pk=["cust"],
+    )
+    assert mv.refresh()["pairs_touched"] == -1  # initial build
+    # LEFT: MoR update, then a keyed append derived from the updated state
+    lt = catalog.load_table("gate", "ord")
+    lt.update_where([("o_orderstatus", "=", "P")], {"o_totalprice": 1000.0})
+    lt = catalog.load_table("gate", "ord")
+    writer.write(
+        TableSpec(name="ord", write_disposition="append", primary_key=["o_orderkey"]),
+        lt.read()
+        .filter(F.col("o_orderkey") % 101 == 0)
+        .withColumn("o_orderkey", F.col("o_orderkey") + 100000000),
+    )
+    # RIGHT: balance update + hard-delete sweep
+    rt = catalog.load_table("gate", "cust")
+    rt.update_where([("c_mktsegment", "=", "BUILDING")], {"c_acctbal": 0.0})
+    rt = catalog.load_table("gate", "cust")
+    writer.write(
+        TableSpec(
+            name="cust",
+            write_disposition={"disposition": "merge", "strategy": "upsert"},
+            primary_key=["cust"],
+            hard_delete_column="__del",
+        ),
+        rt.read().filter(F.col("cust") % 50 == 0).withColumn("__del", F.lit(True)),
+    )
+    # ONE refresh folds multi-snapshot changelogs on BOTH cursors
+    mv.left = catalog.load_table("gate", "ord")
+    mv.right = catalog.load_table("gate", "cust")
+    r = mv.refresh()
+    assert r["pairs_touched"] > 0
+    # exactly-once: replay applies nothing
+    assert mv.refresh()["pairs_touched"] == 0
+    return mv
 
 
 @query(
@@ -903,77 +917,9 @@ _LAKE_ROLLUP_MM_CACHE: dict = {}
         "The oracle recomputes the inner join of both final states; a "
         "hash match proves the maintained view equals recomputation."
     ),
+    setup=_lake_matview_join_setup,
 )
-def lake_matview_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.matview import IncrementalJoinView
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    mv = _LAKE_MATVIEW_CACHE.get(key)
-    if mv is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_matview_"))
-        writer = LakeWriter(catalog, "gate")
-        left0 = _t(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            F.col("o_custkey").alias("cust"),
-            "o_orderstatus",
-            F.col("o_totalprice").cast("double").alias("o_totalprice"),
-        )
-        writer.write(
-            TableSpec(name="ord", write_disposition="append", primary_key=["o_orderkey"]),
-            left0,
-        )
-        right0 = _t(spark, sf_dir, "customer").select(
-            F.col("c_custkey").alias("cust"),
-            "c_mktsegment",
-            F.col("c_acctbal").cast("double").alias("c_acctbal"),
-        )
-        writer.write(
-            TableSpec(name="cust", write_disposition="append", primary_key=["cust"]),
-            right0,
-        )
-        mv = IncrementalJoinView(
-            catalog, "gate", "order_cust",
-            catalog.load_table("gate", "ord"),
-            catalog.load_table("gate", "cust"),
-            on=["cust"], left_pk=["o_orderkey"], right_pk=["cust"],
-        )
-        assert mv.refresh()["pairs_touched"] == -1  # initial build
-        # LEFT: MoR update, then a keyed append derived from the updated state
-        lt = catalog.load_table("gate", "ord")
-        lt.update_where([("o_orderstatus", "=", "P")], {"o_totalprice": 1000.0})
-        lt = catalog.load_table("gate", "ord")
-        writer.write(
-            TableSpec(name="ord", write_disposition="append", primary_key=["o_orderkey"]),
-            lt.read()
-            .filter(F.col("o_orderkey") % 101 == 0)
-            .withColumn("o_orderkey", F.col("o_orderkey") + 100000000),
-        )
-        # RIGHT: balance update + hard-delete sweep
-        rt = catalog.load_table("gate", "cust")
-        rt.update_where([("c_mktsegment", "=", "BUILDING")], {"c_acctbal": 0.0})
-        rt = catalog.load_table("gate", "cust")
-        writer.write(
-            TableSpec(
-                name="cust",
-                write_disposition={"disposition": "merge", "strategy": "upsert"},
-                primary_key=["cust"],
-                hard_delete_column="__del",
-            ),
-            rt.read().filter(F.col("cust") % 50 == 0).withColumn("__del", F.lit(True)),
-        )
-        # ONE refresh folds multi-snapshot changelogs on BOTH cursors
-        mv.left = catalog.load_table("gate", "ord")
-        mv.right = catalog.load_table("gate", "cust")
-        r = mv.refresh()
-        assert r["pairs_touched"] > 0
-        # exactly-once: replay applies nothing
-        assert mv.refresh()["pairs_touched"] == 0
-        _LAKE_MATVIEW_CACHE[key] = mv
+def lake_matview_join(spark: SparkSession, sf_dir: str, mv) -> DataFrame:
     return mv.read().select(
         "o_orderkey", "cust", "o_orderstatus",
         rnd(F.col("o_totalprice")).alias("total_price"),
@@ -981,7 +927,80 @@ def lake_matview_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LAKE_MATVIEW_CACHE: dict = {}
+def _lake_matview_chain_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.matview import IncrementalJoinView
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    writer.write(
+        TableSpec(name="ord", write_disposition="append", primary_key=["o_orderkey"]),
+        _t(spark, sf_dir, "orders").select(
+            "o_orderkey",
+            F.col("o_custkey").alias("cust"),
+            F.col("o_totalprice").cast("double").alias("o_totalprice"),
+        ),
+    )
+    writer.write(
+        TableSpec(name="cust", write_disposition="append", primary_key=["cust"]),
+        _t(spark, sf_dir, "customer").select(
+            F.col("c_custkey").alias("cust"),
+            F.col("c_nationkey").alias("nk"),
+            F.col("c_acctbal").cast("double").alias("c_acctbal"),
+        ),
+    )
+    writer.write(
+        TableSpec(name="nat", write_disposition="append", primary_key=["nk"]),
+        _t(spark, sf_dir, "nation").select(
+            F.col("n_nationkey").alias("nk"), "n_name"
+        ),
+    )
+    mv1 = IncrementalJoinView(
+        catalog, "gate", "oc_chain",
+        catalog.load_table("gate", "ord"),
+        catalog.load_table("gate", "cust"),
+        on=["cust"], left_pk=["o_orderkey"], right_pk=["cust"],
+        # projection drops c_acctbal from the maintained view
+        select=["o_orderkey", "cust", "o_totalprice", "nk"],
+    )
+    mv1.refresh()
+    mv2 = IncrementalJoinView(
+        catalog, "gate", "ocn_chain",
+        catalog.load_table("gate", "oc_chain"),
+        catalog.load_table("gate", "nat"),
+        on=["nk"], left_pk=["o_orderkey", "cust"], right_pk=["nk"],
+    )
+    mv2.refresh()
+    # base mutations: keyed price update + customer hard-delete sweep
+    catalog.load_table("gate", "ord").update_where(
+        [("o_orderkey", "<", 5000)], {"o_totalprice": 1000.0}
+    )
+    rt = catalog.load_table("gate", "cust")
+    writer.write(
+        TableSpec(
+            name="cust",
+            write_disposition={"disposition": "merge", "strategy": "upsert"},
+            primary_key=["cust"],
+            hard_delete_column="__del",
+        ),
+        rt.read().filter(F.col("cust") % 50 == 0).withColumn("__del", F.lit(True)),
+    )
+    mv1.left = catalog.load_table("gate", "ord")
+    mv1.right = catalog.load_table("gate", "cust")
+    assert mv1.refresh()["pairs_touched"] > 0
+    mv2.left = catalog.load_table("gate", "oc_chain")
+    assert mv2.refresh()["pairs_touched"] > 0
+    # nation-side mutation hits only view2's right delta path
+    catalog.load_table("gate", "nat").update_where(
+        [("nk", "=", 3)], {"n_name": "REKEYED"}
+    )
+    mv2.right = catalog.load_table("gate", "nat")
+    assert mv2.refresh()["pairs_touched"] > 0
+    # exactly-once end to end
+    assert mv1.refresh()["pairs_touched"] == 0
+    assert mv2.refresh()["pairs_touched"] == 0
+    return mv2
 
 
 @query(
@@ -1017,87 +1036,9 @@ _LAKE_MATVIEW_CACHE: dict = {}
         "three-way join of final states; a hash match proves the chain "
         "equals recomputation."
     ),
+    setup=_lake_matview_chain_setup,
 )
-def lake_matview_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.matview import IncrementalJoinView
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    mv2 = _LAKE_MATVIEW_CHAIN_CACHE.get(key)
-    if mv2 is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_mvchain_"))
-        writer = LakeWriter(catalog, "gate")
-        writer.write(
-            TableSpec(name="ord", write_disposition="append", primary_key=["o_orderkey"]),
-            _t(spark, sf_dir, "orders").select(
-                "o_orderkey",
-                F.col("o_custkey").alias("cust"),
-                F.col("o_totalprice").cast("double").alias("o_totalprice"),
-            ),
-        )
-        writer.write(
-            TableSpec(name="cust", write_disposition="append", primary_key=["cust"]),
-            _t(spark, sf_dir, "customer").select(
-                F.col("c_custkey").alias("cust"),
-                F.col("c_nationkey").alias("nk"),
-                F.col("c_acctbal").cast("double").alias("c_acctbal"),
-            ),
-        )
-        writer.write(
-            TableSpec(name="nat", write_disposition="append", primary_key=["nk"]),
-            _t(spark, sf_dir, "nation").select(
-                F.col("n_nationkey").alias("nk"), "n_name"
-            ),
-        )
-        mv1 = IncrementalJoinView(
-            catalog, "gate", "oc_chain",
-            catalog.load_table("gate", "ord"),
-            catalog.load_table("gate", "cust"),
-            on=["cust"], left_pk=["o_orderkey"], right_pk=["cust"],
-            # projection drops c_acctbal from the maintained view
-            select=["o_orderkey", "cust", "o_totalprice", "nk"],
-        )
-        mv1.refresh()
-        mv2 = IncrementalJoinView(
-            catalog, "gate", "ocn_chain",
-            catalog.load_table("gate", "oc_chain"),
-            catalog.load_table("gate", "nat"),
-            on=["nk"], left_pk=["o_orderkey", "cust"], right_pk=["nk"],
-        )
-        mv2.refresh()
-        # base mutations: keyed price update + customer hard-delete sweep
-        catalog.load_table("gate", "ord").update_where(
-            [("o_orderkey", "<", 5000)], {"o_totalprice": 1000.0}
-        )
-        rt = catalog.load_table("gate", "cust")
-        writer.write(
-            TableSpec(
-                name="cust",
-                write_disposition={"disposition": "merge", "strategy": "upsert"},
-                primary_key=["cust"],
-                hard_delete_column="__del",
-            ),
-            rt.read().filter(F.col("cust") % 50 == 0).withColumn("__del", F.lit(True)),
-        )
-        mv1.left = catalog.load_table("gate", "ord")
-        mv1.right = catalog.load_table("gate", "cust")
-        assert mv1.refresh()["pairs_touched"] > 0
-        mv2.left = catalog.load_table("gate", "oc_chain")
-        assert mv2.refresh()["pairs_touched"] > 0
-        # nation-side mutation hits only view2's right delta path
-        catalog.load_table("gate", "nat").update_where(
-            [("nk", "=", 3)], {"n_name": "REKEYED"}
-        )
-        mv2.right = catalog.load_table("gate", "nat")
-        assert mv2.refresh()["pairs_touched"] > 0
-        # exactly-once end to end
-        assert mv1.refresh()["pairs_touched"] == 0
-        assert mv2.refresh()["pairs_touched"] == 0
-        _LAKE_MATVIEW_CHAIN_CACHE[key] = mv2
+def lake_matview_chain(spark: SparkSession, sf_dir: str, mv2) -> DataFrame:
     return mv2.read().select(
         "o_orderkey", "cust",
         rnd(F.col("o_totalprice")).alias("total_price"),
@@ -1105,7 +1046,38 @@ def lake_matview_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LAKE_MATVIEW_CHAIN_CACHE: dict = {}
+def _stream_dedup_corpus_setup(spark: SparkSession, sf_dir: str, root: str):
+    import os
+
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.table import LakeTable
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+    from dlt_iceberg_spark.streaming.dedup import run_dedup_backfill
+
+    catalog = LakeCatalog(spark, os.path.join(root, "wh"))
+    writer = LakeWriter(catalog, "gate")
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    for ld in range(3):
+        writer.write(
+            TableSpec(name="docs", write_disposition="append"),
+            d.filter(F.col("doc_id") % 3 == ld),
+            load_id=f"ld{ld}",
+        )
+    index = LakeTable(spark, os.path.join(root, "idx"))
+    run_dedup_backfill(
+        spark,
+        catalog.load_table("gate", "docs").location,
+        index,
+        writer,
+        "doc_dups",
+        "text",
+        "doc_id",
+        checkpoint_dir=os.path.join(root, "ckpt"),
+        threshold=0.8,
+        strategy="auto",
+        query_name="sdedup_gate",
+    )
+    return catalog.load_table("gate", "doc_dups")
 
 
 @query(
@@ -1144,52 +1116,65 @@ _LAKE_MATVIEW_CHAIN_CACHE: dict = {}
         "ingest).  A hash match proves epoch ordering, index "
         "maintenance, and the probe all equal the batch semantics."
     ),
+    setup=_stream_dedup_corpus_setup,
 )
-def stream_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.table import LakeTable
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-    from dlt_iceberg_spark.streaming.dedup import run_dedup_backfill
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    got = _STREAM_DEDUP_CACHE.get(key)
-    if got is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="sdedup_"))
-        writer = LakeWriter(catalog, "gate")
-        d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-        for ld in range(3):
-            writer.write(
-                TableSpec(name="docs", write_disposition="append"),
-                d.filter(F.col("doc_id") % 3 == ld),
-                load_id=f"ld{ld}",
-            )
-        index = LakeTable(
-            spark, os.path.join(tempfile.mkdtemp(prefix="sdedup_idx_"), "idx")
-        )
-        run_dedup_backfill(
-            spark,
-            catalog.load_table("gate", "docs").location,
-            index,
-            writer,
-            "doc_dups",
-            "text",
-            "doc_id",
-            checkpoint_dir=tempfile.mkdtemp(prefix="sdedup_ckpt_"),
-            threshold=0.8,
-            strategy="auto",
-            query_name="sdedup_gate",
-        )
-        got = catalog.load_table("gate", "doc_dups")
-        _STREAM_DEDUP_CACHE[key] = got
+def stream_dedup_corpus(spark: SparkSession, sf_dir: str, got) -> DataFrame:
     return got.read().select(
         "corpus_id", "batch_id", rnd(F.col("jaccard"), 6).alias("jaccard")
     )
 
 
-_STREAM_DEDUP_CACHE: dict = {}
+def _lake_matview_left_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.matview import IncrementalJoinView
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    writer.write(
+        TableSpec(name="ord", write_disposition="append", primary_key=["o_orderkey"]),
+        _t(spark, sf_dir, "orders").select(
+            "o_orderkey",
+            F.col("o_custkey").alias("cust"),
+            F.col("o_totalprice").cast("double").alias("o_totalprice"),
+        ),
+    )
+    writer.write(
+        TableSpec(name="cust", write_disposition="append", primary_key=["cust"]),
+        _t(spark, sf_dir, "customer").select(
+            F.col("c_custkey").alias("cust"),
+            "c_mktsegment",
+            F.col("c_acctbal").cast("double").alias("c_acctbal"),
+        ),
+    )
+    mv = IncrementalJoinView(
+        catalog, "gate", "order_cust_left",
+        catalog.load_table("gate", "ord"),
+        catalog.load_table("gate", "cust"),
+        on=["cust"], left_pk=["o_orderkey"], right_pk=["cust"],
+        how="left",
+    )
+    assert mv.refresh()["pairs_touched"] == -1
+    # hard-delete sweep: every affected order flips to null-extended
+    rt = catalog.load_table("gate", "cust")
+    writer.write(
+        TableSpec(
+            name="cust",
+            write_disposition={"disposition": "merge", "strategy": "upsert"},
+            primary_key=["cust"],
+            hard_delete_column="__del",
+        ),
+        rt.read().filter(F.col("cust") % 7 == 0).withColumn("__del", F.lit(True)),
+    )
+    mv.right = catalog.load_table("gate", "cust")
+    assert mv.refresh()["pairs_touched"] > 0
+    # balance update on the surviving matches
+    rt = catalog.load_table("gate", "cust")
+    rt.update_where([("c_mktsegment", "=", "MACHINERY")], {"c_acctbal": -1.0})
+    mv.right = catalog.load_table("gate", "cust")
+    mv.refresh()
+    assert mv.refresh()["pairs_touched"] == 0  # replay no-op
+    return mv
 
 
 @query(
@@ -1223,64 +1208,9 @@ _STREAM_DEDUP_CACHE: dict = {}
         "payload maintenance agree with recomputation (NULL segment/"
         "balance columns participate in the value hash)."
     ),
+    setup=_lake_matview_left_setup,
 )
-def lake_matview_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.matview import IncrementalJoinView
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    mv = _LAKE_MATVIEW_L_CACHE.get(key)
-    if mv is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_matview_l_"))
-        writer = LakeWriter(catalog, "gate")
-        writer.write(
-            TableSpec(name="ord", write_disposition="append", primary_key=["o_orderkey"]),
-            _t(spark, sf_dir, "orders").select(
-                "o_orderkey",
-                F.col("o_custkey").alias("cust"),
-                F.col("o_totalprice").cast("double").alias("o_totalprice"),
-            ),
-        )
-        writer.write(
-            TableSpec(name="cust", write_disposition="append", primary_key=["cust"]),
-            _t(spark, sf_dir, "customer").select(
-                F.col("c_custkey").alias("cust"),
-                "c_mktsegment",
-                F.col("c_acctbal").cast("double").alias("c_acctbal"),
-            ),
-        )
-        mv = IncrementalJoinView(
-            catalog, "gate", "order_cust_left",
-            catalog.load_table("gate", "ord"),
-            catalog.load_table("gate", "cust"),
-            on=["cust"], left_pk=["o_orderkey"], right_pk=["cust"],
-            how="left",
-        )
-        assert mv.refresh()["pairs_touched"] == -1
-        # hard-delete sweep: every affected order flips to null-extended
-        rt = catalog.load_table("gate", "cust")
-        writer.write(
-            TableSpec(
-                name="cust",
-                write_disposition={"disposition": "merge", "strategy": "upsert"},
-                primary_key=["cust"],
-                hard_delete_column="__del",
-            ),
-            rt.read().filter(F.col("cust") % 7 == 0).withColumn("__del", F.lit(True)),
-        )
-        mv.right = catalog.load_table("gate", "cust")
-        assert mv.refresh()["pairs_touched"] > 0
-        # balance update on the surviving matches
-        rt = catalog.load_table("gate", "cust")
-        rt.update_where([("c_mktsegment", "=", "MACHINERY")], {"c_acctbal": -1.0})
-        mv.right = catalog.load_table("gate", "cust")
-        mv.refresh()
-        assert mv.refresh()["pairs_touched"] == 0  # replay no-op
-        _LAKE_MATVIEW_L_CACHE[key] = mv
+def lake_matview_left(spark: SparkSession, sf_dir: str, mv) -> DataFrame:
     return mv.read().select(
         "o_orderkey", "cust",
         rnd(F.col("o_totalprice")).alias("total_price"),
@@ -1288,7 +1218,65 @@ def lake_matview_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LAKE_MATVIEW_L_CACHE: dict = {}
+def _lake_matview_full_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.matview import IncrementalJoinView
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    writer.write(
+        TableSpec(name="ord", write_disposition="append", primary_key=["o_orderkey"]),
+        _t(spark, sf_dir, "orders").select(
+            "o_orderkey",
+            F.col("o_custkey").alias("cust"),
+            F.col("o_totalprice").cast("double").alias("o_totalprice"),
+        ),
+    )
+    # right side keeps a SEPARATE pk column so unmatched-left rows can
+    # show a NULL right key in the output (r_cust)
+    writer.write(
+        TableSpec(name="cust", write_disposition="append", primary_key=["r_cust"]),
+        _t(spark, sf_dir, "customer").select(
+            F.col("c_custkey").alias("cust"),
+            F.col("c_custkey").alias("r_cust"),
+            F.col("c_acctbal").cast("double").alias("c_acctbal"),
+        ),
+    )
+    mv = IncrementalJoinView(
+        catalog, "gate", "oc_full",
+        catalog.load_table("gate", "ord"),
+        catalog.load_table("gate", "cust"),
+        on=["cust"], left_pk=["o_orderkey"], right_pk=["r_cust"],
+        how="full",
+    )
+    assert mv.refresh()["pairs_touched"] == -1
+    # BOTH sides take delete sweeps before one refresh
+    lt = catalog.load_table("gate", "ord")
+    writer.write(
+        TableSpec(
+            name="ord",
+            write_disposition={"disposition": "merge", "strategy": "upsert"},
+            primary_key=["o_orderkey"],
+            hard_delete_column="__del",
+        ),
+        lt.read().filter(F.col("cust") % 5 == 0).withColumn("__del", F.lit(True)),
+    )
+    rt = catalog.load_table("gate", "cust")
+    writer.write(
+        TableSpec(
+            name="cust",
+            write_disposition={"disposition": "merge", "strategy": "upsert"},
+            primary_key=["r_cust"],
+            hard_delete_column="__del",
+        ),
+        rt.read().filter(F.col("cust") % 7 == 0).withColumn("__del", F.lit(True)),
+    )
+    mv.left = catalog.load_table("gate", "ord")
+    mv.right = catalog.load_table("gate", "cust")
+    assert mv.refresh()["pairs_touched"] > 0
+    assert mv.refresh()["pairs_touched"] == 0  # replay no-op
+    return mv
 
 
 @query(
@@ -1319,72 +1307,9 @@ _LAKE_MATVIEW_L_CACHE: dict = {}
         "recomputes the FULL OUTER JOIN of the final states; NULL-"
         "extended columns on either side participate in the value hash."
     ),
+    setup=_lake_matview_full_setup,
 )
-def lake_matview_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.matview import IncrementalJoinView
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    mv = _LAKE_MATVIEW_F_CACHE.get(key)
-    if mv is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_matview_f_"))
-        writer = LakeWriter(catalog, "gate")
-        writer.write(
-            TableSpec(name="ord", write_disposition="append", primary_key=["o_orderkey"]),
-            _t(spark, sf_dir, "orders").select(
-                "o_orderkey",
-                F.col("o_custkey").alias("cust"),
-                F.col("o_totalprice").cast("double").alias("o_totalprice"),
-            ),
-        )
-        # right side keeps a SEPARATE pk column so unmatched-left rows can
-        # show a NULL right key in the output (r_cust)
-        writer.write(
-            TableSpec(name="cust", write_disposition="append", primary_key=["r_cust"]),
-            _t(spark, sf_dir, "customer").select(
-                F.col("c_custkey").alias("cust"),
-                F.col("c_custkey").alias("r_cust"),
-                F.col("c_acctbal").cast("double").alias("c_acctbal"),
-            ),
-        )
-        mv = IncrementalJoinView(
-            catalog, "gate", "oc_full",
-            catalog.load_table("gate", "ord"),
-            catalog.load_table("gate", "cust"),
-            on=["cust"], left_pk=["o_orderkey"], right_pk=["r_cust"],
-            how="full",
-        )
-        assert mv.refresh()["pairs_touched"] == -1
-        # BOTH sides take delete sweeps before one refresh
-        lt = catalog.load_table("gate", "ord")
-        writer.write(
-            TableSpec(
-                name="ord",
-                write_disposition={"disposition": "merge", "strategy": "upsert"},
-                primary_key=["o_orderkey"],
-                hard_delete_column="__del",
-            ),
-            lt.read().filter(F.col("cust") % 5 == 0).withColumn("__del", F.lit(True)),
-        )
-        rt = catalog.load_table("gate", "cust")
-        writer.write(
-            TableSpec(
-                name="cust",
-                write_disposition={"disposition": "merge", "strategy": "upsert"},
-                primary_key=["r_cust"],
-                hard_delete_column="__del",
-            ),
-            rt.read().filter(F.col("cust") % 7 == 0).withColumn("__del", F.lit(True)),
-        )
-        mv.left = catalog.load_table("gate", "ord")
-        mv.right = catalog.load_table("gate", "cust")
-        assert mv.refresh()["pairs_touched"] > 0
-        assert mv.refresh()["pairs_touched"] == 0  # replay no-op
-        _LAKE_MATVIEW_F_CACHE[key] = mv
+def lake_matview_full(spark: SparkSession, sf_dir: str, mv) -> DataFrame:
     return mv.read().select(
         "o_orderkey", "cust",
         rnd(F.col("o_totalprice")).alias("total_price"),
@@ -1392,7 +1317,55 @@ def lake_matview_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LAKE_MATVIEW_F_CACHE: dict = {}
+def _lake_count_pushdown_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake import table as table_mod
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    writer.write(
+        TableSpec(
+            name="li",
+            write_disposition="append",
+            sort_order=["l_quantity"],  # tight per-file quantity stats
+            sort_buckets=8,
+        ),
+        _t(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_quantity", "l_returnflag"
+        ),
+    )
+    t = catalog.load_table("gate", "li")
+    # the bare count must be metadata-only: any data scan raises
+    real = table_mod.LakeTable._plan_scan
+
+    def boom(self, *a, **kw):
+        raise AssertionError("bare count() must not scan data")
+
+    table_mod.LakeTable._plan_scan = boom
+    try:
+        n_all = t.count()
+    finally:
+        table_mod.LakeTable._plan_scan = real
+    rows = [
+        ("all", n_all),
+        ("qty_ge_25", t.count(where=[("l_quantity", ">=", 25)])),
+        ("qty_lt_10", t.count(where=[("l_quantity", "<", 10)])),
+        ("band", t.count(where=[("l_quantity", ">=", 5), ("l_quantity", "<=", 45)])),
+        ("flag_r", t.count(where=[("l_returnflag", "=", "R")])),
+    ]
+    # merge-on-read position deletes: the bare count must STILL be
+    # metadata-exact (total − live masked addresses from the delete
+    # files — no data-file scan)
+    t.position_delete_where([("l_quantity", ">", 47)])
+    table_mod.LakeTable._plan_scan = boom
+    try:
+        n_pd = t.count()
+    finally:
+        table_mod.LakeTable._plan_scan = real
+    rows.append(("pos_del_all", n_pd))
+    rows.append(("pos_del_ge25", t.count(where=[("l_quantity", ">=", 25)])))
+    return rows
 
 
 @query(
@@ -1435,66 +1408,48 @@ _LAKE_MATVIEW_F_CACHE: dict = {}
         "recomputes every count with plain SQL; a hash match proves "
         "metadata counting equals scanning."
     ),
+    setup=_lake_count_pushdown_setup,
 )
-def lake_count_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake import table as table_mod
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    rows = _LAKE_COUNT_CACHE.get(key)
-    if rows is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_count_"))
-        writer = LakeWriter(catalog, "gate")
-        writer.write(
-            TableSpec(
-                name="li",
-                write_disposition="append",
-                sort_order=["l_quantity"],  # tight per-file quantity stats
-                sort_buckets=8,
-            ),
-            _t(spark, sf_dir, "lineitem").select(
-                "l_orderkey", "l_quantity", "l_returnflag"
-            ),
-        )
-        t = catalog.load_table("gate", "li")
-        # the bare count must be metadata-only: any data scan raises
-        real = table_mod.LakeTable._plan_scan
-
-        def boom(self, *a, **kw):
-            raise AssertionError("bare count() must not scan data")
-
-        table_mod.LakeTable._plan_scan = boom
-        try:
-            n_all = t.count()
-        finally:
-            table_mod.LakeTable._plan_scan = real
-        rows = [
-            ("all", n_all),
-            ("qty_ge_25", t.count(where=[("l_quantity", ">=", 25)])),
-            ("qty_lt_10", t.count(where=[("l_quantity", "<", 10)])),
-            ("band", t.count(where=[("l_quantity", ">=", 5), ("l_quantity", "<=", 45)])),
-            ("flag_r", t.count(where=[("l_returnflag", "=", "R")])),
-        ]
-        # merge-on-read position deletes: the bare count must STILL be
-        # metadata-exact (total − live masked addresses from the delete
-        # files — no data-file scan)
-        t.position_delete_where([("l_quantity", ">", 47)])
-        table_mod.LakeTable._plan_scan = boom
-        try:
-            n_pd = t.count()
-        finally:
-            table_mod.LakeTable._plan_scan = real
-        rows.append(("pos_del_all", n_pd))
-        rows.append(("pos_del_ge25", t.count(where=[("l_quantity", ">=", 25)])))
-        _LAKE_COUNT_CACHE[key] = rows
+def lake_count_pushdown(spark: SparkSession, sf_dir: str, rows) -> DataFrame:
     return spark.createDataFrame(rows, "probe string, n long")
 
 
-_LAKE_COUNT_CACHE: dict = {}
+def _lake_partition_aggregate_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake import table as table_mod
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.dataset import Dataset
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    writer.write(
+        TableSpec(
+            name="li",
+            write_disposition="append",
+            column_hints={"l_returnflag": {"partition": True}},
+        ),
+        _t(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_returnflag", "l_quantity"
+        ),
+    )
+    ds = Dataset(catalog, "gate")
+    # metadata-only: any data scan raises
+    real = table_mod.LakeTable._plan_scan
+
+    def boom(self, *a, **kw):
+        raise AssertionError("grouped metadata aggregate must not scan")
+
+    table_mod.LakeTable._plan_scan = boom
+    try:
+        got = ds.aggregate("li", ["l_quantity"], group_by="l_returnflag")
+    finally:
+        table_mod.LakeTable._plan_scan = real
+    assert isinstance(got, list) and got  # metadata path, not fallback
+    rows = [
+        (d["l_returnflag"], d["count"], d["min_l_quantity"], d["max_l_quantity"])
+        for d in got
+    ]
+    return rows
 
 
 @query(
@@ -1517,55 +1472,72 @@ _LAKE_COUNT_CACHE: dict = {}
         "100 TB).  The oracle recomputes the GROUP BY with plain SQL; a "
         "hash match proves metadata grouping equals scanning."
     ),
+    setup=_lake_partition_aggregate_setup,
 )
-def lake_partition_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake import table as table_mod
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.dataset import Dataset
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    rows = _LAKE_PART_AGG_CACHE.get(key)
-    if rows is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_partagg_"))
-        writer = LakeWriter(catalog, "gate")
-        writer.write(
-            TableSpec(
-                name="li",
-                write_disposition="append",
-                column_hints={"l_returnflag": {"partition": True}},
-            ),
-            _t(spark, sf_dir, "lineitem").select(
-                "l_orderkey", "l_returnflag", "l_quantity"
-            ),
-        )
-        ds = Dataset(catalog, "gate")
-        # metadata-only: any data scan raises
-        real = table_mod.LakeTable._plan_scan
-
-        def boom(self, *a, **kw):
-            raise AssertionError("grouped metadata aggregate must not scan")
-
-        table_mod.LakeTable._plan_scan = boom
-        try:
-            got = ds.aggregate("li", ["l_quantity"], group_by="l_returnflag")
-        finally:
-            table_mod.LakeTable._plan_scan = real
-        assert isinstance(got, list) and got  # metadata path, not fallback
-        rows = [
-            (d["l_returnflag"], d["count"], d["min_l_quantity"], d["max_l_quantity"])
-            for d in got
-        ]
-        _LAKE_PART_AGG_CACHE[key] = rows
+def lake_partition_aggregate(spark: SparkSession, sf_dir: str, rows) -> DataFrame:
     return spark.createDataFrame(
         rows, "g string, n long, min_q double, max_q double"
     )
 
 
-_LAKE_PART_AGG_CACHE: dict = {}
+def _lake_minmax_pushdown_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake import table as table_mod
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    writer.write(
+        TableSpec(
+            name="li",
+            write_disposition="append",
+            sort_order=["l_quantity"],  # tight per-file quantity stats
+            sort_buckets=8,
+        ),
+        _t(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_quantity", "l_returnflag",
+            F.col("l_extendedprice").cast("double").alias("l_extendedprice"),
+        ),
+    )
+    t = catalog.load_table("gate", "li")
+    # a range probe fully covering whole files must not scan them:
+    # only straddlers may reach _plan_scan (≤ 2 of 8 files)
+    seen = []
+    real = table_mod.LakeTable._plan_scan
+
+    def spying(self, snap, files, *a, **kw):
+        seen.append(len(files))
+        return real(self, snap, files, *a, **kw)
+
+    table_mod.LakeTable._plan_scan = spying
+    try:
+        ge25 = t.agg_minmax("l_extendedprice", where=[("l_quantity", ">=", 25)])
+    finally:
+        table_mod.LakeTable._plan_scan = real
+    assert all(n <= 2 for n in seen), seen
+    rows = [
+        ("qty_ge_25", *ge25),
+        (
+            "band",
+            *t.agg_minmax(
+                "l_extendedprice",
+                where=[("l_quantity", ">=", 5), ("l_quantity", "<=", 45)],
+            ),
+        ),
+        (
+            "flag_r",
+            *t.agg_minmax(
+                "l_extendedprice", where=[("l_returnflag", "=", "R")]
+            ),
+        ),
+        (
+            "empty",
+            *t.agg_minmax(
+                "l_extendedprice", where=[("l_quantity", ">", 1_000_000)]
+            ),
+        ),
+    ]
+    return rows
 
 
 @query(
@@ -1595,77 +1567,71 @@ _LAKE_PART_AGG_CACHE: dict = {}
         "recomputes each filtered MIN/MAX with plain SQL; a hash match "
         "proves metadata extrema equal scanning."
     ),
+    setup=_lake_minmax_pushdown_setup,
 )
-def lake_minmax_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake import table as table_mod
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    rows = _LAKE_MINMAX_CACHE.get(key)
-    if rows is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_minmax_"))
-        writer = LakeWriter(catalog, "gate")
-        writer.write(
-            TableSpec(
-                name="li",
-                write_disposition="append",
-                sort_order=["l_quantity"],  # tight per-file quantity stats
-                sort_buckets=8,
-            ),
-            _t(spark, sf_dir, "lineitem").select(
-                "l_orderkey", "l_quantity", "l_returnflag",
-                F.col("l_extendedprice").cast("double").alias("l_extendedprice"),
-            ),
-        )
-        t = catalog.load_table("gate", "li")
-        # a range probe fully covering whole files must not scan them:
-        # only straddlers may reach _plan_scan (≤ 2 of 8 files)
-        seen = []
-        real = table_mod.LakeTable._plan_scan
-
-        def spying(self, snap, files, *a, **kw):
-            seen.append(len(files))
-            return real(self, snap, files, *a, **kw)
-
-        table_mod.LakeTable._plan_scan = spying
-        try:
-            ge25 = t.agg_minmax("l_extendedprice", where=[("l_quantity", ">=", 25)])
-        finally:
-            table_mod.LakeTable._plan_scan = real
-        assert all(n <= 2 for n in seen), seen
-        rows = [
-            ("qty_ge_25", *ge25),
-            (
-                "band",
-                *t.agg_minmax(
-                    "l_extendedprice",
-                    where=[("l_quantity", ">=", 5), ("l_quantity", "<=", 45)],
-                ),
-            ),
-            (
-                "flag_r",
-                *t.agg_minmax(
-                    "l_extendedprice", where=[("l_returnflag", "=", "R")]
-                ),
-            ),
-            (
-                "empty",
-                *t.agg_minmax(
-                    "l_extendedprice", where=[("l_quantity", ">", 1_000_000)]
-                ),
-            ),
-        ]
-        _LAKE_MINMAX_CACHE[key] = rows
+def lake_minmax_pushdown(spark: SparkSession, sf_dir: str, rows) -> DataFrame:
     return spark.createDataFrame(
         rows, "probe string, mn double, mx double"
     )
 
 
-_LAKE_MINMAX_CACHE: dict = {}
+def _lake_multi_table_txn_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.errors import CommitConflictError
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    orders = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
+    )
+    writer.write(
+        TableSpec(name="fact", write_disposition="append", primary_key=["o_orderkey"]),
+        orders.filter(F.col("o_orderkey") % 2 == 0),
+    )
+    n_evens = catalog.load_table("gate", "fact").read().count()
+    txn = catalog.transaction("gate")
+    txn.write(
+        TableSpec(name="fact", write_disposition="append", primary_key=["o_orderkey"]),
+        orders.filter(F.col("o_orderkey") % 2 == 1),
+    )
+    txn.write(
+        TableSpec(name="summary", write_disposition="replace"),
+        orders.groupBy("o_orderstatus").agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum("o_totalprice").alias("total_price"),
+        ),
+    )
+    # isolation: main still sees only the evens, and an empty summary
+    assert catalog.load_table("gate", "fact").read().count() == n_evens
+    assert catalog.load_table("gate", "summary").read().count() == 0
+    txn.commit()
+    # conflict round on a scratch table: a foreign write between stage
+    # and publish fails the WHOLE transaction, publishing nothing
+    writer.write(
+        TableSpec(name="audit", write_disposition="append"),
+        spark.createDataFrame([(1, "seed")], "id long, note string"),
+    )
+    txn2 = catalog.transaction("gate")
+    txn2.write(
+        TableSpec(name="audit", write_disposition="append"),
+        spark.createDataFrame([(2, "staged")], "id long, note string"),
+    )
+    writer.write(
+        TableSpec(name="audit", write_disposition="append"),
+        spark.createDataFrame([(3, "foreign")], "id long, note string"),
+    )
+    try:
+        txn2.commit()
+        raise AssertionError("overtaken transaction must not publish")
+    except CommitConflictError:
+        pass
+    txn2.rollback()
+    notes = {
+        r.note for r in catalog.load_table("gate", "audit").read().collect()
+    }
+    assert notes == {"seed", "foreign"}, notes
+    return catalog
 
 
 @query(
@@ -1690,70 +1656,9 @@ _LAKE_MINMAX_CACHE: dict = {}
         "from raw orders — a hash match proves fact and summary "
         "published consistently (the same atomic cut)."
     ),
+    setup=_lake_multi_table_txn_setup,
 )
-def lake_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.errors import CommitConflictError
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    catalog = _LAKE_TXN_CACHE.get(key)
-    if catalog is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_txn_"))
-        writer = LakeWriter(catalog, "gate")
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus", "o_totalprice"
-        )
-        writer.write(
-            TableSpec(name="fact", write_disposition="append", primary_key=["o_orderkey"]),
-            orders.filter(F.col("o_orderkey") % 2 == 0),
-        )
-        n_evens = catalog.load_table("gate", "fact").read().count()
-        txn = catalog.transaction("gate")
-        txn.write(
-            TableSpec(name="fact", write_disposition="append", primary_key=["o_orderkey"]),
-            orders.filter(F.col("o_orderkey") % 2 == 1),
-        )
-        txn.write(
-            TableSpec(name="summary", write_disposition="replace"),
-            orders.groupBy("o_orderstatus").agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum("o_totalprice").alias("total_price"),
-            ),
-        )
-        # isolation: main still sees only the evens, and an empty summary
-        assert catalog.load_table("gate", "fact").read().count() == n_evens
-        assert catalog.load_table("gate", "summary").read().count() == 0
-        txn.commit()
-        # conflict round on a scratch table: a foreign write between stage
-        # and publish fails the WHOLE transaction, publishing nothing
-        writer.write(
-            TableSpec(name="audit", write_disposition="append"),
-            spark.createDataFrame([(1, "seed")], "id long, note string"),
-        )
-        txn2 = catalog.transaction("gate")
-        txn2.write(
-            TableSpec(name="audit", write_disposition="append"),
-            spark.createDataFrame([(2, "staged")], "id long, note string"),
-        )
-        writer.write(
-            TableSpec(name="audit", write_disposition="append"),
-            spark.createDataFrame([(3, "foreign")], "id long, note string"),
-        )
-        try:
-            txn2.commit()
-            raise AssertionError("overtaken transaction must not publish")
-        except CommitConflictError:
-            pass
-        txn2.rollback()
-        notes = {
-            r.note for r in catalog.load_table("gate", "audit").read().collect()
-        }
-        assert notes == {"seed", "foreign"}, notes
-        _LAKE_TXN_CACHE[key] = catalog
+def lake_multi_table_txn(spark: SparkSession, sf_dir: str, catalog) -> DataFrame:
     fact_n = (
         catalog.load_table("gate", "fact")
         .read()
@@ -1769,7 +1674,31 @@ def lake_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LAKE_TXN_CACHE: dict = {}
+def _lake_expectations_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
+    writer.write(
+        TableSpec(
+            name="docs",
+            write_disposition="append",
+            expectations={
+                "known_lang": "lang IN ('en','de','fr')",
+                "long_enough": "n_chars >= 150",
+            },
+            on_violation="quarantine",
+            batch_expectations={
+                "enough_clean_rows": "count(*) >= 100",
+                "lang_mostly_nonnull":
+                    "sum(cast(lang IS NULL AS int)) / count(*) < 0.01",
+            },
+        ),
+        docs,
+    )
+    return catalog
 
 
 @query(
@@ -1800,38 +1729,9 @@ _LAKE_TXN_CACHE: dict = {}
         "the same single counting pass — so the gate exercises both "
         "contract kinds."
     ),
+    setup=_lake_expectations_setup,
 )
-def lake_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    catalog = _LAKE_EXPECT_CACHE.get(key)
-    if catalog is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_expect_"))
-        writer = LakeWriter(catalog, "gate")
-        docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-        writer.write(
-            TableSpec(
-                name="docs",
-                write_disposition="append",
-                expectations={
-                    "known_lang": "lang IN ('en','de','fr')",
-                    "long_enough": "n_chars >= 150",
-                },
-                on_violation="quarantine",
-                batch_expectations={
-                    "enough_clean_rows": "count(*) >= 100",
-                    "lang_mostly_nonnull":
-                        "sum(cast(lang IS NULL AS int)) / count(*) < 0.01",
-                },
-            ),
-            docs,
-        )
-        _LAKE_EXPECT_CACHE[key] = catalog
+def lake_expectations(spark: SparkSession, sf_dir: str, catalog) -> DataFrame:
     kept = (
         catalog.load_table("gate", "docs")
         .read()
@@ -1855,7 +1755,22 @@ def lake_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.unionByName(quarantined)
 
 
-_LAKE_EXPECT_CACHE: dict = {}
+def _stream_lake_tail_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    orders = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
+    )
+    for i, half in enumerate((0, 1)):
+        writer.write(
+            TableSpec(name="orders", write_disposition="append"),
+            orders.filter(F.col("o_orderkey") % 2 == half),
+            load_id=f"tail{i}",
+        )
+    return catalog.load_table("gate", "orders").location
 
 
 @query(
@@ -1876,33 +1791,14 @@ _LAKE_EXPECT_CACHE: dict = {}
         "Arrow reader all sit on the value-hash path.  Each invocation "
         "re-runs the stream end-to-end (only the table build is cached)."
     ),
+    setup=_stream_lake_tail_setup,
 )
-def stream_lake_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
+def stream_lake_tail(spark: SparkSession, sf_dir: str, location) -> DataFrame:
     import uuid
 
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
     from dlt_iceberg_spark.streaming.micro_batch import await_stream
     from dlt_iceberg_spark.streaming.source import read_stream
 
-    key = (id(spark), os.path.abspath(sf_dir))
-    location = _STREAM_TAIL_CACHE.get(key)
-    if location is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_tail_"))
-        writer = LakeWriter(catalog, "gate")
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
-        )
-        for i, half in enumerate((0, 1)):
-            writer.write(
-                TableSpec(name="orders", write_disposition="append"),
-                orders.filter(F.col("o_orderkey") % 2 == half),
-                load_id=f"tail{i}",
-            )
-        location = catalog.load_table("gate", "orders").location
-        _STREAM_TAIL_CACHE[key] = location
     name = f"stream_tail_{uuid.uuid4().hex[:8]}"
     q = (
         read_stream(spark, location, from_beginning=True)
@@ -1921,7 +1817,27 @@ def stream_lake_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_TAIL_CACHE: dict = {}
+def _stream_lake_changes_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    orders = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"
+    )
+    writer.write(
+        TableSpec(name="orders", write_disposition="append"),
+        orders.filter(F.col("o_orderkey") % 2 == 0),
+    )
+    catalog.load_table("gate", "orders").update_where(
+        [("o_custkey", "<", 50)], {"o_orderstatus": "X"}
+    )
+    writer.write(
+        TableSpec(name="orders", write_disposition="append"),
+        orders.filter(F.col("o_orderkey") % 2 == 1),
+    )
+    return catalog.load_table("gate", "orders").location
 
 
 @query(
@@ -1954,38 +1870,14 @@ _STREAM_TAIL_CACHE: dict = {}
         "stream is held to the exact batch semantics on the value-hash "
         "path.  Each invocation re-runs the stream end-to-end."
     ),
+    setup=_stream_lake_changes_setup,
 )
-def stream_lake_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
+def stream_lake_changes(spark: SparkSession, sf_dir: str, location) -> DataFrame:
     import uuid
 
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
     from dlt_iceberg_spark.streaming.micro_batch import await_stream
     from dlt_iceberg_spark.streaming.source import read_stream
 
-    key = (id(spark), os.path.abspath(sf_dir))
-    location = _STREAM_CDC_CACHE.get(key)
-    if location is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_cdcstream_"))
-        writer = LakeWriter(catalog, "gate")
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"
-        )
-        writer.write(
-            TableSpec(name="orders", write_disposition="append"),
-            orders.filter(F.col("o_orderkey") % 2 == 0),
-        )
-        catalog.load_table("gate", "orders").update_where(
-            [("o_custkey", "<", 50)], {"o_orderstatus": "X"}
-        )
-        writer.write(
-            TableSpec(name="orders", write_disposition="append"),
-            orders.filter(F.col("o_orderkey") % 2 == 1),
-        )
-        location = catalog.load_table("gate", "orders").location
-        _STREAM_CDC_CACHE[key] = location
     name = f"stream_cdc_{uuid.uuid4().hex[:8]}"
     q = (
         read_stream(spark, location, from_beginning=True, changes=True)
@@ -2000,7 +1892,36 @@ def stream_lake_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_CDC_CACHE: dict = {}
+def _stream_lake_mirror_setup(spark: SparkSession, sf_dir: str, root: str):
+    import os
+
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, os.path.join(root, "wh"))
+    writer = LakeWriter(catalog, "gate")
+    orders = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"
+    )
+    writer.write(
+        TableSpec(
+            name="orders", write_disposition="append", primary_key=["o_orderkey"]
+        ),
+        orders.filter(F.col("o_orderkey") % 2 == 0),
+    )
+    src = catalog.load_table("gate", "orders")
+    src.update_where([("o_custkey", "<", 50)], {"o_orderstatus": "X"})
+    catalog.load_table("gate", "orders").position_delete_where(
+        [("o_custkey", ">=", 140)]
+    )
+    writer.write(
+        TableSpec(
+            name="orders", write_disposition="append", primary_key=["o_orderkey"]
+        ),
+        orders.filter(F.col("o_orderkey") % 2 == 1),
+    )
+    ckpt = os.path.join(root, "ckpt")
+    return (catalog, writer, catalog.load_table("gate", "orders").location, ckpt)
 
 
 @query(
@@ -2025,45 +1946,13 @@ _STREAM_CDC_CACHE: dict = {}
         "epoch replay end-to-end.  Each invocation re-drains the stream "
         "against its checkpoint (a no-op epoch) before reading."
     ),
+    setup=_stream_lake_mirror_setup,
 )
-def stream_lake_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+def stream_lake_mirror(spark: SparkSession, sf_dir: str, fixture) -> DataFrame:
     from dlt_iceberg_spark.streaming.micro_batch import await_stream
     from dlt_iceberg_spark.streaming.mirror import stream_mirror
 
-    key = (id(spark), os.path.abspath(sf_dir))
-    cached = _STREAM_MIRROR_CACHE.get(key)
-    if cached is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_mirror_"))
-        writer = LakeWriter(catalog, "gate")
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"
-        )
-        writer.write(
-            TableSpec(
-                name="orders", write_disposition="append", primary_key=["o_orderkey"]
-            ),
-            orders.filter(F.col("o_orderkey") % 2 == 0),
-        )
-        src = catalog.load_table("gate", "orders")
-        src.update_where([("o_custkey", "<", 50)], {"o_orderstatus": "X"})
-        catalog.load_table("gate", "orders").position_delete_where(
-            [("o_custkey", ">=", 140)]
-        )
-        writer.write(
-            TableSpec(
-                name="orders", write_disposition="append", primary_key=["o_orderkey"]
-            ),
-            orders.filter(F.col("o_orderkey") % 2 == 1),
-        )
-        ckpt = tempfile.mkdtemp(prefix="lake_mirror_ckpt_")
-        cached = (catalog, writer, catalog.load_table("gate", "orders").location, ckpt)
-        _STREAM_MIRROR_CACHE[key] = cached
-    catalog, writer, location, ckpt = cached
+    catalog, writer, location, ckpt = fixture
     q = stream_mirror(
         spark, location, writer, "orders_mirror", ["o_orderkey"], ckpt,
         query_name="gate_mirror",
@@ -2076,7 +1965,30 @@ def stream_lake_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_MIRROR_CACHE: dict = {}
+def _stream_lake_sink_setup(spark: SparkSession, sf_dir: str, root: str):
+    import os
+
+    from dlt_iceberg_spark.streaming.micro_batch import await_stream
+    from dlt_iceberg_spark.streaming.source import register_lake_stream_source
+
+    register_lake_stream_source(spark)
+    src_dir = os.path.join(root, "in")
+    orders = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
+    )
+    orders.write.parquet(os.path.join(src_dir, "p1"))
+    location = os.path.join(root, "orders")
+    q = (
+        spark.readStream.schema(orders.schema)
+        .parquet(src_dir + "/*")
+        .writeStream.format("laketable")
+        .option("location", location)
+        .option("checkpointLocation", os.path.join(root, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_stream(q)
+    return location
 
 
 @query(
@@ -2095,37 +2007,11 @@ _STREAM_MIRROR_CACHE: dict = {}
         "LakeTable must hash-match the plain orders oracle.  Table build "
         "(one streaming query) is cached; the read is live each call."
     ),
+    setup=_stream_lake_sink_setup,
 )
-def stream_lake_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
+def stream_lake_sink(spark: SparkSession, sf_dir: str, location) -> DataFrame:
     from dlt_iceberg_spark.lake.table import LakeTable
-    from dlt_iceberg_spark.streaming.micro_batch import await_stream
-    from dlt_iceberg_spark.streaming.source import register_lake_stream_source
 
-    key = (id(spark), os.path.abspath(sf_dir))
-    location = _STREAM_SINK_CACHE.get(key)
-    if location is None:
-        register_lake_stream_source(spark)
-        base = tempfile.mkdtemp(prefix="lake_sink_")
-        src_dir = os.path.join(base, "in")
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
-        )
-        orders.write.parquet(os.path.join(src_dir, "p1"))
-        location = os.path.join(base, "orders")
-        q = (
-            spark.readStream.schema(orders.schema)
-            .parquet(src_dir + "/*")
-            .writeStream.format("laketable")
-            .option("location", location)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_stream(q)
-        _STREAM_SINK_CACHE[key] = location
     return LakeTable(spark, location).read().select(
         "o_orderkey",
         "o_custkey",
@@ -2135,7 +2021,48 @@ def stream_lake_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_SINK_CACHE: dict = {}
+def _stream_sink_partitioned_setup(spark: SparkSession, sf_dir: str, root: str):
+    import os
+
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+    from dlt_iceberg_spark.streaming.micro_batch import await_stream
+    from dlt_iceberg_spark.streaming.source import register_lake_stream_source
+
+    register_lake_stream_source(spark)
+    orders = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
+    )
+    seed = orders.filter(F.col("o_orderkey") % 100 == 0)
+    rest = orders.filter(F.col("o_orderkey") % 100 != 0)
+    catalog = LakeCatalog(spark, os.path.join(root, "wh"))
+    LakeWriter(catalog, "gate").write(
+        TableSpec(
+            name="orders_p",
+            write_disposition="append",
+            column_hints={"o_orderstatus": {"x-partition": True}},
+        ),
+        seed,
+    )
+    table = catalog.load_table("gate", "orders_p")
+    src_dir = os.path.join(root, "in")
+    rest.write.parquet(os.path.join(src_dir, "p1"))
+    q = (
+        spark.readStream.schema(table.schema())
+        .parquet(src_dir + "/*")
+        .writeStream.format("laketable")
+        .option("location", table.location)
+        .option("checkpointLocation", os.path.join(root, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_stream(q)
+    # in-process pin: stream-landed files cluster one status per file
+    snap = table.snapshot()
+    assert all(
+        f.partition.get("o_orderstatus") is not None for f in snap.files
+    ), "stream-landed file without partition metadata"
+    return table
 
 
 @query(
@@ -2157,54 +2084,9 @@ _STREAM_SINK_CACHE: dict = {}
         "oracle.  In-process pin: every stream-landed file carries its "
         "partition tuple and holds exactly one status."
     ),
+    setup=_stream_sink_partitioned_setup,
 )
-def stream_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-    from dlt_iceberg_spark.streaming.micro_batch import await_stream
-    from dlt_iceberg_spark.streaming.source import register_lake_stream_source
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    table = _STREAM_SINK_PART_CACHE.get(key)
-    if table is None:
-        register_lake_stream_source(spark)
-        base = tempfile.mkdtemp(prefix="lake_sinkp_")
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus", "o_totalprice"
-        )
-        seed = orders.filter(F.col("o_orderkey") % 100 == 0)
-        rest = orders.filter(F.col("o_orderkey") % 100 != 0)
-        catalog = LakeCatalog(spark, os.path.join(base, "wh"))
-        LakeWriter(catalog, "gate").write(
-            TableSpec(
-                name="orders_p",
-                write_disposition="append",
-                column_hints={"o_orderstatus": {"x-partition": True}},
-            ),
-            seed,
-        )
-        table = catalog.load_table("gate", "orders_p")
-        src_dir = os.path.join(base, "in")
-        rest.write.parquet(os.path.join(src_dir, "p1"))
-        q = (
-            spark.readStream.schema(table.schema())
-            .parquet(src_dir + "/*")
-            .writeStream.format("laketable")
-            .option("location", table.location)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_stream(q)
-        # in-process pin: stream-landed files cluster one status per file
-        snap = table.snapshot()
-        assert all(
-            f.partition.get("o_orderstatus") is not None for f in snap.files
-        ), "stream-landed file without partition metadata"
-        _STREAM_SINK_PART_CACHE[key] = table
+def stream_sink_partitioned(spark: SparkSession, sf_dir: str, table) -> DataFrame:
     return (
         table.read()
         .groupBy("o_orderstatus")
@@ -2215,7 +2097,37 @@ def stream_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_SINK_PART_CACHE: dict = {}
+def _lake_clone_retention_setup(spark: SparkSession, sf_dir: str, root: str):
+    from datetime import timedelta
+
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.maintenance import expire_snapshots, remove_orphan_files
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    orders = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
+    )
+    writer.write(
+        TableSpec(name="orders", write_disposition="append"),
+        orders.filter(F.col("o_orderkey") % 4 == 0),
+    )
+    clone = catalog.clone_table("gate", "orders", "sandbox", "orders_c")
+    # carried sequences re-stamped below the clone's first commit
+    seqs = {f.sequence for f in clone.snapshot().files}
+    assert clone.current_version() > max(seqs), (clone.current_version(), seqs)
+    # source moves on: full replace, then aggressive retention
+    writer.write(
+        TableSpec(name="orders", write_disposition="replace"),
+        orders.filter(F.col("o_orderkey") % 4 == 1),
+    )
+    src = catalog.load_table("gate", "orders")
+    res = expire_snapshots(src, older_than=timedelta(seconds=0), keep_last=1)
+    assert res["snapshots"] >= 1, res
+    assert res["clone_pinned_files"] > 0, res
+    remove_orphan_files(src, older_than=timedelta(seconds=0))
+    return catalog.load_table("sandbox", "orders_c")
 
 
 @query(
@@ -2237,47 +2149,9 @@ _STREAM_SINK_PART_CACHE: dict = {}
         "actually expired snapshots, and the clone's carried sequences "
         "were re-stamped compactly below its first commit."
     ),
+    setup=_lake_clone_retention_setup,
 )
-def lake_clone_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-    from datetime import timedelta
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.maintenance import (
-        expire_snapshots,
-        remove_orphan_files,
-    )
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    clone = _CLONE_RETENTION_CACHE.get(key)
-    if clone is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_cret_"))
-        writer = LakeWriter(catalog, "gate")
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus", "o_totalprice"
-        )
-        writer.write(
-            TableSpec(name="orders", write_disposition="append"),
-            orders.filter(F.col("o_orderkey") % 4 == 0),
-        )
-        clone = catalog.clone_table("gate", "orders", "sandbox", "orders_c")
-        # carried sequences re-stamped below the clone's first commit
-        seqs = {f.sequence for f in clone.snapshot().files}
-        assert clone.current_version() > max(seqs), (clone.current_version(), seqs)
-        # source moves on: full replace, then aggressive retention
-        writer.write(
-            TableSpec(name="orders", write_disposition="replace"),
-            orders.filter(F.col("o_orderkey") % 4 == 1),
-        )
-        src = catalog.load_table("gate", "orders")
-        res = expire_snapshots(src, older_than=timedelta(seconds=0), keep_last=1)
-        assert res["snapshots"] >= 1, res
-        assert res["clone_pinned_files"] > 0, res
-        remove_orphan_files(src, older_than=timedelta(seconds=0))
-        clone = catalog.load_table("sandbox", "orders_c")
-        _CLONE_RETENTION_CACHE[key] = clone
+def lake_clone_retention(spark: SparkSession, sf_dir: str, clone) -> DataFrame:
     return (
         clone.read()
         .groupBy("o_orderstatus")
@@ -2288,12 +2162,17 @@ def lake_clone_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CLONE_RETENTION_CACHE: dict = {}
+def _lake_stats_pushdown_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
 
-
-#: one lake-table build per (session, sf_dir): the gate and bench call each
-#: query repeatedly; the table is immutable once written
-_LAKE_STATS_CACHE: dict = {}
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    writer.write(
+        TableSpec(name="orders", write_disposition="append"),
+        _t(spark, sf_dir, "orders"),
+    )
+    return catalog.load_table("gate", "orders")
 
 
 @query(
@@ -2314,25 +2193,9 @@ _LAKE_STATS_CACHE: dict = {}
         "parquet, so a wrong footer stat, manifest range, or row count "
         "anywhere in the write path fails the hash check."
     ),
+    setup=_lake_stats_pushdown_setup,
 )
-def lake_stats_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    table = _LAKE_STATS_CACHE.get(key)
-    if table is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_stats_"))
-        writer = LakeWriter(catalog, "gate")
-        writer.write(
-            TableSpec(name="orders", write_disposition="append"),
-            _t(spark, sf_dir, "orders"),
-        )
-        table = catalog.load_table("gate", "orders")
-        _LAKE_STATS_CACHE[key] = table
+def lake_stats_pushdown(spark: SparkSession, sf_dir: str, table) -> DataFrame:
     stats = table.aggregate_stats(["o_orderkey", "o_totalprice", "o_orderstatus"])
     assert stats is not None  # append-only, all columns stats-bearing
     row = (
@@ -2351,7 +2214,26 @@ def lake_stats_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LAKE_BUCKET_CACHE: dict = {}
+def _lake_bucket_pruning_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    writer.write(
+        TableSpec(
+            name="orders",
+            write_disposition="append",
+            column_hints={
+                "o_orderkey": {
+                    "partition": True,
+                    "x-partition-transform": "bucket[8]",
+                }
+            },
+        ),
+        _t(spark, sf_dir, "orders"),
+    )
+    return catalog.load_table("gate", "orders")
 
 
 @query(
@@ -2374,34 +2256,9 @@ _LAKE_BUCKET_CACHE: dict = {}
         "opened proves the partition rewrite specifically.  The oracle is "
         "the plain SQL point lookup, hash-checking the masked scan."
     ),
+    setup=_lake_bucket_pruning_setup,
 )
-def lake_bucket_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    table = _LAKE_BUCKET_CACHE.get(key)
-    if table is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_bucket_"))
-        writer = LakeWriter(catalog, "gate")
-        writer.write(
-            TableSpec(
-                name="orders",
-                write_disposition="append",
-                column_hints={
-                    "o_orderkey": {
-                        "partition": True,
-                        "x-partition-transform": "bucket[8]",
-                    }
-                },
-            ),
-            _t(spark, sf_dir, "orders"),
-        )
-        table = catalog.load_table("gate", "orders")
-        _LAKE_BUCKET_CACHE[key] = table
+def lake_bucket_pruning(spark: SparkSession, sf_dir: str, table) -> DataFrame:
     snap = table.snapshot()
     stats = snap.aggregate_stats(["o_orderkey"])  # metadata-only min/max
     probes = [stats["min_o_orderkey"], stats["max_o_orderkey"]]
@@ -2420,7 +2277,27 @@ def lake_bucket_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LAKE_BLOOM_CACHE: dict = {}
+def _lake_bloom_pruning_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    li = _t(spark, sf_dir, "lineitem")
+    # ~2k distinct orderkeys per file keeps the bloom load factor
+    # ~0.25 (FPR < 1%) at any sf; cap mirrors a real table's
+    # files-per-load bound
+    n_orders = li.select("l_orderkey").distinct().count()
+    n_parts = min(256, max(8, n_orders // 2000))
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    writer.write(
+        TableSpec(
+            name="lineitem",
+            write_disposition="append",
+            bloom_filter_columns=["l_orderkey"],
+        ),
+        li.repartition(n_parts, F.col("l_orderkey")),
+    )
+    return catalog.load_table("gate", "lineitem")
 
 
 @query(
@@ -2444,8 +2321,9 @@ _LAKE_BLOOM_CACHE: dict = {}
         "merge-output shape where every file's [min,max] key range spans "
         "the whole keyspace, so stats and partition pruning are both "
         "blind.  A point lookup on a single-line order is planned through "
-        "the per-file blooms (one xxhash64, Guava-split double hashing, "
-        "positions collected JVM-side bounded by m bits per file), and "
+        "the per-file blooms (one xxhash64, Guava-split double hashing, m "
+        "bits per file; on a local warehouse the per-file footer-stats "
+        "pass builds them, table._scan_staged_file), and "
         "the in-process assertion that bloom planning opened at most a "
         "quarter of the stats-planned files proves the skip.  File count "
         "scales with corpus NDV so the per-file load factor stays below "
@@ -2453,35 +2331,9 @@ _LAKE_BLOOM_CACHE: dict = {}
         "(probe key derived in SQL) over the raw parquet, hash-checking "
         "the bloom-masked scan end-to-end."
     ),
+    setup=_lake_bloom_pruning_setup,
 )
-def lake_bloom_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    table = _LAKE_BLOOM_CACHE.get(key)
-    if table is None:
-        li = _t(spark, sf_dir, "lineitem")
-        # ~2k distinct orderkeys per file keeps the bloom load factor
-        # ~0.25 (FPR < 1%) at any sf; cap mirrors a real table's
-        # files-per-load bound
-        n_orders = li.select("l_orderkey").distinct().count()
-        n_parts = min(256, max(8, n_orders // 2000))
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_bloom_"))
-        writer = LakeWriter(catalog, "gate")
-        writer.write(
-            TableSpec(
-                name="lineitem",
-                write_disposition="append",
-                bloom_filter_columns=["l_orderkey"],
-            ),
-            li.repartition(n_parts, F.col("l_orderkey")),
-        )
-        table = catalog.load_table("gate", "lineitem")
-        _LAKE_BLOOM_CACHE[key] = table
+def lake_bloom_pruning(spark: SparkSession, sf_dir: str, table) -> DataFrame:
     snap = table.snapshot()
     # deterministic probe, same derivation as the oracle SQL: the
     # smallest single-line order (1-value driver collect)
@@ -2709,6 +2561,52 @@ def multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select("a", "b", rnd(F.col("cosine"), 6).alias("cosine"))
 
 
+def _lake_ndv_stats_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake import table as table_mod
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.maintenance import compute_table_stats
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    cust = _t(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment", "c_nationkey"
+    )
+    spec = TableSpec(
+        name="cust",
+        write_disposition="append",
+        ndv_sketch_columns=["c_mktsegment", "c_nationkey"],
+    )
+    # two loads -> sketches must merge across manifests
+    writer.write(spec, cust.filter(F.col("c_custkey") % 2 == 0))
+    writer.write(spec, cust.filter(F.col("c_custkey") % 2 == 1))
+    t_w = catalog.load_table("gate", "cust")
+    # ANALYZE path: unsketched write, then compute_table_stats backfill
+    writer.write(TableSpec(name="cust_raw", write_disposition="append"), cust)
+    t_a = catalog.load_table("gate", "cust_raw")
+    assert t_a.approx_distinct(["c_mktsegment"]) is None  # honest refusal
+    compute_table_stats(t_a, ["c_mktsegment", "c_nationkey"])
+    # both probes must be metadata-only: any data scan raises
+    real = table_mod.LakeTable._plan_scan
+
+    def boom(self, *a, **kw):
+        raise AssertionError("approx_distinct must not scan data")
+
+    table_mod.LakeTable._plan_scan = boom
+    try:
+        ndv_w = t_w.approx_distinct(["c_mktsegment", "c_nationkey"])
+        ndv_a = t_a.approx_distinct(["c_mktsegment", "c_nationkey"])
+    finally:
+        table_mod.LakeTable._plan_scan = real
+    assert ndv_w["c_mktsegment"]["exact"] and ndv_a["c_nationkey"]["exact"]
+    rows = [
+        ("write_mktsegment", ndv_w["c_mktsegment"]["ndv"]),
+        ("write_nationkey", ndv_w["c_nationkey"]["ndv"]),
+        ("analyze_mktsegment", ndv_a["c_mktsegment"]["ndv"]),
+        ("analyze_nationkey", ndv_a["c_nationkey"]["ndv"]),
+    ]
+    return rows
+
 
 @query(
     "lake_ndv_stats",
@@ -2740,62 +2638,54 @@ def multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "oracle recomputes both with plain COUNT(DISTINCT); a hash match "
         "proves metadata NDV equals scanning."
     ),
+    setup=_lake_ndv_stats_setup,
 )
-def lake_ndv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake import table as table_mod
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.maintenance import compute_table_stats
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    rows = _LAKE_NDV_CACHE.get(key)
-    if rows is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_ndv_"))
-        writer = LakeWriter(catalog, "gate")
-        cust = _t(spark, sf_dir, "customer").select(
-            "c_custkey", "c_mktsegment", "c_nationkey"
-        )
-        spec = TableSpec(
-            name="cust",
-            write_disposition="append",
-            ndv_sketch_columns=["c_mktsegment", "c_nationkey"],
-        )
-        # two loads -> sketches must merge across manifests
-        writer.write(spec, cust.filter(F.col("c_custkey") % 2 == 0))
-        writer.write(spec, cust.filter(F.col("c_custkey") % 2 == 1))
-        t_w = catalog.load_table("gate", "cust")
-        # ANALYZE path: unsketched write, then compute_table_stats backfill
-        writer.write(TableSpec(name="cust_raw", write_disposition="append"), cust)
-        t_a = catalog.load_table("gate", "cust_raw")
-        assert t_a.approx_distinct(["c_mktsegment"]) is None  # honest refusal
-        compute_table_stats(t_a, ["c_mktsegment", "c_nationkey"])
-        # both probes must be metadata-only: any data scan raises
-        real = table_mod.LakeTable._plan_scan
-
-        def boom(self, *a, **kw):
-            raise AssertionError("approx_distinct must not scan data")
-
-        table_mod.LakeTable._plan_scan = boom
-        try:
-            ndv_w = t_w.approx_distinct(["c_mktsegment", "c_nationkey"])
-            ndv_a = t_a.approx_distinct(["c_mktsegment", "c_nationkey"])
-        finally:
-            table_mod.LakeTable._plan_scan = real
-        assert ndv_w["c_mktsegment"]["exact"] and ndv_a["c_nationkey"]["exact"]
-        rows = [
-            ("write_mktsegment", ndv_w["c_mktsegment"]["ndv"]),
-            ("write_nationkey", ndv_w["c_nationkey"]["ndv"]),
-            ("analyze_mktsegment", ndv_a["c_mktsegment"]["ndv"]),
-            ("analyze_nationkey", ndv_a["c_nationkey"]["ndv"]),
-        ]
-        _LAKE_NDV_CACHE[key] = rows
+def lake_ndv_stats(spark: SparkSession, sf_dir: str, rows) -> DataFrame:
     return spark.createDataFrame(rows, "probe string, ndv long")
 
 
-_LAKE_NDV_CACHE: dict = {}
+def _lake_sketch_overlap_setup(spark: SparkSession, sf_dir: str, root: str):
+    import math
+
+    from dlt_iceberg_spark.lake import table as table_mod
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.dataset import Dataset
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    writer.write(
+        TableSpec(name="low", write_disposition="append",
+                  ndv_sketch_columns=["l_quantity"]),
+        li.filter(F.col("l_quantity") <= 30),
+    )
+    writer.write(
+        TableSpec(name="high", write_disposition="append",
+                  ndv_sketch_columns=["l_quantity"]),
+        li.filter(F.col("l_quantity") >= 21),
+    )
+    ds = Dataset(catalog, "gate")
+    # the sketch path must be metadata-only: any data scan raises
+    real = table_mod.LakeTable._plan_scan
+
+    def boom(self, *a, **kw):
+        raise AssertionError("sketch overlap must not scan data")
+
+    table_mod.LakeTable._plan_scan = boom
+    try:
+        est = ds.overlap("low", "high", "l_quantity")
+    finally:
+        table_mod.LakeTable._plan_scan = real
+    assert est["exact"]
+    row = (
+        est["distinct_a"],
+        est["distinct_b"],
+        est["intersection"],
+        math.floor(est["jaccard"] * 10**6 + 0.5) / 10**6,
+        bool(est["exact"]),
+    )
+    return row
 
 
 @query(
@@ -2826,54 +2716,9 @@ _LAKE_NDV_CACHE: dict = {}
         "any join.  The oracle recomputes the overlap with plain set "
         "algebra; a hash match proves sketch set-ops equal scanning."
     ),
+    setup=_lake_sketch_overlap_setup,
 )
-def lake_sketch_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake import table as table_mod
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.dataset import Dataset
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    row = _LAKE_OVERLAP_CACHE.get(key)
-    if row is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_overlap_"))
-        writer = LakeWriter(catalog, "gate")
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-        writer.write(
-            TableSpec(name="low", write_disposition="append",
-                      ndv_sketch_columns=["l_quantity"]),
-            li.filter(F.col("l_quantity") <= 30),
-        )
-        writer.write(
-            TableSpec(name="high", write_disposition="append",
-                      ndv_sketch_columns=["l_quantity"]),
-            li.filter(F.col("l_quantity") >= 21),
-        )
-        ds = Dataset(catalog, "gate")
-        # the sketch path must be metadata-only: any data scan raises
-        real = table_mod.LakeTable._plan_scan
-
-        def boom(self, *a, **kw):
-            raise AssertionError("sketch overlap must not scan data")
-
-        table_mod.LakeTable._plan_scan = boom
-        try:
-            est = ds.overlap("low", "high", "l_quantity")
-        finally:
-            table_mod.LakeTable._plan_scan = real
-        assert est["exact"]
-        row = (
-            est["distinct_a"],
-            est["distinct_b"],
-            est["intersection"],
-            math.floor(est["jaccard"] * 10**6 + 0.5) / 10**6,
-            bool(est["exact"]),
-        )
-        _LAKE_OVERLAP_CACHE[key] = row
+def lake_sketch_overlap(spark: SparkSession, sf_dir: str, row) -> DataFrame:
     return spark.createDataFrame(
         [row],
         "distinct_a double, distinct_b double, intersection double, "
@@ -2881,7 +2726,45 @@ def lake_sketch_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LAKE_OVERLAP_CACHE: dict = {}
+def _lake_partition_ndv_setup(spark: SparkSession, sf_dir: str, root: str):
+    from dlt_iceberg_spark.lake import table as table_mod
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.dataset import Dataset
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    writer = LakeWriter(catalog, "gate")
+    writer.write(
+        TableSpec(
+            name="li",
+            write_disposition="append",
+            column_hints={"l_returnflag": {"partition": True}},
+            ndv_sketch_columns=["l_quantity", "l_linestatus"],
+        ),
+        _t(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_returnflag", "l_quantity", "l_linestatus"
+        ),
+    )
+    ds = Dataset(catalog, "gate")
+    real = table_mod.LakeTable._plan_scan
+
+    def boom(self, *a, **kw):
+        raise AssertionError("grouped NDV must not scan data")
+
+    table_mod.LakeTable._plan_scan = boom
+    try:
+        got = ds.aggregate(
+            "li", group_by="l_returnflag",
+            distinct=["l_quantity", "l_linestatus"],
+        )
+    finally:
+        table_mod.LakeTable._plan_scan = real
+    assert isinstance(got, list) and got  # metadata path, not fallback
+    rows = [
+        (d["l_returnflag"], d["count"], d["ndv_l_quantity"], d["ndv_l_linestatus"])
+        for d in got
+    ]
+    return rows
 
 
 @query(
@@ -2907,56 +2790,56 @@ _LAKE_OVERLAP_CACHE: dict = {}
         "per-file NDV below k=256 at EVERY sf).  The oracle recomputes "
         "the GROUP BY COUNT(DISTINCT)s with plain SQL."
     ),
+    setup=_lake_partition_ndv_setup,
 )
-def lake_partition_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake import table as table_mod
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.dataset import Dataset
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    rows = _LAKE_PART_NDV_CACHE.get(key)
-    if rows is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_partndv_"))
-        writer = LakeWriter(catalog, "gate")
-        writer.write(
-            TableSpec(
-                name="li",
-                write_disposition="append",
-                column_hints={"l_returnflag": {"partition": True}},
-                ndv_sketch_columns=["l_quantity", "l_linestatus"],
-            ),
-            _t(spark, sf_dir, "lineitem").select(
-                "l_orderkey", "l_returnflag", "l_quantity", "l_linestatus"
-            ),
-        )
-        ds = Dataset(catalog, "gate")
-        real = table_mod.LakeTable._plan_scan
-
-        def boom(self, *a, **kw):
-            raise AssertionError("grouped NDV must not scan data")
-
-        table_mod.LakeTable._plan_scan = boom
-        try:
-            got = ds.aggregate(
-                "li", group_by="l_returnflag",
-                distinct=["l_quantity", "l_linestatus"],
-            )
-        finally:
-            table_mod.LakeTable._plan_scan = real
-        assert isinstance(got, list) and got  # metadata path, not fallback
-        rows = [
-            (d["l_returnflag"], d["count"], d["ndv_l_quantity"], d["ndv_l_linestatus"])
-            for d in got
-        ]
-        _LAKE_PART_NDV_CACHE[key] = rows
+def lake_partition_ndv(spark: SparkSession, sf_dir: str, rows) -> DataFrame:
     return spark.createDataFrame(rows, "g string, n long, ndv_qty long, ndv_status long")
 
 
-_LAKE_PART_NDV_CACHE: dict = {}
+def _lake_clone_divergence_setup(spark: SparkSession, sf_dir: str, root: str):
+    import os
+
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, root)
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    LakeWriter(catalog, "src").write(
+        TableSpec(name="li", write_disposition="append"),
+        li.filter(F.col("l_quantity") <= 40),
+    )
+    clone = catalog.clone_table("src", "li", "dev", "li2")
+    data_dir = os.path.join(clone.location, "data")
+    assert not os.path.isdir(data_dir) or not os.listdir(data_dir), (
+        "clone must not copy data bytes"
+    )
+    LakeWriter(catalog, "dev").write(
+        TableSpec(name="li2", write_disposition="append"),
+        li.filter(F.col("l_quantity") > 40),
+    )
+    src_row = (
+        catalog.load_table("src", "li")
+        .read()
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("l_quantity").cast("long")).alias("qty"),
+        )
+        .first()
+    )
+    clone_row = (
+        catalog.load_table("dev", "li2")
+        .read()
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("l_quantity").cast("long")).alias("qty"),
+        )
+        .first()
+    )
+    rows = [
+        ("source", src_row["n"], src_row["qty"]),
+        ("clone", clone_row["n"], clone_row["qty"]),
+    ]
+    return rows
 
 
 @query(
@@ -2986,56 +2869,7 @@ _LAKE_PART_NDV_CACHE: dict = {}
         "with plain SQL, proving reference-sharing never leaks writes in "
         "either direction."
     ),
+    setup=_lake_clone_divergence_setup,
 )
-def lake_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from dlt_iceberg_spark.lake.catalog import LakeCatalog
-    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    rows = _LAKE_CLONE_CACHE.get(key)
-    if rows is None:
-        catalog = LakeCatalog(spark, tempfile.mkdtemp(prefix="lake_clone_"))
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-        LakeWriter(catalog, "src").write(
-            TableSpec(name="li", write_disposition="append"),
-            li.filter(F.col("l_quantity") <= 40),
-        )
-        clone = catalog.clone_table("src", "li", "dev", "li2")
-        data_dir = os.path.join(clone.location, "data")
-        assert not os.path.isdir(data_dir) or not os.listdir(data_dir), (
-            "clone must not copy data bytes"
-        )
-        LakeWriter(catalog, "dev").write(
-            TableSpec(name="li2", write_disposition="append"),
-            li.filter(F.col("l_quantity") > 40),
-        )
-        src_row = (
-            catalog.load_table("src", "li")
-            .read()
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("l_quantity").cast("long")).alias("qty"),
-            )
-            .first()
-        )
-        clone_row = (
-            catalog.load_table("dev", "li2")
-            .read()
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("l_quantity").cast("long")).alias("qty"),
-            )
-            .first()
-        )
-        rows = [
-            ("source", src_row["n"], src_row["qty"]),
-            ("clone", clone_row["n"], clone_row["qty"]),
-        ]
-        _LAKE_CLONE_CACHE[key] = rows
+def lake_clone_divergence(spark: SparkSession, sf_dir: str, rows) -> DataFrame:
     return spark.createDataFrame(rows, "side string, n long, qty long")
-
-
-_LAKE_CLONE_CACHE: dict = {}

@@ -16,12 +16,28 @@ Cross-engine determinism rules used throughout (verified empirically):
   (io.py), oracles use ``ts::TIMESTAMP`` which truncates identically.
 - Aggregates over INTEGER are cast to BIGINT in oracles (DuckDB sums to
   HUGEINT), matching Spark's long.
+
+Gate fixtures: a query that reads something it must build first (a lake
+table, a persisted index, a stream's landed output) passes
+``setup(spark, sf_dir, root) -> fixture`` to ``query``.  ``setup`` runs
+untimed, once per (query name, ``id(spark)``, ``abspath(sf_dir)``); the
+registry memoizes what it returns (a raising setup memoizes nothing) and
+hands it to the decorated ``fn(spark, sf_dir, fixture)``, which only reads.
+``root`` is a fresh empty directory owned by the registry: all of them
+live under ONE per-process directory ``<tmp>/spark_graft_gates_<pid>_*``,
+and creating that directory removes the ones left by dead pids.  The
+decorator registers and returns a ``(spark, sf_dir)`` wrapper, so every
+``REGISTRY[name].fn`` keeps the two-argument signature.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,6 +46,7 @@ from pyspark.sql.window import Window
 from dlt_iceberg_spark.io import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+SetupFn = Callable[[SparkSession, str, str], Any]
 
 
 @dataclass(frozen=True)
@@ -38,15 +55,74 @@ class QuerySpec:
     fn: QueryFn
     oracle: str | None  # None => non-SQL-expressible, rows-only check
     doc: str = ""
+    setup: SetupFn | None = None
+
+    def fixture(self, spark: SparkSession, sf_dir: str) -> Any:
+        """Build (or return the memoized) fixture; None without ``setup``."""
+        if self.setup is None:
+            return None
+        return _fixture(self.name, self.setup, spark, sf_dir)
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
+_GATES_PREFIX = "spark_graft_gates_"
+_gates_dir: str | None = None
+_FIXTURES: dict[tuple[str, int, str], Any] = {}
 
-def query(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn: QueryFn) -> QueryFn:
-        REGISTRY[name] = QuerySpec(name, fn, oracle, doc)
-        return fn
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # exists, owned by another user
+        return True
+    return True
+
+
+def _gates_root() -> str:
+    """This process's gate directory, created on first use.  Creating it
+    first removes every sibling whose pid is dead: roots of live processes
+    (a concurrent test or bench run) are never touched."""
+    global _gates_dir
+    if _gates_dir is None:
+        tmp = tempfile.gettempdir()
+        for entry in os.listdir(tmp):
+            if not entry.startswith(_GATES_PREFIX):
+                continue
+            pid = entry[len(_GATES_PREFIX):].split("_", 1)[0]
+            if pid.isdigit() and not _pid_alive(int(pid)):
+                shutil.rmtree(os.path.join(tmp, entry), ignore_errors=True)
+        _gates_dir = tempfile.mkdtemp(prefix=f"{_GATES_PREFIX}{os.getpid()}_", dir=tmp)
+    return _gates_dir
+
+
+def _fixture(name: str, setup: SetupFn, spark: SparkSession, sf_dir: str) -> Any:
+    key = (name, id(spark), os.path.abspath(sf_dir))
+    if key not in _FIXTURES:
+        root = tempfile.mkdtemp(prefix=f"{name}_", dir=_gates_root())
+        try:
+            _FIXTURES[key] = setup(spark, sf_dir, root)
+        except BaseException:
+            shutil.rmtree(root, ignore_errors=True)
+            raise
+    return _FIXTURES[key]
+
+
+def query(name: str, oracle: str | None, doc: str = "", setup: SetupFn | None = None):
+    def deco(fn):
+        if setup is None:
+            REGISTRY[name] = QuerySpec(name, fn, oracle, doc)
+            return fn
+
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return fn(spark, sf_dir, _fixture(name, setup, spark, sf_dir))
+
+        for attr in ("__module__", "__name__", "__qualname__", "__doc__"):
+            setattr(run, attr, getattr(fn, attr))
+        REGISTRY[name] = QuerySpec(name, run, oracle, doc, setup)
+        return run
 
     return deco
 

@@ -132,7 +132,7 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
 @pytest.mark.slow
 def test_registry_wide_no_cartesian(spark):
     """EVERY registered query must plan without a cartesian/BNL join —
-    the regression net for all 79 entries, not just the hand-picked ones.
+    the regression net for the whole registry (145), not the hand-picked few.
     (Plan build only; queries that train models at build time run their
     small driver jobs at sf0.001.)"""
     failures = []

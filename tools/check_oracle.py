@@ -2,7 +2,9 @@
 
 Runs every registered query on Spark and its oracle on DuckDB at the given
 sf_dir, normalizes (columns sorted by name, rows sorted by all columns), and
-compares row-count, column names/types, and exact values.
+compares row-count, column names/types, and exact values.  A gate's
+fixture is built before its timer starts; its build time prints as
+``setup`` next to the timed read.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -32,6 +34,29 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
+def mismatched_columns(a: pd.DataFrame, b: pd.DataFrame) -> list[tuple]:
+    """(column, n_bad, dtype_a, dtype_b) for every column whose values
+    differ between two normalized frames of equal shape."""
+    out = []
+    for c in a.columns:
+        av, bv = a[c], b[c]
+        try:
+            eq = (av.isna() & bv.isna()) | (av == bv)
+            bad = int((~eq).sum())
+        except Exception:
+            bad = -1
+        # The correctness gate hashes VALUES, so an int64-vs-float64 drift
+        # (e.g. DuckDB HUGEINT -> pandas float64) hash-mismatches even
+        # when == says equal.  Treat integer-vs-float kind drift as a
+        # failure here too, so it's caught before the gate sees it.
+        kinds = {av.dtype.kind, bv.dtype.kind}
+        if bad == 0 and kinds == {"i", "f"}:
+            bad = -2
+        if bad != 0:
+            out.append((c, bad, str(av.dtype), str(bv.dtype)))
+    return out
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -43,17 +68,19 @@ def main() -> int:
     for name, spec in REGISTRY.items():
         if only and name not in only:
             continue
-        t0 = time.perf_counter()
         try:
-            sdf = spec.fn(spark, sf_dir)
-            spark_pd = sdf.toPandas()
+            t0 = time.perf_counter()
+            spec.fixture(spark, sf_dir)
+            setup = f", setup {time.perf_counter() - t0:.2f}s" if spec.setup else ""
+            t0 = time.perf_counter()
+            spark_pd = spec.fn(spark, sf_dir).toPandas()
         except Exception as exc:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL {name}: spark error: {exc}")
             continue
-        dt = time.perf_counter() - t0
+        dt = f"[{time.perf_counter() - t0:.2f}s{setup}]"
         if spec.oracle is None:
-            print(f"ok?  {name}: rows-only ({len(spark_pd)} rows) [{dt:.2f}s]")
+            print(f"ok?  {name}: rows-only ({len(spark_pd)} rows) {dt}")
             continue
         try:
             oracle_pd = con.execute(spec.oracle).df()
@@ -70,23 +97,7 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL {name}: rowcount {len(a)} vs {len(b)}")
             continue
-        mismatched_cols = []
-        for c in a.columns:
-            av, bv = a[c], b[c]
-            try:
-                eq = (av.isna() & bv.isna()) | (av == bv)
-                bad = int((~eq).sum())
-            except Exception:
-                bad = -1
-            # The driver's gate hashes VALUES, so an int64-vs-float64 drift
-            # (e.g. DuckDB HUGEINT -> pandas float64) hash-mismatches even
-            # when == says equal.  Treat integer-vs-float kind drift as a
-            # failure here too, so it's caught before the driver sees it.
-            kinds = {av.dtype.kind, bv.dtype.kind}
-            if bad == 0 and kinds == {"i", "f"}:
-                bad = -2
-            if bad != 0:
-                mismatched_cols.append((c, bad, str(av.dtype), str(bv.dtype)))
+        mismatched_cols = mismatched_columns(a, b)
         if mismatched_cols:
             failures.append(name)
             print(f"FAIL {name}: value mismatch {mismatched_cols}")
@@ -95,7 +106,7 @@ def main() -> int:
                 print("  spark:", a[diffmask].head(3).to_dict("records"))
                 print("  oracle:", b[diffmask].head(3).to_dict("records"))
         else:
-            print(f"PASS {name} ({len(a)} rows) [{dt:.2f}s]")
+            print(f"PASS {name} ({len(a)} rows) {dt}")
     spark.stop()
     print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL PASS")
     return 1 if failures else 0

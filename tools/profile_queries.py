@@ -9,8 +9,8 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
 Output: one JSON line per query to stdout —
   {"q": name, "build_s": ..., "exec_s": ..., "jobs": N, "stages": N,
    "tasks": N} measured on the SECOND (warm) run; the first run warms
-codegen/footers and populates per-query fixture caches so build/exec split
-reflects the steady state the bench times.
+codegen/footers and builds the query's registry fixture, so the build/exec
+split reflects the steady state the bench times.
 """
 
 from __future__ import annotations
@@ -42,7 +42,7 @@ def main() -> None:
     tracker = sc.statusTracker()
     for name in names:
         spec = REGISTRY[name]
-        # warm run (codegen, fixture caches, parquet footers)
+        # warm run (codegen, registry fixture, parquet footers)
         spark.catalog.clearCache()
         spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         # timed run, job-group scoped
