@@ -84,6 +84,11 @@ class DataFile:
     # rewritten by compaction/fold — re-establish with
     # maintenance.compute_table_stats).
     sketches: dict[str, Any] = dc_field(default_factory=dict)
+    # column -> NULL count (Iceberg's null_value_counts), recorded at stage
+    # time beside the [min, max] stats, which skip NULLs.  A stats-only
+    # proof that EVERY row matches needs a recorded zero; a column without
+    # a count (files written before counts existed, imports) is unknown.
+    null_counts: dict[str, int] = dc_field(default_factory=dict)
 
 
 @dataclass
@@ -155,8 +160,8 @@ class ManifestRef:
     def may_contain_partition(self, key: str, values: set) -> bool:
         """Could any entry carry one of ``values`` for partition ``key``?
         Key absent from the summary ⇒ unknown ⇒ True.  A None summary value
-        is the hive default partition (null AND empty-string transform
-        values fold into it) — it conservatively matches any probe."""
+        is NULL, or, in files staged before ``''`` was kept apart from NULL,
+        either — it conservatively matches any probe."""
         summary = self.partitions.get(key)
         if summary is None:
             return True
@@ -179,6 +184,8 @@ _ENTRY_SCHEMA = pa.schema(
         # (manifests written before NDV sketches existed lack the column —
         # read_manifest defaults it)
         pa.field("sketches", pa.string(), nullable=False),
+        # json: {col: n}; "{}" = unknown (older manifests lack the column)
+        pa.field("null_counts", pa.string(), nullable=False),
     ]
 )
 
@@ -328,6 +335,7 @@ def write_manifest(
             "partition": [json.dumps(f.partition, default=str) for f in entries],
             "names": [json.dumps(f.names) for f in entries],
             "sketches": [json.dumps(f.sketches) for f in entries],
+            "null_counts": [json.dumps(f.null_counts) for f in entries],
         },
         schema=_ENTRY_SCHEMA,
     )
@@ -370,6 +378,9 @@ def read_manifest(
             partition=json.loads(cols["partition"][i]),
             names=json.loads(cols["names"][i]) if "names" in cols else {},
             sketches=json.loads(cols["sketches"][i]) if "sketches" in cols else {},
+            null_counts=(
+                json.loads(cols["null_counts"][i]) if "null_counts" in cols else {}
+            ),
         )
         for i in range(t.num_rows)
     ]

@@ -49,7 +49,8 @@ from dlt_iceberg_spark.lake.manifest import DataFile, ManifestRef
 #: Spark-side schema of a manifest chunk (mirrors manifest._ENTRY_SCHEMA).
 ENTRY_DDL = (
     "path string, rows bigint, bytes bigint, sequence bigint, "
-    "stats string, partition string, names string, sketches string"
+    "stats string, partition string, names string, sketches string, "
+    "null_counts string"
 )
 
 _NUMERIC = (
@@ -146,8 +147,8 @@ def survives_predicate(col_dtype: T.DataType, col: str, op: str, value: Any):
 def _survives_partition(name: str, values: list[str]):
     """Boolean Column mirroring table._file_partition_may_match: key absent
     from the partition JSON (older spec) keeps the entry, and so does a
-    recorded JSON null (hive folds null AND empty-string transform values
-    into the default partition — it must match conservatively); only a
+    recorded JSON null (files staged before ``''`` was kept apart from
+    NULL recorded both as null — it must match conservatively); only a
     present, non-null, out-of-set value drops the entry.
     ``get_json_object`` returns NULL for a missing key and the string
     "null" for a JSON null."""
@@ -193,6 +194,7 @@ def plan_candidates(
             # carried so the exact recheck below applies manifest blooms
             # (executor-side filtering stays stats-only — conservative)
             sketches=json.loads(r.sketches) if r.sketches else {},
+            null_counts=json.loads(r.null_counts) if r.null_counts else {},
         )
         for r in rows
     ]

@@ -7,13 +7,13 @@ format allows:
 
 - lookups are pruned: every read passes its equality predicate to
   ``LakeTable.read(where=...)``, so manifest min/max stats pick the data
-  files.  Each append writes one single-row file, so a fresh ``load_id``
-  (M5) or an unseen ``version_hash`` (M4) opens no data file and launches
-  no Spark job; a hit reads only the files that can hold it.  A missing
-  table answers None/False without building a frame;
-- "is this schema hash stored?" (M4) is a pruned ``count``: a one-row
-  file's min == max proves its row matches, so a hit is answered from
-  manifest stats too and no probe launches a job;
+  files; a hit reads only the files that can hold it.  A missing table
+  answers None/False without building a frame;
+- "is this load recorded?" (M5) and "is this schema hash stored?" (M4)
+  are pruned ``count`` calls.  Each append writes one single-row file, so a
+  fresh id matches no file, and a recorded one matches a file whose
+  min == max and zero null count prove its row: both answers come from
+  manifest stats, with no DataFrame and no Spark job;
 - newest schema (M1/M2) = pruned ``schema_name`` scan + max(version) top-1;
 - newest pipeline state (M3) = pruned ``pipeline_name`` scan +
   max(created_at) top-1;
@@ -246,7 +246,10 @@ class StateStore:
     # -- M5: load ledger ---------------------------------------------------
 
     def load_recorded(self, load_id: str) -> bool:
-        return self._first(LOADS_TABLE, "load_id", load_id) is not None
+        """Whether ``_dlt_loads`` holds ``load_id`` — a COUNT pushdown
+        answered from manifest stats, like :meth:`has_schema_hash`."""
+        table = self._table(LOADS_TABLE)
+        return table is not None and table.count(where=[("load_id", "=", load_id)]) > 0
 
     def store_completed_load(
         self,

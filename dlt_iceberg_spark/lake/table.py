@@ -237,6 +237,9 @@ def _aware_in_session(v: Any, tz_name: str):
         return None
     return a0
 
+#: prefix of every non-NULL ``_p_*`` staging value (stage_dataframe)
+_PART_PREFIX = "v"
+
 #: residual Spark filters for `read(where=...)` predicates
 _OPS = {
     "=": lambda c, v: c == v,
@@ -323,9 +326,13 @@ def _file_may_match(f: "DataFile", col: str, op: str, val: Any) -> bool:
 
 def _file_fully_matches(f: "DataFile", col: str, op: str, val: Any) -> bool:
     """Does EVERY row of ``f`` satisfy the predicate, judging by the
-    manifest's [min, max]?  The dual of :func:`_file_may_match`, used by
-    COUNT pushdown: a fully-matching file contributes ``f.rows`` without
-    being opened.  Missing/incomparable stats ⇒ must assume no (scan)."""
+    manifest's [min, max] and NULL count?  The dual of
+    :func:`_file_may_match`, used by COUNT pushdown: a fully-matching file
+    contributes ``f.rows`` without being opened.  Parquet min/max skip
+    NULLs and a NULL satisfies no predicate, so the file needs a recorded
+    zero NULL count.  Missing/incomparable stats ⇒ must assume no (scan)."""
+    if f.null_counts.get(col) != 0:
+        return False
     st = f.stats.get(col)
     if st is None:
         return False
@@ -358,10 +365,10 @@ def _file_fully_matches(f: "DataFile", col: str, op: str, val: Any) -> bool:
 def _file_partition_may_match(f: "DataFile", probes: dict[str, set]) -> bool:
     """Could ``f`` hold a row matching every partition probe?  A file
     from an OLDER spec (key absent — partition-spec evolution) is kept,
-    and so is a recorded NULL tuple value: hive layout folds BOTH null
-    and empty-string transform values into ``__HIVE_DEFAULT_PARTITION__``
-    (recorded None), so None must conservatively match any probe —
-    e.g. ``truncate("")`` of an empty-string row lives there."""
+    and so is a recorded NULL tuple value: staging keeps ``''`` apart from
+    NULL (:meth:`LakeTable.stage_dataframe`), but files staged before it
+    did recorded both as None, so None must conservatively match any
+    probe — e.g. ``truncate("")`` of an empty-string row may live there."""
     for name, vals in probes.items():
         v = f.partition.get(name)
         if v is not None and v not in vals:
@@ -636,21 +643,21 @@ def _collect_file_stats(
     abs_path: str, schema: T.StructType, io=None
 ) -> tuple[int, int, dict]:
     """Row count, byte size and per-column min/max of one data file:
-    :func:`_scan_staged_file` without blooms."""
+    :func:`_scan_staged_file` without NULL counts and blooms."""
     return _scan_staged_file(abs_path, schema, io)[:3]
 
 
 def _scan_staged_file(
     abs_path: str, schema: T.StructType, io=None, bloom_columns=None
-) -> tuple[int, int, dict, dict]:
+) -> tuple[int, int, dict, dict, dict]:
     """The driver's per-file pass over a freshly written data file:
-    (rows, bytes, {col: [min, max]}, {bloom:<col>: bloom}).
+    (rows, bytes, {col: [min, max]}, {col: null count}, {bloom:<col>: bloom}).
 
-    Row count and min/max come from the parquet footer — the same stats
-    Iceberg records at write time.  Manifest blooms (lake/bloom.py) stream
-    ONLY the ``bloom_columns`` chunks of the same open file, batch by
-    batch, through the numpy Spark-parity kernels; saturated blooms and
-    dtypes without a bloom frame are left out."""
+    Row count, min/max and NULL counts come from the parquet footer — the
+    same stats Iceberg records at write time.  Manifest blooms
+    (lake/bloom.py) stream ONLY the ``bloom_columns`` chunks of the same
+    open file, batch by batch, through the numpy Spark-parity kernels;
+    saturated blooms and dtypes without a bloom frame are left out."""
     from dlt_iceberg_spark.lake.bloom import BLOOM_FRAMES, bloom_key, build_bloom
 
     io = io or LocalFileIO()
@@ -667,12 +674,20 @@ def _scan_staged_file(
                 blooms[bloom_key(c)] = bloom
     stats: dict[str, list[Any]] = {}
     prunable = {name for name, tag in tags.items() if tag in _STATS_TYPES}
+    nulls: dict[str, int] = {}
+    uncounted: set[str] = set()  # some row group lacks the NULL count
     for rg in range(md.num_row_groups):
         g = md.row_group(rg)
         for ci in range(g.num_columns):
             col = g.column(ci)
             name = col.path_in_schema
-            if name not in prunable or col.statistics is None or not col.statistics.has_min_max:
+            if name not in prunable:
+                continue
+            if col.statistics is None or not col.statistics.has_null_count:
+                uncounted.add(name)
+            else:
+                nulls[name] = nulls.get(name, 0) + col.statistics.null_count
+            if col.statistics is None or not col.statistics.has_min_max:
                 continue
             mn, mx = col.statistics.min, col.statistics.max
             if isinstance(mn, bytes):
@@ -694,7 +709,8 @@ def _scan_staged_file(
                 stats[name] = [mn, mx]
             else:
                 stats[name] = [min(cur[0], mn), max(cur[1], mx)]
-    return md.num_rows, io.size(abs_path), stats, blooms
+    nulls = {c: n for c, n in nulls.items() if c not in uncounted}
+    return md.num_rows, io.size(abs_path), stats, nulls, blooms
 
 
 def _staged_rel(staging: str, uri: str) -> str:
@@ -1188,7 +1204,12 @@ class LakeTable:
         values and each DataFile records its partition dict, enabling
         partition-scoped operations (dynamic overwrite, partition pruning).
         The transform values ride as duplicate ``_p_*`` string columns so
-        the data columns stay intact inside the files.
+        the data columns stay intact inside the files.  Each non-NULL value
+        carries a one-character prefix that the path parse strips: hive
+        layout writes NULL and ``''`` both as ``__HIVE_DEFAULT_PARTITION__``,
+        and the prefix keeps ``''`` apart (recorded ``''``, NULL as None).
+        Staging dirs are flattened to ``data/<uuid>.parquet``, so the
+        encoding never outlives the call.
 
         Stats collection: on local tables one driver pass per staged file
         (:func:`_scan_staged_file`) reads the footer stats AND builds the
@@ -1203,7 +1224,10 @@ class LakeTable:
         io.makedirs(self._data_dir)
         staging = os.path.join(self.location, f"_staging_{uuid.uuid4().hex}")
         if partition_exprs:
-            tmp = {f"_p_{n}": expr.cast("string") for n, expr in partition_exprs}
+            tmp = {
+                f"_p_{n}": F.concat(F.lit(_PART_PREFIX), expr.cast("string"))
+                for n, expr in partition_exprs
+            }
             writer = df.withColumns(tmp).write.mode("overwrite").partitionBy(*tmp.keys())
         else:
             writer = df.write.mode("overwrite")
@@ -1246,18 +1270,21 @@ class LakeTable:
                     continue
                 key = key[3:] if key.startswith("_p_") else key
                 val = urllib.parse.unquote(raw)
-                partition[key] = None if val == "__HIVE_DEFAULT_PARTITION__" else val
+                partition[key] = (
+                    None if val == "__HIVE_DEFAULT_PARTITION__"
+                    else val[len(_PART_PREFIX):]
+                )
             final_name = f"{uuid.uuid4().hex}.parquet"
             abs_final = os.path.join(self._data_dir, final_name)
             io.rename(os.path.join(staging, rel), abs_final)
             sketches = sketch_by_file.get(rel, {})
             if local:
-                rows, nbytes, stats, blooms = _scan_staged_file(
+                rows, nbytes, stats, nulls, blooms = _scan_staged_file(
                     abs_final, df.schema, io, bloom_columns
                 )
                 sketches = {**sketches, **blooms}
             else:
-                rows, stats = spark_stats.get(rel, (0, {}))
+                rows, stats, nulls = spark_stats.get(rel, (0, {}, {}))
                 nbytes = io.size(abs_final) if rows else 0
             if rows == 0:
                 io.remove(abs_final)
@@ -1270,6 +1297,7 @@ class LakeTable:
                     stats=stats,
                     partition=dict(partition),
                     sketches=sketches,
+                    null_counts=nulls,
                 )
             )
         io.rmtree(staging)
@@ -1295,16 +1323,21 @@ class LakeTable:
         buf = _pyio.BytesIO()
         pq.write_table(arrow_table(schema, rows), buf)
         self._io.write_bytes(abs_path, buf.getvalue())
-        n, nbytes, stats = _collect_file_stats(abs_path, schema, io=self._io)
-        return [DataFile(path=f"data/{name}", rows=n, bytes=nbytes, stats=stats)]
+        n, nbytes, stats, nulls, _ = _scan_staged_file(abs_path, schema, self._io)
+        return [
+            DataFile(
+                path=f"data/{name}", rows=n, bytes=nbytes, stats=stats, null_counts=nulls
+            )
+        ]
 
     def _stats_via_spark(
         self, staging: str, schema: T.StructType
-    ) -> dict[str, tuple[int, dict]]:
-        """Per-file (rows, {col: [min, max]}) for every parquet file under
-        ``staging``, computed as one distributed job grouped by
-        ``input_file_name()`` — O(files) tiny rows on the driver, data never
-        leaves the executors.  Keyed by path relative to ``staging``."""
+    ) -> dict[str, tuple[int, dict, dict]]:
+        """Per-file (rows, {col: [min, max]}, {col: null count}) for every
+        parquet file under ``staging``, computed as one distributed job
+        grouped by ``input_file_name()`` — O(files) tiny rows on the
+        driver, data never leaves the executors.  Keyed by path relative
+        to ``staging``."""
         from datetime import date
 
         prunable = [
@@ -1316,10 +1349,12 @@ class LakeTable:
         for c in present:
             aggs.append(F.min(c).alias(f"_mn_{c}"))
             aggs.append(F.max(c).alias(f"_mx_{c}"))
+            aggs.append(F.count_if(F.col(c).isNull()).alias(f"_nn_{c}"))
         rows = sdf.groupBy(F.input_file_name().alias("_f")).agg(*aggs).collect()
-        out: dict[str, tuple[int, dict]] = {}
+        out: dict[str, tuple[int, dict, dict]] = {}
         for r in rows:
             stats: dict[str, list[Any]] = {}
+            nulls = {c: r[f"_nn_{c}"] for c in present}
             for c in present:
                 mn, mx = r[f"_mn_{c}"], r[f"_mx_{c}"]
                 if mn is None or mx is None:
@@ -1331,7 +1366,7 @@ class LakeTable:
                     # aware values normalize to the same frame)
                     mn, mx = _utc_naive(mn).isoformat(), _utc_naive(mx).isoformat()
                 stats[c] = [mn, mx]
-            out[_staged_rel(staging, r["_f"])] = (r["_rows"], stats)
+            out[_staged_rel(staging, r["_f"])] = (r["_rows"], stats, nulls)
         return out
 
     def _ndv_sketches_via_spark(
@@ -3524,11 +3559,12 @@ class LakeTable:
         probe (a list groups by the composite tuple, e.g. day AND
         region), O(metadata) at 100 TB.  Same refuse-and-fallback
         contract: ``None`` whenever any live file predates the spec (no
-        tuple key), carries a null tuple value (hive folds null/empty —
-        ambiguous), a column isn't identity-partitioned, equality deletes
-        are outstanding, or a per-group extremum is requested under any
-        deletes.  Grouped COUNTS stay exact under pure position deletes
-        (per-file masked-address counts subtract per group).
+        tuple key), carries a null tuple value (files staged before ``''``
+        was kept apart from NULL recorded both as null), a column isn't
+        identity-partitioned, equality deletes are outstanding, or a
+        per-group extremum is requested under any deletes.  Grouped COUNTS
+        stay exact under pure position deletes (per-file masked-address
+        counts subtract per group).
 
         ``distinct=[cols]`` (grouped form) adds EXACT ``ndv_<col>``
         per-group distinct counts from the per-file KMV sketches — the
@@ -3893,6 +3929,7 @@ class LakeTable:
                 # entries rename their embedded column name)
                 sketches={_sketch_key_rename(k, _col_rename): v
                           for k, v in f.sketches.items()},
+                null_counts={_col_rename(k): v for k, v in f.null_counts.items()},
             )
 
         new_refs: list[ManifestRef] = []
@@ -4089,8 +4126,11 @@ class LakeTable:
             def _guard(f: DataFile) -> DataFile:
                 stats = dict(f.stats)
                 stats.pop(name, None)  # stale stats describe the DROPPED values
+                nulls = dict(f.null_counts)
+                nulls.pop(name, None)
                 if default is not None:
                     stats[name] = [default, default]
+                    nulls[name] = 0
                 sketches = dict(f.sketches)
                 sketches.pop(name, None)  # ditto for NDV sketches
                 sketches.pop(f"bloom:{name}", None)  # and manifest blooms
@@ -4103,6 +4143,7 @@ class LakeTable:
                     sequence=f.sequence,
                     names={**f.names, name: None},
                     sketches=sketches,
+                    null_counts=nulls,
                 )
 
             manifests = []

@@ -27,6 +27,7 @@ for small batches) across executors.
 from __future__ import annotations
 
 import logging
+import os
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -57,7 +58,8 @@ DEFAULT_HARD_DELETE_COLUMN = "_dlt_deleted_at"
 BROADCAST_BATCH_ROWS = 1_000_000
 
 #: dynamic partition overwrite refuses batches spanning more distinct
-#: partition tuples than this — the driver-side tuple set must stay bounded
+#: partition tuples than this — such a batch almost certainly comes from a
+#: spec partitioning on a high-cardinality column
 REPLACE_PARTITION_MAX = 10_000
 
 
@@ -517,8 +519,6 @@ class LakeWriter:
 
     # -- dynamic partition overwrite ---------------------------------------
 
-    _NULL_TOKEN = "__NULL__"
-
     @staticmethod
     def _partition_exprs(partition_spec: list[dict]):
         if not partition_spec:
@@ -527,6 +527,13 @@ class LakeWriter:
 
         return partition_columns([PartitionField(**p) for p in partition_spec])
 
+    @staticmethod
+    def _may_hold(recorded, value) -> bool:
+        """Can a recorded partition value stand for the staged ``value``?
+        A recorded None is NULL, or either NULL or ``''`` in files staged
+        before the two were kept apart."""
+        return value in (None, "") if recorded is None else str(recorded) == value
+
     def _replace_partitions(
         self, table, batch: DataFrame, target_schema, snap, summary: dict,
         bloom: list[str] | None = None, ndv: list[str] | None = None,
@@ -534,12 +541,16 @@ class LakeWriter:
         """INSERT OVERWRITE of only the partitions present in the batch
         (Iceberg ``overwritePartitions``): one atomic snapshot where files
         of incoming partitions are replaced, all other partitions' files
-        carry over untouched.
+        carry over untouched.  The batch is staged first and the incoming
+        tuples are read off the staged files' partition dicts — the way
+        Spark's own dynamic overwrite learns them from its task commit
+        messages — so finding them runs no Spark job.
 
         Files written before partition metadata existed (empty partition
-        dict) are handled copy-on-write: their rows OUTSIDE the incoming
-        partitions are rewritten and kept — correct under mixed-layout
-        history at the cost of rewriting only those legacy files."""
+        dict), and files whose recorded None may stand for an incoming
+        NULL or ``''``, are handled copy-on-write: their rows OUTSIDE the
+        incoming partitions are rewritten and kept — correct under
+        mixed-layout history at the cost of rewriting only those files."""
         from dlt_iceberg_spark.partition import PartitionField, partition_columns
 
         pspec = [PartitionField(**p) for p in snap.partition_spec]
@@ -554,23 +565,16 @@ class LakeWriter:
             snap = table.fold_deletes()
         pcols = partition_columns(pspec)
         names = [n for n, _ in pcols]
-        str_exprs = [
-            F.coalesce(expr.cast("string"), F.lit(self._NULL_TOKEN)).alias(n)
-            for n, expr in pcols
-        ]
-        # bounded driver collect (same cap-and-refuse as the matview/rollup
-        # key pushdowns): Spark's own dynamic partition overwrite collects
-        # the incoming tuples too, but a batch spanning >REPLACE_PARTITION_MAX
-        # partitions is almost certainly a mis-declared spec (partitioning on
-        # a high-cardinality column) — refuse with the diagnosis instead of
-        # materializing an unbounded set on the driver
-        bounded = (
-            batch.select(*str_exprs)
-            .distinct()
-            .limit(REPLACE_PARTITION_MAX + 1)
-            .collect()
+        new_files = table.stage_dataframe(
+            batch, partition_exprs=pcols, bloom_columns=bloom, ndv_columns=ndv
         )
-        if len(bounded) > REPLACE_PARTITION_MAX:
+        incoming = {tuple(f.partition[n] for n in names) for f in new_files}
+        if len(incoming) > REPLACE_PARTITION_MAX:
+            # almost certainly a mis-declared spec (partitioning on a
+            # high-cardinality column): refuse with the diagnosis, land no
+            # commit and leave no staged file behind
+            for f in new_files:
+                table._io.remove(os.path.join(table.location, f.path))
             raise ValueError(
                 f"replace batch spans more than {REPLACE_PARTITION_MAX} "
                 f"distinct partition tuples of ({', '.join(names)}) — this "
@@ -579,50 +583,58 @@ class LakeWriter:
                 "(bucket/truncate the column) or use the full 'replace' "
                 "disposition"
             )
-        incoming = {tuple(r) for r in bounded}
 
         # manifest-level prune first: a manifest whose partition-value
         # summary can't contain ANY incoming tuple passes through by
         # reference, unread — dynamic overwrite into an 800k-file table
         # touches only the manifests holding the replaced partitions
-        def _norm(v):
-            return self._NULL_TOKEN if v is None else str(v)
-
         from dlt_iceberg_spark.lake.manifest import read_manifest
 
+        may_hold = self._may_hold
         kept_refs, candidates = [], list(snap.inline_files)
         for ref in snap.manifests:
-            may_hold = any(
+            summaries = [ref.partitions.get(n) for n in names]
+            if any(
                 all(
-                    ref.partitions.get(n) is None
-                    or t[i] in {_norm(s) for s in ref.partitions[n]}
-                    for i, n in enumerate(names)
+                    vals is None or any(may_hold(r, v) for r in vals)
+                    for vals, v in zip(summaries, t)
                 )
                 for t in incoming
-            )
-            if may_hold:
+            ):
                 candidates.extend(read_manifest(table.location, ref))
             else:
                 kept_refs.append(ref)
 
         keep, drop, legacy = [], [], []
         for f in candidates:
-            if all(n in f.partition for n in names):
-                t = tuple(_norm(f.partition[n]) for n in names)
-                (drop if t in incoming else keep).append(f)
-            else:
+            if not all(n in f.partition for n in names):
                 legacy.append(f)
+                continue
+            rec = [f.partition[n] for n in names]
+            t = tuple(None if v is None else str(v) for v in rec)
+            if None not in t:
+                (drop if t in incoming else keep).append(f)
+            elif any(all(map(may_hold, t, u)) for u in incoming):
+                legacy.append(f)
+            else:
+                keep.append(f)
         rewritten = []
         if legacy:
-            key = F.concat_ws("\x1f", *[e for e in str_exprs])
-            incoming_keys = ["\x1f".join(t) for t in incoming]
+            # exact tuple key: NULL and '' encode apart
+            key = F.concat_ws(
+                "\x1f",
+                *[
+                    F.coalesce(F.concat(F.lit("v"), e.cast("string")), F.lit("n"))
+                    for _, e in pcols
+                ],
+            )
+            incoming_keys = [
+                "\x1f".join("n" if v is None else "v" + v for v in t) for t in incoming
+            ]
             remaining = table.read_files(legacy).filter(~key.isin(incoming_keys))
             rewritten = table.stage_dataframe(
                 remaining, partition_exprs=pcols, bloom_columns=bloom, ndv_columns=ndv
             )
-        new_files = table.stage_dataframe(
-            batch, partition_exprs=pcols, bloom_columns=bloom, ndv_columns=ndv
-        )
         table.commit(
             None,
             target_schema,

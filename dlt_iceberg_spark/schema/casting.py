@@ -174,17 +174,30 @@ def cast_dataframe_safe(
     df: DataFrame, target: T.StructType, strict: bool = False
 ) -> DataFrame:
     """Validate, null-fill, reorder, cast — one ``select`` (no shuffle),
-    mirroring cast_table_safe (schema_casting.py:414-490)."""
-    validate_cast(df.schema, target, strict=strict)
-    src_names = set(df.columns)
+    mirroring cast_table_safe (schema_casting.py:414-490).
+
+    A batch already in the target's names, order and types is returned as
+    ``df`` itself.  Otherwise only the columns whose type differs are
+    wrapped in a cast; matching columns pass by name.  Each PySpark Column
+    call is several py4j round-trips, and a load's batch usually matches
+    its table already."""
+    source = df.schema
+    validate_cast(source, target, strict=strict)
+    if [(f.name, f.dataType) for f in source.fields] == [
+        (f.name, f.dataType) for f in target.fields
+    ]:
+        return df
+    src_types = {f.name: f.dataType for f in source.fields}
     cols = []
     for f in target.fields:
-        if f.name in src_names:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        else:
+        if f.name not in src_types:
             # Iceberg v3 write-default: a batch omitting a defaulted column
             # lands the constant, not NULL (add_column(default=...) sets
             # both keys; a bare initial-default still null-fills here)
             dflt = (f.metadata or {}).get("write-default")
             cols.append(F.lit(dflt).cast(f.dataType).alias(f.name))
+        elif src_types[f.name] == f.dataType:
+            cols.append(f.name)
+        else:
+            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
     return df.select(*cols)

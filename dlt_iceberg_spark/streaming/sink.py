@@ -247,13 +247,14 @@ class _LakeStreamWriter(DataSourceStreamArrowWriter):
         abs_path = os.path.join(self.location, rel)
         os.makedirs(os.path.dirname(abs_path), exist_ok=True)
         pq.write_table(tbl, abs_path)
-        stats = {}
+        stats, nulls = {}, {}
         import pyarrow.compute as pc
 
         for col in self.prunable:
             if col not in tbl.column_names:
                 continue
             c = tbl.column(col)
+            nulls[col] = c.null_count
             if c.null_count == len(c):
                 continue
             mm = pc.min_max(c).as_py()
@@ -265,6 +266,7 @@ class _LakeStreamWriter(DataSourceStreamArrowWriter):
             "rows": tbl.num_rows,
             "bytes": os.path.getsize(abs_path),
             "stats": stats,
+            "null_counts": nulls,
             "partition": partition,
         }
 
@@ -343,6 +345,7 @@ class _LakeStreamWriter(DataSourceStreamArrowWriter):
                 bytes=f["bytes"],
                 stats=f["stats"],
                 partition=f.get("partition") or {},
+                null_counts=f["null_counts"],
             )
             for m in messages
             if m is not None

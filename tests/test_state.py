@@ -322,7 +322,12 @@ def test_ledger_fresh_check_and_append_launch_no_spark_jobs(spark, warehouse):
     for i in range(20):
         store.store_completed_load(f"load-{i:03d}", "s", "h")
     # the count sees jobs when there are some
-    assert _spark_jobs(spark, lambda: store.load_recorded("load-007")) >= 1
+    ledger = store.catalog.load_table("ds", "_dlt_loads")
+    assert _spark_jobs(spark, lambda: ledger.read().collect()) >= 1
+    # a recorded id: its one-row file's stats prove the match, unopened
+    found = []
+    assert _spark_jobs(spark, lambda: found.append(store.load_recorded("load-007"))) == 0
+    assert found == [True]
     # unseen ids inside and outside the recorded range
     assert _spark_jobs(spark, lambda: store.load_recorded("load-007b")) == 0
     assert _spark_jobs(spark, lambda: store.load_recorded("load-999")) == 0
