@@ -135,8 +135,9 @@ class Dataset:
 
         ``distinct=[cols]`` adds ``ndv_<col>`` keys: metadata-only from
         the per-file KMV sketches when every live file carries one
-        (write-time ``ndv_sketch_columns`` or a ``compute_table_stats``
-        backfill).  Global form: EXACT whenever the true NDV ≤ k=256, the
+        (every write and rewrite sketches the table's recorded
+        ``ndv_sketch_columns``; ``compute_table_stats`` backfills
+        others).  Global form: EXACT whenever the true NDV ≤ k=256, the
         KMV estimate above it.  Grouped form ("distinct users per day"):
         EXACT-only — every file sketch must be complete in the current
         hash frame, else the whole probe falls back to an exact
@@ -191,14 +192,15 @@ class Dataset:
         join sizing ("how much do these two corpora share?").
 
         Metadata path: when BOTH tables carry current-frame NDV sketches
-        for the column (write-time ``ndv_sketch_columns`` or a
-        ``compute_table_stats`` backfill), the two snapshot-level KMV
+        for the column (the recorded ``ndv_sketch_columns`` every write
+        and rewrite sketches, or a ``compute_table_stats`` backfill), the
+        two snapshot-level KMV
         sketches combine driver-side in O(k) — ZERO scans of either table
         at ANY size.  EXACT when both sketches are complete (each side's
         true NDV ≤ k=256); the standard theta-sketch overlap estimate
         otherwise.  Falls back to exact distinct/intersection scans when
-        either side is unsketched (MoR deletes, compacted files, mixed
-        hash frames).
+        either side is unsketched (MoR deletes, files written before the
+        column was recorded, mixed hash frames).
 
         Returns ``{distinct_a, distinct_b, intersection, jaccard,
         exact}`` (counts as floats, matching

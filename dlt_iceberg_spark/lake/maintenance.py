@@ -21,11 +21,20 @@ from __future__ import annotations
 
 import os
 import time
+import urllib.parse
 import warnings
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
-from dlt_iceberg_spark.lake.table import DataFile, LakeTable
+from dlt_iceberg_spark.lake.table import (
+    NDV_COLUMN_PROP,
+    DataFile,
+    LakeTable,
+    _file_metadata_via_spark,
+    recorded_columns,
+    with_recorded_columns,
+)
+from dlt_iceberg_spark.partition import partition_exprs
 
 #: compaction default target (Iceberg's write.target-file-size-bytes default)
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
@@ -103,13 +112,8 @@ def compact_table(
     # Repartitioning by the transform expressions lands each tuple in one
     # task → one output file per partition value, the binpack floor a
     # hive-layouted table actually admits.
-    pcols = None
-    if snap.partition_spec:
-        from dlt_iceberg_spark.partition import PartitionField, partition_columns
-
-        pcols = partition_columns(
-            [PartitionField(**p) for p in snap.partition_spec]
-        )
+    pcols = partition_exprs(snap.partition_spec)
+    if pcols:
         df = df.repartition(n_out, *[e for _, e in pcols])
         if sort_cols:
             df = df.sortWithinPartitions(*sort_cols)
@@ -148,6 +152,18 @@ def compact_table(
     return CompactionResult(len(small), len(keep), len(new_files), small_bytes)
 
 
+def _metadata_by_path(table: LakeTable, files: list[DataFile], schema, **kw) -> dict:
+    """:func:`_file_metadata_via_spark` over ``files``, keyed by absolute
+    path."""
+    out = {}
+    for uri, meta in _file_metadata_via_spark(table.read_files(files), schema, **kw).items():
+        path = urllib.parse.unquote(uri)
+        if path.startswith("file:"):
+            path = "/" + path[len("file:") :].lstrip("/")
+        out[path] = meta
+    return out
+
+
 def backfill_stats(table: LakeTable, columns: list[str] | None = None) -> int:
     """Recompute per-file [min, max] stats for live data files that LACK
     them, WITHOUT rewriting any data — one distributed footer-equivalent
@@ -165,44 +181,29 @@ def backfill_stats(table: LakeTable, columns: list[str] | None = None) -> int:
     Returns the number of files that gained stats.  ``columns`` limits the
     stat set (default: every prunable-typed column).
     """
-    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
-    from dlt_iceberg_spark.lake.table import _STATS_TYPES, iso_norm_value
+    from dlt_iceberg_spark.lake.table import _STATS_TYPES
 
     snap = table.snapshot()
     if snap is None:
         raise FileNotFoundError(f"no such table: {table.location}")
-    prunable = [
-        f.name
-        for f in snap.schema.fields
-        if f.dataType.simpleString() in _STATS_TYPES
-        and (columns is None or f.name in columns)
-    ]
+    prunable = T.StructType(
+        [
+            f
+            for f in snap.schema.fields
+            if f.dataType.simpleString() in _STATS_TYPES
+            and (columns is None or f.name in columns)
+        ]
+    )
     if not prunable:
         return 0
-    missing = [f for f in snap.files if any(c not in f.stats for c in prunable)]
+    missing = [f for f in snap.files if any(c not in f.stats for c in prunable.names)]
     if not missing:
         return 0
-    sdf = table.read_files(missing)
-    aggs = [F.count(F.lit(1)).alias("_rows")]
-    for c in prunable:
-        aggs.append(F.min(c).alias(f"_mn_{c}"))
-        aggs.append(F.max(c).alias(f"_mx_{c}"))
-    rows = sdf.groupBy(F.input_file_name().alias("_f")).agg(*aggs).collect()
-    import urllib.parse
-
-    by_path: dict[str, dict] = {}
-    for r in rows:
-        raw = urllib.parse.unquote(r["_f"])
-        if raw.startswith("file:"):
-            raw = "/" + raw[len("file:") :].lstrip("/")
-        stats = {}
-        for c in prunable:
-            mn, mx = r[f"_mn_{c}"], r[f"_mx_{c}"]
-            if mn is None or mx is None:
-                continue
-            stats[c] = [iso_norm_value(mn), iso_norm_value(mx)]
-        by_path[raw] = stats
+    by_path = {
+        p: stats for p, (_, stats, *_) in _metadata_by_path(table, missing, prunable).items()
+    }
     updated = []
     n_gained = 0
     for f in snap.files:
@@ -245,7 +246,6 @@ def compute_table_stats(
 
     Returns the number of files that gained (or refreshed) sketches.
     """
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     from dlt_iceberg_spark.lake.manifest import NDV_K
@@ -274,31 +274,12 @@ def compute_table_stats(
     ]
     if not missing:
         return 0
-    sdf = table.read_files(missing)
-    aggs = [
-        F.slice(
-            F.array_sort(
-                F.collect_set(F.when(F.col(c).isNotNull(), F.xxhash64(F.col(c))))
-            ),
-            1,
-            k + 1,
-        ).alias(f"_kmv_{c}")
-        for c in columns
-    ]
-    rows = sdf.groupBy(F.input_file_name().alias("_f")).agg(*aggs).collect()
-    import urllib.parse
-
-    by_path: dict[str, dict] = {}
-    for r in rows:
-        raw = urllib.parse.unquote(r["_f"])
-        if raw.startswith("file:"):
-            raw = "/" + raw[len("file:") :].lstrip("/")
-        sk = {}
-        for c in columns:
-            hs = list(r[f"_kmv_{c}"] or [])
-            complete = len(hs) <= k
-            sk[c] = {"h": hs if complete else hs[:k], "c": complete, "t": tags[c]}
-        by_path[raw] = sk
+    by_path = {
+        p: sk
+        for p, (*_, sk) in _metadata_by_path(
+            table, missing, snap.schema, stats=False, ndv_columns=columns, k=k
+        ).items()
+    }
     updated = []
     n_gained = 0
     refused: list[str] = []
@@ -331,12 +312,17 @@ def compute_table_stats(
         # nothing to fold: committing would churn an 'analyze' snapshot
         # per maintain() cycle forever while approx_distinct stays refused
         return 0
+    recorded = recorded_columns(snap.properties, NDV_COLUMN_PROP)
     table.commit(
         updated,
         snap.schema,
         "analyze",  # layout-only op: changelog readers skip it
         snap.version,
         partition_spec=snap.partition_spec,
+        # record the columns so every later write and rewrite sketches them
+        properties=with_recorded_columns(
+            snap.properties, NDV_COLUMN_PROP, recorded + list(columns)
+        ),
         summary={"ndv-analyze": ",".join(columns), "files-gaining-sketches": n_gained},
         delete_files=list(snap.delete_files),
     )
@@ -567,17 +553,12 @@ def rewrite_zorder(
     n_out = max(1, -(-total_bytes // target_file_bytes))  # ceil
     df = table.read()
     z = zorder_value(df, columns, bits=bits)
-    pcols = None
-    if snap.partition_spec:
+    pcols = partition_exprs(snap.partition_spec)
+    if pcols:
         # hive-partitioned table: the partition layout dominates — z-order
         # clusters WITHIN each partition (Iceberg's rewrite sort order is
         # likewise applied inside the spec's grouping), and staging with
         # the spec keeps every rewritten file's partition tuple
-        from dlt_iceberg_spark.partition import PartitionField, partition_columns
-
-        pcols = partition_columns(
-            [PartitionField(**p) for p in snap.partition_spec]
-        )
         clustered = (
             df.withColumn("_zorder", z)
             .repartition(n_out, *[e for _, e in pcols])
@@ -746,12 +727,6 @@ class MaintenancePolicy:
     #: orphan cleanup (staging dirs / files from crashed commits)
     remove_orphans: bool = True
     orphans_older_than: timedelta = timedelta(days=3)
-    #: re-ANALYZE these columns whenever live files lack current-frame NDV
-    #: sketches (compaction/fold rewrites drop them) — keeps
-    #: approx_distinct/Dataset.aggregate(distinct=...) answerable without
-    #: a manual compute_table_stats after every maintenance cycle.  None =
-    #: NDV upkeep not managed here.
-    analyze_ndv_columns: list[str] | None = None
     #: vector indexes only: split the hottest inverted list
     #: (operators/vector_index.split_list — O(hot list), not O(index))
     #: whenever index_stats skew exceeds this.  None = never rebalance.
@@ -855,7 +830,9 @@ def maintain(table: LakeTable, policy: MaintenancePolicy | None = None) -> dict:
     Order matters: deletes fold BEFORE compaction (compaction folds them
     anyway for safety, but folding first keeps one rewrite); expiry runs
     after rewrites so superseded files age out; orphan removal last so a
-    crashed prior maintenance run's leftovers are swept too."""
+    crashed prior maintenance run's leftovers are swept too.  The table's
+    recorded NDV columns are then backfilled (``compute_table_stats``) on
+    any live file without a current-frame sketch."""
     policy = policy or MaintenancePolicy()
     report: dict[str, object] = {}
     snap = table.snapshot()
@@ -903,11 +880,10 @@ def maintain(table: LakeTable, policy: MaintenancePolicy | None = None) -> dict:
     if policy.remove_orphans:
         removed = remove_orphan_files(table, older_than=policy.orphans_older_than)
         report["orphans_removed"] = {k: len(v) for k, v in removed.items()}
-    # stats last: the rewrites above produce sketch-less files, so the
-    # ANALYZE backfill here is what keeps NDV metadata answerable across
-    # maintenance cycles (files already sketched pass through untouched)
-    if policy.analyze_ndv_columns:
-        report["analyzed_files"] = compute_table_stats(
-            table, list(policy.analyze_ndv_columns)
-        )
+    # stats last: backfill the recorded NDV columns on files that lack a
+    # current-frame sketch (rewrites keep sketches, so usually none — a
+    # no-op without a Spark job)
+    ndv = recorded_columns(table.snapshot().properties, NDV_COLUMN_PROP)
+    if ndv:
+        report["analyzed_files"] = compute_table_stats(table, ndv)
     return report

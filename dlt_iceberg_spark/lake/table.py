@@ -69,6 +69,7 @@ from dlt_iceberg_spark.lake.manifest import (  # noqa: F401 (re-exported)
     read_manifest,
     write_chunked,
 )
+from dlt_iceberg_spark.partition import partition_exprs
 
 #: per-group distinct-hash ceiling for grouped NDV metadata aggregates —
 #: above it the group refuses into the scan rather than shipping a
@@ -239,6 +240,52 @@ def _aware_in_session(v: Any, tz_name: str):
 
 #: prefix of every non-NULL ``_p_*`` staging value (stage_dataframe)
 _PART_PREFIX = "v"
+
+#: table-property families naming the columns every write sketches —
+#: Iceberg's per-column parquet bloom key, and a repo-local twin for KMV
+#: NDV sketches.  ``<prefix><col>=true``; stage_dataframe reads them.
+BLOOM_COLUMN_PROP = "write.parquet.bloom-filter-enabled.column."
+NDV_COLUMN_PROP = "write.ndv-sketch.column."
+
+#: properties holding a comma-separated column list
+_COLUMN_LIST_PROPS = ("write.sort-order", "write.zorder-by")
+
+
+def recorded_columns(properties: dict, prefix: str) -> list[str]:
+    """Columns the ``prefix`` property family enables, in record order."""
+    return [
+        k[len(prefix):]
+        for k, v in properties.items()
+        if k.startswith(prefix) and v == "true"
+    ]
+
+
+def with_recorded_columns(properties: dict, prefix: str, columns) -> dict:
+    """``properties`` with the ``prefix`` family replaced by ``columns``."""
+    out = {k: v for k, v in properties.items() if not k.startswith(prefix)}
+    out.update({prefix + c: "true" for c in columns})
+    return out
+
+
+def rename_column_properties(
+    properties: dict, old: str, new: str | None
+) -> dict:
+    """``properties`` with every column-naming entry re-keyed from ``old``
+    to ``new`` — or, with ``new=None`` (a drop), without ``old``."""
+    out: dict = {}
+    for k, v in properties.items():
+        if k in _COLUMN_LIST_PROPS:
+            cols = [new if c == old else c for c in v.split(",")]
+            v = ",".join(c for c in cols if c)
+            if not v:
+                continue
+        else:
+            for prefix in (BLOOM_COLUMN_PROP, NDV_COLUMN_PROP):
+                if k == prefix + old:
+                    k = prefix + new if new else None
+        if k is not None:
+            out[k] = v
+    return out
 
 #: residual Spark filters for `read(where=...)` predicates
 _OPS = {
@@ -617,9 +664,9 @@ class Snapshot:
         - MoR delete files outstanding (masked rows may hide distinct
           values — NDV from raw files would be an upper bound, and this
           surface only returns numbers it can stand behind),
-        - any live file lacking the column's sketch (unsketched write,
-          compaction/fold rewrite) — re-establish with
-          ``maintenance.compute_table_stats``, or
+        - any live file lacking the column's sketch (written before the
+          column was recorded, or staged with explicit ``ndv_columns``)
+          — re-establish with ``maintenance.compute_table_stats``, or
         - mixed hash frames (sketches taken before and after a type
           promotion; xxhash64 hashes int and long differently).
 
@@ -676,6 +723,7 @@ def _scan_staged_file(
     prunable = {name for name, tag in tags.items() if tag in _STATS_TYPES}
     nulls: dict[str, int] = {}
     uncounted: set[str] = set()  # some row group lacks the NULL count
+    unbounded: set[str] = set()  # some row group holds a NaN bound
     for rg in range(md.num_row_groups):
         g = md.row_group(rg)
         for ci in range(g.num_columns):
@@ -690,6 +738,9 @@ def _scan_staged_file(
             if col.statistics is None or not col.statistics.has_min_max:
                 continue
             mn, mx = col.statistics.min, col.statistics.max
+            if _nan_bound(mn, mx):
+                unbounded.add(name)
+                continue
             if isinstance(mn, bytes):
                 try:
                     mn, mx = mn.decode(), mx.decode()
@@ -710,7 +761,116 @@ def _scan_staged_file(
             else:
                 stats[name] = [min(cur[0], mn), max(cur[1], mx)]
     nulls = {c: n for c, n in nulls.items() if c not in uncounted}
+    stats = {c: b for c, b in stats.items() if c not in unbounded}
     return md.num_rows, io.size(abs_path), stats, nulls, blooms
+
+
+def _nan_bound(mn: Any, mx: Any) -> bool:
+    """Is either bound a float NaN?  Every comparison against NaN is
+    false, so such a range would prune files holding matching rows; a
+    column with NaN records no range and stays unprunable."""
+    return any(isinstance(b, float) and b != b for b in (mn, mx))
+
+
+def _file_metadata_via_spark(
+    sdf: DataFrame,
+    schema: T.StructType,
+    stats: bool = True,
+    bloom_columns=(),
+    ndv_columns=(),
+    k: int = NDV_K,
+) -> dict[str, tuple[int, dict, dict, dict]]:
+    """Per-file ``(rows, {col: [min, max]}, {col: null count}, sketches)``
+    of every file ``sdf`` scans, keyed by raw ``input_file_name()``: ONE
+    distributed ``groupBy(input_file_name())`` job, O(files) tiny rows on
+    the driver.  ``schema`` gives the column types (the hash frames).
+
+    - ``stats``: min/max and NULL counts of every prunable column — the
+      footer's content, for files the driver should not open.
+    - ``ndv_columns``: KMV sketches — the k smallest distinct non-null
+      xxhash64 values, sliced at k+1 so completeness is knowable (≤ k
+      survivors = exact NDV).  Nested columns are skipped.
+    - ``bloom_columns``: manifest blooms (lake/bloom.py), bit-identical to
+      :func:`_scan_staged_file`'s.  Per value the JVM computes BLOOM_K
+      positions encoded ``col_idx * m + pos``; ``posexplode_outer``
+      spreads them over rows for one ``collect_set`` (state bounded by m
+      bits per column, not by rows), and only position-0 rows count
+      toward ``rows`` and NULL counts.  Only BLOOM_FRAMES types are
+      built; saturated blooms are left out."""
+    import numpy as np
+
+    from dlt_iceberg_spark.lake.bloom import (
+        BLOOM_FRAMES,
+        BLOOM_K,
+        BLOOM_M_BITS,
+        bloom_key,
+        pack_positions,
+    )
+
+    dtypes = {f.name: f.dataType for f in schema.fields if f.name in sdf.columns}
+    tags = {c: dt.simpleString() for c, dt in dtypes.items()}
+    prunable = [c for c in dtypes if tags[c] in _STATS_TYPES] if stats else []
+    nested = (T.ArrayType, T.MapType, T.StructType)
+    ndv = [
+        c for c in dict.fromkeys(ndv_columns)
+        if c in dtypes and not isinstance(dtypes[c], nested)
+    ]
+    blooms = [c for c in dict.fromkeys(bloom_columns) if tags.get(c) in BLOOM_FRAMES]
+    m = BLOOM_M_BITS
+    first = F.lit(True)
+    if blooms:
+        arrs = []
+        for ci, c in enumerate(blooms):
+            h = F.xxhash64(F.col(c))
+            h1, h2 = F.shiftrightunsigned(h, 32), h.bitwiseAND(F.lit(0xFFFFFFFF))
+            poss = [
+                (h1 + F.lit(i) * h2).bitwiseAND(F.lit(m - 1)) + F.lit(ci * m)
+                for i in range(BLOOM_K)
+            ]
+            arrs.append(
+                F.when(F.col(c).isNotNull(), F.array(*poss)).otherwise(
+                    F.array().cast("array<bigint>")
+                )
+            )
+        sdf = sdf.select(
+            *dict.fromkeys(prunable + ndv),
+            F.input_file_name().alias("__f"),
+            F.posexplode_outer(F.flatten(F.array(*arrs))).alias("__p", "__e"),
+        )
+        first = F.coalesce(F.col("__p") == 0, F.lit(True))
+    else:
+        sdf = sdf.withColumn("__f", F.input_file_name())
+    aggs = [F.count_if(first).alias("_rows")]
+    for i, c in enumerate(prunable):
+        aggs += [
+            F.min(c).alias(f"_mn{i}"),
+            F.max(c).alias(f"_mx{i}"),
+            F.count_if(first & F.col(c).isNull()).alias(f"_nn{i}"),
+        ]
+    for i, c in enumerate(ndv):
+        hashes = F.collect_set(F.when(F.col(c).isNotNull(), F.xxhash64(F.col(c))))
+        aggs.append(F.slice(F.array_sort(hashes), 1, k + 1).alias(f"_kmv{i}"))
+    if blooms:
+        aggs.append(F.collect_set("__e").alias("_es"))
+    out: dict[str, tuple[int, dict, dict, dict]] = {}
+    for r in sdf.groupBy("__f").agg(*aggs).collect():
+        bounds = {
+            c: [iso_norm_value(r[f"_mn{i}"]), iso_norm_value(r[f"_mx{i}"])]
+            for i, c in enumerate(prunable)
+            if r[f"_mn{i}"] is not None and not _nan_bound(r[f"_mn{i}"], r[f"_mx{i}"])
+        }
+        sketches: dict[str, dict] = {}
+        for i, c in enumerate(ndv):
+            hs = list(r[f"_kmv{i}"] or [])
+            sketches[c] = {"h": hs[:k], "c": len(hs) <= k, "t": tags[c]}
+        es = np.asarray(r["_es"] if blooms else [], dtype=np.int64)
+        for ci, c in enumerate(blooms):
+            packed = pack_positions(es[es // m == ci] % m, m)
+            if packed is not None:  # None = saturated, not worth bytes
+                sketches[bloom_key(c)] = {"b": packed, "m": m, "k": BLOOM_K, "t": tags[c]}
+        nulls = {c: r[f"_nn{i}"] for i, c in enumerate(prunable)}
+        out[r["__f"]] = (r["_rows"], bounds, nulls, sketches)
+    return out
 
 
 def _staged_rel(staging: str, uri: str) -> str:
@@ -1211,15 +1371,31 @@ class LakeTable:
         Staging dirs are flattened to ``data/<uuid>.parquet``, so the
         encoding never outlives the call.
 
+        Sketches: ``bloom_columns`` get parquet row-group blooms and
+        manifest blooms, ``ndv_columns`` KMV NDV sketches.  Each defaults
+        (None) to the columns the table's properties record
+        (``BLOOM_COLUMN_PROP`` / ``NDV_COLUMN_PROP``), so every rewrite of
+        a table keeps its files' sketches; columns the frame lacks are
+        skipped.
+
         Stats collection: on local tables one driver pass per staged file
         (:func:`_scan_staged_file`) reads the footer stats AND builds the
-        manifest blooms for ``bloom_columns`` from just those column
-        chunks — no Spark job beyond the write.  Non-local FileIO collects
-        per-file stats and blooms with distributed Spark jobs over the
-        staging directory — pulling 128 MB data files through the driver
-        would be the exact anti-pattern manifests exist to avoid.  NDV
-        sketches (``ndv_columns``, opt-in) are always their own Spark job.
+        manifest blooms from just the bloom columns' chunks.  Non-local
+        FileIO collects per-file stats and blooms with one Spark job over
+        the staging directory (:func:`_file_metadata_via_spark`) — pulling
+        128 MB data files through the driver would be the exact
+        anti-pattern manifests exist to avoid.  NDV sketches ride that
+        job, or are its only content on local tables.
         """
+        if bloom_columns is None or ndv_columns is None:
+            snap = self.snapshot()
+            props = snap.properties if snap is not None else {}
+            if bloom_columns is None:
+                bloom_columns = recorded_columns(props, BLOOM_COLUMN_PROP)
+            if ndv_columns is None:
+                ndv_columns = recorded_columns(props, NDV_COLUMN_PROP)
+        bloom_columns = [c for c in bloom_columns if c in df.columns]
+        ndv_columns = [c for c in ndv_columns if c in df.columns]
         io = self._io
         io.makedirs(self._data_dir)
         staging = os.path.join(self.location, f"_staging_{uuid.uuid4().hex}")
@@ -1237,27 +1413,22 @@ class LakeTable:
         # on `=` probes — the Iceberg write-time recipe
         # (write.parquet.bloom-filter-enabled.column.*), crucial for
         # unsorted high-cardinality keys where min/max ranges are wide.
-        for c in bloom_columns or []:
-            if c in df.columns:
-                writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
+        for c in bloom_columns:
+            writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
         writer.parquet(staging)
         local = isinstance(io, LocalFileIO)
-        spark_stats = None if local else self._stats_via_spark(staging, df.schema)
-        # per-file KMV NDV sketches (opt-in): footers can't answer distinct
-        # counts, so this is its own distributed job over the staging dir
-        sketch_by_file = (
-            self._ndv_sketches_via_spark(staging, ndv_columns, df.schema)
-            if ndv_columns
-            else {}
-        )
-        # manifest-level blooms for the same columns: min/max stats can't
-        # skip files for scattered high-cardinality keys; these can (local
-        # tables build them in the per-file pass below)
-        if bloom_columns and not local:
-            for rel, blooms in self._blooms_via_spark(
-                staging, bloom_columns, df.schema
-            ).items():
-                sketch_by_file.setdefault(rel, {}).update(blooms)
+        by_file: dict[str, tuple[int, dict, dict, dict]] = {}
+        if not local or ndv_columns:
+            by_file = {
+                _staged_rel(staging, f): meta
+                for f, meta in _file_metadata_via_spark(
+                    self.spark.read.parquet(staging),
+                    df.schema,
+                    stats=not local,
+                    bloom_columns=() if local else bloom_columns,
+                    ndv_columns=ndv_columns,
+                ).items()
+            }
         staged: list[DataFile] = []
         for rel in io.walk_files(staging):
             if not rel.endswith(".parquet"):
@@ -1277,14 +1448,13 @@ class LakeTable:
             final_name = f"{uuid.uuid4().hex}.parquet"
             abs_final = os.path.join(self._data_dir, final_name)
             io.rename(os.path.join(staging, rel), abs_final)
-            sketches = sketch_by_file.get(rel, {})
+            rows, stats, nulls, sketches = by_file.get(rel, (0, {}, {}, {}))
             if local:
                 rows, nbytes, stats, nulls, blooms = _scan_staged_file(
                     abs_final, df.schema, io, bloom_columns
                 )
                 sketches = {**sketches, **blooms}
             else:
-                rows, stats, nulls = spark_stats.get(rel, (0, {}, {}))
                 nbytes = io.size(abs_final) if rows else 0
             if rows == 0:
                 io.remove(abs_final)
@@ -1329,183 +1499,6 @@ class LakeTable:
                 path=f"data/{name}", rows=n, bytes=nbytes, stats=stats, null_counts=nulls
             )
         ]
-
-    def _stats_via_spark(
-        self, staging: str, schema: T.StructType
-    ) -> dict[str, tuple[int, dict, dict]]:
-        """Per-file (rows, {col: [min, max]}, {col: null count}) for every
-        parquet file under ``staging``, computed as one distributed job
-        grouped by ``input_file_name()`` — O(files) tiny rows on the
-        driver, data never leaves the executors.  Keyed by path relative
-        to ``staging``."""
-        from datetime import date
-
-        prunable = [
-            f.name for f in schema.fields if f.dataType.simpleString() in _STATS_TYPES
-        ]
-        sdf = self.spark.read.parquet(staging)
-        present = [c for c in prunable if c in sdf.columns]
-        aggs = [F.count(F.lit(1)).alias("_rows")]
-        for c in present:
-            aggs.append(F.min(c).alias(f"_mn_{c}"))
-            aggs.append(F.max(c).alias(f"_mx_{c}"))
-            aggs.append(F.count_if(F.col(c).isNull()).alias(f"_nn_{c}"))
-        rows = sdf.groupBy(F.input_file_name().alias("_f")).agg(*aggs).collect()
-        out: dict[str, tuple[int, dict, dict]] = {}
-        for r in rows:
-            stats: dict[str, list[Any]] = {}
-            nulls = {c: r[f"_nn_{c}"] for c in present}
-            for c in present:
-                mn, mx = r[f"_mn_{c}"], r[f"_mx_{c}"]
-                if mn is None or mx is None:
-                    continue
-                if isinstance(mn, (date, datetime)):
-                    # same ISO encoding as the footer path: lexicographic
-                    # order == chronological, and it survives JSON manifests
-                    # (session TZ is UTC, so collected naives are UTC-naive;
-                    # aware values normalize to the same frame)
-                    mn, mx = _utc_naive(mn).isoformat(), _utc_naive(mx).isoformat()
-                stats[c] = [mn, mx]
-            out[_staged_rel(staging, r["_f"])] = (r["_rows"], stats, nulls)
-        return out
-
-    def _ndv_sketches_via_spark(
-        self,
-        staging: str,
-        columns: list[str],
-        schema: T.StructType,
-        k: int = NDV_K,
-    ) -> dict[str, dict]:
-        """Per-file KMV NDV sketches, ONE distributed job grouped by
-        ``input_file_name()`` — the write-time half of Iceberg's
-        ``compute_table_stats`` (theta sketches in Puffin files).
-
-        Per file the job keeps the k smallest distinct non-null xxhash64
-        values (sliced at k+1 so completeness is knowable: ≤ k survivors
-        means the file's FULL distinct set fit — exact NDV).  Aggregation
-        state is the file's distinct-hash set — bounded by the target file
-        size, the same bound the sketch-building job has in any engine,
-        and partial aggregation keeps it spread across executors.  Nested
-        columns are skipped (no meaningful hash frame).  Keyed by file
-        path relative to ``staging``, like :meth:`_stats_via_spark`."""
-        dtypes = {f.name: f.dataType for f in schema.fields}
-        sdf = self.spark.read.parquet(staging)
-        present = [
-            c
-            for c in columns
-            if c in sdf.columns
-            and c in dtypes
-            and not isinstance(dtypes[c], (T.ArrayType, T.MapType, T.StructType))
-        ]
-        if not present:
-            return {}
-        aggs = [
-            F.slice(
-                F.array_sort(
-                    F.collect_set(F.when(F.col(c).isNotNull(), F.xxhash64(F.col(c))))
-                ),
-                1,
-                k + 1,
-            ).alias(f"_kmv_{c}")
-            for c in present
-        ]
-        rows = sdf.groupBy(F.input_file_name().alias("_f")).agg(*aggs).collect()
-        out: dict[str, dict] = {}
-        for r in rows:
-            sk: dict[str, Any] = {}
-            for c in present:
-                hs = list(r[f"_kmv_{c}"] or [])
-                complete = len(hs) <= k
-                sk[c] = {
-                    "h": hs if complete else hs[:k],
-                    "c": complete,
-                    "t": dtypes[c].simpleString(),
-                }
-            out[_staged_rel(staging, r["_f"])] = sk
-        return out
-
-    def _blooms_via_spark(
-        self,
-        staging: str,
-        columns: list[str],
-        schema: T.StructType,
-    ) -> dict[str, dict]:
-        """Per-file manifest Bloom filters (lake/bloom.py) for non-local
-        FileIO, ONE distributed job grouped by ``input_file_name()`` — the
-        planning-level sibling of the parquet row-group blooms
-        ``stage_dataframe`` already writes.  Local tables build the same
-        bits on the driver (:func:`_scan_staged_file`).
-
-        Per value the JVM computes one ``xxhash64`` and k = BLOOM_K bit
-        positions (Guava-style two-halves double hashing), each encoded as
-        ``col_idx * m + pos`` so a single explode + ``collect_set`` covers
-        every bloom column at once.  Aggregation state is bounded by
-        m bits x columns per file — positions, not values, are collected —
-        so the job's memory is independent of file row count, unlike a
-        distinct-set sketch.  Map-side partial ``collect_set`` keeps the
-        shuffle at that same bound.  Only frames with exact Python probe
-        parity are built (BLOOM_FRAMES); other dtypes are skipped.  Keyed
-        by path relative to ``staging``, like :meth:`_stats_via_spark`."""
-        import numpy as np
-
-        from dlt_iceberg_spark.lake.bloom import (
-            BLOOM_FRAMES,
-            BLOOM_K,
-            BLOOM_M_BITS,
-            bloom_key,
-            pack_positions,
-        )
-
-        m, k = BLOOM_M_BITS, BLOOM_K
-        dtypes = {f.name: f.dataType for f in schema.fields}
-        sdf = self.spark.read.parquet(staging)
-        present = [
-            c
-            for c in columns
-            if c in sdf.columns
-            and c in dtypes
-            and dtypes[c].simpleString() in BLOOM_FRAMES
-        ]
-        if not present:
-            return {}
-        arrs = []
-        for ci, c in enumerate(present):
-            h = F.xxhash64(F.col(c))
-            h1 = F.shiftrightunsigned(h, 32)
-            h2 = h.bitwiseAND(F.lit(0xFFFFFFFF))
-            poss = [
-                (h1 + F.lit(i) * h2).bitwiseAND(F.lit(m - 1)) + F.lit(ci * m)
-                for i in range(k)
-            ]
-            arrs.append(
-                F.when(F.col(c).isNotNull(), F.array(*poss)).otherwise(
-                    F.array().cast("array<bigint>")
-                )
-            )
-        rows = (
-            sdf.select(
-                F.input_file_name().alias("_f"),
-                F.explode(F.flatten(F.array(*arrs))).alias("_e"),
-            )
-            .groupBy("_f")
-            .agg(F.collect_set("_e").alias("_es"))
-            .collect()
-        )
-        out: dict[str, dict] = {}
-        for r in rows:
-            es = np.asarray(r["_es"], dtype=np.int64)
-            blooms: dict[str, dict] = {}
-            for ci, c in enumerate(present):
-                packed = pack_positions(es[es // m == ci] % m, m)
-                if packed is not None:  # None = saturated, not worth bytes
-                    blooms[bloom_key(c)] = {
-                        "b": packed,
-                        "m": m,
-                        "k": k,
-                        "t": dtypes[c].simpleString(),
-                    }
-            out[_staged_rel(staging, r["_f"])] = blooms
-        return out
 
     def commit(
         self,
@@ -2410,8 +2403,10 @@ class LakeTable:
         """Metadata-only NDV per column (:meth:`Snapshot.approx_distinct`)
         — Iceberg's table-statistics surface (`compute_table_stats` theta
         sketches), answered in O(manifest refs) with ZERO data reads.
-        Sketches come from write-time ``ndv_sketch_columns`` or a
-        ``maintenance.compute_table_stats`` backfill.  ``None`` when
+        Every write and rewrite sketches the table's recorded NDV columns
+        (``ndv_sketch_columns``, ``NDV_COLUMN_PROP``); a
+        ``maintenance.compute_table_stats`` backfill covers files written
+        before.  ``None`` when
         metadata cannot answer (unsketched files, MoR deletes, mixed hash
         frames after a type promotion) — callers fall back to a scan
         (``Dataset.aggregate(distinct=...)`` does this transparently)."""
@@ -3022,7 +3017,9 @@ class LakeTable:
         """Write an equality-delete key set as parquet (invisible until the
         commit that carries it).  The merge-on-read write path: O(batch)
         work instead of rewriting every data file the keys touch."""
-        staged = self.stage_dataframe(keys_df.select(*equality_ids).distinct())
+        staged = self.stage_dataframe(
+            keys_df.select(*equality_ids).distinct(), bloom_columns=[], ndv_columns=[]
+        )
         return [
             DeleteFile(
                 path=f.path,
@@ -3072,7 +3069,7 @@ class LakeTable:
             F.col("__pd_path").alias("file_path"),
             F.col("__pd_pos").alias("pos"),
         )
-        staged = self.stage_dataframe(addressed)
+        staged = self.stage_dataframe(addressed, bloom_columns=[], ndv_columns=[])
         return [
             DeleteFile(
                 path=f.path,
@@ -3151,14 +3148,9 @@ class LakeTable:
         updated = updated.select(*[f.name for f in snap.schema.fields])
         # keep the partition layout: image files without tuples would
         # degrade partition pruning and read as legacy in dynamic overwrite
-        pexprs = None
-        if snap.partition_spec:
-            from dlt_iceberg_spark.partition import PartitionField, partition_columns
-
-            pexprs = partition_columns(
-                [PartitionField(**p) for p in snap.partition_spec]
-            )
-        new_files = self.stage_dataframe(updated, partition_exprs=pexprs)
+        new_files = self.stage_dataframe(
+            updated, partition_exprs=partition_exprs(snap.partition_spec)
+        )
         return self.commit(
             None,
             snap.schema,
@@ -3183,14 +3175,9 @@ class LakeTable:
             raise FileNotFoundError(f"no such table: {self.location}")
         if not snap.delete_files:
             return snap
-        pexprs = None
-        if snap.partition_spec:
-            from dlt_iceberg_spark.partition import PartitionField, partition_columns
-
-            pexprs = partition_columns(
-                [PartitionField(**p) for p in snap.partition_spec]
-            )
-        new_files = self.stage_dataframe(self.read(), partition_exprs=pexprs)
+        new_files = self.stage_dataframe(
+            self.read(), partition_exprs=partition_exprs(snap.partition_spec)
+        )
         return self.commit(
             new_files,
             snap.schema,
@@ -3955,7 +3942,7 @@ class LakeTable:
         ids = dict(snap.field_ids)
         if old in ids:
             ids[new] = ids.pop(old)
-        props = dict(snap.properties)
+        props = rename_column_properties(snap.properties, old, new)
         props["schema.reserved-names"] = ",".join(
             sorted(
                 {n for n in props.get("schema.reserved-names", "").split(",") if n}
@@ -4007,7 +3994,7 @@ class LakeTable:
         new_schema = T.StructType(
             [f for f in snap.schema.fields if f.name != col]
         )
-        props = dict(snap.properties)
+        props = rename_column_properties(snap.properties, col, None)
         props["schema.reserved-names"] = ",".join(
             sorted(
                 {n for n in props.get("schema.reserved-names", "").split(",") if n}

@@ -43,8 +43,15 @@ from dlt_iceberg_spark.errors import (
 )
 from dlt_iceberg_spark.lake.catalog import LakeCatalog
 from dlt_iceberg_spark.lake.merge import merge_plan
-from dlt_iceberg_spark.lake.table import DataFile, LakeTable
-from dlt_iceberg_spark.partition import build_partition_spec, partition_columns
+from dlt_iceberg_spark.lake.table import (
+    BLOOM_COLUMN_PROP,
+    NDV_COLUMN_PROP,
+    DataFile,
+    LakeTable,
+    recorded_columns,
+    with_recorded_columns,
+)
+from dlt_iceberg_spark.partition import build_partition_spec, partition_exprs
 from dlt_iceberg_spark.schema.casting import cast_dataframe_safe
 from dlt_iceberg_spark.schema.converter import infer_schema
 from dlt_iceberg_spark.schema.evolution import evolve_schema_if_needed
@@ -83,8 +90,11 @@ class TableSpec:
     #: resolved primary key under a merge disposition, plus any
     #: x-bloom-filter column hints).  Blooms complement min/max stats:
     #: manifests prune files by range; blooms let the reader skip row
-    #: groups on `=` probes of unsorted high-cardinality keys (Iceberg's
-    #: write.parquet.bloom-filter-enabled.column.* table property).
+    #: groups on `=` probes of unsorted high-cardinality keys.  Recorded
+    #: as the table property write.parquet.bloom-filter-enabled.column.*
+    #: (as Iceberg does), which every later write and rewrite of the table
+    #: honours: an explicit list replaces the recorded set, inferred
+    #: columns are added to it.
     bloom_filter_columns: list[str] | None = None
     #: "cow" rewrites touched files at merge time (read-optimized);
     #: "mor" lands the batch + an equality-delete file in O(batch) and
@@ -95,10 +105,13 @@ class TableSpec:
     merge_mode: str = "cow"
     #: write-time per-file KMV NDV sketches on these columns (or
     #: x-ndv-sketch column hints) — Iceberg's table statistics
-    #: (compute_table_stats theta sketches), kept fresh on every load so
+    #: (compute_table_stats theta sketches), kept fresh on every write so
     #: Dataset.aggregate(distinct=...)/LakeTable.approx_distinct answer
-    #: NDV metadata-only, exact whenever the true NDV ≤ k=256.  Costs one
-    #: extra pass over the freshly staged files per load.
+    #: NDV metadata-only, exact whenever the true NDV ≤ k=256.  Recorded
+    #: as the table property write.ndv-sketch.column.*, which every later
+    #: write and rewrite honours: a non-empty list replaces the recorded
+    #: set, hinted columns are added to it.  Costs one extra pass over the
+    #: freshly staged files per write.
     ndv_sketch_columns: list[str] = field(default_factory=list)
     #: data-quality contracts (Delta Live Tables expectations shape):
     #: name -> SQL boolean predicate evaluated per incoming row BEFORE the
@@ -358,14 +371,10 @@ class LakeWriter:
         summary = {"load_id": load_id} if load_id else {}
         # partitioned tables stage hive-layouted so every DataFile records
         # its partition tuple (enables dynamic overwrite + pruning)
-        pexprs = self._partition_exprs(snap.partition_spec)
+        pexprs = partition_exprs(snap.partition_spec)
 
-        bloom = spec.resolve_bloom_columns()
-        ndv = spec.resolve_ndv_columns()
         if disposition == "append":
-            new_files = table.stage_dataframe(
-                casted, partition_exprs=pexprs, bloom_columns=bloom, ndv_columns=ndv
-            )
+            new_files = table.stage_dataframe(casted, partition_exprs=pexprs)
             # delta commit: parent manifests ride by reference — an append
             # never reads or rewrites the existing file inventory.  An
             # append's staged files are HEAD-INDEPENDENT, so a lost commit
@@ -381,13 +390,9 @@ class LakeWriter:
                 else None
             )
             if scope == "partitions":
-                self._replace_partitions(
-                    table, casted, target_schema, snap, summary, bloom, ndv
-                )
+                self._replace_partitions(table, casted, target_schema, snap, summary)
             else:
-                new_files = table.stage_dataframe(
-                    casted, partition_exprs=pexprs, bloom_columns=bloom, ndv_columns=ndv
-                )
+                new_files = table.stage_dataframe(casted, partition_exprs=pexprs)
                 table.commit(
                     new_files, target_schema, "overwrite", snap.version,
                     summary=summary, delete_files=[],  # nothing left to mask
@@ -443,20 +448,22 @@ class LakeWriter:
         )
         if not self.catalog.table_exists(self.namespace, spec.name):
             pspec = build_partition_spec(incoming_persisted, spec.column_hints)
+            # record the declared sort order as table metadata (Iceberg
+            # sort-order): maintenance re-sorts compaction rewrites by it,
+            # and the Iceberg export emits it — clustering is a TABLE
+            # property, not a per-load accident.  Bloom and NDV columns
+            # likewise: every write and rewrite of the table sketches them.
+            props = self._sketch_properties(
+                spec,
+                {"write.sort-order": ",".join(spec.sort_order)} if spec.sort_order else {},
+                incoming_persisted,
+            )
             table = self.catalog.create_table(
                 self.namespace,
                 spec.name,
                 incoming_persisted,
                 partition_spec=[vars(p) for p in pspec],
-                # record the declared sort order as table metadata (Iceberg
-                # sort-order): maintenance re-sorts compaction rewrites by
-                # it, and the Iceberg export emits it — clustering is a
-                # TABLE property, not a per-load accident
-                properties=(
-                    {"write.sort-order": ",".join(spec.sort_order)}
-                    if spec.sort_order
-                    else None
-                ),
+                properties=props or None,
             )
             return table.for_branch(self.branch), incoming_persisted
         table = self.catalog.load_table(self.namespace, spec.name, branch=self.branch)
@@ -475,11 +482,14 @@ class LakeWriter:
             vars(p) for p in build_partition_spec(evolved, spec.column_hints)
         ]
         new_pspec = desired if desired and desired != snap.partition_spec else None
-        # sort-order declaration changes ride the same metadata-only commit
-        sort_now = ",".join(spec.sort_order) if spec.sort_order else None
-        props_update = None
-        if sort_now is not None and snap.properties.get("write.sort-order") != sort_now:
-            props_update = {**snap.properties, "write.sort-order": sort_now}
+        # sort-order declaration and bloom/NDV column changes ride the same
+        # metadata-only commit; a load that resolves nothing new commits
+        # nothing
+        props = dict(snap.properties)
+        if spec.sort_order:
+            props["write.sort-order"] = ",".join(spec.sort_order)
+        props = self._sketch_properties(spec, props, evolved)
+        props_update = props if props != snap.properties else None
         if changed or new_pspec is not None or props_update is not None:
             # one metadata-only evolution commit covering all changes;
             # delta form: the file inventory is untouched, so no manifest
@@ -492,15 +502,35 @@ class LakeWriter:
             )
         return table, evolved
 
+    @staticmethod
+    def _sketch_properties(spec: TableSpec, props: dict, schema: T.StructType) -> dict:
+        """``props`` with the spec's bloom and NDV columns recorded: an
+        explicit spec list replaces the recorded set, inferred columns
+        (hints, merge keys) are added to it.  Only columns of ``schema``
+        are kept; NDV only for atomic ones."""
+        dtypes = {f.name: f.dataType for f in schema.fields}
+        nested = (T.ArrayType, T.MapType, T.StructType)
+        bloom = spec.resolve_bloom_columns()
+        if spec.bloom_filter_columns is None:
+            bloom = recorded_columns(props, BLOOM_COLUMN_PROP) + bloom
+        ndv = spec.resolve_ndv_columns()
+        if not spec.ndv_sketch_columns:
+            ndv = recorded_columns(props, NDV_COLUMN_PROP) + ndv
+        props = with_recorded_columns(
+            props, BLOOM_COLUMN_PROP, [c for c in bloom if c in dtypes]
+        )
+        return with_recorded_columns(
+            props,
+            NDV_COLUMN_PROP,
+            [c for c in ndv if c in dtypes and not isinstance(dtypes[c], nested)],
+        )
+
     def _apply_partition_layout(self, df: DataFrame, partition_spec: list[dict]) -> DataFrame:
         """Cluster the batch by the partition transforms so data files align
         with partition values (⇒ tight min/max stats ⇒ pruning works)."""
         if not partition_spec:
             return df
-        from dlt_iceberg_spark.partition import PartitionField
-
-        pcols = partition_columns([PartitionField(**p) for p in partition_spec])
-        exprs = [expr for _name, expr in pcols]
+        exprs = [expr for _name, expr in partition_exprs(partition_spec)]
         return df.repartition(*exprs).sortWithinPartitions(*exprs)
 
     def _apply_sort_order(
@@ -520,14 +550,6 @@ class LakeWriter:
     # -- dynamic partition overwrite ---------------------------------------
 
     @staticmethod
-    def _partition_exprs(partition_spec: list[dict]):
-        if not partition_spec:
-            return None
-        from dlt_iceberg_spark.partition import PartitionField, partition_columns
-
-        return partition_columns([PartitionField(**p) for p in partition_spec])
-
-    @staticmethod
     def _may_hold(recorded, value) -> bool:
         """Can a recorded partition value stand for the staged ``value``?
         A recorded None is NULL, or either NULL or ``''`` in files staged
@@ -535,8 +557,7 @@ class LakeWriter:
         return value in (None, "") if recorded is None else str(recorded) == value
 
     def _replace_partitions(
-        self, table, batch: DataFrame, target_schema, snap, summary: dict,
-        bloom: list[str] | None = None, ndv: list[str] | None = None,
+        self, table, batch: DataFrame, target_schema, snap, summary: dict
     ) -> None:
         """INSERT OVERWRITE of only the partitions present in the batch
         (Iceberg ``overwritePartitions``): one atomic snapshot where files
@@ -551,10 +572,7 @@ class LakeWriter:
         NULL or ``''``, are handled copy-on-write: their rows OUTSIDE the
         incoming partitions are rewritten and kept — correct under
         mixed-layout history at the cost of rewriting only those files."""
-        from dlt_iceberg_spark.partition import PartitionField, partition_columns
-
-        pspec = [PartitionField(**p) for p in snap.partition_spec]
-        if not pspec:
+        if not snap.partition_spec:
             raise ValueError(
                 "partition-scoped replace requires a partitioned table "
                 "(declare partition hints at create time)"
@@ -563,11 +581,9 @@ class LakeWriter:
             # partition replace rewrites/carries files raw; fold equality
             # deletes first so masked rows can't resurrect
             snap = table.fold_deletes()
-        pcols = partition_columns(pspec)
+        pcols = partition_exprs(snap.partition_spec)
         names = [n for n, _ in pcols]
-        new_files = table.stage_dataframe(
-            batch, partition_exprs=pcols, bloom_columns=bloom, ndv_columns=ndv
-        )
+        new_files = table.stage_dataframe(batch, partition_exprs=pcols)
         incoming = {tuple(f.partition[n] for n in names) for f in new_files}
         if len(incoming) > REPLACE_PARTITION_MAX:
             # almost certainly a mis-declared spec (partitioning on a
@@ -632,9 +648,7 @@ class LakeWriter:
                 "\x1f".join("n" if v is None else "v" + v for v in t) for t in incoming
             ]
             remaining = table.read_files(legacy).filter(~key.isin(incoming_keys))
-            rewritten = table.stage_dataframe(
-                remaining, partition_exprs=pcols, bloom_columns=bloom, ndv_columns=ndv
-            )
+            rewritten = table.stage_dataframe(remaining, partition_exprs=pcols)
         table.commit(
             None,
             target_schema,
@@ -663,8 +677,7 @@ class LakeWriter:
 
         if spec.merge_mode == "mor" and keys:
             self._merge_mor(table, snap, batch, target_schema, keys, strategy,
-                            hard_delete_col if has_hard_delete else None, summary,
-                            ndv=spec.resolve_ndv_columns())
+                            hard_delete_col if has_hard_delete else None, summary)
             return
         if spec.merge_mode not in ("cow", "mor"):
             raise ValueError(f"unknown merge_mode {spec.merge_mode!r} (cow|mor)")
@@ -677,9 +690,7 @@ class LakeWriter:
                 spec.name,
             )
             new_files = table.stage_dataframe(
-                batch.drop(hard_delete_col) if has_hard_delete else batch,
-                bloom_columns=spec.resolve_bloom_columns(),
-                ndv_columns=spec.resolve_ndv_columns(),
+                batch.drop(hard_delete_col) if has_hard_delete else batch
             )
             self._commit_append_on_head(table, target_schema, summary, new_files)
             return
@@ -796,10 +807,7 @@ class LakeWriter:
         # rewritten files keep the table's hive layout + partition tuples —
         # a merge must not degrade future partition pruning / overwrites
         new_files = table.stage_dataframe(
-            merged,
-            partition_exprs=self._partition_exprs(snap.partition_spec),
-            bloom_columns=spec.resolve_bloom_columns(),
-            ndv_columns=spec.resolve_ndv_columns(),
+            merged, partition_exprs=partition_exprs(snap.partition_spec)
         )
         # delta commit: manifests proven disjoint from the batch's key range
         # pass through by reference — the merge is O(touched) end to end
@@ -829,7 +837,6 @@ class LakeWriter:
         strategy: str,
         hard_delete_col: str | None,
         summary: dict,
-        ndv: list[str] | None = None,
     ) -> None:
         """Merge-on-read: land the batch plus an equality-delete file over
         its keys — O(batch) staging, no target read, no file rewrite.  The
@@ -854,14 +861,10 @@ class LakeWriter:
         if strategy == "upsert":
             data = _dedupe_source(data, keys, None)
         new_delete_files = table.stage_delete_files(del_keys, keys)
-        # bloom filters on the merge keys: future CoW planning / point
-        # reads probe these files by key equality; partition layout kept so
-        # MoR loads don't degrade partition pruning either
+        # partition layout kept so MoR loads don't degrade partition
+        # pruning either
         new_files = table.stage_dataframe(
-            data,
-            partition_exprs=self._partition_exprs(snap.partition_spec),
-            bloom_columns=keys,
-            ndv_columns=ndv,
+            data, partition_exprs=partition_exprs(snap.partition_spec)
         )
         # staged data + delete files are head-independent (sequence numbers
         # stamp at commit), so a lost commit race re-commits against the new

@@ -158,3 +158,11 @@ def build_partition_spec(
 def partition_columns(spec: list[PartitionField]) -> list[tuple[str, Column]]:
     """(field_name, expression) pairs for a write partitioned by the spec."""
     return [(pf.field_name, transform_expr(pf)) for pf in spec]
+
+
+def partition_exprs(spec: list[dict] | None) -> list[tuple[str, Column]] | None:
+    """:func:`partition_columns` of a table's stored spec (a snapshot's
+    ``partition_spec`` dicts); None for an unpartitioned table."""
+    if not spec:
+        return None
+    return partition_columns([PartitionField(**p) for p in spec])

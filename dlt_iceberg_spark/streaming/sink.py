@@ -246,16 +246,33 @@ class _LakeStreamWriter(DataSourceStreamArrowWriter):
         rel = f"data/{uuid.uuid4().hex}.parquet"
         abs_path = os.path.join(self.location, rel)
         os.makedirs(os.path.dirname(abs_path), exist_ok=True)
-        pq.write_table(tbl, abs_path)
-        stats, nulls = {}, {}
+        import pyarrow as pa
         import pyarrow.compute as pc
 
+        # pyarrow's statistics skip NaN, but Spark orders NaN above every
+        # number: a float column holding NaN gets no range, neither in the
+        # footer (Spark's row-group filter reads it) nor in the manifest
+        nan_cols = {
+            n
+            for n, c in zip(tbl.column_names, tbl.columns)
+            if pa.types.is_floating(c.type) and pc.any(pc.is_nan(c)).as_py()
+        }
+        pq.write_table(
+            tbl,
+            abs_path,
+            write_statistics=(
+                [n for n in tbl.column_names if n not in nan_cols] if nan_cols else True
+            ),
+        )
+        stats, nulls = {}, {}
         for col in self.prunable:
             if col not in tbl.column_names:
                 continue
             c = tbl.column(col)
             nulls[col] = c.null_count
             if c.null_count == len(c):
+                continue
+            if col in nan_cols:
                 continue
             mm = pc.min_max(c).as_py()
             if mm["min"] is None or mm["max"] is None:

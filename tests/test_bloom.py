@@ -285,13 +285,21 @@ def test_driver_blooms_match_spark_job(spark, tmp_path):
     import os
 
     from dlt_iceberg_spark.lake.fileio import LocalFileIO
-    from dlt_iceberg_spark.lake.table import _scan_staged_file
+    from dlt_iceberg_spark.lake.table import (
+        _file_metadata_via_spark,
+        _scan_staged_file,
+        _staged_rel,
+    )
 
     df = _bloom_frame(spark, 50000, 2)
     staging = str(tmp_path / "staging")
     df.write.parquet(staging)
-    t = LakeTable(spark, str(tmp_path / "t"))
-    via_spark = t._blooms_via_spark(staging, _PARITY_COLS, df.schema)
+    via_spark = {
+        _staged_rel(staging, f): sketches
+        for f, (*_, sketches) in _file_metadata_via_spark(
+            spark.read.parquet(staging), df.schema, bloom_columns=_PARITY_COLS
+        ).items()
+    }
     names = [n for n in os.listdir(staging) if n.endswith(".parquet")]
     assert len(names) == 2 and set(via_spark) == set(names)
     for name in names:
@@ -376,3 +384,128 @@ def test_local_bloom_write_launches_no_extra_spark_jobs(spark, tmp_path):
     )
     assert plain >= 1 and with_blooms == plain
     assert all(bloom_key("key") in f.sketches for f in out)
+
+
+# ------------------------------------------- recorded bloom/NDV columns --
+
+
+def _keyed(spark, lo, hi, parts):
+    """Distinct scattered keys ``k`` (100003 is prime) and a small ``v``."""
+    return spark.range(lo, hi, 1, parts).select(
+        (F.col("id") * 7919 % 100003).alias("k"), (F.col("id") % 5).alias("v")
+    )
+
+
+def test_every_rewrite_keeps_recorded_blooms_and_sketches(spark, tmp_path):
+    """A merge table keyed ``k`` records its bloom and NDV columns as table
+    properties.  A hint-less append, ``update_where``, a MoR upsert folded
+    by ``fold_deletes``, compaction and z-order all keep a ``bloom:k`` and
+    a ``k`` sketch on every live file, so NDV answers from metadata and a
+    point probe after compaction skips files."""
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.maintenance import compact_table, rewrite_zorder
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    writer = LakeWriter(LakeCatalog(spark, str(tmp_path / "wh")), "ns")
+    writer.write(
+        TableSpec("t", "merge", primary_key=["k"], ndv_sketch_columns=["k"]),
+        _keyed(spark, 0, 2000, 4),
+    )
+    t = writer.catalog.load_table("ns", "t")
+
+    def check(step):
+        snap = t.snapshot()
+        for f in snap.files:
+            assert "k" in f.sketches and bloom_key("k") in f.sketches, (step, f.path)
+        if not snap.delete_files:
+            assert t.approx_distinct(["k"]) is not None, step
+
+    check("create")
+    writer.write(TableSpec("t", "append"), _keyed(spark, 2000, 2600, 2))
+    check("append")
+    t.update_where([("v", "=", 1), ("k", "<", 50000)], {"v": 9})
+    check("update_where")
+    writer.write(
+        TableSpec("t", "merge", primary_key=["k"], merge_mode="mor"),
+        _keyed(spark, 100, 400, 1).withColumn("v", F.lit(7).cast("bigint")),
+    )
+    t.fold_deletes()
+    check("fold_deletes")
+    total = sum(f.bytes for f in t.snapshot().files)
+    compact_table(t, target_file_bytes=total // 4, small_file_threshold=100.0)
+    check("compact_table")
+    files = t.snapshot().files
+    assert len(files) >= 4
+    probe = (123 * 7919) % 100003
+    _, opened = t._select_files(t.snapshot(), [("k", "=", probe)])
+    assert len(opened) <= len(files) / 4
+    assert t.read(where=[("k", "=", probe)]).count() == 1
+    rewrite_zorder(t, ["k", "v"], target_file_bytes=total // 4)
+    check("rewrite_zorder")
+    assert t.read().count() == 2600
+
+
+def test_load_resolving_recorded_columns_commits_nothing_new(spark, tmp_path):
+    """Loads whose bloom/NDV columns are already recorded land one
+    snapshot each; an explicit list replaces the recorded set in the
+    load's metadata-only evolution commit, and hinted columns add to it."""
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.table import (
+        BLOOM_COLUMN_PROP,
+        NDV_COLUMN_PROP,
+        recorded_columns,
+    )
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    writer = LakeWriter(LakeCatalog(spark, str(tmp_path / "wh")), "ns")
+    merge = TableSpec("t", "merge", primary_key=["k"], ndv_sketch_columns=["v"])
+    writer.write(merge, _keyed(spark, 0, 100, 1))
+    t = writer.catalog.load_table("ns", "t")
+
+    def recorded():
+        props = t.snapshot().properties
+        return (
+            recorded_columns(props, BLOOM_COLUMN_PROP),
+            recorded_columns(props, NDV_COLUMN_PROP),
+        )
+
+    assert recorded() == (["k"], ["v"])
+    for spec in (merge, TableSpec("t", "merge", primary_key=["k"]), TableSpec("t", "append")):
+        v = t.current_version()
+        writer.write(spec, _keyed(spark, 100, 200, 1))
+        assert t.current_version() == v + 1 and recorded() == (["k"], ["v"])
+    v = t.current_version()
+    writer.write(
+        TableSpec(
+            "t", "append", bloom_filter_columns=["v"],
+            column_hints={"k": {"x-ndv-sketch": True}},
+        ),
+        _keyed(spark, 200, 300, 1),
+    )
+    assert t.current_version() == v + 2 and recorded() == (["v"], ["v", "k"])
+
+
+def test_non_local_staging_runs_one_metadata_job(spark, tmp_path):
+    """Staging through HadoopFileIO with bloom and NDV columns launches the
+    jobs a stats-only stage does: the write, then one schema read of the
+    staging dir and one ``groupBy(input_file_name())`` whose pass also
+    builds the blooms and sketches (4 jobs; separate stats, NDV and bloom
+    passes took 10)."""
+    from dlt_iceberg_spark.lake.fileio import HadoopFileIO
+    from tests.test_state import _spark_jobs
+
+    df = _bloom_frame(spark, 4000, 4)
+    t = LakeTable(spark, str(tmp_path / "t"), io=HadoopFileIO(spark, str(tmp_path)))
+    out = []
+    jobs = _spark_jobs(
+        spark,
+        lambda: out.extend(
+            t.stage_dataframe(df, bloom_columns=["key"], ndv_columns=["key"])
+        ),
+    )
+    assert len(out) == 4
+    assert all(bloom_key("key") in f.sketches and "key" in f.sketches for f in out)
+    plain = _spark_jobs(
+        spark, lambda: t.stage_dataframe(df, bloom_columns=[], ndv_columns=[])
+    )
+    assert jobs == plain == 4

@@ -57,7 +57,11 @@ def test_count_and_minmax_pushdown_do_not_count_null_rows(spark, warehouse):
 def test_spark_stats_job_counts_nulls_like_the_footer(spark, tmp_path):
     """Non-local FileIO records NULL counts from its stats job; they equal
     the footer's counts the local per-file pass reads."""
-    from dlt_iceberg_spark.lake.table import LakeTable, _scan_staged_file
+    from dlt_iceberg_spark.lake.table import (
+        _file_metadata_via_spark,
+        _scan_staged_file,
+        _staged_rel,
+    )
 
     df = spark.createDataFrame(
         [(1, None, "a"), (None, None, "b"), (3, 2.0, None)],
@@ -65,8 +69,10 @@ def test_spark_stats_job_counts_nulls_like_the_footer(spark, tmp_path):
     ).coalesce(1)
     staging = str(tmp_path / "_staging_x")
     df.write.parquet(staging)
-    t = LakeTable(spark, str(tmp_path / "t"))
-    ((rel, (rows, _, nulls)),) = t._stats_via_spark(staging, df.schema).items()
+    ((uri, (rows, _, nulls, _)),) = _file_metadata_via_spark(
+        spark.read.parquet(staging), df.schema
+    ).items()
+    rel = _staged_rel(staging, uri)
     _, _, _, footer, _ = _scan_staged_file(os.path.join(staging, rel), df.schema)
     assert rows == 3 and nulls == footer == {"a": 1, "b": 2, "s": 1}
 
@@ -271,3 +277,25 @@ def test_cast_returns_matching_frame_and_casts_only_changed_columns(spark):
     assert out.schema == target
     plan = out._jdf.queryExecution().analyzed().toString()
     assert plan.lower().count("cast(") == 1, plan
+
+
+@pytest.mark.parametrize("fileio", ["local", "hadoop"])
+def test_nan_float_column_records_no_range(spark, tmp_path, fileio):
+    """A float column holding NaN records no [min, max]: Spark's parquet
+    writer and its max() put NaN in the max, every comparison against NaN
+    is false, and such a range pruned the file away from matching probes."""
+    from dlt_iceberg_spark.lake.fileio import HadoopFileIO
+    from dlt_iceberg_spark.lake.table import LakeTable
+
+    io = HadoopFileIO(spark, str(tmp_path)) if fileio == "hadoop" else None
+    t = LakeTable(spark, str(tmp_path / "t"), io=io)
+    df = spark.createDataFrame(
+        [(1.0, 1), (float("nan"), 2), (1.0, 3)], "x double, y long"
+    ).coalesce(1)
+    t.commit(t.stage_dataframe(df), df.schema, "append", None)
+    (f,) = t.snapshot().files
+    assert "x" not in f.stats and f.stats["y"] == [1, 3]
+    assert t.read(where=[("x", "=", 1.0)]).count() == 2
+    assert t.count(where=[("x", "=", 1.0)]) == 2
+    # Spark orders NaN above every number
+    assert t.count(where=[("x", ">", 2.0)]) == 1

@@ -158,9 +158,9 @@ def test_unsketched_file_refuses_then_scan_fallback(spark, tmp_path):
                   ndv_sketch_columns=["seg"]),
         df,
     )
-    # second load WITHOUT sketches -> metadata can no longer answer
-    writer.write(TableSpec(name="t", write_disposition="append"), df)
+    # a file staged WITHOUT sketches -> metadata can no longer answer
     t = catalog.load_table("ns", "t")
+    _write(spark, t, df, ndv=[])
     assert t.approx_distinct(["seg"]) is None
     # Dataset.aggregate transparently falls back to an exact scan
     from dlt_iceberg_spark.lake.dataset import Dataset
@@ -548,8 +548,8 @@ if _HYP:
 
 
 def test_maintain_reanalyzes_after_compaction(spark, tmp_path):
-    """Compaction drops per-file sketches; a maintain() cycle with
-    analyze_ndv_columns restores NDV answerability in the same call."""
+    """Compaction keeps the recorded NDV columns' per-file sketches, so a
+    maintain() cycle has nothing to backfill and NDV stays answerable."""
     from datetime import timedelta
 
     from dlt_iceberg_spark.lake.catalog import LakeCatalog
@@ -568,15 +568,35 @@ def test_maintain_reanalyzes_after_compaction(spark, tmp_path):
         )
     t = catalog.load_table("ns", "t")
     assert t.approx_distinct(["seg"]) is not None
-    report = maintain(
-        t,
-        MaintenancePolicy(
-            expire_older_than=timedelta(days=9999),
-            analyze_ndv_columns=["seg"],
-        ),
-    )
+    report = maintain(t, MaintenancePolicy(expire_older_than=timedelta(days=9999)))
     assert report["compaction"]["rewritten_files"] >= 3
-    assert report["analyzed_files"] >= 1
+    assert report["analyzed_files"] == 0
+    assert all("seg" in f.sketches for f in t.snapshot().files)
+    assert t.approx_distinct(["seg"]) == {"seg": {"ndv": 12, "exact": True}}
+
+
+def test_maintain_backfills_recorded_ndv_columns(spark, tmp_path):
+    """A live file without the recorded NDV column's sketch gains it in
+    the next maintain() cycle."""
+    from datetime import timedelta
+
+    from dlt_iceberg_spark.lake.catalog import LakeCatalog
+    from dlt_iceberg_spark.lake.maintenance import MaintenancePolicy, maintain
+    from dlt_iceberg_spark.lake.writer import LakeWriter, TableSpec
+
+    catalog = LakeCatalog(spark, str(tmp_path / "wh"))
+    df = spark.range(0, 100, 1, 1).select((F.col("id") % 12).alias("seg"))
+    LakeWriter(catalog, "ns").write(
+        TableSpec(name="t", write_disposition="append", ndv_sketch_columns=["seg"]), df
+    )
+    t = catalog.load_table("ns", "t")
+    _write(spark, t, df, ndv=[])
+    assert t.approx_distinct(["seg"]) is None
+    # every file counts as full-sized: nothing is compacted
+    policy = MaintenancePolicy(expire_older_than=timedelta(days=9999), target_file_bytes=1)
+    report = maintain(t, policy)
+    assert report["compaction"]["rewritten_files"] == 0
+    assert report["analyzed_files"] == 1
     assert t.approx_distinct(["seg"]) == {"seg": {"ndv": 12, "exact": True}}
 
 

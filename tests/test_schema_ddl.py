@@ -765,3 +765,40 @@ def test_append_omitting_defaulted_column_lands_write_default(spark, warehouse):
     t = catalog.load_table("ds", "t")
     got = sorted((r.id, r.score) for r in t.read().collect())
     assert got == [(1, 7), (2, 7)]
+
+
+def test_rename_and_drop_rekey_column_properties(spark, warehouse):
+    """Column-naming table properties follow a rename and leave with a
+    drop: compaction after renaming the sort column still sorts, and the
+    rewritten files keep their blooms and sketches under the new name."""
+    import pyarrow.parquet as pq
+
+    from dlt_iceberg_spark.lake.bloom import bloom_key
+    from dlt_iceberg_spark.lake.maintenance import compact_table
+
+    catalog = LakeCatalog(spark, warehouse)
+    writer = LakeWriter(catalog, "ds")
+    spec = TableSpec(
+        name="t", write_disposition="append", sort_order=["k"],
+        bloom_filter_columns=["k"], ndv_sketch_columns=["k"],
+    )
+    for i in range(3):  # interleaved key sets: a plain binpack is unsorted
+        writer.write(spec, spark.range(i, 300, 3).select(
+            ((F.col("id") * 37) % 300).alias("k"), F.col("id").alias("v")
+        ))
+    t = catalog.load_table("ds", "t")
+    t.rename_column("k", "key")
+    props = t.snapshot().properties
+    assert props["write.sort-order"] == "key"
+    assert props["write.parquet.bloom-filter-enabled.column.key"] == "true"
+    assert props["write.ndv-sketch.column.key"] == "true"
+    assert not any(p.endswith(".column.k") for p in props)
+    compact_table(t)
+    (f,) = t.snapshot().files
+    keys = pq.read_table(os.path.join(t.location, f.path)).column("key").to_pylist()
+    assert keys == sorted(keys) and len(keys) == 300
+    assert bloom_key("key") in f.sketches and "key" in f.sketches
+    t.drop_column("key")
+    props = t.snapshot().properties
+    assert "write.sort-order" not in props
+    assert not any(".column.key" in p for p in props)

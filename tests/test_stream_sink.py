@@ -298,3 +298,20 @@ def test_sink_rejects_structural_spec_replacement(reg, tmp_path):
     )
     with pytest.raises(ValueError, match="partition spec changed"):
         w.commit([], batchId=7)
+
+
+def test_sink_float_nan_records_no_range(reg, tmp_path):
+    """pyarrow's min_max skips NaN, but Spark orders NaN above every
+    number: a stream-landed float column holding NaN records no range, so
+    a ``>`` probe keeps the file."""
+    spark = reg
+    src = str(tmp_path / "in")
+    spark.createDataFrame(
+        [(1, 1.0), (2, float("nan")), (3, 1.0)], "id bigint, x double"
+    ).coalesce(1).write.parquet(src + "/p1")
+    loc = str(tmp_path / "t")
+    _file_feed(spark, src, str(tmp_path / "ckpt"), loc, schema="id bigint, x double")
+    t = LakeTable(spark, loc)
+    assert all("x" not in f.stats for f in t.snapshot().files)
+    assert t.count(where=[("x", ">", 2.0)]) == 1
+    assert t.read(where=[("x", "=", 1.0)]).count() == 2
