@@ -220,7 +220,6 @@ def backfill_stats(table: LakeTable, columns: list[str] | None = None) -> int:
         "backfill-stats",  # layout-only op: changelog readers skip it
         snap.version,
         summary={"stats-backfill": True, "files-gaining-stats": n_gained},
-        delete_files=list(snap.delete_files),
     )
     return n_gained
 
@@ -324,7 +323,6 @@ def compute_table_stats(
             snap.properties, NDV_COLUMN_PROP, recorded + list(columns)
         ),
         summary={"ndv-analyze": ",".join(columns), "files-gaining-sketches": n_gained},
-        delete_files=list(snap.delete_files),
     )
     return n_gained
 
@@ -807,8 +805,6 @@ def consolidate_position_deletes(table: LakeTable) -> dict:
         snap.schema,
         "consolidate-deletes",
         snap.version,
-        manifests=list(snap.manifests),
-        new_files=list(snap.inline_files),
         delete_files=others + new_deletes,
         summary={
             "consolidated-delete-files": len(pos),

@@ -40,7 +40,7 @@ from pyspark.sql import types as T
 
 from dlt_iceberg_spark.errors import TableNotFoundError
 from dlt_iceberg_spark.lake.catalog import LakeCatalog
-from dlt_iceberg_spark.lake.table import LakeTable, local_frame
+from dlt_iceberg_spark.lake.table import LakeTable, arrow_table, local_frame
 
 VERSION_TABLE = "_dlt_version"
 LOADS_TABLE = "_dlt_loads"
@@ -144,8 +144,7 @@ class StateStore:
         values = [tuple({**defaults, **r.asDict()}[c] for c in defaults) for r in rows]
         table.commit(
             None, stored, "append", snap.version,
-            manifests=snap.manifests,
-            new_files=snap.inline_files + table.stage_rows(stored, values),
+            new_files=table.stage_rows(arrow_table(stored, values), stored),
         )
 
     # -- M4: schema registry ----------------------------------------------

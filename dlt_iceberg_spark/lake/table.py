@@ -46,7 +46,7 @@ import uuid
 from dataclasses import dataclass, field as dc_field
 from datetime import date as _date
 from datetime import datetime, timezone
-from typing import Any
+from typing import Any, Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -55,7 +55,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from dlt_iceberg_spark.errors import CommitConflictError, NonAtomicCommitError
+from dlt_iceberg_spark.errors import (
+    CommitConflictError,
+    NonAtomicCommitError,
+    RetryPolicy,
+)
 from dlt_iceberg_spark.lake.fileio import LocalFileIO, fileio_for
 from dlt_iceberg_spark.lake.manifest import (  # noqa: F401 (re-exported)
     NDV_K,
@@ -519,10 +523,14 @@ class Snapshot:
     """One committed table state.
 
     The live file set is ``manifests`` (chunked parquet manifests, reused
-    across commits) plus ``inline_files`` (entries not yet folded into a
-    manifest — legacy snapshots only).  ``files`` expands everything on
-    first access; commit/prune paths avoid it so driver work stays
-    O(touched files), never O(table).
+    across commits) plus ``inline_files``: entries of legacy snapshots,
+    written before chunked manifests, that no commit writes any more.  A
+    delta commit on such a snapshot folds them into its new manifest
+    (:meth:`LakeTable.commit` carries them itself, and
+    :meth:`split_manifests` hands them out with the opened entries), so
+    code outside this module never names them.  ``files`` expands
+    everything on first access; commit/prune paths avoid it so driver work
+    stays O(touched files), never O(table).
     """
 
     version: int
@@ -561,6 +569,23 @@ class Snapshot:
                 out.extend(read_manifest(self.location, ref, io=self.io))
             self._files_cache = out
         return self._files_cache
+
+    def split_manifests(
+        self, opens: Callable[[ManifestRef], bool]
+    ) -> tuple[list[ManifestRef], list[DataFile]]:
+        """``(kept_refs, entries)``: manifests ``opens`` rejects pass
+        through unread; the others are read, and their entries come back
+        with the legacy inline ones — the split a rewrite that prunes by
+        manifest summary hands to :meth:`LakeTable.commit` as
+        ``manifests=kept_refs``."""
+        kept: list[ManifestRef] = []
+        entries = list(self.inline_files)
+        for ref in self.manifests:
+            if opens(ref):
+                entries.extend(read_manifest(self.location, ref, io=self.io))
+            else:
+                kept.append(ref)
+        return kept, entries
 
     @property
     def n_files(self) -> int:
@@ -880,6 +905,16 @@ def _staged_rel(staging: str, uri: str) -> str:
     directory, so one task's files share a name across directories."""
     marker = "/" + os.path.basename(staging.rstrip("/")) + "/"
     return urllib.parse.unquote(uri).partition(marker)[2]
+
+
+class _CheckRefused(Exception):
+    """Carries a :meth:`LakeTable.commit_on_head` check's refusal out of
+    the retry loop.  Its fixed message matches no retryable marker
+    (errors.classify_error), so the policy never retries it."""
+
+    def __init__(self, error: Exception):
+        super().__init__("commit check refused")
+        self.error = error
 
 
 class LakeTable:
@@ -1473,30 +1508,61 @@ class LakeTable:
         io.rmtree(staging)
         return staged
 
-    def stage_rows(self, schema: T.StructType, rows: list[tuple]) -> list[DataFile]:
-        """Write a handful of driver-side ``rows`` (tuples in ``schema``
-        field order) as ONE parquet data file, not yet visible — like
-        :meth:`stage_dataframe`, visibility comes from the snapshot commit.
+    def stage_rows(
+        self,
+        data: pa.Table,
+        schema: T.StructType,
+        partition: dict | None = None,
+        bloom_columns=(),
+    ) -> list[DataFile]:
+        """Write an in-memory Arrow table (``data``, typed as ``schema``)
+        as ONE parquet data file holding ``partition``'s rows, not yet
+        visible — like :meth:`stage_dataframe`, visibility comes from the
+        snapshot commit.
 
-        No Spark job: pyarrow encodes the file on the driver, the bytes go
-        through the table's FileIO, and the stats come from its footer —
-        the way manifests are written (lake/manifest.py).  Meant for
-        bookkeeping-sized batches such as the load ledger's one-row
-        appends; bulk data belongs on :meth:`stage_dataframe`."""
-        if not rows:
+        No Spark job: pyarrow encodes the file in this process (the load
+        ledger's driver, a streaming sink's executor), the bytes go through
+        the table's FileIO, and rows, stats, NULL counts and the manifest
+        blooms of ``bloom_columns`` come from :func:`_scan_staged_file`.
+        pyarrow's footer statistics skip NaN while Spark orders NaN above
+        every number, so a float column holding NaN is written without
+        statistics (Spark's row-group filter reads them) and records no
+        range.  Bulk DataFrames belong on :meth:`stage_dataframe`."""
+        if not data.num_rows:
             return []
         import io as _pyio
 
+        import pyarrow.compute as pc
+
+        nan_cols = {
+            n
+            for n, c in zip(data.column_names, data.columns)
+            if pa.types.is_floating(c.type) and pc.any(pc.is_nan(c)).as_py()
+        }
         self._io.makedirs(self._data_dir)
         name = f"{uuid.uuid4().hex}.parquet"
         abs_path = os.path.join(self._data_dir, name)
         buf = _pyio.BytesIO()
-        pq.write_table(arrow_table(schema, rows), buf)
+        pq.write_table(
+            data,
+            buf,
+            write_statistics=(
+                [n for n in data.column_names if n not in nan_cols] if nan_cols else True
+            ),
+        )
         self._io.write_bytes(abs_path, buf.getvalue())
-        n, nbytes, stats, nulls, _ = _scan_staged_file(abs_path, schema, self._io)
+        n, nbytes, stats, nulls, blooms = _scan_staged_file(
+            abs_path, schema, self._io, bloom_columns
+        )
         return [
             DataFile(
-                path=f"data/{name}", rows=n, bytes=nbytes, stats=stats, null_counts=nulls
+                path=f"data/{name}",
+                rows=n,
+                bytes=nbytes,
+                stats=stats,
+                partition=dict(partition or {}),
+                sketches=blooms,
+                null_counts=nulls,
             )
         ]
 
@@ -1514,41 +1580,49 @@ class LakeTable:
         new_files: list[DataFile] | None = None,
         field_ids: dict[str, int] | None = None,
         min_version: int | None = None,
+        new_deletes: list[DeleteFile] | None = None,
     ) -> Snapshot:
         """Atomically publish a new snapshot.
 
-        Two forms:
+        One rule: the base is the expected parent.  Whatever an argument
+        does not replace — its file inventory, delete files, partition
+        spec, properties, field ids — carries over from that snapshot.
 
-        - ``files=[...]`` — the FULL live-file set (full-rewrite operations:
-          replace, compaction, z-order).  Entries are chunked into fresh
-          parquet manifests; driver cost O(given files), which such
-          operations pay anyway.
-        - ``manifests=[refs], new_files=[...]`` — the delta form: parent
-          manifests are REUSED by reference (never read), added files become
-          one new manifest.  An append to an 800k-file table touches only
-          the entries it adds — this is Iceberg's manifest-list design and
-          the reason commits stay O(touched) at any table size.
+        - ``new_files=[...]`` lists only the ADDED entries (the delta
+          form): the parent's manifests are reused by reference, never
+          read, and the added entries become one new manifest.  An append
+          to an 800k-file table touches only the entries it adds — this is
+          Iceberg's manifest-list design and the reason commits stay
+          O(touched) at any table size.  ``new_files=[]`` is a
+          metadata-only commit; a call naming no files and no deletes is
+          refused — it reads like a forgotten ``files=[]`` truncate.
+        - ``manifests=[refs]`` only passes a pruned or rewritten inventory
+          in place of the parent's (CoW merge and partition replace keep
+          the refs they proved untouched, schema DDL passes the refs it
+          rewrote, rollback an old snapshot's); ``new_files`` then lists
+          every other live entry.
+        - ``files=[...]`` is the FULL live-file set (replace, compaction,
+          z-order); ``[]`` truncates.  Entries are chunked into fresh
+          manifests — O(given files), which such rewrites pay anyway.
 
-        ``delete_files`` is the snapshot's FULL equality-delete set (None =
-        no deletes — callers rewriting the table clear them implicitly;
-        merge-on-read callers pass parent's list + their new file).  Files
-        with ``sequence=None`` are stamped with the new version — equality
-        deletes apply only to data files with a strictly smaller sequence,
-        so a delete committed alongside new data masks old rows, never the
-        rows landing in the same commit.
+        ``delete_files`` likewise replaces the parent's delete set (``[]``
+        clears it); ``new_deletes`` are added on top of whichever applies.
+        Files with ``sequence=None`` are stamped with the new version —
+        equality deletes apply only to data files with a strictly smaller
+        sequence, so a delete committed alongside new data masks old rows,
+        never the rows landing in the same commit.
 
         Optimistic concurrency: fails with CommitConflictError if the table
         advanced past ``expected_parent`` (detected by the loser of the
-        version-file rename race).
+        version-file rename race); :meth:`commit_on_head` retries such
+        races against the new head.
         """
         if files is not None and (manifests is not None or new_files is not None):
             raise ValueError("pass files=... OR manifests=/new_files=, not both")
-        if files is None and manifests is None and new_files is None:
-            # a fully-empty delta would silently publish an EMPTY table; an
-            # intentional truncate must say so with files=[]
+        if all(a is None for a in (files, manifests, new_files, new_deletes, delete_files)):
             raise ValueError(
                 "commit needs files=[...] (full set; [] truncates) or "
-                "manifests=/new_files= (delta)"
+                "new_files=[...] (delta on the parent; [] for metadata-only)"
             )
         self._io.makedirs(self._meta_dir)
         # For catalog-owned pointers, remember the branch ref's RAW head at
@@ -1615,19 +1689,23 @@ class LakeTable:
             _added = stamp(files)
             refs = write_chunked(self.location, _added, io=self._io)
         else:
-            refs = list(manifests or [])
-            _added = stamp(new_files or [])
+            if manifests is None:  # the parent's inventory, legacy entries too
+                refs = list(prev.manifests) if prev else []
+                _added = stamp((prev.inline_files if prev else []) + list(new_files or []))
+            else:
+                refs = list(manifests)
+                _added = stamp(new_files or [])
             if _added:
                 refs.extend(write_chunked(self.location, _added, io=self._io))
             # fold accumulated micro-manifests (reads only the small ones)
             refs = compact_refs(self.location, refs, io=self._io)
         # None = inherit: an append/evolve on a merge-on-read table must not
         # drop the delete set (that would resurrect masked rows)
-        resolved_deletes = (
+        resolved_deletes = list(
             delete_files
             if delete_files is not None
             else (prev.delete_files if prev else [])
-        )
+        ) + list(new_deletes or [])
         resolved_deletes = [
             d if d.sequence is not None else DeleteFile(**{**vars(d), "sequence": new_version})
             for d in resolved_deletes
@@ -1787,6 +1865,63 @@ class LakeTable:
             self._io.write_text(tmp_ptr, str(new_version))
             self._io.rename(tmp_ptr, self._ptr_path)
         return snap
+
+    def commit_on_head(
+        self,
+        operation: str,
+        new_files: list[DataFile] = (),
+        new_deletes: list[DeleteFile] = (),
+        summary: dict[str, Any] | None = None,
+        check: Callable[[Snapshot | None], None] | None = None,
+        policy: RetryPolicy | None = None,
+        schema: T.StructType | None = None,
+        properties: dict[str, str] | None = None,
+    ) -> Snapshot:
+        """Commit staged files on top of whatever the head is — Iceberg's
+        ``AppendFiles`` / ``RowDelta``, which commit relative to the base
+        snapshot and own the retry.
+
+        Each attempt reads the head, runs ``check(head)``, and commits
+        ``new_files`` / ``new_deletes`` against ``head.version`` in the
+        delta form of :meth:`commit`.  A lost race (CommitConflictError)
+        re-reads the head and tries again under ``policy`` (default
+        ``RetryPolicy()``) WITHOUT restaging: staged files are
+        head-independent, since sequence numbers stamp at commit, so the
+        race costs O(commit), never O(batch).
+
+        ``check`` refuses by raising.  Its exception, whatever its type,
+        leaves the loop at once and is never retried here: a writer that
+        refuses with CommitConflictError replays through its own outer
+        retry.  ``schema`` defaults to the head's (it must be given when
+        the table has no head yet); ``properties`` are set on top of the
+        head's."""
+
+        def attempt() -> Snapshot:
+            head = self.snapshot()
+            if check is not None:
+                try:
+                    check(head)
+                except Exception as exc:  # noqa: BLE001
+                    raise _CheckRefused(exc) from exc
+            return self.commit(
+                None,
+                schema if schema is not None else head.schema,
+                operation,
+                head.version if head else None,
+                properties=(
+                    None
+                    if properties is None
+                    else {**(head.properties if head else {}), **properties}
+                ),
+                summary=summary,
+                new_files=list(new_files),
+                new_deletes=list(new_deletes),
+            )
+
+        try:
+            return (policy or RetryPolicy()).run(attempt)
+        except _CheckRefused as refused:
+            raise refused.error from None
 
     #: Spark SQL type string -> Iceberg primitive type name
     _ICEBERG_TYPES = {
@@ -3099,9 +3234,7 @@ class LakeTable:
             snap.schema,
             "delete",
             snap.version,
-            manifests=snap.manifests,
-            new_files=list(snap.inline_files),
-            delete_files=list(snap.delete_files) + new_deletes,
+            new_deletes=new_deletes,
             summary={
                 "position-delete-files": len(new_deletes),
                 "deleted-rows-addressed": sum(d.rows for d in new_deletes),
@@ -3156,9 +3289,8 @@ class LakeTable:
             snap.schema,
             "merge",
             snap.version,
-            manifests=snap.manifests,
-            new_files=list(snap.inline_files) + new_files,
-            delete_files=list(snap.delete_files) + new_deletes,
+            new_files=new_files,
+            new_deletes=new_deletes,
             summary={
                 "update-position-delete-files": len(new_deletes),
                 "updated-rows": sum(f.rows for f in new_files),
@@ -4008,9 +4140,7 @@ class LakeTable:
             snap.version,
             properties=props,
             summary={"dropped-column": col},
-            delete_files=list(snap.delete_files),
-            manifests=list(snap.manifests),
-            new_files=list(snap.inline_files),
+            new_files=[],
         )
 
     def add_column(
@@ -4082,9 +4212,8 @@ class LakeTable:
         new_schema = T.StructType(
             list(snap.schema.fields) + [T.StructField(name, dtype, True, meta)]
         )
-        ids = None
-        manifests: list[ManifestRef] | None = list(snap.manifests)
-        inline = list(snap.inline_files)
+        ids = manifests = None  # None: the parent's ids and inventory
+        inline: list[DataFile] = []
         # a name the table has EVER used is dangerous to re-add bare: after
         # drop/re-add the old pages hold the DROPPED values, and after a
         # rename-away chain (c0→c1, add c0) live files still carry physical
@@ -4139,7 +4268,7 @@ class LakeTable:
                     _guard(e) for e in read_manifest(self.location, ref, io=self._io)
                 ]
                 manifests.extend(write_chunked(self.location, entries, io=self._io))
-            inline = [_guard(e) for e in inline]
+            inline = [_guard(e) for e in snap.inline_files]
             ids = dict(snap.field_ids)
             ids[name] = max(ids.values(), default=0) + 1
         return self.commit(
@@ -4148,7 +4277,6 @@ class LakeTable:
             "add-column",
             snap.version,
             summary={"added-column": f"{name} {dtype.simpleString()}"},
-            delete_files=list(snap.delete_files),
             manifests=manifests,
             new_files=inline,
             field_ids=ids,
@@ -4234,9 +4362,7 @@ class LakeTable:
                     f"{col}: {old_type.simpleString()} -> {new_type.simpleString()}"
                 )
             },
-            delete_files=list(snap.delete_files),
-            manifests=list(snap.manifests),
-            new_files=list(snap.inline_files),
+            new_files=[],
         )
 
     @staticmethod

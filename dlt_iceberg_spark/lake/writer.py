@@ -46,7 +46,6 @@ from dlt_iceberg_spark.lake.merge import merge_plan
 from dlt_iceberg_spark.lake.table import (
     BLOOM_COLUMN_PROP,
     NDV_COLUMN_PROP,
-    DataFile,
     LakeTable,
     recorded_columns,
     with_recorded_columns,
@@ -231,8 +230,7 @@ class LakeWriter:
     def write(self, spec: TableSpec, df: DataFrame, load_id: str | None = None) -> LakeTable:
         """Land one batch for one table under its disposition — exactly one
         snapshot on success."""
-        policy = RetryPolicy(self.config.max_retries, self.config.retry_backoff_base)
-        return policy.run(lambda: self._write_once(spec, df, load_id))
+        return self._policy().run(lambda: self._write_once(spec, df, load_id))
 
     def _enforce_expectations(
         self, spec: TableSpec, df: DataFrame, load_id: str | None
@@ -382,7 +380,10 @@ class LakeWriter:
             # conflict-retry cost is O(commit), never O(batch) (at 100 TB
             # restaging a batch to resolve a millisecond pointer race would
             # dominate the write path under any concurrency).
-            self._commit_append_on_head(table, target_schema, summary, new_files)
+            table.commit_on_head(
+                "append", new_files=new_files, summary=summary,
+                check=self._head_check(target_schema), policy=self._policy(),
+            )
         elif disposition == "replace":
             scope = (
                 spec.write_disposition.get("scope")
@@ -405,39 +406,30 @@ class LakeWriter:
             self.observer(spec.name)
         return table
 
-    # -- conflict-cheap append commits -------------------------------------
+    # -- conflict-cheap head commits ---------------------------------------
 
-    class _ConcurrentSchemaChange(Exception):
-        """Head schema moved between staging and commit — the batch must
-        replay through create-or-evolve (non-retryable on purpose: the
-        fast commit loop hands it back to the full write retry)."""
+    def _policy(self) -> RetryPolicy:
+        return RetryPolicy(self.config.max_retries, self.config.retry_backoff_base)
 
-    def _commit_append_on_head(
-        self, table: LakeTable, target_schema, summary: dict, new_files: list[DataFile]
-    ) -> None:
-        """Commit staged append files against whatever the CURRENT head is,
-        retrying lost commit races without restaging (staged files are
-        head-independent; the race costs O(commit), not O(batch)).  A
-        concurrent schema evolution aborts the fast path — the outer write
-        retry re-evolves and re-casts the batch."""
+    @staticmethod
+    def _head_check(target_schema, keys: list[str] | None = None):
+        """``commit_on_head`` check for a batch cast to ``target_schema``:
+        refuse when the head's schema moved since (or, for a MoR merge
+        keyed on ``keys``, its delete files key on another set).  The
+        refusal is a CommitConflictError that ``commit_on_head`` hands back
+        unretried, so the outer write retry replays the batch through
+        create-or-evolve."""
         expected = target_schema.json()
-        policy = RetryPolicy(self.config.max_retries, self.config.retry_backoff_base)
 
-        def attempt() -> None:
-            head = table.snapshot()
-            if head.schema is not None and head.schema.json() != expected:
-                raise LakeWriter._ConcurrentSchemaChange()
-            table.commit(
-                None, target_schema, "append", head.version, summary=summary,
-                manifests=head.manifests, new_files=head.inline_files + new_files,
-            )
+        def check(head) -> None:
+            if head.schema.json() != expected:
+                raise CommitConflictError("concurrent schema change; replaying load")
+            if keys is not None and any(
+                tuple(d.equality_ids) != tuple(keys) for d in head.delete_files
+            ):
+                raise CommitConflictError("concurrent key change; replaying load")
 
-        try:
-            policy.run(attempt)
-        except LakeWriter._ConcurrentSchemaChange:
-            raise CommitConflictError(
-                "concurrent schema change during append; replaying load"
-            ) from None
+        return check
 
     # -- create / evolve ---------------------------------------------------
 
@@ -497,8 +489,7 @@ class LakeWriter:
             op = "evolve-schema" if changed else "evolve-partition"
             table.commit(
                 None, evolved, op, snap.version, partition_spec=new_pspec,
-                properties=props_update,
-                manifests=snap.manifests, new_files=snap.inline_files,
+                properties=props_update, new_files=[],
             )
         return table, evolved
 
@@ -604,22 +595,19 @@ class LakeWriter:
         # summary can't contain ANY incoming tuple passes through by
         # reference, unread — dynamic overwrite into an 800k-file table
         # touches only the manifests holding the replaced partitions
-        from dlt_iceberg_spark.lake.manifest import read_manifest
-
         may_hold = self._may_hold
-        kept_refs, candidates = [], list(snap.inline_files)
-        for ref in snap.manifests:
+
+        def opens(ref) -> bool:
             summaries = [ref.partitions.get(n) for n in names]
-            if any(
+            return any(
                 all(
                     vals is None or any(may_hold(r, v) for r in vals)
                     for vals, v in zip(summaries, t)
                 )
                 for t in incoming
-            ):
-                candidates.extend(read_manifest(table.location, ref))
-            else:
-                kept_refs.append(ref)
+            )
+
+        kept_refs, candidates = snap.split_manifests(opens)
 
         keep, drop, legacy = [], [], []
         for f in candidates:
@@ -692,7 +680,10 @@ class LakeWriter:
             new_files = table.stage_dataframe(
                 batch.drop(hard_delete_col) if has_hard_delete else batch
             )
-            self._commit_append_on_head(table, target_schema, summary, new_files)
+            table.commit_on_head(
+                "append", new_files=new_files, summary=summary,
+                check=self._head_check(target_schema), policy=self._policy(),
+            )
             return
 
         if snap.delete_files:
@@ -769,7 +760,8 @@ class LakeWriter:
         aggs.append(F.count(F.lit(1)).alias("_n"))
         stats_row = batch.agg(*aggs).collect()[0]
         if stats_row["_n"] == 0:
-            touched, kept_refs, kept_files = [], snap.manifests, snap.inline_files
+            touched = []
+            kept_refs, kept_files = snap.split_manifests(lambda ref: False)
         else:
             from dlt_iceberg_spark.lake.table import iso_norm_value
 
@@ -869,40 +861,19 @@ class LakeWriter:
         # staged data + delete files are head-independent (sequence numbers
         # stamp at commit), so a lost commit race re-commits against the new
         # head without restaging — O(commit) conflict retry, like append
-        expected = target_schema.json()
-        policy = RetryPolicy(self.config.max_retries, self.config.retry_backoff_base)
-
-        def attempt() -> None:
-            head = table.snapshot()
-            if head.schema is not None and head.schema.json() != expected:
-                raise LakeWriter._ConcurrentSchemaChange()
-            if head.delete_files and any(
-                tuple(d.equality_ids) != tuple(keys) for d in head.delete_files
-            ):
-                # a concurrent load changed the key set: replay fully
-                raise LakeWriter._ConcurrentSchemaChange()
-            table.commit(
-                None,
-                target_schema,
-                "merge-mor",
-                head.version,
-                manifests=head.manifests,
-                new_files=head.inline_files + new_files,
-                delete_files=list(head.delete_files) + new_delete_files,
-                summary={
-                    **summary,
-                    "strategy": strategy,
-                    "merge_mode": "mor",
-                    "added-delete-files": len(new_delete_files),
-                },
-            )
-
-        try:
-            policy.run(attempt)
-        except LakeWriter._ConcurrentSchemaChange:
-            raise CommitConflictError(
-                "concurrent schema/key change during merge-mor; replaying load"
-            ) from None
+        table.commit_on_head(
+            "merge-mor",
+            new_files=new_files,
+            new_deletes=new_delete_files,
+            summary={
+                **summary,
+                "strategy": strategy,
+                "merge_mode": "mor",
+                "added-delete-files": len(new_delete_files),
+            },
+            check=self._head_check(target_schema, keys),
+            policy=self._policy(),
+        )
 
 
 def commit_load(

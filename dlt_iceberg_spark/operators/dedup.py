@@ -596,8 +596,7 @@ def append_novel_classes(
         snap.schema,
         "append",
         snap.version,
-        manifests=snap.manifests,
-        new_files=list(snap.inline_files) + new_files,
+        new_files=new_files,
         summary={"novel-classes": sum(f.rows for f in new_files)},
     )
 

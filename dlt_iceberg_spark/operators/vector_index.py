@@ -453,28 +453,21 @@ def append_vectors(table, batch: DataFrame) -> Any:
     )
     if not new_files:
         return snap
-    from dlt_iceberg_spark.errors import RetryPolicy
 
-    def attempt():
-        head = table.snapshot()
+    def check(head):
         if head.properties.get(_PROP_FILE) != frozen_rel:
-            raise ValueError(  # not retryable: assignments are stale
+            raise ValueError(  # assignments are stale: refuse, never retry
                 f"{table.location} was rebuilt concurrently; re-run "
                 "append_vectors so the batch is assigned under the NEW "
                 "centroids"
             )
-        return table.commit(
-            None,
-            head.schema,
-            "append",
-            head.version,
-            manifests=head.manifests,
-            new_files=list(head.inline_files) + new_files,
-            delete_files=list(head.delete_files),
-            summary={"vectors-appended": sum(f.rows for f in new_files)},
-        )
 
-    return RetryPolicy().run(attempt)
+    return table.commit_on_head(
+        "append",
+        new_files=new_files,
+        summary={"vectors-appended": sum(f.rows for f in new_files)},
+        check=check,
+    )
 
 
 def delete_vectors(table, ids: DataFrame) -> Any:
@@ -513,22 +506,11 @@ def delete_vectors(table, ids: DataFrame) -> Any:
     # stage once, retry the commit against a re-read head — id-keyed
     # equality deletes stay correct across any concurrent append or even
     # a rebuild (they mask whatever rows carry those ids at commit time)
-    from dlt_iceberg_spark.errors import RetryPolicy
-
-    def attempt():
-        head = table.snapshot()
-        return table.commit(
-            None,
-            head.schema,
-            "delete",
-            head.version,
-            manifests=head.manifests,
-            new_files=list(head.inline_files),
-            delete_files=list(head.delete_files) + new_deletes,
-            summary={"vector-delete-keys": sum(d.rows for d in new_deletes)},
-        )
-
-    return RetryPolicy().run(attempt)
+    return table.commit_on_head(
+        "delete",
+        new_deletes=new_deletes,
+        summary={"vector-delete-keys": sum(d.rows for d in new_deletes)},
+    )
 
 
 def rebuild_vector_index(
@@ -789,8 +771,6 @@ def split_list(
             head.schema,
             "replace",
             head.version,
-            partition_spec=head.partition_spec,
-            delete_files=list(head.delete_files),
             properties={
                 **head.properties,
                 _PROP_FILE: rel,

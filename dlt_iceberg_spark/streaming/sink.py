@@ -36,15 +36,17 @@ depends on the writer session's timezone frame (the
 ``write.session-tz-set`` machinery), which executor-side Arrow batches
 cannot reproduce safely.
 
-Per-file [min, max] stats are computed from the Arrow batches at write
-time, so stream-landed files prune exactly like batch ones.
+Each staged file goes through ``LakeTable.stage_rows`` — the FileIO seam,
+and footer [min, max] stats, NULL counts and manifest blooms on the bloom
+columns the table records (frozen at stream start, like the spec) — so
+stream-landed files prune exactly like batch ones.  The epoch commit is
+``LakeTable.commit_on_head``: a lost race re-commits without restaging.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import uuid
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -52,13 +54,6 @@ from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSourceStreamArrowWriter,
     WriterCommitMessage,
-)
-
-#: arrow-side analogue of table._STATS_TYPES — types whose min/max are
-#: recorded in the manifest stats frame
-_PRUNABLE_SPARK = (
-    T.IntegerType, T.LongType, T.FloatType, T.DoubleType,
-    T.StringType, T.DateType, T.TimestampType, T.TimestampNTZType,
 )
 
 #: transform → source simpleString()s the executor-side renderer supports
@@ -78,16 +73,8 @@ class _StagedFiles(WriterCommitMessage):
     files_json: str  # [] when the task saw no rows
 
 
-def _iso_norm(v):
-    import datetime as _dt
-
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is not None:
-            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        return v.isoformat()
-    if isinstance(v, _dt.date):
-        return v.isoformat()
-    return v
+class _EpochCommitted(Exception):
+    """The head already records this epoch (a checkpoint replay)."""
 
 
 def _render_partition_column(c, transform: str, param, dtype: str):
@@ -196,14 +183,12 @@ class _LakeStreamWriter(DataSourceStreamArrowWriter):
     def __init__(self, schema: T.StructType, options: dict):
         self.schema = schema
         self.location = options["location"].rstrip("/")
-        self.prunable = [
-            f.name for f in schema.fields if isinstance(f.dataType, _PRUNABLE_SPARK)
-        ]
-        # the partition spec is frozen at stream start (same contract as
-        # the stream schema); validated HERE so an unsupported layout
-        # fails at start, not epochs later
+        # the partition spec and the recorded bloom columns are frozen at
+        # stream start (same contract as the stream schema); the spec is
+        # validated HERE so an unsupported layout fails at start, not
+        # epochs later
         self.pspec: list[tuple] = []  # (field_name, column, transform, param, dtype)
-        snap_spec = self._current_partition_spec()
+        snap_spec, self.bloom_columns = self._frozen_layout()
         # remember the spec STRUCTURALLY: a spec replaced mid-stream with a
         # different column/transform/param must fail the commit guard, not
         # just presence flips (files rendered under a stale frozen spec
@@ -230,62 +215,27 @@ class _LakeStreamWriter(DataSourceStreamArrowWriter):
                 )
                 self.pspec.append((name, col, t, p.get("param"), dt))
 
-    def _current_partition_spec(self):
+    def _frozen_layout(self) -> tuple[list[dict], list[str]]:
+        """(partition spec, recorded bloom columns) of the table's head;
+        empty for a table the first epoch will create."""
+        from dlt_iceberg_spark.lake.table import BLOOM_COLUMN_PROP, recorded_columns
+
         try:
-            t = self._table()
-            snap = t.snapshot()
+            snap = self._table().snapshot()
         except Exception:
-            return []
-        return list(snap.partition_spec or []) if snap else []
+            return [], []
+        if snap is None:
+            return [], []
+        return (
+            list(snap.partition_spec or []),
+            recorded_columns(snap.properties, BLOOM_COLUMN_PROP),
+        )
 
     # -- executors ---------------------------------------------------------
 
-    def _write_one(self, tbl, partition: dict) -> dict:
-        import pyarrow.parquet as pq
-
-        rel = f"data/{uuid.uuid4().hex}.parquet"
-        abs_path = os.path.join(self.location, rel)
-        os.makedirs(os.path.dirname(abs_path), exist_ok=True)
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        # pyarrow's statistics skip NaN, but Spark orders NaN above every
-        # number: a float column holding NaN gets no range, neither in the
-        # footer (Spark's row-group filter reads it) nor in the manifest
-        nan_cols = {
-            n
-            for n, c in zip(tbl.column_names, tbl.columns)
-            if pa.types.is_floating(c.type) and pc.any(pc.is_nan(c)).as_py()
-        }
-        pq.write_table(
-            tbl,
-            abs_path,
-            write_statistics=(
-                [n for n in tbl.column_names if n not in nan_cols] if nan_cols else True
-            ),
-        )
-        stats, nulls = {}, {}
-        for col in self.prunable:
-            if col not in tbl.column_names:
-                continue
-            c = tbl.column(col)
-            nulls[col] = c.null_count
-            if c.null_count == len(c):
-                continue
-            if col in nan_cols:
-                continue
-            mm = pc.min_max(c).as_py()
-            if mm["min"] is None or mm["max"] is None:
-                continue
-            stats[col] = [_iso_norm(mm["min"]), _iso_norm(mm["max"])]
-        return {
-            "path": rel,
-            "rows": tbl.num_rows,
-            "bytes": os.path.getsize(abs_path),
-            "stats": stats,
-            "null_counts": nulls,
-            "partition": partition,
-        }
+    def _write_one(self, tbl, partition: dict) -> list[dict]:
+        files = self._table().stage_rows(tbl, self.schema, partition, self.bloom_columns)
+        return [vars(f) for f in files]
 
     def write(self, iterator: Iterator) -> WriterCommitMessage | None:
         import pyarrow as pa
@@ -297,8 +247,7 @@ class _LakeStreamWriter(DataSourceStreamArrowWriter):
             return _StagedFiles(files_json="[]")
         tbl = pa.Table.from_batches(batches)
         if not self.pspec:
-            files = [self._write_one(tbl, {})]
-            return _StagedFiles(files_json=json.dumps(files, default=str))
+            return _StagedFiles(files_json=json.dumps(self._write_one(tbl, {})))
         # split the task's rows by partition tuple — one file per tuple,
         # the same clustering the batch writer's partitionBy produces.
         # Rendering and grouping are column-at-a-time: numpy/arrow render
@@ -337,8 +286,8 @@ class _LakeStreamWriter(DataSourceStreamArrowWriter):
             partition = {
                 name: tup[j] for j, (name, *_rest) in enumerate(self.pspec)
             }
-            files.append(self._write_one(sub, partition))
-        return _StagedFiles(files_json=json.dumps(files, default=str))
+            files.extend(self._write_one(sub, partition))
+        return _StagedFiles(files_json=json.dumps(files))
 
     # -- driver ------------------------------------------------------------
 
@@ -352,86 +301,69 @@ class _LakeStreamWriter(DataSourceStreamArrowWriter):
         return LakeTable(None, self.location, io=LocalFileIO())
 
     def commit(self, messages, batchId: int) -> None:
-        from dlt_iceberg_spark.errors import CommitConflictError
+        from dlt_iceberg_spark.errors import RetryPolicy
         from dlt_iceberg_spark.lake.manifest import DataFile
 
         staged = [
-            DataFile(
-                path=f["path"],
-                rows=f["rows"],
-                bytes=f["bytes"],
-                stats=f["stats"],
-                partition=f.get("partition") or {},
-                null_counts=f["null_counts"],
-            )
+            DataFile(**f)
             for m in messages
             if m is not None
             for f in json.loads(m.files_json)
         ]
+        paths = [f.path for f in staged]
         t = self._table()
-        for _ in range(5):
-            snap = t.snapshot()
-            if snap is not None:
-                live_spec_json = json.dumps(
-                    [
-                        dict(sorted(p.items()))
-                        for p in (snap.partition_spec or [])
-                    ],
-                    default=str,
+
+        def check(head) -> None:
+            if head is None:
+                return  # the first epoch creates the table
+            live_spec_json = json.dumps(
+                [dict(sorted(p.items())) for p in (head.partition_spec or [])],
+                default=str,
+            )
+            if live_spec_json != self._frozen_spec_json:
+                # the table's spec changed (or the table appeared) after
+                # the stream planned its layout — ANY structural difference
+                # (column/transform/param), not just presence: restart the
+                # stream so the writer re-freezes the spec
+                self._drop(paths)
+                raise ValueError(
+                    "the table's partition spec changed after the stream "
+                    "started; restart the stream (the sink freezes the spec "
+                    "at start, like the schema)"
                 )
-                if live_spec_json != self._frozen_spec_json:
-                    # the table's spec changed (or the table appeared)
-                    # after the stream planned its layout — ANY structural
-                    # difference (column/transform/param), not just
-                    # presence: restart the stream so the writer
-                    # re-freezes the spec
-                    self._drop([f.path for f in staged])
-                    raise ValueError(
-                        "the table's partition spec changed after the "
-                        "stream started; restart the stream (the sink "
-                        "freezes the spec at start, like the schema)"
-                    )
-                if snap.schema != self.schema:
-                    self._drop([f.path for f in staged])
-                    raise ValueError(
-                        "stream schema does not match the table schema "
-                        f"({self.schema.simpleString()} vs "
-                        f"{snap.schema.simpleString()}); evolve the table "
-                        "first or use streaming.stream_write"
-                    )
-                # epoch replay after a checkpoint recovery: the batch is
-                # already committed — drop the re-staged files and return.
-                # The marker lives in table PROPERTIES (carried forward by
-                # every later commit), so detection survives an interleaved
-                # batch writer between crash and restart.
-                if snap.properties.get("stream.last-committed-batch") == str(
-                    batchId
-                ):
-                    self._drop([f.path for f in staged])
-                    return
-            if not staged:
-                return  # empty epoch: no snapshot, nothing to clean
-            props = dict(snap.properties) if snap else {}
-            props["stream.last-committed-batch"] = str(batchId)
-            try:
-                t.commit(
-                    None,
-                    self.schema,
-                    "append",
-                    snap.version if snap else None,
-                    partition_spec=list(snap.partition_spec) if snap else [],
-                    manifests=list(snap.manifests) if snap else [],
-                    new_files=(list(snap.inline_files) if snap else []) + staged,
-                    delete_files=list(snap.delete_files) if snap else [],
-                    properties=props,
-                    summary={"stream-batch-id": batchId},
+            if head.schema != self.schema:
+                self._drop(paths)
+                raise ValueError(
+                    "stream schema does not match the table schema "
+                    f"({self.schema.simpleString()} vs "
+                    f"{head.schema.simpleString()}); evolve the table first "
+                    "or use streaming.stream_write"
                 )
+            # epoch replay after a checkpoint recovery: the batch is
+            # already committed — drop the re-staged files.  The marker
+            # lives in table PROPERTIES (carried forward by every later
+            # commit), so detection survives an interleaved batch writer
+            # between crash and restart.
+            if head.properties.get("stream.last-committed-batch") == str(batchId):
+                self._drop(paths)
+                raise _EpochCommitted()
+
+        try:
+            if not staged:  # empty epoch: no snapshot, but the guard holds
+                check(t.snapshot())
                 return
-            except CommitConflictError:
-                continue  # a concurrent writer advanced the table: retry
-        raise CommitConflictError(
-            f"stream sink lost {5} commit races at {self.location!r}"
-        )
+            t.commit_on_head(
+                "append",
+                new_files=staged,
+                summary={"stream-batch-id": batchId},
+                check=check,
+                # a concurrent writer advanced the table: retry at once
+                policy=RetryPolicy(5, sleep=lambda _s: None),
+                schema=self.schema,
+                properties={"stream.last-committed-batch": str(batchId)},
+            )
+        except _EpochCommitted:
+            return
 
     def abort(self, messages, batchId: int) -> None:
         self._drop(
@@ -442,8 +374,9 @@ class _LakeStreamWriter(DataSourceStreamArrowWriter):
         )
 
     def _drop(self, rel_paths) -> None:
+        io = self._table()._io
         for rel in rel_paths:
             try:
-                os.remove(os.path.join(self.location, rel))
+                io.remove(os.path.join(self.location, rel))
             except OSError:
                 pass

@@ -71,10 +71,10 @@ def main() -> None:
         stale = catalog.load_table("prod", "events")
         head = stale.snapshot()
         fresh_files = t.stage_dataframe(spark.createDataFrame([(4, "d")], "id long, v string"))
-        t.commit(None, head.schema, "append", head.version, manifests=head.manifests, new_files=fresh_files)
+        t.commit(None, head.schema, "append", head.version, new_files=fresh_files)
         try:
             stale_files = stale.stage_dataframe(spark.createDataFrame([(5, "e")], "id long, v string"))
-            stale.commit(None, head.schema, "append", head.version, manifests=head.manifests, new_files=stale_files)
+            stale.commit(None, head.schema, "append", head.version, new_files=stale_files)
         except CommitConflictError as err:
             print(f"racer lost cleanly: {err}")
 
