@@ -523,12 +523,8 @@ class Snapshot:
     """One committed table state.
 
     The live file set is ``manifests`` (chunked parquet manifests, reused
-    across commits) plus ``inline_files``: entries of legacy snapshots,
-    written before chunked manifests, that no commit writes any more.  A
-    delta commit on such a snapshot folds them into its new manifest
-    (:meth:`LakeTable.commit` carries them itself, and
-    :meth:`split_manifests` hands them out with the opened entries), so
-    code outside this module never names them.  ``files`` expands
+    across commits) plus ``inline_files`` (legacy snapshots only; the next
+    delta commit folds them into a manifest).  ``files`` expands
     everything on first access; commit/prune paths avoid it so driver work
     stays O(touched files), never O(table).
     """
@@ -574,10 +570,8 @@ class Snapshot:
         self, opens: Callable[[ManifestRef], bool]
     ) -> tuple[list[ManifestRef], list[DataFile]]:
         """``(kept_refs, entries)``: manifests ``opens`` rejects pass
-        through unread; the others are read, and their entries come back
-        with the legacy inline ones — the split a rewrite that prunes by
-        manifest summary hands to :meth:`LakeTable.commit` as
-        ``manifests=kept_refs``."""
+        through unread; the others' entries come back with the inline
+        ones, for a commit with ``manifests=kept_refs``."""
         kept: list[ManifestRef] = []
         entries = list(self.inline_files)
         for ref in self.manifests:
@@ -1515,19 +1509,16 @@ class LakeTable:
         partition: dict | None = None,
         bloom_columns=(),
     ) -> list[DataFile]:
-        """Write an in-memory Arrow table (``data``, typed as ``schema``)
-        as ONE parquet data file holding ``partition``'s rows, not yet
-        visible — like :meth:`stage_dataframe`, visibility comes from the
-        snapshot commit.
+        """Write an Arrow table (``data``, typed as ``schema``) as ONE
+        parquet data file of ``partition``, not yet visible — like
+        :meth:`stage_dataframe`, visibility comes from the commit.
 
-        No Spark job: pyarrow encodes the file in this process (the load
-        ledger's driver, a streaming sink's executor), the bytes go through
-        the table's FileIO, and rows, stats, NULL counts and the manifest
-        blooms of ``bloom_columns`` come from :func:`_scan_staged_file`.
-        pyarrow's footer statistics skip NaN while Spark orders NaN above
-        every number, so a float column holding NaN is written without
-        statistics (Spark's row-group filter reads them) and records no
-        range.  Bulk DataFrames belong on :meth:`stage_dataframe`."""
+        No Spark job: pyarrow encodes the file in this process (the
+        ledger's driver, a stream sink's executor), the bytes go through
+        the FileIO, and rows, stats, NULL counts and ``bloom_columns``'
+        manifest blooms come from :func:`_scan_staged_file`.  pyarrow's
+        footer stats skip NaN while Spark orders NaN above every number,
+        so a float column holding NaN is written without statistics."""
         if not data.num_rows:
             return []
         import io as _pyio
@@ -1584,38 +1575,29 @@ class LakeTable:
     ) -> Snapshot:
         """Atomically publish a new snapshot.
 
-        One rule: the base is the expected parent.  Whatever an argument
-        does not replace — its file inventory, delete files, partition
-        spec, properties, field ids — carries over from that snapshot.
+        One rule: the base is the expected parent — its inventory, delete
+        files, spec, properties and field ids carry over unless replaced.
 
-        - ``new_files=[...]`` lists only the ADDED entries (the delta
-          form): the parent's manifests are reused by reference, never
-          read, and the added entries become one new manifest.  An append
-          to an 800k-file table touches only the entries it adds — this is
-          Iceberg's manifest-list design and the reason commits stay
-          O(touched) at any table size.  ``new_files=[]`` is a
-          metadata-only commit; a call naming no files and no deletes is
-          refused — it reads like a forgotten ``files=[]`` truncate.
+        - ``new_files=[...]`` lists only the ADDED entries: the parent's
+          manifests are reused by reference, never read, and the added
+          entries become one new manifest — Iceberg's manifest-list design,
+          the reason commits stay O(touched) at any table size.
+          ``new_files=[]`` is metadata-only; naming no files and no deletes
+          is refused (it reads like a forgotten ``files=[]``).
         - ``manifests=[refs]`` only passes a pruned or rewritten inventory
-          in place of the parent's (CoW merge and partition replace keep
-          the refs they proved untouched, schema DDL passes the refs it
-          rewrote, rollback an old snapshot's); ``new_files`` then lists
-          every other live entry.
+          (CoW merge, partition replace, schema-DDL rewrites, rollback);
+          ``new_files`` then lists every other live entry.
         - ``files=[...]`` is the FULL live-file set (replace, compaction,
-          z-order); ``[]`` truncates.  Entries are chunked into fresh
-          manifests — O(given files), which such rewrites pay anyway.
+          z-order); ``[]`` truncates.
 
-        ``delete_files`` likewise replaces the parent's delete set (``[]``
-        clears it); ``new_deletes`` are added on top of whichever applies.
-        Files with ``sequence=None`` are stamped with the new version —
-        equality deletes apply only to data files with a strictly smaller
-        sequence, so a delete committed alongside new data masks old rows,
-        never the rows landing in the same commit.
+        ``delete_files`` replaces the parent's delete set (``[]`` clears
+        it); ``new_deletes`` add to it.  Files with ``sequence=None`` are
+        stamped with the new version — equality deletes apply only to data
+        files with a strictly smaller sequence, so a delete committed
+        alongside new data masks old rows, never the rows landing with it.
 
         Optimistic concurrency: fails with CommitConflictError if the table
-        advanced past ``expected_parent`` (detected by the loser of the
-        version-file rename race); :meth:`commit_on_head` retries such
-        races against the new head.
+        advanced past ``expected_parent``; :meth:`commit_on_head` retries.
         """
         if files is not None and (manifests is not None or new_files is not None):
             raise ValueError("pass files=... OR manifests=/new_files=, not both")
@@ -1877,24 +1859,18 @@ class LakeTable:
         schema: T.StructType | None = None,
         properties: dict[str, str] | None = None,
     ) -> Snapshot:
-        """Commit staged files on top of whatever the head is — Iceberg's
-        ``AppendFiles`` / ``RowDelta``, which commit relative to the base
-        snapshot and own the retry.
+        """Commit staged files on top of whatever the head is (Iceberg's
+        ``AppendFiles`` / ``RowDelta``): read the head, run
+        ``check(head)``, delta-commit ``new_files`` / ``new_deletes``
+        against it, and retry lost races under ``policy`` WITHOUT
+        restaging — sequence numbers stamp at commit, so staged files are
+        head-independent and a race costs O(commit), never O(batch).
 
-        Each attempt reads the head, runs ``check(head)``, and commits
-        ``new_files`` / ``new_deletes`` against ``head.version`` in the
-        delta form of :meth:`commit`.  A lost race (CommitConflictError)
-        re-reads the head and tries again under ``policy`` (default
-        ``RetryPolicy()``) WITHOUT restaging: staged files are
-        head-independent, since sequence numbers stamp at commit, so the
-        race costs O(commit), never O(batch).
-
-        ``check`` refuses by raising.  Its exception, whatever its type,
-        leaves the loop at once and is never retried here: a writer that
-        refuses with CommitConflictError replays through its own outer
-        retry.  ``schema`` defaults to the head's (it must be given when
-        the table has no head yet); ``properties`` are set on top of the
-        head's."""
+        ``check`` refuses by raising; its exception, whatever its type,
+        leaves at once, unretried (a writer refusing with
+        CommitConflictError replays through its own outer retry).
+        ``schema`` defaults to the head's (required without a head);
+        ``properties`` are set on top of the head's."""
 
         def attempt() -> Snapshot:
             head = self.snapshot()
