@@ -393,8 +393,13 @@ def expire_snapshots(
     Returns counts ``{"snapshots": n, "data_files": m,
     "clone_pinned_files": p}``.
     """
-    snaps = table.snapshots()
     current = table.current_version()
+    # every snapshot on disk, unreachable ones (crashed commits) included
+    snaps = [
+        table.snapshot(v)
+        for v in table._all_versions()
+        if current is not None and v <= current
+    ]
     if current is None or not snaps:
         return {"snapshots": 0, "data_files": 0, "clone_pinned_files": 0}
     cutoff = datetime.now(timezone.utc) - older_than
@@ -753,10 +758,9 @@ def consolidate_position_deletes(table: LakeTable) -> dict:
     Returns ``{"consolidated": n_files, "addresses": kept, "dropped": n}``.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     from dlt_iceberg_spark.lake.manifest import DeleteFile
-    from dlt_iceberg_spark.lake.table import _norm_path
+    from dlt_iceberg_spark.lake.table import _ADDR_SCHEMA, _norm_path
 
     snap = table.snapshot()
     if snap is None:
@@ -765,14 +769,9 @@ def consolidate_position_deletes(table: LakeTable) -> dict:
     if len(pos) <= 1:
         return {"consolidated": 0, "addresses": 0, "dropped": 0}
     others = [d for d in snap.delete_files if d.content != "position"]
-    addressed = table.spark.read.schema(
-        T.StructType(
-            [
-                T.StructField("file_path", T.StringType()),
-                T.StructField("pos", T.LongType()),
-            ]
-        )
-    ).parquet(*[os.path.join(table.location, d.path) for d in pos])
+    addressed = table.spark.read.schema(_ADDR_SCHEMA).parquet(
+        *[os.path.join(table.location, d.path) for d in pos]
+    )
     norm = addressed.select(
         _norm_path(F.col("file_path")).alias("file_path"), "pos"
     ).distinct()

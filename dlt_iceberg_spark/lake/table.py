@@ -41,6 +41,7 @@ import bisect
 import itertools
 import json
 import os
+import re
 import urllib.parse
 import uuid
 from dataclasses import dataclass, field as dc_field
@@ -496,14 +497,15 @@ def _nested_key_schema(
     return build(tree)
 
 
-def _delete_may_touch(d: "DeleteFile", f: "DataFile", keys: list[str]) -> bool:
-    """Could this equality-delete file kill any row of data file ``f``?
-    Judged by key-range overlap of both sides' stats; missing stats on
-    either side ⇒ conservatively yes."""
+def _delete_may_touch(d: "DeleteFile", stats: dict, keys: list[str]) -> bool:
+    """Could this equality-delete file kill any row of a data file (or
+    manifest) whose key ranges are ``stats``?  Judged by key-range overlap
+    of both sides' stats; missing stats on either side ⇒ conservatively
+    yes."""
     if not d.stats:
         return True
     for k in keys:
-        ds, fs = d.stats.get(k), f.stats.get(k)
+        ds, fs = d.stats.get(k), stats.get(k)
         if not ds or not fs:
             continue
         dmn, dmx = ds
@@ -516,6 +518,132 @@ def _delete_may_touch(d: "DeleteFile", f: "DataFile", keys: list[str]) -> bool:
         except TypeError:
             continue
     return True
+
+
+#: Iceberg's reserved position-delete schema
+_ADDR_SCHEMA = T.StructType(
+    [T.StructField("file_path", T.StringType()), T.StructField("pos", T.LongType())]
+)
+#: a position mask as the read side joins it
+_MASK_SCHEMA = T.StructType(
+    [T.StructField("__pd_path", T.StringType()), T.StructField("__pd_pos", T.LongType())]
+)
+
+
+def _local_path(path: str) -> str:
+    """:func:`_norm_path` on the driver: ``file:/+`` becomes ``/``."""
+    return re.sub("^file:/+", "/", path)
+
+
+@dataclass
+class _DeleteIndex:
+    """A snapshot's delete files read once on the driver — Iceberg's
+    in-memory delete index (spec "Delete Formats"): readers filter with it
+    instead of joining against the delete files.
+
+    - ``keys``: equality-delete path → its distinct key tuples in the
+      table's key types under current names, rows with a NULL key dropped
+      (the null-unsafe anti-join never matches them).
+    - ``values``: equality-delete path → {int/string key column: its
+      sorted distinct values}, for :meth:`may_touch`.
+    - ``addrs``: addressed data file (``_local_path``, URL-decoded: Spark's
+      ``_metadata.file_path``, which our position deletes store, is
+      URL-encoded) → {address path as the join sees it: (distinct
+      positions, highest delete sequence naming each)}."""
+
+    keys: dict[str, pa.Table]
+    values: dict[str, dict[str, Any]]
+    addrs: dict[str, dict[str, tuple[Any, Any]]]
+
+    def may_touch(self, d: "DeleteFile", stats: dict) -> bool:
+        """Could a key tuple of equality delete ``d`` fall inside the key
+        ranges ``stats`` of a data file (or manifest)?  Sharper than
+        :func:`_delete_may_touch`'s range overlap: an upsert of a few old
+        keys plus fresh ones spans the key space between them, its values
+        do not."""
+        import numpy as np
+
+        if not len(self.keys[d.path]):
+            return False
+        for k, vals in self.values[d.path].items():
+            lo, hi = stats.get(k) or (None, None)
+            kind = str if vals.dtype == object else int
+            if not (isinstance(lo, kind) and isinstance(hi, kind)):
+                continue  # unbounded, or stats in another frame
+            i = np.searchsorted(vals, lo)
+            if i == len(vals) or vals[i] > hi:
+                return False
+        return True
+
+    def positions(self, path: str, fseq: int) -> list[tuple[str, Any]]:
+        """``(address path, positions)`` masking rows of the data file at
+        ``_local_path`` ``path`` with sequence ``fseq``: a position delete
+        applies to files with sequence ≤ its own."""
+        out = []
+        for p, (pos, seq) in self.addrs.get(path, {}).items():
+            hit = pos[seq >= fseq]
+            if len(hit):
+                out.append((p, hit))
+        return out
+
+    def key_frame(self, spark, dels: list["DeleteFile"], key_schema) -> DataFrame:
+        """The distinct key tuples of ``dels`` as an Arrow ``LocalRelation``."""
+        t = pa.concat_tables([self.keys[d.path] for d in dels])
+        if len(dels) > 1:
+            t = t.group_by(t.column_names).aggregate([]).select(key_schema.names)
+        return spark.createDataFrame(t, key_schema)
+
+
+def _mask_frame(spark, masks: list[tuple[str, Any]]) -> DataFrame:
+    """Position addresses ``[(path, positions)]`` as a ``LocalRelation``."""
+    import numpy as np
+
+    paths = np.repeat(
+        np.array([p for p, _ in masks], dtype=object), [len(pos) for _, pos in masks]
+    )
+    pos = np.concatenate([pos for _, pos in masks])
+    t = pa.table({"__pd_path": pa.array(paths, pa.string()), "__pd_pos": pos})
+    return spark.createDataFrame(t, _MASK_SCHEMA)
+
+
+@dataclass
+class _DeletePlan:
+    """Which delete files apply to which data file of one snapshot — the
+    sequence rules and key-range stats, refined by the delete index when
+    there is one (:meth:`LakeTable._delete_plan`)."""
+
+    location: str
+    eq_dels: list["DeleteFile"]  # by sequence
+    pos_dels: list["DeleteFile"]  # by sequence
+    keys: list[str]
+    key_schema: T.StructType | None
+    index: _DeleteIndex | None
+
+    def __post_init__(self):
+        self.eseqs = [d.sequence or 0 for d in self.eq_dels]
+        self.pseqs = [d.sequence or 0 for d in self.pos_dels]
+
+    def applicable(self, f: "DataFile") -> tuple[tuple[tuple[int, ...], int], list]:
+        """``((eq_app, pi), masks)`` for data file ``f``: the indices of the
+        equality deletes that may touch it (STRICTLY newer, overlapping key
+        ranges), the first position delete with sequence ≥ its own
+        (``len(pos_dels)`` when the index shows no address of ``f``), and
+        the index's addresses of ``f``."""
+        fseq = f.sequence or 0
+        eq_app = tuple(
+            j
+            for j in range(bisect.bisect_right(self.eseqs, fseq), len(self.eq_dels))
+            if _delete_may_touch(self.eq_dels[j], f.stats, self.keys)
+            and (self.index is None or self.index.may_touch(self.eq_dels[j], f.stats))
+        )
+        pi = bisect.bisect_left(self.pseqs, fseq)
+        masks: list = []
+        if self.index is not None:
+            path = _local_path(os.path.join(self.location, f.path))
+            masks = self.index.positions(path, fseq)
+            if not masks:
+                pi = len(self.pos_dels)
+        return (eq_app, pi), masks
 
 
 @dataclass
@@ -553,6 +681,9 @@ class Snapshot:
     #: memoized _position_masked_counts result — a count() probe pair
     #: (bare + predicated) on the same snapshot reuses one delete-file job
     _masked_cache: dict | None = dc_field(default=None, repr=False, compare=False)
+    #: memoized LakeTable._delete_plan (its delete index reads each delete
+    #: file once per snapshot object)
+    _delete_plan: Any = dc_field(default=None, repr=False, compare=False)
 
     @property
     def files(self) -> list[DataFile]:
@@ -1015,13 +1146,24 @@ class LakeTable:
         )
 
     def snapshots(self) -> list[Snapshot]:
-        """All snapshots, oldest first (the ``t.snapshots`` metadata table)."""
+        """The table's history, oldest first (the ``t.snapshots`` metadata
+        table): every snapshot up to this ref's head that parent links
+        reach from a ref — main, a branch or a tag.  A snapshot whose
+        commit never swapped a pointer (a crashed or lost commit) is not
+        history."""
         current = self.current_version()
-        return [
-            self.snapshot(v)
-            for v in self._all_versions()
-            if current is not None and v <= current
-        ]
+        if current is None:
+            return []
+        seen: dict[int, Snapshot] = {}
+        for head in {current, *self.branches().values(), *self.tags().values()}:
+            v = head
+            while v is not None and v not in seen:
+                try:
+                    seen[v] = self.snapshot(v)
+                except FileNotFoundError:  # expired
+                    break
+                v = seen[v].parent
+        return [seen[v] for v in sorted(seen) if v <= current]
 
     def schema(self) -> T.StructType | None:
         snap = self.snapshot()
@@ -2298,8 +2440,13 @@ class LakeTable:
         restricted to live data files whose sequence admits the delete and
         whose row count bounds the position — all manifest facts), so
         ``count = total_rows − live masked addresses`` with ZERO data
-        reads.  Only EQUALITY deletes genuinely need the masked-scan
-        fallback (which rows a key masks is a data fact)."""
+        reads.  While the delete files total at most
+        ``spark.sql.autoBroadcastJoinThreshold`` those addresses come from
+        the snapshot's driver-side delete index, so such a count runs no
+        Spark job at all (above the bound, one distributed job over the
+        delete files).  Only EQUALITY deletes genuinely need the
+        masked-scan fallback (which rows a key masks is a data fact); its
+        masks come from the same index."""
         snap = self.snapshot(snapshot_version)
         if snap is None:
             raise FileNotFoundError(f"no such table: {self.location}")
@@ -2358,52 +2505,60 @@ class LakeTable:
         f.rows`` holds for any address our read path could match).
         Returns ``{manifest-relative data path: n}``, omitting zeros —
         O(addressed files) driver memory.  Memoized per snapshot object
-        (count() probes the same masks for every predicate)."""
+        (count() probes the same masks for every predicate).
+
+        With the snapshot's delete index (delete files within
+        ``spark.sql.autoBroadcastJoinThreshold``) the addresses and counts
+        come from it in Python: no Spark job below the distributed-planning
+        threshold.  Otherwise a Spark job over the delete files resolves
+        them."""
         if snap._masked_cache is not None:
             return snap._masked_cache
         pos_dels = [d for d in snap.delete_files if d.content == "position"]
         if not pos_dels:
             snap._masked_cache = {}
             return {}
-        addr_schema = T.StructType(
-            [
-                T.StructField("file_path", T.StringType()),
-                T.StructField("pos", T.LongType()),
+        # touched: addressed data file (_local_path, URL-decoded — Spark's
+        # _metadata.file_path is URL-encoded, a manifest path is not) ->
+        # the address path as stored
+        index = self._delete_plan(snap).index
+        if index is not None:
+            touched = {p: p for p in index.addrs}
+        else:
+            by_seq: dict[int, list[str]] = {}
+            for d in pos_dels:
+                by_seq.setdefault(d.sequence or 0, []).append(
+                    os.path.join(self.location, d.path)
+                )
+            parts = [
+                self.spark.read.schema(_ADDR_SCHEMA)
+                .parquet(*paths)
+                .select(
+                    _norm_path(F.col("file_path")).alias("__p"),
+                    F.col("pos").alias("__pos"),
+                    F.lit(seq).alias("__dseq"),
+                )
+                for seq, paths in sorted(by_seq.items())
             ]
-        )
-        by_seq: dict[int, list[str]] = {}
-        for d in pos_dels:
-            by_seq.setdefault(d.sequence or 0, []).append(
-                os.path.join(self.location, d.path)
-            )
-        parts = [
-            self.spark.read.schema(addr_schema)
-            .parquet(*paths)
-            .select(
-                _norm_path(F.col("file_path")).alias("__p"),
-                F.col("pos").alias("__pos"),
-                F.lit(seq).alias("__dseq"),
-            )
-            for seq, paths in sorted(by_seq.items())
-        ]
-        addrs = parts[0]
-        for p in parts[1:]:
-            addrs = addrs.unionByName(p)
-        addrs = addrs.groupBy("__p", "__pos").agg(F.max("__dseq").alias("__dseq"))
+            addrs = parts[0]
+            for p in parts[1:]:
+                addrs = addrs.unionByName(p)
+            addrs = addrs.groupBy("__p", "__pos").agg(F.max("__dseq").alias("__dseq"))
+            touched = {
+                urllib.parse.unquote(r["__p"]): r["__p"]
+                for r in addrs.select("__p").distinct().collect()
+            }
         # resolve only the ADDRESSED paths against the manifests — the
-        # live frame is O(addressed files), never O(table); past the
+        # live set is O(addressed files), never O(table); past the
         # distributed-planning threshold the path lookup itself runs as a
         # Spark job over the manifest parquet (broadcast semi-join on the
         # touched paths), so the driver never expands a manifest
-        touched = {r["__p"] for r in addrs.select("__p").distinct().collect()}
-        import re as _re
 
         def _live_from(fs) -> list[tuple]:
             return [
                 (f.path, f.sequence or 0, f.rows)
                 for f in fs
-                if _re.sub("^file:/+", "/", os.path.join(self.location, f.path))
-                in touched
+                if _local_path(os.path.join(self.location, f.path)) in touched
             ]
 
         if snap.manifests and snap.n_files >= DISTRIBUTED_PLAN_MIN_FILES:
@@ -2413,14 +2568,12 @@ class LakeTable:
                     *[os.path.join(self.location, r.path) for r in snap.manifests]
                 )
                 prefix = self.location.rstrip("/") + "/"
-                absn = F.regexp_replace(
+                absn = _norm_path(
                     F.when(
                         F.col("path").startswith("/")
                         | F.col("path").rlike("^[a-zA-Z][a-zA-Z0-9+.-]*:/"),
                         F.col("path"),
-                    ).otherwise(F.concat(F.lit(prefix), F.col("path"))),
-                    "^file:/+",
-                    "/",
+                    ).otherwise(F.concat(F.lit(prefix), F.col("path")))
                 )
                 tdf = local_frame(
                     self.spark, T.StructType.fromDDL("__p string"), [(p,) for p in touched]
@@ -2441,16 +2594,24 @@ class LakeTable:
         if not live:
             snap._masked_cache = {}
             return {}
+        if index is not None:
+            import numpy as np
+
+            counts = {}
+            for rel, seq, rows in live:
+                path = _local_path(os.path.join(self.location, rel))
+                hit = [pos for _, pos in index.positions(path, seq)]
+                u = np.unique(np.concatenate(hit)) if hit else np.empty(0)
+                n = int(np.count_nonzero((u >= 0) & (u < rows)))
+                if n:
+                    counts[rel] = n
+            snap._masked_cache = counts
+            return counts
         live_df = local_frame(
             self.spark,
             T.StructType.fromDDL("__p string, __rel string, __fseq long, __rows long"),
             [
-                (
-                    _re.sub("^file:/+", "/", os.path.join(self.location, rel)),
-                    rel,
-                    seq,
-                    rows,
-                )
+                (touched[_local_path(os.path.join(self.location, rel))], rel, seq, rows)
                 for rel, seq, rows in live
             ],
         )
@@ -2988,45 +3149,17 @@ class LakeTable:
             out = out.unionByName(p)
         return out
 
-    def _plan_scan(
-        self, snap: Snapshot, files: list[DataFile], with_address: bool = False
-    ) -> DataFrame:
-        """Scan ``files`` with the snapshot's delete files applied.
-        ``with_address=True`` additionally carries each LIVE row's physical
-        address as ``__pd_path`` / ``__pd_pos`` columns (for callers that
-        must correlate liveness with positions, e.g. changelog
-        position-delete image resolution).
+    def _delete_plan(self, snap: Snapshot) -> _DeletePlan:
+        """The snapshot's :class:`_DeletePlan`, memoized on the snapshot.
 
-        Merge-on-read (Iceberg v2), both delete contents:
-
-        - EQUALITY deletes mask rows of data files with a STRICTLY smaller
-          sequence (a delete committed alongside new data masks old rows,
-          never the rows landing in the same commit).
-        - POSITION deletes address ``(file_path, pos)`` rows of data files
-          with sequence ≤ theirs (a position delete can target rows of a
-          file committed in the same snapshot).
-
-        Data files are grouped by which deletes apply (both sets nest by
-        sequence, so groups are (eq-idx, pos-idx) pairs); each group
-        anti-joins the union of its applicable delete keys/positions.
-        Delete sets are typically tiny next to the data, so AQE turns these
-        anti-joins into broadcasts — the read cost of MoR is one map-side
-        hash probe per row, not a shuffle.  Position probing reads the row
-        address from Spark's ``_metadata.file_path`` / ``row_index`` scan
-        columns (generated by the reader — no extra I/O)."""
-        if not files:
-            schema = snap.schema
-            if with_address:
-                schema = T.StructType(
-                    [
-                        T.StructField("__pd_path", T.StringType()),
-                        T.StructField("__pd_pos", T.LongType()),
-                    ]
-                    + list(snap.schema.fields)
-                )
-            return local_frame(self.spark, schema)
-        if not snap.delete_files:
-            return self._physical_read(files, snap.schema, with_addr=with_address)
+        Its delete index reads every delete file once, with pyarrow through
+        the FileIO, while their recorded bytes total at most the session's
+        ``spark.sql.autoBroadcastJoinThreshold`` (Spark's own broadcast
+        bound; ``-1`` disables it) and no equality key is a nested dotted
+        path.  Otherwise ``index`` is None and readers join against the
+        delete files with Spark."""
+        if snap._delete_plan is not None:
+            return snap._delete_plan
         eq_dels = sorted(
             (d for d in snap.delete_files if d.content != "position"),
             key=lambda d: d.sequence or 0,
@@ -3050,70 +3183,183 @@ class LakeTable:
                 raise ValueError(
                     f"delete key columns {missing} not in table schema"
                 )
-        eseqs = [d.sequence or 0 for d in eq_dels]
-        pseqs = [d.sequence or 0 for d in pos_dels]
-        # per-FILE delete applicability (Iceberg's model): sequence rules
-        # pick the candidate deletes, then delete-file key-range stats drop
-        # the ones that cannot touch this file's key range — a
-        # partition-localized delete leaves every other file on the plain
-        # scan path with no anti-join at all.  Files group by their exact
-        # applicable-delete set (bounded by distinct applicability patterns,
-        # small when deletes are localized).
-        groups: dict[tuple[tuple[int, ...], int], list[DataFile]] = {}
-        for f in files:
-            fseq = f.sequence or 0
-            # equality: first delete STRICTLY newer; position: first delete
-            # with sequence >= the file's (<= rule per the Iceberg spec)
-            ei = bisect.bisect_right(eseqs, fseq)
-            pi = bisect.bisect_left(pseqs, fseq)
-            eq_app = tuple(
-                j
-                for j in range(ei, len(eq_dels))
-                if _delete_may_touch(eq_dels[j], f, keys)
+        bound = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        index = None
+        if (
+            snap.delete_files
+            and sum(d.bytes for d in snap.delete_files) <= bound
+            and not any("." in k for k in keys)
+        ):
+            index = self._read_delete_index(eq_dels, pos_dels, key_schema)
+        snap._delete_plan = _DeletePlan(
+            self.location, eq_dels, pos_dels, keys, key_schema, index
+        )
+        return snap._delete_plan
+
+    def _read_delete_index(
+        self,
+        eq_dels: list[DeleteFile],
+        pos_dels: list[DeleteFile],
+        key_schema: T.StructType | None,
+    ) -> _DeleteIndex:
+        """Read delete files into a :class:`_DeleteIndex`.  Equality keys
+        are read under their written names (the ``names`` era mapping, as
+        :meth:`_read_delete_keys`) and cast to ``key_schema``."""
+        import numpy as np
+        import pyarrow.compute as pc
+
+        def _read(d: DeleteFile, cols: list[str]) -> pa.Table | None:
+            src = self._io.open_parquet_source(os.path.join(self.location, d.path))
+            with pq.ParquetFile(src) as pf:
+                if not set(cols) <= set(pf.schema_arrow.names):
+                    return None  # an absent column reads as all NULL
+                return pf.read(columns=cols).select(cols)
+
+        keys: dict[str, pa.Table] = {}
+        values: dict[str, dict[str, Any]] = {}
+        for d in eq_dels:
+            names = key_schema.names
+            t = _read(d, [(d.names or {}).get(k, k) for k in names])
+            if t is None:
+                t = arrow_table(key_schema)
+            t = t.rename_columns(names).drop_null().cast(to_arrow_schema(key_schema))
+            keys[d.path] = t.group_by(names).aggregate([]).select(names)
+            values[d.path] = {
+                fld.name: np.sort(
+                    pc.unique(t[fld.name]).to_numpy(zero_copy_only=False)
+                )
+                for fld in key_schema.fields
+                if isinstance(fld.dataType, (T.IntegerType, T.LongType, T.StringType))
+            }
+        addrs: dict[str, dict[str, tuple[Any, Any]]] = {}
+        parts = []
+        for d in pos_dels:
+            t = _read(d, _ADDR_SCHEMA.names)
+            if t is None:
+                continue
+            t = t.drop_null().cast(to_arrow_schema(_ADDR_SCHEMA))
+            parts.append(t.append_column("seq", pa.array(np.full(len(t), d.sequence or 0))))
+        if parts:
+            t = pa.concat_tables(parts)
+            t = t.set_column(
+                0, "file_path", pc.replace_substring_regex(t["file_path"], "^file:/+", "/")
             )
-            groups.setdefault((eq_app, pi), []).append(f)
+            t = t.group_by(["file_path", "pos"]).aggregate([("seq", "max")])
+            t = t.sort_by("file_path")
+            vc = pc.value_counts(t["file_path"])
+            pos, seq = t["pos"].to_numpy(), t["seq_max"].to_numpy()
+            end = 0
+            for p, n in zip(vc.field("values").to_pylist(), vc.field("counts").to_pylist()):
+                addrs.setdefault(urllib.parse.unquote(p), {})[p] = (
+                    pos[end : end + n],
+                    seq[end : end + n],
+                )
+                end += n
+        return _DeleteIndex(keys, values, addrs)
+
+    def _plan_scan(
+        self, snap: Snapshot, files: list[DataFile], with_address: bool = False
+    ) -> DataFrame:
+        """Scan ``files`` with the snapshot's delete files applied.
+        ``with_address=True`` additionally carries each LIVE row's physical
+        address as ``__pd_path`` / ``__pd_pos`` columns (for callers that
+        must correlate liveness with positions, e.g. changelog
+        position-delete image resolution).
+
+        Merge-on-read (Iceberg v2), both delete contents:
+
+        - EQUALITY deletes mask rows of data files with a STRICTLY smaller
+          sequence (a delete committed alongside new data masks old rows,
+          never the rows landing in the same commit).
+        - POSITION deletes address ``(file_path, pos)`` rows of data files
+          with sequence ≤ theirs (a position delete can target rows of a
+          file committed in the same snapshot).
+
+        Data files are grouped by which deletes apply (:class:`_DeletePlan`
+        — sequence rules, then delete-file key-range stats; with the delete
+        index, a position delete applies only to files it addresses); each
+        group anti-joins (null-unsafe on top-level keys) its applicable
+        delete keys/positions.  Position probing reads the row address from
+        Spark's ``_metadata.file_path`` / ``row_index`` scan columns
+        (generated by the reader — no extra I/O).
+
+        The delete side: with the snapshot's delete index (delete files
+        totalling at most ``spark.sql.autoBroadcastJoinThreshold``) it is
+        an explicitly broadcast Arrow ``LocalRelation`` — keys deduplicated
+        on the driver, the position mask holding only the scanned files'
+        addresses — so no Spark job reads a delete file.  Above the bound,
+        or for imported nested dotted keys, it is a distributed
+        ``spark.read.parquet`` of the delete files, deduplicated by
+        ``distinct()``."""
+        if not files:
+            schema = snap.schema
+            if with_address:
+                schema = T.StructType(
+                    list(_MASK_SCHEMA.fields) + list(snap.schema.fields)
+                )
+            return local_frame(self.spark, schema)
+        if not snap.delete_files:
+            return self._physical_read(files, snap.schema, with_addr=with_address)
+        plan = self._delete_plan(snap)
+        keys = plan.keys
+        # files group by their exact applicable-delete set (bounded by
+        # distinct applicability patterns, small when deletes are
+        # localized): a partition-localized delete leaves every other
+        # file on the plain scan path with no anti-join at all
+        groups: dict[tuple[tuple[int, ...], int], list[DataFile]] = {}
+        masks: list = []
+        for f in files:
+            key, fmasks = plan.applicable(f)
+            groups.setdefault(key, []).append(f)
+            masks += fmasks
+        # every address names its file, so one mask of the scanned files'
+        # addresses serves every group, and Spark broadcasts it once
+        mask = F.broadcast(_mask_frame(self.spark, masks)) if masks else None
         cols = [fld.name for fld in snap.schema.fields]
         parts = []
         for (eq_app, pi), fl in sorted(groups.items()):
-            pos_applicable = pos_dels[pi:]
+            pos_applicable = plan.pos_dels[pi:]
             need_addr = with_address or bool(pos_applicable)
             scan = self._physical_read(fl, snap.schema, with_addr=need_addr)
             if pos_applicable:
-                addressed = self.spark.read.schema(
-                    T.StructType(
-                        [
-                            T.StructField("file_path", T.StringType()),
-                            T.StructField("pos", T.LongType()),
-                        ]
-                    )
-                ).parquet(
-                    *[os.path.join(self.location, d.path) for d in pos_applicable]
-                )
-                # reserved probe names so a user column called file_path/pos
-                # can never collide with the address join
-                probe = addressed.distinct().select(
-                    _norm_path(F.col("file_path")).alias("__pd_path"),
-                    F.col("pos").alias("__pd_pos"),
-                )
-                scan = scan.join(probe, on=["__pd_path", "__pd_pos"], how="left_anti")
-            eq_applicable = [eq_dels[j] for j in eq_app]
-            if eq_applicable:
-                dkeys = self._read_delete_keys(eq_applicable, key_schema)
-                if any("." in k for k in keys):
-                    # imported nested-field equality ids (iceberg_import):
-                    # flatten the nested key projection and anti-join on
-                    # null-safe equality — the Iceberg spec matches a null
-                    # delete-key value against null column values
-                    flat = dkeys.select(
-                        *[F.col(k).alias(f"__ek{i}") for i, k in enumerate(keys)]
-                    ).distinct()
-                    cond = None
-                    for i, k in enumerate(keys):
-                        c = F.col(k).eqNullSafe(flat[f"__ek{i}"])
-                        cond = c if cond is None else cond & c
-                    scan = scan.join(flat, on=cond, how="left_anti")
+                if plan.index is not None:
+                    probe = mask
                 else:
-                    scan = scan.join(dkeys.distinct(), on=keys, how="left_anti")
+                    # reserved probe names so a user column called
+                    # file_path/pos can never collide with the address join
+                    probe = (
+                        self.spark.read.schema(_ADDR_SCHEMA)
+                        .parquet(
+                            *[os.path.join(self.location, d.path) for d in pos_applicable]
+                        )
+                        .distinct()
+                        .select(
+                            _norm_path(F.col("file_path")).alias("__pd_path"),
+                            F.col("pos").alias("__pd_pos"),
+                        )
+                    )
+                scan = scan.join(probe, on=["__pd_path", "__pd_pos"], how="left_anti")
+            eq_applicable = [plan.eq_dels[j] for j in eq_app]
+            if eq_applicable and plan.index is not None:
+                dkeys = plan.index.key_frame(self.spark, eq_applicable, plan.key_schema)
+                scan = scan.join(F.broadcast(dkeys), on=keys, how="left_anti")
+            elif eq_applicable and any("." in k for k in keys):
+                # imported nested-field equality ids (iceberg_import):
+                # flatten the nested key projection and anti-join on
+                # null-safe equality — the Iceberg spec matches a null
+                # delete-key value against null column values
+                dkeys = self._read_delete_keys(eq_applicable, plan.key_schema)
+                flat = dkeys.select(
+                    *[F.col(k).alias(f"__ek{i}") for i, k in enumerate(keys)]
+                ).distinct()
+                cond = None
+                for i, k in enumerate(keys):
+                    c = F.col(k).eqNullSafe(flat[f"__ek{i}"])
+                    cond = c if cond is None else cond & c
+                scan = scan.join(flat, on=cond, how="left_anti")
+            elif eq_applicable:
+                dkeys = self._read_delete_keys(eq_applicable, plan.key_schema)
+                scan = scan.join(dkeys.distinct(), on=keys, how="left_anti")
             if need_addr and not with_address:
                 scan = scan.select(*cols)
             parts.append(scan)
@@ -3274,25 +3520,60 @@ class LakeTable:
         )
 
     def fold_deletes(self) -> Snapshot:
-        """Rewrite the table with all equality deletes applied (Iceberg's
-        rewrite_position_delete_files + data rewrite in one step): read cost
-        returns to a plain scan and maintenance may again rewrite files
-        freely.  No-op when the table has no delete files."""
+        """Rewrite the data files the delete files apply to with the
+        deletes applied, and drop every delete file (Iceberg's
+        rewrite_position_delete_files + data rewrite in one step): read
+        cost returns to a plain scan and maintenance may again rewrite
+        files freely.  No-op when the table has no delete files.
+
+        With the snapshot's delete index (delete files totalling at most
+        ``spark.sql.autoBroadcastJoinThreshold``) only the affected live
+        files are rewritten: those an equality delete with a strictly
+        greater sequence may touch (key-range stats), or a position delete
+        with sequence ≥ theirs addresses.  Every other file carries over
+        by reference, and manifests no equality delete overlaps stay
+        unread unless position deletes exist.  Without the index the whole
+        table is rewritten.  Either way the commit is a ``"replace"`` that
+        keeps the partition layout."""
         snap = self.snapshot()
         if snap is None:
             raise FileNotFoundError(f"no such table: {self.location}")
         if not snap.delete_files:
             return snap
-        new_files = self.stage_dataframe(
-            self.read(), partition_exprs=partition_exprs(snap.partition_spec)
+        pcols = partition_exprs(snap.partition_spec)
+        summary = {"folded-delete-files": len(snap.delete_files)}
+        plan = self._delete_plan(snap)
+        if plan.index is None:
+            new_files = self.stage_dataframe(self.read(), partition_exprs=pcols)
+            return self.commit(
+                new_files, snap.schema, "replace", snap.version,
+                delete_files=[], summary=summary,
+            )
+        kept_refs, entries = snap.split_manifests(
+            lambda ref: bool(plan.index.addrs)
+            or any(
+                _delete_may_touch(d, ref.ranges, plan.keys)
+                and plan.index.may_touch(d, ref.ranges)
+                for d in plan.eq_dels
+            )
+        )
+        untouched = ((), len(plan.pos_dels))
+        touched = [f for f in entries if plan.applicable(f)[0] != untouched]
+        touched_paths = {f.path for f in touched}
+        rewritten = (
+            self.stage_dataframe(self._plan_scan(snap, touched), partition_exprs=pcols)
+            if touched
+            else []
         )
         return self.commit(
-            new_files,
+            None,
             snap.schema,
             "replace",
             snap.version,
             delete_files=[],
-            summary={"folded-delete-files": len(snap.delete_files)},
+            manifests=kept_refs,
+            new_files=[f for f in entries if f.path not in touched_paths] + rewritten,
+            summary={**summary, "rewritten-data-files": len(touched)},
         )
 
     def _diff_files(
@@ -3564,14 +3845,9 @@ class LakeTable:
                     )
                     parts.append(_tag(img, "delete", snap.version, parent))
                 if pos:
-                    addressed = self.spark.read.schema(
-                        T.StructType(
-                            [
-                                T.StructField("file_path", T.StringType()),
-                                T.StructField("pos", T.LongType()),
-                            ]
-                        )
-                    ).parquet(*[os.path.join(self.location, d.path) for d in pos])
+                    addressed = self.spark.read.schema(_ADDR_SCHEMA).parquet(
+                        *[os.path.join(self.location, d.path) for d in pos]
+                    )
                     probe = addressed.distinct().select(
                         _norm_path(F.col("file_path")).alias("__pd_path"),
                         F.col("pos").alias("__pd_pos"),

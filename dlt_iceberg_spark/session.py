@@ -69,6 +69,10 @@ def configure_session(builder: SparkSession.Builder, shuffle_partitions: int = D
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # Spark's default of 100 generated classes is less than one
+        # mixed read/write/query round compiles, so the LRU evicted every
+        # class before its query ran again and each round recompiled them
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")

@@ -182,3 +182,93 @@ def test_ledger_append_survives_a_crash_at_every_metadata_step(spark, warehouse)
         apply,
     )
     assert n < 20
+
+
+def _sorted_mor_table(spark, warehouse):
+    """Four key-sorted files; returns the model's rows."""
+    LakeWriter(LakeCatalog(spark, warehouse), "ds").write(
+        TableSpec(name="m", write_disposition="append"),
+        spark.range(40).select("id", F.lit(-1).cast("long").alias("v")).repartitionByRange(4, "id"),
+    )
+    return [(i, -1) for i in range(40)]
+
+
+def _stage_deletes(spark, warehouse, spec, k):
+    """A MoR upsert (equality delete) of one old key plus a position
+    delete of another, committed through a healthy catalog."""
+    catalog = LakeCatalog(spark, warehouse)
+    LakeWriter(catalog, "ds").write(spec, local_frame(spark, _MOR_SCHEMA, [(k % 10, k)]))
+    catalog.load_table("ds", "m").position_delete_where([("id", "=", 20 + k)])
+
+
+def _apply_deletes(rows, k):
+    model = dict(rows)
+    model[k % 10] = k
+    model.pop(20 + k, None)
+    return sorted(model.items())
+
+
+@pytest.mark.parametrize("op", ["fold_deletes", "compact_table"])
+def test_delete_rewrites_survive_a_crash_at_every_metadata_step(spark, warehouse, op):
+    """The touched-only fold and a compaction over a table with deletes
+    (which folds first).  The deletes land through a healthy catalog;
+    only the rewrite runs on the crashing one, and the recovery write
+    rewrites what the crashed one left."""
+    from dlt_iceberg_spark.lake.maintenance import compact_table
+
+    spec = TableSpec(
+        name="m",
+        write_disposition={"disposition": "merge", "strategy": "upsert"},
+        primary_key=["id"],
+        merge_mode="mor",
+    )
+    pre = _sorted_mor_table(spark, warehouse)
+    if op == "compact_table":
+        # one file to start from, so every round rewrites the same shape
+        compact_table(LakeCatalog(spark, warehouse).load_table("ds", "m"), 1 << 20)
+
+    def write(catalog, k):
+        if isinstance(catalog._io, CrashingIO):  # the recovery write only rewrites
+            _stage_deletes(spark, warehouse, spec, k)
+        table = catalog.load_table("ds", "m")
+        if op == "fold_deletes":
+            table.fold_deletes()
+        else:
+            compact_table(table, 1 << 20)
+
+    _sweep(
+        _catalog_with(spark, warehouse),
+        lambda catalog: catalog.load_table("ds", "m"),
+        write,
+        lambda: _rows(spark, warehouse, "m"),
+        pre,
+        _apply_deletes,
+    )
+    assert LakeCatalog(spark, warehouse).load_table("ds", "m").snapshot().delete_files == []
+
+
+def test_history_lists_no_snapshot_whose_commit_crashed(spark, warehouse):
+    """A commit that crashed before its pointer write leaves its snapshot
+    file behind; the next commit lands at the following version on the
+    same parent, and history must not show the orphan."""
+    spec = TableSpec(name="t", write_disposition="append")
+    LakeWriter(LakeCatalog(spark, warehouse), "ds").write(spec, spark.range(2))
+    make = _catalog_with(spark, warehouse)
+    io = CrashingIO()
+    LakeWriter(make(io), "ds").write(spec, spark.range(2, 4).coalesce(1))
+    n = io.calls  # the pointer rename is the commit's last mutating call
+    before = make(LocalFileIO()).load_table("ds", "t").current_version()
+    with pytest.raises(InjectedCrash):
+        LakeWriter(make(CrashingIO(crash_at=n)), "ds").write(spec, spark.range(4, 6).coalesce(1))
+    table = make(LocalFileIO()).load_table("ds", "t")
+    assert table.current_version() == before
+    orphan = max(table._all_versions())
+    assert orphan > before
+    LakeWriter(make(LocalFileIO()), "ds").write(spec, spark.range(6, 8).coalesce(1))
+    table = make(LocalFileIO()).load_table("ds", "t")
+    history = [s.version for s in table.snapshots()]
+    assert orphan not in history and history[-1] == table.current_version()
+    assert [s.parent for s in table.snapshots()][1:] == history[:-1]
+    exported = table.metadata_df("snapshots").collect()
+    assert orphan not in {r[0] for r in exported}
+    assert sorted(r[0] for r in table.read().collect()) == [0, 1, 2, 3, 6, 7]
