@@ -535,6 +535,22 @@ def _local_path(path: str) -> str:
     return re.sub("^file:/+", "/", path)
 
 
+def _data_path(location: str, rel: str) -> str:
+    """A data file's path as URL-decoded position addresses name it:
+    :func:`_local_path`, and absolute (Spark resolves a relative table
+    location against the working directory)."""
+    p = _local_path(os.path.join(location, rel))
+    return p if re.match("^[a-zA-Z][a-zA-Z0-9+.-]*:", p) else os.path.abspath(p)
+
+
+def _addr_key(c: Column) -> Column:
+    """A position address as the distributed delete joins compare it: the
+    :func:`_norm_path` form, URL-decoded.  Spark's ``_metadata.file_path``
+    (which our own position deletes store) is URL-encoded, a foreign
+    writer's address may not be; ``+`` is literal in both."""
+    return F.url_decode(F.replace(_norm_path(c), F.lit("+"), F.lit("%2B")))
+
+
 @dataclass
 class _DeleteIndex:
     """A snapshot's delete files read once on the driver — Iceberg's
@@ -546,14 +562,15 @@ class _DeleteIndex:
       (the null-unsafe anti-join never matches them).
     - ``values``: equality-delete path → {int/string key column: its
       sorted distinct values}, for :meth:`may_touch`.
-    - ``addrs``: addressed data file (``_local_path``, URL-decoded: Spark's
-      ``_metadata.file_path``, which our position deletes store, is
-      URL-encoded) → {address path as the join sees it: (distinct
-      positions, highest delete sequence naming each)}."""
+    - ``addrs``: addressed data file (``_local_path``, URL-decoded, as a
+      manifest path) → (its path as Spark's scan reports it, distinct
+      positions, highest delete sequence naming each).  Every stored form
+      of a file's address (Spark's URL-encoded one, a foreign writer's
+      plain one, ``file:`` URIs) lands on the same entry."""
 
     keys: dict[str, pa.Table]
     values: dict[str, dict[str, Any]]
-    addrs: dict[str, dict[str, tuple[Any, Any]]]
+    addrs: dict[str, tuple[str, Any, Any]]
 
     def may_touch(self, d: "DeleteFile", stats: dict) -> bool:
         """Could a key tuple of equality delete ``d`` fall inside the key
@@ -576,15 +593,14 @@ class _DeleteIndex:
         return True
 
     def positions(self, path: str, fseq: int) -> list[tuple[str, Any]]:
-        """``(address path, positions)`` masking rows of the data file at
-        ``_local_path`` ``path`` with sequence ``fseq``: a position delete
-        applies to files with sequence ≤ its own."""
-        out = []
-        for p, (pos, seq) in self.addrs.get(path, {}).items():
-            hit = pos[seq >= fseq]
-            if len(hit):
-                out.append((p, hit))
-        return out
+        """``[(Spark's path, positions)]`` masking rows of the data file at
+        ``_local_path`` ``path`` with sequence ``fseq`` (empty when none
+        do): a position delete applies to files with sequence ≤ its own."""
+        if path not in self.addrs:
+            return []
+        spark_path, pos, seq = self.addrs[path]
+        hit = pos[seq >= fseq]
+        return [(spark_path, hit)] if len(hit) else []
 
     def key_frame(self, spark, dels: list["DeleteFile"], key_schema) -> DataFrame:
         """The distinct key tuples of ``dels`` as an Arrow ``LocalRelation``."""
@@ -595,14 +611,16 @@ class _DeleteIndex:
 
 
 def _mask_frame(spark, masks: list[tuple[str, Any]]) -> DataFrame:
-    """Position addresses ``[(path, positions)]`` as a ``LocalRelation``."""
+    """Position addresses ``[(path, positions)]`` as a ``LocalRelation``;
+    the path column is dictionary-encoded, one string per file."""
     import numpy as np
 
-    paths = np.repeat(
-        np.array([p for p, _ in masks], dtype=object), [len(pos) for _, pos in masks]
+    paths = pa.DictionaryArray.from_arrays(
+        np.repeat(np.arange(len(masks), dtype=np.int32), [len(pos) for _, pos in masks]),
+        pa.array([p for p, _ in masks], pa.string()),
     )
     pos = np.concatenate([pos for _, pos in masks])
-    t = pa.table({"__pd_path": pa.array(paths, pa.string()), "__pd_pos": pos})
+    t = pa.table({"__pd_path": paths, "__pd_pos": pos})
     return spark.createDataFrame(t, _MASK_SCHEMA)
 
 
@@ -639,7 +657,7 @@ class _DeletePlan:
         pi = bisect.bisect_left(self.pseqs, fseq)
         masks: list = []
         if self.index is not None:
-            path = _local_path(os.path.join(self.location, f.path))
+            path = _data_path(self.location, f.path)
             masks = self.index.positions(path, fseq)
             if not masks:
                 pi = len(self.pos_dels)
@@ -1320,7 +1338,9 @@ class LakeTable:
         ``t.history``) as DataFrames, planned from manifests only — no data
         files are touched, so these stay O(metadata) at any table size.
 
-        - ``snapshots``: every retained snapshot with operation + totals.
+        - ``snapshots``: every snapshot reachable through parent links
+          from a ref (main, branches, tags) with operation + totals
+          (:meth:`snapshots`).
         - ``files``: the CURRENT snapshot's live files with per-file stats.
         - ``history``: the current ancestry chain, oldest first (snapshots
           abandoned by rolled-back or conflicting commits are excluded).
@@ -2440,11 +2460,11 @@ class LakeTable:
         restricted to live data files whose sequence admits the delete and
         whose row count bounds the position — all manifest facts), so
         ``count = total_rows − live masked addresses`` with ZERO data
-        reads.  While the delete files total at most
-        ``spark.sql.autoBroadcastJoinThreshold`` those addresses come from
-        the snapshot's driver-side delete index, so such a count runs no
-        Spark job at all (above the bound, one distributed job over the
-        delete files).  Only EQUALITY deletes genuinely need the
+        reads.  While the snapshot's driver-side delete index fits
+        ``spark.sql.autoBroadcastJoinThreshold`` (decoded size, see
+        :meth:`_delete_plan`) those addresses come from it, so such a
+        count runs no Spark job at all (above the bound, one distributed
+        job over the delete files).  Only EQUALITY deletes genuinely need the
         masked-scan fallback (which rows a key masks is a data fact); its
         masks come from the same index."""
         snap = self.snapshot(snapshot_version)
@@ -2507,23 +2527,23 @@ class LakeTable:
         O(addressed files) driver memory.  Memoized per snapshot object
         (count() probes the same masks for every predicate).
 
-        With the snapshot's delete index (delete files within
-        ``spark.sql.autoBroadcastJoinThreshold``) the addresses and counts
-        come from it in Python: no Spark job below the distributed-planning
-        threshold.  Otherwise a Spark job over the delete files resolves
-        them."""
+        With the snapshot's delete index (decoded delete files within
+        ``spark.sql.autoBroadcastJoinThreshold``, :meth:`_delete_plan`)
+        the addresses and counts come from it in Python: no Spark job below
+        the distributed-planning threshold.  Otherwise a Spark job over the
+        delete files resolves them.  Both compare URL-decoded paths, so
+        every stored form of a file's address counts once."""
         if snap._masked_cache is not None:
             return snap._masked_cache
         pos_dels = [d for d in snap.delete_files if d.content == "position"]
         if not pos_dels:
             snap._masked_cache = {}
             return {}
-        # touched: addressed data file (_local_path, URL-decoded — Spark's
-        # _metadata.file_path is URL-encoded, a manifest path is not) ->
-        # the address path as stored
+        # touched: addressed data files (_local_path, URL-decoded — Spark's
+        # _metadata.file_path is URL-encoded, a manifest path is not)
         index = self._delete_plan(snap).index
         if index is not None:
-            touched = {p: p for p in index.addrs}
+            touched = set(index.addrs)
         else:
             by_seq: dict[int, list[str]] = {}
             for d in pos_dels:
@@ -2534,7 +2554,7 @@ class LakeTable:
                 self.spark.read.schema(_ADDR_SCHEMA)
                 .parquet(*paths)
                 .select(
-                    _norm_path(F.col("file_path")).alias("__p"),
+                    _addr_key(F.col("file_path")).alias("__p"),
                     F.col("pos").alias("__pos"),
                     F.lit(seq).alias("__dseq"),
                 )
@@ -2544,10 +2564,7 @@ class LakeTable:
             for p in parts[1:]:
                 addrs = addrs.unionByName(p)
             addrs = addrs.groupBy("__p", "__pos").agg(F.max("__dseq").alias("__dseq"))
-            touched = {
-                urllib.parse.unquote(r["__p"]): r["__p"]
-                for r in addrs.select("__p").distinct().collect()
-            }
+            touched = {r["__p"] for r in addrs.select("__p").distinct().collect()}
         # resolve only the ADDRESSED paths against the manifests — the
         # live set is O(addressed files), never O(table); past the
         # distributed-planning threshold the path lookup itself runs as a
@@ -2558,7 +2575,7 @@ class LakeTable:
             return [
                 (f.path, f.sequence or 0, f.rows)
                 for f in fs
-                if _local_path(os.path.join(self.location, f.path)) in touched
+                if _data_path(self.location, f.path) in touched
             ]
 
         if snap.manifests and snap.n_files >= DISTRIBUTED_PLAN_MIN_FILES:
@@ -2567,7 +2584,7 @@ class LakeTable:
                 mdf = self.spark.read.parquet(
                     *[os.path.join(self.location, r.path) for r in snap.manifests]
                 )
-                prefix = self.location.rstrip("/") + "/"
+                prefix = _data_path(self.location, "").rstrip("/") + "/"
                 absn = _norm_path(
                     F.when(
                         F.col("path").startswith("/")
@@ -2599,7 +2616,7 @@ class LakeTable:
 
             counts = {}
             for rel, seq, rows in live:
-                path = _local_path(os.path.join(self.location, rel))
+                path = _data_path(self.location, rel)
                 hit = [pos for _, pos in index.positions(path, seq)]
                 u = np.unique(np.concatenate(hit)) if hit else np.empty(0)
                 n = int(np.count_nonzero((u >= 0) & (u < rows)))
@@ -2611,7 +2628,7 @@ class LakeTable:
             self.spark,
             T.StructType.fromDDL("__p string, __rel string, __fseq long, __rows long"),
             [
-                (touched[_local_path(os.path.join(self.location, rel))], rel, seq, rows)
+                (_data_path(self.location, rel), rel, seq, rows)
                 for rel, seq, rows in live
             ],
         )
@@ -3153,11 +3170,13 @@ class LakeTable:
         """The snapshot's :class:`_DeletePlan`, memoized on the snapshot.
 
         Its delete index reads every delete file once, with pyarrow through
-        the FileIO, while their recorded bytes total at most the session's
-        ``spark.sql.autoBroadcastJoinThreshold`` (Spark's own broadcast
-        bound; ``-1`` disables it) and no equality key is a nested dotted
-        path.  Otherwise ``index`` is None and readers join against the
-        delete files with Spark."""
+        the FileIO, unless an equality key is a nested dotted path.  The
+        index is kept only while its decoded Arrow tables total at most the
+        session's ``spark.sql.autoBroadcastJoinThreshold`` (Spark's own
+        broadcast bound; ``-1`` disables the index): that size bounds both
+        the driver memory and the broadcast relations built from it.
+        Otherwise ``index`` is None and readers join against the delete
+        files with Spark."""
         if snap._delete_plan is not None:
             return snap._delete_plan
         eq_dels = sorted(
@@ -3185,12 +3204,8 @@ class LakeTable:
                 )
         bound = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
         index = None
-        if (
-            snap.delete_files
-            and sum(d.bytes for d in snap.delete_files) <= bound
-            and not any("." in k for k in keys)
-        ):
-            index = self._read_delete_index(eq_dels, pos_dels, key_schema)
+        if snap.delete_files and bound >= 0 and not any("." in k for k in keys):
+            index = self._read_delete_index(eq_dels, pos_dels, key_schema, bound)
         snap._delete_plan = _DeletePlan(
             self.location, eq_dels, pos_dels, keys, key_schema, index
         )
@@ -3201,25 +3216,40 @@ class LakeTable:
         eq_dels: list[DeleteFile],
         pos_dels: list[DeleteFile],
         key_schema: T.StructType | None,
-    ) -> _DeleteIndex:
-        """Read delete files into a :class:`_DeleteIndex`.  Equality keys
-        are read under their written names (the ``names`` era mapping, as
+        bound: int,
+    ) -> _DeleteIndex | None:
+        """Read delete files into a :class:`_DeleteIndex`, or None once
+        their decoded Arrow tables exceed ``bound`` bytes (a position
+        delete decodes to one path string per address, so this is the size
+        of the largest mask built from them).  Equality keys are read under
+        their written names (the ``names`` era mapping, as
         :meth:`_read_delete_keys`) and cast to ``key_schema``."""
         import numpy as np
         import pyarrow.compute as pc
 
-        def _read(d: DeleteFile, cols: list[str]) -> pa.Table | None:
+        read: dict[str, pa.Table | None] = {}
+        size = 0
+        for d in eq_dels + pos_dels:
+            cols = (
+                _ADDR_SCHEMA.names
+                if d.content == "position"
+                else [(d.names or {}).get(k, k) for k in key_schema.names]
+            )
             src = self._io.open_parquet_source(os.path.join(self.location, d.path))
             with pq.ParquetFile(src) as pf:
-                if not set(cols) <= set(pf.schema_arrow.names):
-                    return None  # an absent column reads as all NULL
-                return pf.read(columns=cols).select(cols)
-
+                # an absent column reads as all NULL
+                if set(cols) <= set(pf.schema_arrow.names):
+                    read[d.path] = pf.read(columns=cols).select(cols)
+                    size += read[d.path].nbytes
+                else:
+                    read[d.path] = None
+            if size > bound:
+                return None
         keys: dict[str, pa.Table] = {}
         values: dict[str, dict[str, Any]] = {}
         for d in eq_dels:
             names = key_schema.names
-            t = _read(d, [(d.names or {}).get(k, k) for k in names])
+            t = read[d.path]
             if t is None:
                 t = arrow_table(key_schema)
             t = t.rename_columns(names).drop_null().cast(to_arrow_schema(key_schema))
@@ -3231,29 +3261,35 @@ class LakeTable:
                 for fld in key_schema.fields
                 if isinstance(fld.dataType, (T.IntegerType, T.LongType, T.StringType))
             }
-        addrs: dict[str, dict[str, tuple[Any, Any]]] = {}
+        addrs: dict[str, tuple[str, Any, Any]] = {}
         parts = []
         for d in pos_dels:
-            t = _read(d, _ADDR_SCHEMA.names)
+            t = read[d.path]
             if t is None:
                 continue
             t = t.drop_null().cast(to_arrow_schema(_ADDR_SCHEMA))
             parts.append(t.append_column("seq", pa.array(np.full(len(t), d.sequence or 0))))
         if parts:
             t = pa.concat_tables(parts)
+            # every stored form of an address path → the URL-decoded path
+            forms = pc.unique(t["file_path"])
+            plain = pa.array(
+                [urllib.parse.unquote(_local_path(p)) for p in forms.to_pylist()],
+                pa.string(),
+            )
             t = t.set_column(
-                0, "file_path", pc.replace_substring_regex(t["file_path"], "^file:/+", "/")
+                0, "file_path", plain.take(pc.index_in(t["file_path"], value_set=forms))
             )
             t = t.group_by(["file_path", "pos"]).aggregate([("seq", "max")])
             t = t.sort_by("file_path")
             vc = pc.value_counts(t["file_path"])
             pos, seq = t["pos"].to_numpy(), t["seq_max"].to_numpy()
             end = 0
+            hadoop_path = self.spark._jvm.org.apache.hadoop.fs.Path
             for p, n in zip(vc.field("values").to_pylist(), vc.field("counts").to_pylist()):
-                addrs.setdefault(urllib.parse.unquote(p), {})[p] = (
-                    pos[end : end + n],
-                    seq[end : end + n],
-                )
+                # the form Spark's _metadata.file_path reports (_norm_path'd)
+                spark_path = _local_path(hadoop_path(p).toUri().toString())
+                addrs[p] = (spark_path, pos[end : end + n], seq[end : end + n])
                 end += n
         return _DeleteIndex(keys, values, addrs)
 
@@ -3283,14 +3319,16 @@ class LakeTable:
         Spark's ``_metadata.file_path`` / ``row_index`` scan columns
         (generated by the reader — no extra I/O).
 
-        The delete side: with the snapshot's delete index (delete files
-        totalling at most ``spark.sql.autoBroadcastJoinThreshold``) it is
-        an explicitly broadcast Arrow ``LocalRelation`` — keys deduplicated
-        on the driver, the position mask holding only the scanned files'
-        addresses — so no Spark job reads a delete file.  Above the bound,
-        or for imported nested dotted keys, it is a distributed
-        ``spark.read.parquet`` of the delete files, deduplicated by
-        ``distinct()``."""
+        The delete side: with the snapshot's delete index (decoded delete
+        files within ``spark.sql.autoBroadcastJoinThreshold``,
+        :meth:`_delete_plan`) it is an explicitly broadcast Arrow
+        ``LocalRelation`` — keys deduplicated on the driver, the position
+        mask holding only the scanned files' addresses, each under the
+        path Spark's scan reports — so no Spark job reads a delete file.
+        Above the bound, or for imported nested dotted keys, it is a
+        distributed ``spark.read.parquet`` of the delete files,
+        deduplicated by ``distinct()``, joined on URL-decoded paths
+        (:func:`_addr_key`)."""
         if not files:
             schema = snap.schema
             if with_address:
@@ -3323,7 +3361,7 @@ class LakeTable:
             scan = self._physical_read(fl, snap.schema, with_addr=need_addr)
             if pos_applicable:
                 if plan.index is not None:
-                    probe = mask
+                    scan = scan.join(mask, on=["__pd_path", "__pd_pos"], how="left_anti")
                 else:
                     # reserved probe names so a user column called
                     # file_path/pos can never collide with the address join
@@ -3334,11 +3372,16 @@ class LakeTable:
                         )
                         .distinct()
                         .select(
-                            _norm_path(F.col("file_path")).alias("__pd_path"),
-                            F.col("pos").alias("__pd_pos"),
+                            _addr_key(F.col("file_path")).alias("__pd_key"),
+                            F.col("pos").alias("__pd_ppos"),
                         )
                     )
-                scan = scan.join(probe, on=["__pd_path", "__pd_pos"], how="left_anti")
+                    scan = scan.join(
+                        probe,
+                        (_addr_key(F.col("__pd_path")) == F.col("__pd_key"))
+                        & (F.col("__pd_pos") == F.col("__pd_ppos")),
+                        how="left_anti",
+                    )
             eq_applicable = [plan.eq_dels[j] for j in eq_app]
             if eq_applicable and plan.index is not None:
                 dkeys = plan.index.key_frame(self.spark, eq_applicable, plan.key_schema)
@@ -3526,15 +3569,17 @@ class LakeTable:
         cost returns to a plain scan and maintenance may again rewrite
         files freely.  No-op when the table has no delete files.
 
-        With the snapshot's delete index (delete files totalling at most
-        ``spark.sql.autoBroadcastJoinThreshold``) only the affected live
-        files are rewritten: those an equality delete with a strictly
-        greater sequence may touch (key-range stats), or a position delete
-        with sequence ≥ theirs addresses.  Every other file carries over
-        by reference, and manifests no equality delete overlaps stay
-        unread unless position deletes exist.  Without the index the whole
-        table is rewritten.  Either way the commit is a ``"replace"`` that
-        keeps the partition layout."""
+        Only the affected live files are rewritten: those an equality
+        delete with a strictly greater sequence may touch, or a position
+        delete with sequence ≥ theirs may address (:class:`_DeletePlan`).
+        With the snapshot's delete index (decoded delete files within
+        ``spark.sql.autoBroadcastJoinThreshold``, :meth:`_delete_plan`)
+        "may touch" is judged by the delete keys' values and "may address"
+        by the addresses themselves; without it, by key-range stats and by
+        sequence alone.  Every other file carries over by reference, and
+        manifests no equality delete overlaps stay unread unless position
+        deletes exist.  The commit is a ``"replace"`` that keeps the
+        partition layout."""
         snap = self.snapshot()
         if snap is None:
             raise FileNotFoundError(f"no such table: {self.location}")
@@ -3543,17 +3588,11 @@ class LakeTable:
         pcols = partition_exprs(snap.partition_spec)
         summary = {"folded-delete-files": len(snap.delete_files)}
         plan = self._delete_plan(snap)
-        if plan.index is None:
-            new_files = self.stage_dataframe(self.read(), partition_exprs=pcols)
-            return self.commit(
-                new_files, snap.schema, "replace", snap.version,
-                delete_files=[], summary=summary,
-            )
         kept_refs, entries = snap.split_manifests(
-            lambda ref: bool(plan.index.addrs)
+            lambda ref: bool(plan.pos_dels)
             or any(
                 _delete_may_touch(d, ref.ranges, plan.keys)
-                and plan.index.may_touch(d, ref.ranges)
+                and (plan.index is None or plan.index.may_touch(d, ref.ranges))
                 for d in plan.eq_dels
             )
         )
@@ -3849,8 +3888,8 @@ class LakeTable:
                         *[os.path.join(self.location, d.path) for d in pos]
                     )
                     probe = addressed.distinct().select(
-                        _norm_path(F.col("file_path")).alias("__pd_path"),
-                        F.col("pos").alias("__pd_pos"),
+                        _addr_key(F.col("file_path")).alias("__pd_key"),
+                        F.col("pos").alias("__pd_ppos"),
                     )
                     # addresses name their files outright — scan ONLY those
                     # (normalize Spark's file: URIs to compare with table-
@@ -3860,22 +3899,22 @@ class LakeTable:
                     # can point at a row some OLDER delete already masked,
                     # and re-emitting it would double-count the delete in
                     # net changelogs.
-                    from urllib.parse import urlparse
-
-                    hit = {
-                        urlparse(r[0]).path if "://" in r[0] or r[0].startswith("file:") else r[0]
-                        for r in addressed.select("file_path").distinct().collect()
-                    }
+                    hit = {r[0] for r in probe.select("__pd_key").distinct().collect()}
                     cand = [
                         f
                         for f in parent.files
-                        if os.path.abspath(os.path.join(self.location, f.path)) in hit
+                        if _data_path(self.location, f.path) in hit
                     ]
                     if cand:
                         pcols = [f.name for f in parent.schema.fields]
                         img = (
                             self._plan_scan(parent, cand, with_address=True)
-                            .join(probe, on=["__pd_path", "__pd_pos"], how="leftsemi")
+                            .join(
+                                probe,
+                                (_addr_key(F.col("__pd_path")) == F.col("__pd_key"))
+                                & (F.col("__pd_pos") == F.col("__pd_ppos")),
+                                how="leftsemi",
+                            )
                             .select(*pcols)
                         )
                         parts.append(_tag(img, "delete", snap.version, parent))

@@ -1,11 +1,11 @@
 """The driver-side delete index (``LakeTable._delete_plan``).
 
-While a snapshot's delete files total at most the session's
+While a snapshot's decoded delete files total at most the session's
 ``spark.sql.autoBroadcastJoinThreshold``, merge-on-read reads, counts and
 folds resolve deletes from one per-snapshot index read on the driver:
-broadcast Arrow masks instead of Spark jobs over the delete files, and a
-fold that rewrites only the files some delete applies to.  Setting the
-threshold to -1 forces the distributed path; both must agree."""
+broadcast Arrow masks instead of Spark jobs over the delete files.
+Setting the threshold to -1 forces the distributed path; both must
+agree, and both folds rewrite only the files some delete may apply to."""
 
 import os
 from datetime import date, datetime
@@ -164,19 +164,32 @@ def _observe(spark, root, build):
 
 @pytest.mark.parametrize("case", sorted(_CASES))
 def test_index_and_distributed_delete_paths_agree(spark, tmp_path, case):
-    # a space in the location: Spark URL-encodes the addresses it records
-    # (the foreign writer's plain paths stay in a plain location)
-    wh = "wh" if case == "foreign_file_uri_positions" else "w h"
-    indexed = _observe(spark, str(tmp_path / "idx" / wh), _CASES[case])
+    # a space in the location: Spark URL-encodes the addresses it records,
+    # the foreign writer's addresses are plain
+    indexed = _observe(spark, str(tmp_path / "idx" / "w h"), _CASES[case])
     spark.conf.set(_THRESHOLD, "-1")
     try:
-        distributed = _observe(spark, str(tmp_path / "dist" / wh), _CASES[case])
+        distributed = _observe(spark, str(tmp_path / "dist" / "w h"), _CASES[case])
     finally:
         spark.conf.unset(_THRESHOLD)
     assert indexed.pop("indexed") and not distributed.pop("indexed")
     assert indexed == distributed
     assert indexed["folded"] == indexed["read"]
     assert indexed["count"] == len(indexed["read"])
+
+
+def test_relative_location_applies_position_deletes(spark, tmp_path):
+    # Spark resolves a relative location against the working directory;
+    # addresses it records are absolute
+    absolute = _observe(spark, str(tmp_path / "abs"), _long_key)
+    rel = os.path.relpath(tmp_path / "rel", os.getcwd())
+    assert _observe(spark, rel, _long_key) == absolute
+    spark.conf.set(_THRESHOLD, "-1")
+    try:
+        assert _observe(spark, rel + "-dist", _long_key) == {**absolute, "indexed": False}
+    finally:
+        spark.conf.unset(_THRESHOLD)
+    assert absolute["count"] == len(absolute["read"]) == len(absolute["folded"])
 
 
 def _sorted_table(spark, warehouse, n_files=8, rows=800):
@@ -207,6 +220,21 @@ def test_position_only_count_runs_no_spark_job_and_mor_reads_are_pinned(spark, w
     assert got[-1] == 798
 
 
+def test_index_is_bounded_by_its_decoded_size(spark, warehouse):
+    catalog = _sorted_table(spark, warehouse)
+    catalog.load_table("ds", "t").position_delete_where([("id", "<", 400)])
+    table = catalog.load_table("ds", "t")
+    stored = sum(d.bytes for d in table.snapshot().delete_files)
+    # 400 dense addresses compress to a few bytes each but decode to one
+    # path string each: past twice the stored bytes
+    spark.conf.set(_THRESHOLD, str(2 * stored))
+    try:
+        assert table._delete_plan(table.snapshot()).index is None
+        assert table.count() == 400 == table.read().count()
+    finally:
+        spark.conf.unset(_THRESHOLD)
+
+
 def test_fold_rewrites_only_the_files_deletes_touch(spark, tmp_path):
     def build(root):
         catalog = _sorted_table(spark, root)
@@ -235,7 +263,8 @@ def test_fold_rewrites_only_the_files_deletes_touch(spark, tmp_path):
         full = reference.fold_deletes()
     finally:
         spark.conf.unset(_THRESHOLD)
-    # the whole-table rewrite keeps no file
+    # without the index a position delete may address any file no newer
+    # than itself: here every file, so the fold keeps none
     assert not {f.path for f in ref_before.files} & {f.path for f in full.files}
     got = _rows(table.read())
     assert got == _rows(reference.read()) and len(got) == 799
